@@ -22,14 +22,6 @@ from .canonicalize import canonicalize_ids, filter_abnormal
 from .ontology import Ontology
 
 
-def _doc_sets(df: DataFrame, all_docs: DataFrame) -> DataFrame:
-    """distinct (doc_id, hpo_id) joined onto the full doc universe so
-    docs with zero annotations participate (eval_all edge rule)."""
-    return all_docs.join(
-        df.select("doc_id", "hpo_id").distinct(), on="doc_id", how="left"
-    )
-
-
 def evaluate_sets(
     spark: SparkSession,
     predicted: DataFrame,

@@ -325,7 +325,3 @@ def col_sorted_bag_key(tokens: Column) -> Column:
     """T9 as a Column: array_join(array_sort(tokens), ' ')."""
     return F.array_join(F.array_sort(tokens), " ")
 
-
-def col_is_num(c: Column) -> Column:
-    """T8: float-parse test via try-cast."""
-    return F.try_cast(c, "double").isNotNull()

@@ -228,25 +228,6 @@ class ConceptIndex:
         )
 
 
-_SURFACE_VEC_CACHE: dict[int, dict[str, np.ndarray]] = {}
-
-
-def _surface_mat(enc: HashedEncoder, concept_id: str, index: ConceptIndex) -> np.ndarray:
-    """Per-worker lazily cached (n_surfaces, dim) matrix per concept."""
-    cache = _SURFACE_VEC_CACHE.setdefault(id(index), {})
-    m = cache.get(concept_id)
-    if m is None:
-        m = enc.encode(index.surfaces[concept_id])
-        cache[concept_id] = m
-    return m
-
-
-def _token_sim(enc: HashedEncoder, a: str, b: str) -> float:
-    if a == b or lemma(a) == lemma(b):
-        return 1.0
-    return float(np.dot(enc._token_vec(a), enc._token_vec(b)))
-
-
 # per-worker cache: concept -> (token array, lemma array, (n_tok, dim)
 # token-vector matrix, per-surface row slices). Keyed by index identity
 # so a rebroadcast index never serves stale rows.

@@ -464,36 +464,6 @@ class TrainedMatcher:
         return best
 
 
-def trained_matcher(
-    onto: Ontology,
-    spark=None,
-    epochs: int = 60,
-) -> TrainedMatcher:
-    """Build (and cache per ontology) the supervision-fit M4 matcher.
-    With a SparkSession the logistic fit runs distributed (and its A7
-    counters come from the cluster); without, the numpy twin.
-
-    The cache lives on the ontology object itself — an id(onto)-keyed
-    module dict could hand back a matcher trained on a different,
-    already-collected ontology whose address got reused."""
-    cache = onto.__dict__.setdefault("_trained_matcher_cache", {})
-    key = epochs
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    feat = AlignFeaturizer(onto)
-    examples = mine_match_examples(onto)
-    X = np.vstack([feat.features(a, b) for a, b, _ in examples])
-    y = np.array([e[2] for e in examples], dtype=np.float64)
-    if spark is not None:
-        model = fit_logistic_spark(spark, X, y, epochs=epochs)
-    else:
-        model = fit_logistic_numpy(X, y, epochs=epochs)
-    m = TrainedMatcher(featurizer=feat, model=model)
-    cache[key] = m
-    return m
-
-
 # ---------------------------------------------------------------------------
 # Trained L1 router (M2)
 # ---------------------------------------------------------------------------

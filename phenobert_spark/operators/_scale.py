@@ -23,7 +23,14 @@ from pyspark.sql import DataFrame
 def fanout(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
     """Repartition ``df`` to the session's parallelism iff it is
     under-partitioned for the cluster. Keyed (hash) repartition when
-    ``keys`` given, round-robin otherwise."""
+    ``keys`` given, round-robin otherwise.
+
+    Scope: scan-level under-partitioning only. The probe reads the
+    pre-AQE partition count of ``df.rdd`` (one extra planning pass),
+    which for any input whose plan already ends in a shuffle is
+    ``spark.sql.shuffle.partitions``, so on shuffled inputs this is a
+    no-op even when AQE later coalesces them to fewer partitions than
+    the cluster has cores."""
     sc = df.sparkSession.sparkContext
     n = target or sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:

@@ -6,16 +6,59 @@ territory, SURVEY.md §4 item 3). This operator is the distributed form
 for graphs that do NOT fit on the driver: iterative self-join to
 fixpoint with early termination, the standard semi-naive evaluation.
 
-Scale notes: each iteration is one shuffle on the join key; frontier
-shrinks monotonically (only NEW pairs join the next round), and
-`localCheckpoint` truncates the lineage so the plan does not grow
-exponentially with iterations.
+Scale notes: each iteration is one shuffle on the join key and the
+frontier shrinks monotonically (only NEW pairs join the next round).
+Caching, lineage cuts and non-convergence of every loop here follow
+the one policy in ``_fixpoint``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import warnings
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._fixpoint import iterate
+
+
+def _last_change(state: DataFrame):
+    """Convergence signature of a state whose rows carry the round
+    ``_r`` they last changed in: it repeats once a round changes
+    nothing."""
+    return state.agg(F.max("_r")).first()[0]
+
+
+def _relax(offers: DataFrame, value: str, better, i: int) -> DataFrame:
+    """offers(_to, _own, <value>, _r) -> (node, <value>, _r): keep the
+    ``better`` (F.min / F.max) offer per target node, one keyed
+    aggregate; ``_r`` becomes ``i + 1`` where that moved the node's own
+    value (a node without an own offer is new)."""
+    best = (
+        offers.groupBy(F.col("_to").alias("node"))
+        .agg(
+            better(value).alias(value),
+            better(F.when(F.col("_own"), F.col(value))).alias("_old"),
+            F.max(F.when(F.col("_own"), F.col("_r"))).alias("_r"),
+        )
+    )
+    moved = F.col("_old").isNull() | (F.col(value) != F.col("_old"))
+    return best.select(
+        "node", value, F.when(moved, F.lit(i + 1)).otherwise(F.col("_r")).alias("_r")
+    )
+
+
+def _offers(state: DataFrame, edges: DataFrame, on, to: str) -> DataFrame:
+    """Left join ``state`` onto ``edges`` and give every state row one
+    own offer plus one offer per matched edge, addressed to the edge's
+    ``to`` column. The state is read once, so the plan grows linearly
+    with rounds."""
+    return (
+        state.join(edges, on, "left")
+        .withColumn("_to", F.explode(F.array("node", to)))
+        .withColumn("_own", F.col("_to").eqNullSafe(F.col("node")))
+        .filter(F.col("_own") | F.col("_to").isNotNull())
+    )
 
 
 def connected_components(
@@ -32,18 +75,19 @@ def connected_components(
     near-duplicate dedup pipeline (LSH/Jaccard pairs -> clusters ->
     keep one doc per cluster).
 
-    Scale shape: each iteration is one equi-join (labels shuffled on
-    the edge endpoint) plus one min-aggregate (map-side partial
-    combine), both on the node key — no cross join, no driver-side
-    graph. Convergence needs O(component diameter) iterations;
-    near-dup graphs are dense clusters with tiny diameters (2-4 in
-    practice), which is why plain hash-min is chosen over the
+    Scale shape: each iteration is one left join of the labels onto
+    the cached edge table (co-partitioned on the node key: labels come
+    hash(node)-partitioned from the previous aggregate) plus one
+    min-aggregate with map-side partial combine — no cross join, no
+    collected graph. Convergence needs O(component diameter)
+    iterations; near-dup graphs are dense clusters with tiny diameters
+    (2-4 in practice), which is why plain hash-min is chosen over the
     alternating large-star/small-star variant (that halves iterations
     for path-shaped graphs at the cost of 2x the joins per round —
-    wrong trade here). ``localCheckpoint`` truncates lineage so the
-    plan stays flat across iterations; the per-round convergence probe
-    is one scalar hash-sum aggregate (the exact changed-row join runs
-    once, to confirm the fixed point — not every round).
+    wrong trade here). Each label carries the round ``_r`` it last
+    changed, so the convergence probe is one exact scalar aggregate.
+    Warns if ``max_iters`` runs out first: the labels may then split
+    long-diameter components.
 
     ``nodes``: optional (node) DataFrame for singletons that appear in
     no edge — they come back labeled with themselves.
@@ -59,138 +103,73 @@ def connected_components(
             .unionByName(endpoints)
             .distinct()
         )
-    labels = endpoints.select("node", F.col("node").alias("component"))
-    labels = labels.persist()
-    # sym is re-joined every iteration, always on "dst": cache it
-    # hash-partitioned on that key (round 6 — persist keeps the
-    # partitioning a localCheckpoint would erase, so each round's join
-    # reuses one exchange; the label side arrives hash(node)-
-    # partitioned from its aggregate and needs none either)
-    sym = sym.repartition("dst").persist()
-    caches = [labels, sym]
-    prev_sig = None
-    for i in range(max_iters):
-        # pull each neighbor's current label onto the node, keep the min
-        prop = sym.join(
-            labels.withColumnRenamed("node", "dst"), on="dst"
-        ).select(F.col("src").alias("node"), "component")
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # Materialize EVERY iteration (persist + the probe below): the
-        # convergence probe and the next round's join both read
-        # new_labels — without this, each iteration executed its
-        # join+aggregate TWICE (measured 45.7s -> 14s on the 80k-doc
-        # dedup graph). persist (not checkpoint) so the aggregate's
-        # hash(node) partitioning survives into the next round's join.
-        new_labels = new_labels.persist()
-        caches.append(new_labels)
-        # persist does NOT truncate lineage, and labels feeds the next
-        # round twice (union + join) — the un-truncated logical plan
-        # doubles per round (2^i nodes: a driver-heap OOM by ~20
-        # rounds). Checkpoint every few rounds to cap the plan at a
-        # constant factor; the cost is one lost cached partitioning per
-        # checkpoint boundary, not one per round as before.
-        if (i + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        # Convergence probe: labels are per-node monotone non-increasing
-        # (min), so the label multiset is unchanged iff a hash-sum over
-        # (node, component) is — ONE scalar aggregate per round instead
-        # of a join + isEmpty. The hash-sum is a w.h.p. signal, so the
-        # fixed point is CONFIRMED with the exact changed-row join once,
-        # not every round.
-        # decimal(20,0) sum widens to decimal(30,0): no ANSI long
-        # overflow even summing 1e10 max-int64 hashes
-        sig = new_labels.agg(
-            F.sum(
-                F.xxhash64("node", "component").cast("decimal(20,0)")
-            ).alias("s"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-        if prev_sig is not None and (sig[0], sig[1]) == prev_sig:
-            changed = (
-                new_labels.join(
-                    labels.withColumnRenamed("component", "old"), on="node"
-                )
-                .filter(F.col("component") < F.col("old"))
-            )
-            if changed.isEmpty():
-                out = new_labels.localCheckpoint(eager=True)
-                for df in caches:
-                    df.unpersist()
-                return out
-        prev_sig = (sig[0], sig[1])
-        labels = new_labels
-    # Exiting via max_iters means labels may be UNCONVERGED: a
-    # long-diameter chain would get split into multiple "components",
-    # and a dedup job built on top would keep several "canonical" docs
-    # for one true cluster with no error signal. Warn loudly — callers
-    # with legitimately deep graphs should raise max_iters.
-    import warnings
+    sym = sym.repartition("dst")
 
-    warnings.warn(
-        f"connected_components hit max_iters={max_iters} without "
-        "converging; returned labels may split long-diameter components",
-        RuntimeWarning,
-        stacklevel=2,
+    def step(labels, i):
+        # every node offers its label to itself and to each neighbor
+        offers = _offers(labels, sym, labels.node == sym.dst, "src")
+        return _relax(offers, "component", F.min, i)
+
+    labels = iterate(
+        endpoints.select(
+            "node", F.col("node").alias("component"), F.lit(0).alias("_r")
+        ),
+        step,
+        rounds=max_iters,
+        until=_last_change,
+        invariants=(sym,),
     )
-    out = labels.localCheckpoint(eager=True)
-    for df in caches:
-        df.unpersist()
-    return out
+    return labels.select("node", "component")
 
 
-def transitive_closure(
-    edges: DataFrame, max_iters: int = 30, checkpoint_every: int = 4
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     """edges(child, parent) -> closure(node, anc): all (node, ancestor)
     pairs reachable through one or more parent hops.
 
-    Round-6 shape (guide §5): every loop state (``new``, ``closure``,
-    ``up``) is ``persist()``-ed — each is consumed 2-3 times per
-    round (the emptiness probe, the anti-join, the union, the next
-    hop), and without the cache iteration i re-ran the entire lineage
-    of iterations 0..i-1 several times over. The final closure is
-    localCheckpoint-ed so every intermediate cache can be released
-    before returning."""
-    closure = edges.select(
-        F.col("child").alias("node"), F.col("parent").alias("anc")
-    ).distinct().persist()
-    frontier = closure
+    Semi-naive evaluation: each pair carries the round ``_r`` that
+    found it, and round i extends only the pairs found in round i (the
+    frontier) by one hop; a keyed min over (node, anc) keeps each
+    pair's first round, so known pairs are never re-derived. Warns if
+    pairs are still being found after ``max_iters`` rounds: the
+    closure then misses the longer paths."""
     up = edges.select(
         F.col("child").alias("_c"), F.col("parent").alias("_p")
-    ).persist()
-    cached = [closure, up]
-    for i in range(max_iters):
-        # extend the frontier one hop: (node -> anc) + (anc -> anc')
-        stepped = (
-            frontier.join(up, frontier.anc == up._c)
-            .select("node", F.col("_p").alias("anc"))
-            .distinct()
+    ).repartition("_c")
+
+    def step(closure, i):
+        hop = closure.join(
+            up, (closure.anc == up._c) & (closure._r == i), "left"
+        ).select(
+            "node",
+            F.explode(
+                F.array(
+                    F.struct("anc", "_r"),
+                    F.when(
+                        F.col("_c").isNotNull(),
+                        F.struct(F.col("_p").alias("anc"), F.lit(i + 1).alias("_r")),
+                    ),
+                )
+            ).alias("_x"),
         )
-        new = stepped.join(closure, on=["node", "anc"], how="left_anti")
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=True)
-        else:
-            new = new.persist()
-            cached.append(new)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new).distinct().persist()
-        cached.append(closure)
-        # closure feeds the next round twice (anti-join + union) and
-        # persist does not truncate lineage — checkpoint on the same
-        # cadence as `new` so the logical plan stays linear in depth
-        # rather than doubling per round
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            closure = closure.localCheckpoint(eager=True)
-        frontier = new
-    out = closure.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+        return (
+            hop.filter(F.col("_x").isNotNull())
+            .select("node", "_x.*")
+            .groupBy("node", "anc")
+            .agg(F.min("_r").alias("_r"))
+        )
+
+    closure = iterate(
+        edges.select(
+            F.col("child").alias("node"),
+            F.col("parent").alias("anc"),
+            F.lit(0).alias("_r"),
+        ).distinct(),
+        step,
+        rounds=max_iters,
+        until=_last_change,
+        invariants=(up,),
+    )
+    return closure.select("node", "anc")
 
 
 def transitive_reduction(
@@ -289,8 +268,6 @@ def star_components(
     """
     e = star_edges.select(F.col(src).alias("_r"), F.col(dst).alias("_d"))
     e = e.localCheckpoint(eager=True)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("_d")
     # the corpus-sized window output feeds THREE consumers (the probe
     # action below, the rep graph, and doc_labels) — pin it so the
@@ -400,6 +377,20 @@ def star_components(
     return u.groupBy("node").agg(F.min("component").alias("component"))
 
 
+def _or_raise(hint: str, run):
+    """Run a frontier fixpoint whose truncated result would be wrong,
+    not merely coarse (missing nodes read as unreachable): its
+    non-convergence warning becomes a RuntimeError."""
+    with warnings.catch_warnings():
+        warnings.filterwarnings(
+            "error", ".* without converging", RuntimeWarning
+        )
+        try:
+            return run()
+        except RuntimeWarning as w:
+            raise RuntimeError(f"{w}: {hint}") from None
+
+
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -414,46 +405,21 @@ def bfs_distances(
     ``util.py`` computes HPO depths driver-side on the in-memory DAG;
     this is the same semantics for graphs that don't fit a driver).
 
-    Semi-naive frontier expansion: each round joins ONLY the frontier
-    (nodes first reached last round) against the edge table, anti-joins
-    the visited set, and tags survivors with ``dist = round``. BFS
-    order guarantees the first visit is the minimum distance, so no
-    per-node min-reduction is ever needed. Cost per round is one
-    equi-join + one anti-join shuffled on the node key; the frontier
-    is the only growing input, and ``localCheckpoint`` keeps the plan
-    flat. Rounds = graph depth from the sources (the unavoidable
-    sequential dimension of BFS).
+    BFS is :func:`sssp_distances` with unit weights: with every weight
+    1 a node's distance improves exactly once, in the round that first
+    reaches it, so round i expands only the nodes at dist i. Rounds =
+    graph depth from the sources (the unavoidable sequential dimension
+    of BFS).
 
     Raises RuntimeError if the frontier is still non-empty after
     ``max_iters`` — a silently truncated BFS would report missing
-    nodes as unreachable, the same failure mode connected_components
-    warns about.
+    nodes as unreachable.
     """
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-    dist = (
-        sources.select(F.col(sources.columns[0]).alias("node"))
-        .distinct()
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpoint(eager=True)
+    unit = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1.0).alias("w")
     )
-    frontier = dist.select("node")
-    for i in range(1, max_iters + 1):
-        stepped = (
-            frontier.join(e, frontier.node == e._s)
-            .select(F.col("_t").alias("node"))
-            .distinct()
-        )
-        new = stepped.join(dist, on="node", how="left_anti").select(
-            "node", F.lit(i).cast("bigint").alias("dist")
-        )
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            return dist
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("node")
-    raise RuntimeError(
-        f"bfs_distances: frontier non-empty after max_iters={max_iters}; "
-        "graph is deeper than the iteration budget"
+    return sssp_distances(unit, sources, max_iters=max_iters).select(
+        "node", F.col("dist").cast("bigint").alias("dist")
     )
 
 
@@ -474,57 +440,39 @@ def sssp_distances(
     per-round relax-join IS the standard formulation, cf. Pregel SSSP).
 
     Each round relaxes only edges leaving the CURRENT frontier (nodes
-    whose distance improved last round): one equi-join + one keyed min
-    — map-side combinable — then a min-merge against the running
-    distances; a node re-enters the frontier only on strict
-    improvement, so with non-negative weights the loop terminates in
-    at most (longest shortest-path hop count) rounds.
-    localCheckpoint flattens lineage per round. Raises RuntimeError if
-    the frontier survives ``max_iters`` (same contract as
-    bfs_distances — silent truncation would mislabel reachable nodes).
+    whose distance improved last round, ``_r == i``): one left join of
+    the distances onto the cached edge table, co-partitioned on the
+    node key, + one keyed min — map-side combinable. A node re-enters
+    the frontier only on strict improvement, so with non-negative
+    weights the loop terminates in at most (longest shortest-path hop
+    count) rounds. Raises RuntimeError if the frontier survives
+    ``max_iters`` (silent truncation would mislabel reachable nodes).
     """
     e = edges.select(
         F.col(src).alias("_s"),
         F.col(dst).alias("_t"),
         F.col(weight).cast("double").alias("_w"),
-    )
-    dist = (
+    ).repartition("_s")
+
+    def step(dist, i):
+        offers = _offers(dist, e, (dist.node == e._s) & (dist._r == i), "_t")
+        offers = offers.withColumn(
+            "dist", F.when(F.col("_own"), F.col("dist")).otherwise(F.col("dist") + F.col("_w"))
+        )
+        return _relax(offers, "dist", F.min, i)
+
+    start = (
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
-        .select("node", F.lit(0.0).alias("dist"))
-        .localCheckpoint(eager=True)
+        .select("node", F.lit(0.0).alias("dist"), F.lit(0).alias("_r"))
     )
-    frontier = dist
-    for _ in range(max_iters):
-        relaxed = (
-            frontier.join(e, frontier.node == e._s)
-            .groupBy(F.col("_t").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("_w")).alias("_cand"))
-        )
-        merged = (
-            dist.join(relaxed, on="node", how="full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce("dist", F.lit(float("inf"))),
-                    F.coalesce("_cand", F.lit(float("inf"))),
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("_cand") < F.col("dist"))
-                ).alias("_improved"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.filter(
-            F.coalesce("_improved", F.lit(False))
-        ).select("node", "dist")
-        dist = merged.select("node", "dist")
-        if frontier.isEmpty():
-            return dist
-    raise RuntimeError(
-        f"sssp_distances: frontier non-empty after max_iters={max_iters}"
+    dist = _or_raise(
+        "the graph is deeper than the iteration budget",
+        lambda: iterate(
+            start, step, rounds=max_iters, until=_last_change, invariants=(e,)
+        ),
     )
+    return dist.select("node", "dist")
 
 
 def strongly_connected_components(
@@ -550,8 +498,10 @@ def strongly_connected_components(
       cycle, so they are singleton SCCs. On the graphs this engine
       targets (extracted is-a edges, dependency graphs) the
       overwhelming bulk is acyclic and trims away in a few rounds;
-      each round is two distinct-projections + two left-semi joins,
-      all node-keyed.
+      each round is one node-keyed window over the edges' endpoint
+      rows + one edge-keyed aggregate. Trim is only a shortcut: if it has not settled
+      within ``max_trim_iters`` it warns and the core phase takes the
+      larger residue; the result stays exact.
     * **Core**: on the surviving cyclic core, SCC(u) = min over
       {u} union {v : u ->* v and v ->* u}, computed as the semi-naive
       :func:`transitive_closure` of the core intersected with its
@@ -567,44 +517,43 @@ def strongly_connected_components(
     reflexive union leaves them as singletons. Output is exact and
     deterministic for any input.
     """
-    e = (
-        edges.select(
-            F.col(src).cast("string").alias("a"),
-            F.col(dst).cast("string").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    core = e
-    n_edges = core.count()
-    for _ in range(max_trim_iters):
-        keep = (
-            core.select(F.col("a").alias("node"))
-            .distinct()
-            .join(core.select(F.col("b").alias("node")).distinct(), "node")
-        )
-        nxt = (
-            core.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
-            .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
+    e = edges.select(
+        F.col(src).cast("string").alias("a"),
+        F.col(dst).cast("string").alias("b"),
+    ).distinct()
+
+    def trim(core, i):
+        # a node keeps its edges iff it has both an out-edge (_o = 1)
+        # and an in-edge (_o = 0); an edge survives iff both ends do
+        ends = core.select(
+            "a",
+            "b",
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("_n"), F.lit(1).alias("_o")),
+                    F.struct(F.col("b").alias("_n"), F.lit(0).alias("_o")),
+                )
+            ).alias("_x"),
+        ).select("a", "b", "_x.*")
+        w = Window.partitionBy("_n")
+        return (
+            ends.withColumn("_ok", F.max("_o").over(w) - F.min("_o").over(w))
+            .groupBy("a", "b")
+            .agg(F.min("_ok").alias("_ok"))
+            .filter(F.col("_ok") == 1)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        core = nxt
-        if n_nxt == n_edges:
-            break
-        n_edges = n_nxt
+
+    core = iterate(
+        e,
+        trim,
+        rounds=max_trim_iters,
+        until=lambda s: s.count(),
+    )
     core_nodes = (
         core.select(F.col("a").alias("node"))
         .unionByName(core.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     clo = transitive_closure(
         core.select(F.col("a").alias("child"), F.col("b").alias("parent")),
@@ -618,6 +567,11 @@ def strongly_connected_components(
         core_nodes.select("node", F.col("node").alias("anc"))
     )
     scc_core = partners.groupBy("node").agg(F.min("anc").alias("component"))
+    all_nodes = (
+        e.select(F.col("a").alias("node"))
+        .unionByName(e.select(F.col("b").alias("node")))
+        .distinct()
+    )
     trimmed = all_nodes.join(core_nodes, "node", "left_anti").select(
         "node", F.col("node").alias("component")
     )
@@ -644,14 +598,15 @@ def topo_layers(
     Fixed-point DP rather than Kahn peeling: start every node at the
     lower bound (0 for sources; 1 for anything with an in-edge) and
     repeat layer(v) <- max(layer(v), 1 + max incoming layer(u)) until
-    unchanged. Each round is one edge equi-join + one dst-keyed max —
-    both combiner-friendly — and the round count equals the DAG depth,
+    unchanged. Each round pushes only the nodes whose layer moved last
+    round: one left join onto the edges + one node-keyed max — both
+    combiner-friendly — and the round count equals the DAG depth,
     the same bound every frontier op in this module pays
-    (:func:`bfs_distances`, :func:`transitive_closure`);
-    `localCheckpoint` keeps lineage flat. Layers only ever increase
-    and are bounded by depth on a DAG, so non-convergence within
-    ``max_iters`` means a cycle (or a deeper graph): raise and point
-    at :func:`strongly_connected_components` / :func:`cyclic_nodes`.
+    (:func:`bfs_distances`, :func:`transitive_closure`). Layers only
+    ever increase and are bounded by depth on a DAG, so
+    non-convergence within ``max_iters`` means a cycle (or a deeper
+    graph): raise and point at :func:`strongly_connected_components` /
+    :func:`cyclic_nodes`.
     """
     e = (
         edges.select(
@@ -660,7 +615,7 @@ def topo_layers(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .repartition("u")
     )
     nodes = (
         e.select(F.col("u").alias("node"))
@@ -668,45 +623,25 @@ def topo_layers(
         .distinct()
     )
     has_in = e.select(F.col("v").alias("node")).distinct()
-    layer = (
-        nodes.join(has_in.withColumn("_h", F.lit(1)), "node", "left")
-        .select(
-            "node",
-            F.coalesce("_h", F.lit(0)).cast("bigint").alias("layer"),
+
+    def step(layer, i):
+        # nodes whose layer moved last round push layer + 1 downstream
+        offers = _offers(layer, e, (layer.node == e.u) & (layer._r == i), "v")
+        offers = offers.withColumn(
+            "layer", F.when(F.col("_own"), F.col("layer")).otherwise(F.col("layer") + 1)
         )
-        .localCheckpoint(eager=True)
+        return _relax(offers, "layer", F.max, i)
+
+    start = nodes.join(has_in.withColumn("_h", F.lit(1)), "node", "left").select(
+        "node",
+        F.coalesce("_h", F.lit(0)).cast("bigint").alias("layer"),
+        F.lit(0).alias("_r"),
     )
-    for _ in range(max_iters):
-        bumped = (
-            e.join(
-                layer.select(F.col("node").alias("u"), F.col("layer").alias("_lu")),
-                "u",
-            )
-            .groupBy(F.col("v").alias("node"))
-            .agg((F.max("_lu") + F.lit(1)).alias("_cand"))
-        )
-        nxt = (
-            layer.join(bumped, "node", "left")
-            .select(
-                "node",
-                F.greatest(
-                    F.col("layer"), F.coalesce("_cand", F.lit(0))
-                ).alias("layer"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            nxt.join(
-                layer.select("node", F.col("layer").alias("_old")), "node"
-            )
-            .filter(F.col("layer") != F.col("_old"))
-            .count()
-        )
-        layer = nxt
-        if changed == 0:
-            return layer
-    raise RuntimeError(
-        f"topo_layers did not converge in max_iters={max_iters}: the "
-        "graph has a cycle or is deeper than the budget — run "
-        "strongly_connected_components/cyclic_nodes to locate cycles"
+    layer = _or_raise(
+        "the graph has a cycle or is deeper than the budget — run "
+        "strongly_connected_components/cyclic_nodes to locate cycles",
+        lambda: iterate(
+            start, step, rounds=max_iters, until=_last_change, invariants=(e,)
+        ),
     )
+    return layer.select("node", "layer")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._fixpoint import iterate
+
 
 def closure_with_self(closure: DataFrame, node: str = "node", anc: str = "anc") -> DataFrame:
     """Add identity pairs (c, c) to a proper-ancestor closure so that
@@ -243,24 +245,15 @@ def pagerank(
     convergence-gated, so the result is a deterministic function of
     the graph and both engines of the q113 contract can unroll the
     same arithmetic. Dangling-node mass (out_deg 0) is dropped, the
-    common simplification; document it if ranks must sum to 1.
+    common simplification; document it if ranks must sum to 1. An
+    empty edge table gives an empty rank frame.
 
     Plan per iteration: one equi-join of the rank vector onto the
     edge table (rank side is node-keyed, edge side pre-joined with
     out-degree once, outside the loop) + one dst-keyed aggregate,
     then a left join back onto the node set for no-in-edge nodes.
-
-    Round-6 shape (guide §2.4/§5): ``localCheckpoint`` erases a
-    DataFrame's output partitioning (``UnknownPartitioning`` on the
-    RDD scan), so the previous per-iteration checkpoints made every
-    round re-broadcast the full edge table, re-exchange + re-sort the
-    node set, and recompute + broadcast the node count. Now: the node
-    count is a driver-side scalar computed once; ``nodes`` and ``ed``
-    are ``persist()``-ed (cache preserves partitioning, so the
-    iteration joins reuse the agg/distinct exchanges); the loop builds
-    lineage lazily and only checkpoints every few rounds to keep the
-    plan bounded — a 3-iteration pagerank is ONE AQE query instead of
-    ~10 small jobs (measured sf0.1 local[32]: 6.1-9.0s -> ~2s).
+    The node count is one collected scalar; the rounds plan lazily (a
+    3-iteration pagerank is ONE AQE query).
     """
     # One exchange of the edge table, total: ep is hash-partitioned on
     # the source key and cached, so (a) the out-degree aggregate runs
@@ -271,24 +264,24 @@ def pagerank(
     # (src, dst, out_deg) edge table (|E| rows) up front. Node set =
     # degree keys (distinct sources, free byproduct) + distinct
     # destinations — cheaper than distinct over the 2|E| union.
-    ep = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-        .repartition("_s")
-        .persist()
+    ep = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).repartition(
+        "_s"
     )
-    deg = (
-        ep.groupBy("_s").agg(F.count("*").cast("double").alias("_od")).persist()
-    )
+    deg = ep.groupBy("_s").agg(F.count("*").cast("double").alias("_od"))
     nodes = (
         deg.select(F.col("_s").alias("node"))
         .unionByName(ep.select(F.col("_t").alias("node")).distinct())
         .distinct()
-        .persist()
     )
-    n = float(nodes.count())  # one driver scalar, not a per-plan agg
+    n = 1.0
 
-    rank = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for i in range(iters):
+    def start():
+        nonlocal n
+        # an empty graph has no rank rows, so any n > 0 serves
+        n = float(nodes.count()) or 1.0
+        return nodes.select("node", F.lit(1.0 / n).alias("rank"))
+
+    def step(rank, i):
         w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
             "_s", (F.col("rank") / F.col("_od")).alias("_w")
         )
@@ -297,23 +290,15 @@ def pagerank(
             .groupBy(F.col("_t").alias("node"))
             .agg(F.sum("_w").alias("_in"))
         )
-        rank = nodes.join(contrib, on="node", how="left").select(
+        return nodes.join(contrib, on="node", how="left").select(
             "node",
             (
                 F.lit((1.0 - damping) / n)
                 + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        # bound lineage on long runs without paying a materialization
-        # per round (checkpoint drops cached partitioning, so do it
-        # rarely, not every iteration)
-        if (i + 1) % 4 == 0 and (i + 1) < iters:
-            rank = rank.localCheckpoint(eager=True)
-    rank = rank.localCheckpoint(eager=True)
-    nodes.unpersist()
-    deg.unpersist()
-    ep.unpersist()
-    return rank
+
+    return iterate(start, step, rounds=iters, invariants=(ep, deg, nodes))
 
 
 def triangle_count(
@@ -429,21 +414,16 @@ def label_propagation(
     Plan per round: one equi-join (neighbor labels), one keyed count,
     one per-node top-1 window — all on the node key, map-side
     combinable, hub-skew bounded by distinct neighbor LABELS (not
-    neighbors). localCheckpoint flattens lineage across rounds.
+    neighbors).
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    # Round 6: the neighbor-label join runs on "b" every round — cache
-    # the symmetrized edges hash-partitioned on that key (persist
-    # keeps the partitioning; the old per-round localCheckpoint chain
-    # erased it and re-shuffled sym each iteration). The loop is lazy
-    # with a rare lineage checkpoint.
+    # the neighbor-label join runs on "b" every round
     sym = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .repartition("b")
-        .persist()
     )
     all_nodes = sym.select(F.col("a").alias("node")).distinct()
     if nodes is not None:
@@ -452,12 +432,11 @@ def label_propagation(
             .unionByName(all_nodes)
             .distinct()
         )
-    all_nodes = all_nodes.persist()
-    labels = all_nodes.select("node", F.col("node").alias("lbl"))
     wtop = Window.partitionBy("node").orderBy(
         F.col("_c").desc(), F.col("lbl")
     )
-    for i in range(iters):
+
+    def step(labels, i):
         votes = (
             sym.join(labels.withColumnRenamed("node", "b"), on="b")
             .groupBy(F.col("a").alias("node"), "lbl")
@@ -468,14 +447,16 @@ def label_propagation(
             .filter(F.col("_rn") == 1)
             .select("node", "lbl")
         )
-        labels = all_nodes.join(top, on="node", how="left").select(
+        return all_nodes.join(top, on="node", how="left").select(
             "node", F.coalesce("lbl", F.col("node")).alias("lbl")
         )
-        if (i + 1) % 2 == 0 and (i + 1) < iters:
-            labels = labels.localCheckpoint(eager=True)
-    labels = labels.localCheckpoint(eager=True)
-    all_nodes.unpersist()
-    sym.unpersist()
+
+    labels = iterate(
+        all_nodes.select("node", F.col("node").alias("lbl")),
+        step,
+        rounds=iters,
+        invariants=(sym, all_nodes),
+    )
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -556,24 +537,21 @@ def personalized_pagerank(
     left join); the reset vector is a broadcast-joined flag column
     computed once.
     """
-    # Same round-6 shape as :func:`pagerank`: one exchange of the edge
-    # table total (hash-partitioned on the source key, cached), degree
+    # Same shape as :func:`pagerank`: one exchange of the edge table
+    # total (hash-partitioned on the source key, cached), degree
     # aggregate exchange-free on top of it, degree attached to the
     # rank side per round, node set from degree keys + distinct
-    # destinations, lazy loop with a rare lineage checkpoint.
-    ep = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-        .repartition("_s")
-        .persist()
-    )
+    # destinations.
     seed_nodes = seeds.select(
         F.col(seeds.columns[0]).alias("node")
     ).distinct()
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
-        ep.unpersist()
         raise ValueError("personalized_pagerank needs at least one seed")
-    deg = ep.groupBy("_s").agg(F.count("*").alias("_od")).persist()
+    ep = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).repartition(
+        "_s"
+    )
+    deg = ep.groupBy("_s").agg(F.count("*").alias("_od"))
     # The node universe is edges ∪ seeds: a seed with no incident edge
     # still owns 1/n_seeds of the reset mass and must appear in the
     # output rank vector (otherwise its mass silently vanishes and
@@ -583,12 +561,7 @@ def personalized_pagerank(
         .unionByName(ep.select(F.col("_t").alias("node")).distinct())
         .unionByName(seed_nodes)
         .distinct()
-    )
-    reset = F.when(
-        F.col("_is_seed"), F.lit(1.0) / F.lit(float(n_seeds))
-    ).otherwise(F.lit(0.0))
-    nodes = (
-        nodes.join(
+        .join(
             F.broadcast(seed_nodes.withColumn("_is_seed", F.lit(True))),
             on="node",
             how="left",
@@ -597,10 +570,12 @@ def personalized_pagerank(
             "node",
             F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"),
         )
-        .persist()
     )
-    rank = nodes.select("node", reset.alias("rank"))
-    for i in range(iters):
+    reset = F.when(
+        F.col("_is_seed"), F.lit(1.0) / F.lit(float(n_seeds))
+    ).otherwise(F.lit(0.0))
+
+    def step(rank, i):
         w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
             "_s", (F.col("rank") / F.col("_od")).alias("_w")
         )
@@ -609,20 +584,20 @@ def personalized_pagerank(
             .groupBy(F.col("_t").alias("node"))
             .agg(F.sum("_w").alias("_in"))
         )
-        rank = nodes.join(contrib, on="node", how="left").select(
+        return nodes.join(contrib, on="node", how="left").select(
             "node",
             (
                 F.lit(1.0 - damping) * reset
                 + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (i + 1) % 4 == 0 and (i + 1) < iters:
-            rank = rank.localCheckpoint(eager=True)
-    rank = rank.localCheckpoint(eager=True)
-    nodes.unpersist()
-    deg.unpersist()
-    ep.unpersist()
-    return rank
+
+    return iterate(
+        nodes.select("node", reset.alias("rank")),
+        step,
+        rounds=iters,
+        invariants=(ep, deg, nodes),
+    )
 
 
 def hits(
@@ -633,7 +608,7 @@ def hits(
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     table, FIXED iteration count from the all-ones start, L1 (sum)
-    normalization after every half-step. Returns (node, hub, auth).
+    normalized. Returns (node, hub, auth).
 
     L1 rather than the textbook L2 normalization is deliberate: both
     contract engines then evaluate only +,/ over the same operands
@@ -643,69 +618,65 @@ def hits(
     scalar per step, which normalization cancels at the fixpoint.
 
     Plan per iteration: each half-step is one equi-join of the score
-    vector onto the edge list + one keyed sum + a 1-row global sum
-    (broadcast back) — the same shuffle shape as :func:`pagerank`, so
-    the 100-TB story (edge table partitioned by join key, score
-    vector node-keyed, map-side combine on the sums) carries over.
-    ``localCheckpoint`` flattens the 2*iters-join lineage.
+    vector onto the edge list + one keyed sum — the same shuffle shape
+    as :func:`pagerank`, so the 100-TB story (edge table partitioned by
+    join key, score vector node-keyed, map-side combine on the sums)
+    carries over. Normalizing once at the end equals normalizing every
+    half-step; unnormalized scores grow at most by the max degree per
+    half-step, far inside double range for any practical ``iters``.
     """
     if iters < 1:
         raise ValueError("hits needs iters >= 1 (auth is undefined at h0)")
-    # Round 6: each half-step joins the edge table on a DIFFERENT key
-    # (_s for the auth push, _t for the hub pull), so cache one copy
-    # hash-partitioned per orientation — every one of the 2*iters
-    # joins then reuses a cached exchange instead of re-shuffling the
-    # edges (localCheckpoint erased partitioning, forcing exactly
-    # that). Half-step scores stay eagerly checkpointed: each is read
-    # by its own L1-sum broadcast AND the next half-step, and the
-    # per-step global sum cannot be hoisted out of the loop.
+    # Each half-step joins the edge table on a DIFFERENT key (_s for
+    # the auth push, _t for the hub pull), so one copy is cached
+    # hash-partitioned per orientation and every one of the 2*iters
+    # joins reuses it. A loop round is one half-step. L1 normalization
+    # is a positive scalar per half-step, which the next half-step's
+    # sums carry along unchanged, so scores propagate unnormalized
+    # (each half-step reads its input once) and both vectors are
+    # normalized once at the end.
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-    ep_s = e.repartition("_s").persist()
-    ep_t = e.repartition("_t").persist()
+    ep_s = e.repartition("_s")
+    ep_t = e.repartition("_t")
     # per-side distincts run exchange-free on the cached partitioning;
     # only the final |V|-sized union pays a shuffle
     nodes = (
         ep_s.select(F.col("_s").alias("node")).distinct()
         .unionByName(ep_t.select(F.col("_t").alias("node")).distinct())
         .distinct()
-        .persist()
     )
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(iters):
-        a_raw = (
-            ep_s.join(hub.withColumnRenamed("node", "_s"), on="_s")
-            .groupBy(F.col("_t").alias("node"))
-            .agg(F.sum("hub").alias("_ar"))
+
+    def half_step(score, i):
+        # even i: authorities sum the hub scores of their in-neighbors;
+        # odd i: hubs sum the authority scores of their out-neighbors
+        ep, key, to, old, new = (
+            (ep_s, "_s", "_t", "hub", "auth")
+            if i % 2 == 0
+            else (ep_t, "_t", "_s", "auth", "hub")
         )
-        a_all = nodes.join(a_raw, on="node", how="left").select(
-            "node", F.coalesce("_ar", F.lit(0.0)).alias("_ar")
+        raw = (
+            ep.join(score.select(F.col("node").alias(key), old), on=key)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(old).alias("_raw"))
         )
-        a_sum = F.broadcast(a_all.agg(F.sum("_ar").alias("_as")))
-        auth = (
-            a_all.crossJoin(a_sum)
-            .select("node", (F.col("_ar") / F.col("_as")).alias("auth"))
-            .localCheckpoint(eager=True)
+        out = nodes.join(raw, on="node", how="left").select(
+            "node", F.coalesce("_raw", F.lit(0.0)).alias(new)
         )
-        h_raw = (
-            ep_t.join(auth.withColumnRenamed("node", "_t"), on="_t")
-            .groupBy(F.col("_s").alias("node"))
-            .agg(F.sum("auth").alias("_hr"))
-        )
-        h_all = nodes.join(h_raw, on="node", how="left").select(
-            "node", F.coalesce("_hr", F.lit(0.0)).alias("_hr")
-        )
-        h_sum = F.broadcast(h_all.agg(F.sum("_hr").alias("_hs")))
-        hub = (
-            h_all.crossJoin(h_sum)
-            .select("node", (F.col("_hr") / F.col("_hs")).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-    out = hub.join(auth, on="node")
-    nodes.unpersist()
-    ep_s.unpersist()
-    ep_t.unpersist()
-    return out
+        # the last half-step (a hub update) carries the final authorities
+        return out.join(score, on="node") if i == 2 * iters - 1 else out
+
+    out = iterate(
+        nodes.select("node", F.lit(1.0).alias("hub")),
+        half_step,
+        rounds=2 * iters,
+        invariants=(ep_s, ep_t, nodes),
+    )
+    hub_sum, auth_sum = out.agg(F.sum("hub"), F.sum("auth")).first()
+    return out.select(
+        "node",
+        (F.col("hub") / F.lit(hub_sum)).alias("hub"),
+        (F.col("auth") / F.lit(auth_sum)).alias("auth"),
+    )
 
 
 def k_core(
@@ -726,35 +697,33 @@ def k_core(
     (q141). Production runs the same loop convergence-gated (stop
     when the peel removes 0 nodes, one extra count per round).
 
-    Plan per round: one node-keyed degree count + one semi-join of
-    the edge table onto surviving nodes per endpoint — all narrow
-    equi-joins on node keys; no wedge materialization anywhere, so
-    hubs cost their degree, never degree^2. ``localCheckpoint``
-    flattens the per-round lineage exactly as in
-    :func:`~phenobert_spark.operators.closure.connected_components`.
+    Plan per round: one node-keyed window count over the edges'
+    endpoint rows + one edge-keyed min — no joins and no wedge
+    materialization anywhere, so hubs cost their degree, never
+    degree^2.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        sym = und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        deg = sym.groupBy(F.col("a").alias("node")).agg(
-            F.count("*").alias("_deg")
-        )
-        alive = deg.filter(F.col("_deg") >= k).select("node")
-        und = (
-            und.join(alive.withColumnRenamed("node", "a"), on="a", how="semi")
-            .join(alive.withColumnRenamed("node", "b"), on="b", how="semi")
+
+    def peel(und, i):
+        # an edge survives iff both ends have degree >= k: the degree is
+        # a window count over the edge's two endpoint rows
+        ends = und.select("a", "b", F.explode(F.array("a", "b")).alias("_n"))
+        return (
+            ends.withColumn("_d", F.count("*").over(Window.partitionBy("_n")))
+            .groupBy("a", "b")
+            .agg(F.min("_d").alias("_d"))
+            .filter(F.col("_d") >= k)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
+
+    und = iterate(
+        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct(),
+        peel,
+        rounds=iters,
+    )
     sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     return sym.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("bigint").alias("core_degree")
@@ -1088,9 +1057,8 @@ def hyperball(
     per-bucket max) with counter(w, r) for every out-edge u -> w.
     Registers live SPARSELY as (node, bucket, rho) rows — a node's
     row count is min(|ball|, 2^p), so early rounds are far below the
-    dense 2^p bound; merges are groupBy-max, map-side combinable,
-    and localCheckpoint flattens the per-round lineage exactly like
-    :func:`pagerank`. Hashes derive from md5 (sketches._md5_u32), so
+    dense 2^p bound; merges are groupBy-max, map-side combinable.
+    Hashes derive from md5 (sketches._md5_u32), so
     registers AND estimates are cross-engine exact (q120 property);
     the estimate stage is shared via
     sketches.hll_estimate_from_registers.
@@ -1109,40 +1077,55 @@ def hyperball(
     ).filter(F.col("u") != F.col("v"))
     if not directed:
         e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    e = e.distinct().localCheckpoint(eager=True)
+    e = e.distinct()
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
     )
-    regs = hll_registers(
-        nodes.select("node", F.col("node").alias("member")),
-        "member",
-        ["node"],
-        p=p,
-    ).localCheckpoint(eager=True)
+    # self-loops make each node merge its own registers with its
+    # out-neighbors' in the same join
+    reach = e.unionByName(nodes.select(F.col("node").alias("u"), F.col("node").alias("v")))
+    reach = reach.repartition("v")
 
-    def _est(r: int, rg: DataFrame) -> DataFrame:
-        return hll_estimate_from_registers(rg, ["node"], p=p).select(
-            "node",
-            F.lit(r).cast("int").alias("radius"),
-            "n_buckets",
-            "est",
+    # the state holds the registers of every radius so far, tagged
+    def step(regs, r):
+        hop = regs.join(
+            reach, (regs.node == reach.v) & (regs.radius == r), "left"
+        ).select(
+            "bucket",
+            "rho",
+            F.explode(
+                F.array(
+                    F.struct("node", "radius"),
+                    F.when(
+                        F.col("u").isNotNull(),
+                        F.struct(F.col("u").alias("node"), F.lit(r + 1).alias("radius")),
+                    ),
+                )
+            ).alias("_x"),
         )
-
-    out = _est(0, regs)
-    for r in range(1, radius + 1):
-        prop = e.join(
-            regs.withColumnRenamed("node", "v"), on="v"
-        ).select(F.col("u").alias("node"), "bucket", "rho")
-        regs = (
-            regs.unionByName(prop)
-            .groupBy("node", "bucket")
+        return (
+            hop.filter(F.col("_x").isNotNull())
+            .select("_x.*", "bucket", "rho")
+            .groupBy("node", "bucket", "radius")
             .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=True)
         )
-        out = out.unionByName(_est(r, regs))
-    return out
+
+    regs = iterate(
+        hll_registers(
+            nodes.select("node", F.col("node").alias("member")),
+            "member",
+            ["node"],
+            p=p,
+        ).withColumn("radius", F.lit(0)),
+        step,
+        rounds=radius,
+        invariants=(reach,),
+    )
+    return hll_estimate_from_registers(regs, ["node", "radius"], p=p).select(
+        "node", "radius", "n_buckets", "est"
+    )
 
 
 def neighborhood_function(hb: DataFrame) -> DataFrame:
@@ -1482,42 +1465,29 @@ def k_truss(
     regions. Iterative peel: recompute per-edge support on the
     surviving edges (each round is the verified
     :func:`edge_triangle_support` plan) and drop edges below k-2
-    until a fixpoint; rounds are bounded by the peel depth, each
-    strictly shrinks the edge set, and `localCheckpoint` keeps the
-    lineage flat. Returns the surviving (u, v) edges, u < v.
+    until a fixpoint; rounds are bounded by the peel depth and each
+    strictly shrinks the edge set. Warns if ``max_iters`` runs out
+    first. Returns the surviving (u, v) edges, u < v.
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    cur = (
+
+    def peel(cur, i):
+        return (
+            edge_triangle_support(cur, src="a", dst="b")
+            .filter(F.col("support") >= k - 2)
+            .select(F.col("u").alias("a"), F.col("v").alias("b"))
+        )
+
+    cur = iterate(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        peel,
+        rounds=max_iters,
+        until=lambda s: s.count(),
     )
-    n = cur.count()
-    for _ in range(max_iters):
-        if n == 0:
-            break
-        sup = edge_triangle_support(cur, src="a", dst="b")
-        nxt = (
-            sup.filter(F.col("support") >= k - 2)
-            .select(F.col("u").alias("a"), F.col("v").alias("b"))
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        cur = nxt
-        if n_nxt == n:
-            break
-        n = n_nxt
-    else:
-        import warnings
-
-        warnings.warn(
-            f"k_truss hit max_iters={max_iters} before the peel converged",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     return cur.select(F.col("a").alias("u"), F.col("b").alias("v")).orderBy("u", "v")
 
 
@@ -1559,10 +1529,14 @@ def wl_refinement(
         F.col(dst).cast("string").alias("b"),
     ).filter(F.col("a") != F.col("b"))
     und = e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")).distinct()
-    sym = und.unionByName(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     nodes = sym.select(F.col("a").alias("node")).distinct()
+    # each node reads its own color (_own) and its neighbors' in one join
+    adj = (
+        sym.withColumn("_own", F.lit(False))
+        .unionByName(nodes.select(F.col("node").alias("a"), F.col("node").alias("b"), F.lit(True).alias("_own")))
+        .repartition("b")
+    )
     if labels is not None:
         lab = labels.select(
             F.col(labels.columns[0]).cast("string").alias("node"),
@@ -1573,33 +1547,21 @@ def wl_refinement(
         )
     else:
         color = nodes.select("node", F.lit("0").alias("color"))
-    color = color.localCheckpoint(eager=True)
-    for _ in range(rounds):
-        nbr_sig = (
-            sym.join(
-                color.select(
-                    F.col("node").alias("b"), F.col("color").alias("_nc")
-                ),
-                "b",
-            )
-            .groupBy(F.col("a").alias("node"))
-            .agg(
+
+    def step(color, i):
+        seen = adj.join(color.withColumnRenamed("node", "b"), "b")
+        nbr = F.collect_list(F.when(~F.col("_own"), F.col("color")))
+        return seen.groupBy(F.col("a").alias("node")).agg(
+            F.md5(
                 F.concat_ws(
-                    ",", F.sort_array(F.collect_list("_nc"))
-                ).alias("_sig")
-            )
+                    "|",
+                    F.max(F.when(F.col("_own"), F.col("color"))),
+                    F.concat_ws(",", F.sort_array(nbr)),
+                )
+            ).alias("color")
         )
-        color = (
-            color.join(nbr_sig, "node")
-            .select(
-                "node",
-                F.md5(F.concat_ws("|", F.col("color"), F.col("_sig"))).alias(
-                    "color"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return color
+
+    return iterate(color, step, rounds=rounds, invariants=(adj,))
 
 
 def pathsim_topk(

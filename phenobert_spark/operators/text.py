@@ -35,10 +35,6 @@ def whitespace_tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def bpe_token_count(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_PRETOKEN_RE), 0))
-
-
 def stopword_ratio(
     toks: Column, stopwords: list[str] | None = None
 ) -> Column:
