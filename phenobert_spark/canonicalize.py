@@ -13,12 +13,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .config import local_frame
 from .ontology import Ontology
 
 
 def _alt_df(spark: SparkSession, onto: Ontology) -> DataFrame:
-    rows = sorted(onto.alt_ids.items())
-    return spark.createDataFrame(rows or [("__none__", "__none__")], "alt STRING, canon STRING")
+    return local_frame(spark, sorted(onto.alt_ids.items()), "alt STRING, canon STRING")
+
+
+def _abnormal_df(spark: SparkSession, onto: Ontology, col: str = "hpo_id") -> DataFrame:
+    return local_frame(spark, [(h,) for h in sorted(onto.abnormal_set)], f"{col} STRING")
+
+
+def _ancestor_pairs_df(spark: SparkSession, onto: Ontology) -> DataFrame:
+    """(node, anc) for every strict ancestor of every node."""
+    rows = [
+        (node, anc)
+        for node, ancs in sorted(onto.ancestors().items())
+        for anc in sorted(ancs)
+        if anc != node
+    ]
+    return local_frame(spark, rows, "node STRING, anc STRING")
 
 
 def canonicalize_ids(
@@ -37,9 +52,7 @@ def filter_abnormal(
 ) -> DataFrame:
     """Keep only ids under HP:0000118 (root excluded), the reference's
     phenotypic_abnormalityNT gate (util.py:1050)."""
-    members = spark.createDataFrame(
-        [(h,) for h in sorted(onto.abnormal_set)], f"{col}: string"
-    )
+    members = _abnormal_df(spark, onto, col)
     return df.join(F.broadcast(members), on=col, how="left_semi")
 
 
@@ -48,17 +61,7 @@ def drop_redundant_ancestors(
 ) -> DataFrame:
     """Optional KG cleanup: if a doc asserts both X and an ancestor of X,
     drop the ancestor (the more specific concept subsumes it)."""
-    anc_rows = [
-        (node, anc)
-        for node, ancs in sorted(onto.ancestors().items())
-        for anc in sorted(ancs)
-        if anc != node
-    ]
-    if not anc_rows:
-        return triples
-    anc = F.broadcast(
-        spark.createDataFrame(anc_rows, "node STRING, anc STRING")
-    )
+    anc = F.broadcast(_ancestor_pairs_df(spark, onto))
     specific = (
         triples.select("doc_id", F.col("hpo_id").alias("node"))
         .distinct()

@@ -1,4 +1,4 @@
-"""Engine configuration and SparkSession factory.
+"""Engine configuration, SparkSession factory and driver-table helper.
 
 Thresholds mirror the reference defaults (reference:
 phenobert/utils/annotate.py:18-20 — p1=0.8 L1 router, p2=0.6 subtree
@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 # Where the reference checkout lives (read-only). Used ONLY as a data
 # source for ontology surface forms + golden corpora; never imported.
@@ -125,3 +126,31 @@ def get_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s field order) as a
+    JVM ``LocalRelation``, shipped as one Arrow table.
+
+    ``spark.createDataFrame(list-of-tuples)`` pickles the rows into a
+    Python ``LogicalRDD``: every query that reads it forks Python
+    workers and runs an extra job, and a ~100k-row dimension costs
+    seconds per call. The Arrow table lands in the JVM as local rows,
+    so plans over it show a ``LocalTableScan`` and stay JVM-only.
+    Zero rows take their own branch (``zip`` yields no columns) and
+    become an empty typed table: the pandas route would silently fall
+    back to the pickled path for an empty frame.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

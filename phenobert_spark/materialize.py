@@ -31,10 +31,10 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .config import PipelineConfig
+from .config import PipelineConfig, local_frame
 from .corpus import with_doc_id
 from .ontology import Ontology
 from .pipeline import annotate
@@ -51,12 +51,29 @@ def _doc_xor(doc_id_col: str = "doc_id") -> F.Column:
     )
 
 
+MANIFEST_SCHEMA = (
+    "bucket INT, n_docs LONG, n_triples LONG, doc_xor LONG, wall_sec DOUBLE"
+)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The manifest, or None while no manifest write has committed any
+    rows. Hidden entries (``_temporary`` of a writer that crashed,
+    ``_SUCCESS``) do not count; a manifest that exists but cannot be
+    read raises instead of reading as "nothing done"."""
     path = os.path.join(out_dir, "manifest")
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p) or all(
+        st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(p)
+    ):
         return None
+    return spark.read.parquet(path)
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
@@ -111,9 +128,12 @@ def run_with_checkpoint(
       after the triples job commits. A crash between the two leaves
       buckets without manifest rows -> they are reprocessed and their
       partitions overwritten; never double-counted.
-    * **Manifest from one aggregation** of the persisted input plus one
-      partition-pruned count of exactly the batch's output partitions —
-      never a rescan of the whole triples dir.
+    * **Manifest from one aggregation** of the persisted input plus
+      per-bucket triple counts observed (``DataFrame.observe``) on the
+      triples write itself — the output is never read back. The counts
+      are exact because the observe sits above the pipeline's last
+      exchange, in the write's result stage, where Spark applies
+      accumulator updates once per partition.
     """
     done = completed_buckets(spark, out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
@@ -138,8 +158,20 @@ def run_with_checkpoint(
                 .agg(F.count("*").alias("n_docs"), _doc_xor().alias("doc_xor"))
                 .collect()
             }
-            triples = annotate(spark, part.drop("bucket"), onto, cfg).withColumn(
-                "bucket", bucket_of(F.col("doc_id"), n_buckets)
+            # Per-bucket triple counts are observed on the write. The
+            # observe must sit above the pipeline's last exchange, in the
+            # write's result stage: only there are accumulator updates
+            # applied exactly once per partition. That is why the doc
+            # fingerprint above stays an aggregate over the persisted
+            # input: a re-applied map-stage update would cancel an XOR.
+            counts = Observation()
+            triples = (
+                annotate(spark, part.drop("bucket"), onto, cfg)
+                .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+                .observe(
+                    counts,
+                    *[F.count_if(F.col("bucket") == b).alias(f"b{b}") for b in batch],
+                )
             )
             # Clear any partial output from a crashed prior attempt for
             # buckets that would otherwise emit zero rows this run
@@ -156,30 +188,17 @@ def run_with_checkpoint(
                 )
             finally:
                 spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-            # partition-pruned: reads only the batch's bucket= dirs
-            n_triples = {
-                r.bucket: r.n
-                for r in spark.read.parquet(triples_dir)
-                .filter(F.col("bucket").isin(batch))
-                .groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+            n_triples = counts.get
         finally:
             part.unpersist()
         wall = round(time.time() - t0, 3) or 0.001
-        manifest_rows = spark.createDataFrame(
+        manifest_rows = local_frame(
+            spark,
             [
-                (
-                    b,
-                    stats.get(b, (0, 0))[0],
-                    n_triples.get(b, 0),
-                    stats.get(b, (0, 0))[1],
-                    wall,
-                )
+                (b, stats.get(b, (0, 0))[0], n_triples[f"b{b}"], stats.get(b, (0, 0))[1], wall)
                 for b in batch
             ],
-            "bucket INT, n_docs LONG, n_triples LONG, doc_xor LONG, wall_sec DOUBLE",
+            MANIFEST_SCHEMA,
         )
         manifest_rows.write.mode("append").parquet(manifest_dir)
     return {
@@ -192,14 +211,11 @@ def run_with_checkpoint(
 def _delete_partitions(spark: SparkSession, triples_dir: str, buckets: list[int]) -> None:
     """Remove ``bucket=b`` partition dirs (crash-leftover partials) via
     the Hadoop FS API — works on any supported filesystem."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(triples_dir)
-    fs = root.getFileSystem(hconf)
+    fs, root = _hadoop_path(spark, triples_dir)
     if not fs.exists(root):
         return
     for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(triples_dir, f"bucket={b}")
+        p = spark._jvm.org.apache.hadoop.fs.Path(root, f"bucket={b}")
         if fs.exists(p):
             fs.delete(p, True)
 
@@ -207,8 +223,13 @@ def _delete_partitions(spark: SparkSession, triples_dir: str, buckets: list[int]
 def verify_manifest(spark: SparkSession, docs: DataFrame, out_dir: str, n_buckets: int) -> DataFrame:
     """Recompute per-bucket doc fingerprints from the CURRENT input and
     diff against the stored manifest — detects input drift under a
-    checkpoint. Returns rows that disagree (empty == clean)."""
+    checkpoint. Returns rows that disagree (empty == clean).
+
+    Raises ``ValueError`` when ``out_dir`` holds no manifest: there is
+    no lineage to verify against."""
     m = read_manifest(spark, out_dir)
+    if m is None:
+        raise ValueError(f"no manifest under {out_dir!r}")
     docs_b = (
         with_doc_id(docs)
         .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
@@ -276,7 +297,7 @@ def annotate_delta(
             # the rewrite goes through the driver — which also avoids
             # overwriting a parquet path while reading from it.
             keep = m.filter(~F.col("bucket").isin(changed)).collect()
-            spark.createDataFrame(keep, m.schema).write.mode(
+            local_frame(spark, keep, MANIFEST_SCHEMA).write.mode(
                 "overwrite"
             ).parquet(os.path.join(out_dir, "manifest"))
     res = run_with_checkpoint(

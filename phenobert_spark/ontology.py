@@ -44,7 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .config import REFERENCE_ROOT
+from .config import REFERENCE_ROOT, local_frame
 from .functions.normalize import (
     process_str,
     simplify_tokens,
@@ -420,18 +420,18 @@ class Ontology:
         lemma probe space or map ambiguously to several concepts are
         dropped.
         """
-        # Two cache layers: the built pandas frame (per substitution
-        # key) and the session-bound DataFrame (skips the repeat Arrow
-        # conversion — a DataFrame is just a plan, safe to reuse within
-        # its session).
+        # Two cache layers: the built rows (per substitution key, so
+        # repeat annotate() calls skip variant regeneration) and the
+        # session-bound DataFrame (skips the repeat Arrow conversion —
+        # a DataFrame is just a plan, safe to reuse within its session).
         df_cache = self.__dict__.setdefault("_dict_df_cache", {})
-        cache = self.__dict__.setdefault("_dict_pdf_cache", {})
+        cache = self.__dict__.setdefault("_dict_rows_cache", {})
         ck = (syn_min_count, syn_phrase_min_count, drop_one)
         sk = (id(spark._jsparkSession), ck)
         if sk in df_cache:
             return df_cache[sk]
         if ck in cache:
-            df = spark.createDataFrame(cache[ck], DICT_SCHEMA)
+            df = local_frame(spark, cache[ck], DICT_SCHEMA)
             df_cache[sk] = df
             return df
         from .functions.normalize import lemma
@@ -571,15 +571,8 @@ class Ontology:
                 win = unique_best(hpos)
                 if win is not None and v not in lemma_space:
                     rows.append((v, win, 4))
-        # Arrow path: ~95-150k-row driver-side dimension; plain
-        # createDataFrame(list-of-tuples) costs seconds per call. The
-        # built frame is cached per (syn, phrase) key so repeat
-        # annotate() calls skip variant regeneration entirely.
-        import pandas as pd
-
-        pdf = pd.DataFrame(rows, columns=["key", "hpo_id", "prio"])
-        cache[ck] = pdf
-        df = spark.createDataFrame(pdf, DICT_SCHEMA)
+        cache[ck] = rows
+        df = local_frame(spark, rows, DICT_SCHEMA)
         df_cache[sk] = df
         return df
 
@@ -597,7 +590,7 @@ class Ontology:
             )
             for h in sorted(self.names)
         ]
-        return spark.createDataFrame(rows, TERMS_SCHEMA)
+        return local_frame(spark, rows, TERMS_SCHEMA)
 
     def edges_df(self, spark: SparkSession) -> DataFrame:
         rows = [
@@ -605,7 +598,7 @@ class Ontology:
             for child, ps in sorted(self.parents.items())
             for parent in ps
         ]
-        return spark.createDataFrame(rows, EDGES_SCHEMA)
+        return local_frame(spark, rows, EDGES_SCHEMA)
 
 
 # HPO name-style separators that never survive prose tokenization (the

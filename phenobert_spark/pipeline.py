@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .canonicalize import canonicalize_ids
-from .config import PipelineConfig
+from .config import PipelineConfig, local_frame
 from .corpus import chunked, with_doc_id
 from .ontology import Ontology
 from .operators.candidates import generate_candidates
@@ -51,6 +51,12 @@ DROPPABLE_MODIFIERS = frozenset(
         "early", "late", "significant", "apparent", "typical",
     }
 )
+
+
+def _droppable_df(spark: SparkSession) -> DataFrame:
+    return local_frame(
+        spark, [(t,) for t in sorted(DROPPABLE_MODIFIERS)], "token STRING"
+    )
 
 
 def annotate(
@@ -147,10 +153,7 @@ def annotate(
         fuzzy_misses = linked.filter(
             F.col("hpo_id").isNull() & F.col("n_tokens").between(3, 7)
         ).drop("hpo_id", "score")
-        droppable_df = spark.createDataFrame(
-            [(t,) for t in sorted(DROPPABLE_MODIFIERS)], "token string"
-        )
-        fuzzy = drop_one_link(fuzzy_misses, dict_df, droppable_df)
+        fuzzy = drop_one_link(fuzzy_misses, dict_df, _droppable_df(spark))
         matched = matched.unionByName(fuzzy.select(*matched.columns))
 
     if cfg.use_model_stages:

@@ -2,6 +2,8 @@
 
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 
 from phenobert_spark.config import PipelineConfig
 from phenobert_spark.corpus import synthesize_corpus
@@ -71,6 +73,18 @@ def test_manifest_lineage_detects_drift(spark, onto, corpus, tmp_path):
     assert verify_manifest(spark, drifted, out, n_buckets=4).count() > 0
 
 
+def _assert_bucket_triples(spark, out):
+    """The manifest's n_triples, bucket by bucket, is the triple count
+    on disk (a bucket without triples has n_triples == 0)."""
+    m = {r.bucket: r.n_triples for r in read_manifest(spark, out).collect()}
+    on_disk = {
+        r.bucket: r["count"]
+        for r in read_triples(spark, out).groupBy("bucket").count().collect()
+    }
+    assert m == {b: on_disk.get(b, 0) for b in m}
+    assert set(on_disk) <= set(m)
+
+
 def test_manifest_metrics(spark, onto, corpus, tmp_path):
     out = str(tmp_path / "graph")
     run_with_checkpoint(spark, corpus, onto, out, n_buckets=4)
@@ -79,6 +93,50 @@ def test_manifest_metrics(spark, onto, corpus, tmp_path):
     assert sum(r.n_docs for r in rows) == 24
     assert all(r.wall_sec > 0 for r in rows)
     assert sum(r.n_triples for r in rows) == read_triples(spark, out).count()
+    _assert_bucket_triples(spark, out)
+
+
+def test_manifest_bucket_triples_after_resume_and_delta(spark, onto, corpus, tmp_path):
+    from phenobert_spark.materialize import annotate_delta
+
+    out = str(tmp_path / "graph")
+    run_with_checkpoint(spark, corpus, onto, out, n_buckets=8, fail_after_buckets=3)
+    _assert_bucket_triples(spark, out)
+    run_with_checkpoint(spark, corpus, onto, out, n_buckets=8)
+    _assert_bucket_triples(spark, out)
+    day2 = corpus.orderBy("path").limit(20)
+    assert annotate_delta(spark, day2, onto, out, n_buckets=8)["invalidated"]
+    _assert_bucket_triples(spark, out)
+
+
+def test_empty_input_checkpoints_zero_buckets(spark, onto, tmp_path):
+    """An empty corpus still completes: every bucket gets a zero row
+    (the observed counts arrive even though the write emits nothing)."""
+    from phenobert_spark.corpus import DOCUMENTS_SCHEMA
+
+    out = str(tmp_path / "graph")
+    docs = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+    assert run_with_checkpoint(spark, docs, onto, out, n_buckets=4)["processed"] == 4
+    rows = read_manifest(spark, out).collect()
+    assert sorted((r.bucket, r.n_docs, r.n_triples) for r in rows) == [
+        (b, 0, 0) for b in range(4)
+    ]
+
+
+def test_read_manifest_uncommitted_is_none_unreadable_raises(spark, tmp_path):
+    """A manifest dir holding only a crashed writer's ``_temporary``
+    means nothing is done; one holding an unreadable file raises."""
+    manifest = tmp_path / "graph" / "manifest"
+    (manifest / "_temporary").mkdir(parents=True)
+    assert read_manifest(spark, str(tmp_path / "graph")) is None
+    (manifest / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises((PySparkException, Py4JJavaError)):
+        read_manifest(spark, str(tmp_path / "graph"))
+
+
+def test_verify_manifest_without_manifest_raises(spark, corpus, tmp_path):
+    with pytest.raises(ValueError, match="no manifest"):
+        verify_manifest(spark, corpus, str(tmp_path / "empty"), n_buckets=4)
 
 
 def test_node_tables(spark, onto, corpus, tmp_path):

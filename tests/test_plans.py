@@ -403,3 +403,77 @@ def test_path_stats_prunes_content_column(spark):
         out = path_stats(spark.read.parquet(f"{td}/docs"))
         plan = _formatted_plan(spark, out)
         assert "content" not in plan.split("ReadSchema")[1][:200]
+
+
+def _driver_frames(spark, onto):
+    """(name, frame, expected rows) for every engine-side driver table,
+    built with rows and, where the table can be empty, with none."""
+    from dataclasses import replace
+
+    from phenobert_spark.canonicalize import (
+        _abnormal_df,
+        _alt_df,
+        _ancestor_pairs_df,
+    )
+    from phenobert_spark.config import local_frame
+    from phenobert_spark.materialize import MANIFEST_SCHEMA
+    from phenobert_spark.ontology import _ingest_pairs
+    from phenobert_spark.pipeline import DROPPABLE_MODIFIERS, _droppable_df
+
+    empty = _ingest_pairs([], {}, {})
+    n_edges = sum(len(ps) for ps in onto.parents.values())
+    n_anc = sum(len(a - {n}) for n, a in onto.ancestors().items())
+    return [
+        ("edges_df", onto.edges_df(spark), n_edges),
+        ("edges_df/empty", empty.edges_df(spark), 0),
+        ("terms_df", onto.terms_df(spark), len(onto.names)),
+        ("terms_df/empty", empty.terms_df(spark), 0),
+        ("_alt_df", _alt_df(spark, onto), len(onto.alt_ids)),
+        ("_alt_df/no_alt_ids", _alt_df(spark, replace(onto, alt_ids={})), 0),
+        ("manifest", local_frame(spark, [(0, 3, 7, 42, 0.5)], MANIFEST_SCHEMA), 1),
+        ("manifest/empty", local_frame(spark, [], MANIFEST_SCHEMA), 0),
+        ("_abnormal_df", _abnormal_df(spark, onto), len(onto.abnormal_set)),
+        ("_abnormal_df/empty", _abnormal_df(spark, empty), 0),
+        ("_ancestor_pairs_df", _ancestor_pairs_df(spark, onto), n_anc),
+        ("_ancestor_pairs_df/empty", _ancestor_pairs_df(spark, empty), 0),
+        ("_droppable_df", _droppable_df(spark), len(DROPPABLE_MODIFIERS)),
+        ("dict_df", onto.dict_df(spark), None),
+    ]
+
+
+def test_driver_tables_are_local_relations(spark, onto):
+    """Every table the driver builds for the engine reaches the JVM as
+    a LocalRelation (Arrow), never as a pickled Python LogicalRDD —
+    with rows and with zero rows, where the Arrow route would
+    otherwise fall back silently."""
+    for name, df, n in _driver_frames(spark, onto):
+        node = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        assert node == "LocalRelation", (name, node)
+        if n is not None:
+            assert df.count() == n, name
+
+
+def test_annotate_and_kg_edges_read_no_python_rdd(spark, onto, tmp_path):
+    """annotate over a parquet input, and the KG edge frame as
+    jobs/kg_metrics.py composes it, scan only files and local rows:
+    no ``Scan ExistingRDD`` leaf (a pickled driver table that forks
+    Python workers)."""
+    docs, _ = synthesize_corpus(spark, onto, n_docs=5)
+    docs.write.parquet(str(tmp_path / "docs"))
+    triples = annotate(
+        spark, spark.read.parquet(str(tmp_path / "docs")), onto, PipelineConfig()
+    )
+    assert "ExistingRDD" not in _formatted_plan(spark, triples)
+
+    triples.write.parquet(str(tmp_path / "triples"))
+    ann = spark.read.parquet(str(tmp_path / "triples")).select(
+        "doc_id", F.col("hpo_id").alias("concept")
+    )
+    onto_edges = onto.edges_df(spark).select(
+        F.col("child").alias("src"), F.col("parent").alias("dst")
+    )
+    edges = ann.select(
+        F.col("doc_id").alias("src"), F.col("concept").alias("dst")
+    ).unionByName(onto_edges)
+    plan = _formatted_plan(spark, edges)
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan

@@ -2,7 +2,10 @@
 kg_pagerank bench composition) to <outdir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <outdir> <tag> [--actions] <query> [query ...]
-  (query "kg_pagerank" dumps the bench's pagerank composition)
+  (query "kg_pagerank" dumps the bench's pagerank composition; queries
+  "build_dense" and "kg_rank" record every action of that perfbench
+  workload's call on seed 1, writes included — kg_rank's file starts
+  with the formatted plan of its edge frame)
 
 --actions instead records, in execution order, the physical operator
 tree of every frame an action materializes while the query is built
@@ -54,24 +57,59 @@ def _work_tree(df) -> str:
 
 @contextlib.contextmanager
 def _recording_actions(spark, out: list):
-    """Append (action, plan) for every listed DataFrame action run inside
-    the block, the plan explained just before the action executes."""
+    """Append (action, plan) for every listed DataFrame action and every
+    parquet write run inside the block, the plan explained just before
+    the action executes."""
     DataFrame = type(spark.range(0))
 
-    saved = {}
-    for meth in ("localCheckpoint", "count", "isEmpty", "collect"):
-        saved[meth] = orig = getattr(DataFrame, meth)
+    Writer = type(spark.range(0).write)
+    saved = []
+    for cls, meth in [
+        (DataFrame, m) for m in ("localCheckpoint", "count", "isEmpty", "collect")
+    ] + [(Writer, "parquet")]:
+        orig = getattr(cls, meth)
+        saved.append((cls, meth, orig))
 
         def wrapped(self, *a, _orig=orig, _meth=meth, **kw):
-            out.append((_meth, _work_tree(self)))
+            df = self._df if isinstance(self, Writer) else self
+            out.append((_meth, _work_tree(df)))
             return _orig(self, *a, **kw)
 
-        setattr(DataFrame, meth, wrapped)
+        setattr(cls, meth, wrapped)
     try:
         yield
     finally:
-        for meth, orig in saved.items():
-            setattr(DataFrame, meth, orig)
+        for cls, meth, orig in saved:
+            setattr(cls, meth, orig)
+
+
+def _perfbench_actions(spark, name: str) -> str:
+    """Every action one call of a perfbench workload runs, over the
+    1,000 seed-1 notes (kg_rank ranks the graph a build of them
+    commits)."""
+    import tempfile
+
+    from perfbench import inputs, workloads
+    from phenobert_spark.ontology import get_ontology
+
+    onto = get_ontology()
+    steps, text = [], ""
+    with tempfile.TemporaryDirectory() as work:
+        rows, _ = inputs.dense_corpus(onto, workloads.N_DOCS, 1)
+        workloads.write_docs(rows, f"{work}/docs", 4)
+        if name == "build_dense":
+            with _recording_actions(spark, steps):
+                workloads.build(spark, onto, f"{work}/docs", f"{work}/out")
+        else:
+            workloads.build(spark, onto, f"{work}/docs", f"{work}/out")
+            edges = workloads.kg_edges(spark, onto, f"{work}/out")
+            text = "==== edge frame ====\n" + _explain(edges) + "\n"
+            with _recording_actions(spark, steps):
+                workloads.rank_pagerank(edges, f"{work}/rank")
+    return text + "".join(
+        f"==== action {i}: {meth} ====\n{plan}\n"
+        for i, (meth, plan) in enumerate(steps, 1)
+    )
 
 
 def main():
@@ -127,6 +165,8 @@ def main():
                 ).alias("rank"),
             )
             text = _explain(df)
+        elif name in ("build_dense", "kg_rank"):
+            text = _perfbench_actions(spark, name)
         elif actions:
             steps = []
             with _recording_actions(spark, steps):
