@@ -51,14 +51,10 @@ docs = (
     .cache()
 )
 n_docs = docs.count()
-dict_df = onto.dict_df(spark).cache()
-dict_df.count()
-vocab_bc = spark.sparkContext.broadcast(onto.prune_vocab())
 
 def once():
     t0 = time.time()
-    n = annotate(spark, docs, onto, PipelineConfig(), dict_df=dict_df,
-                 vocab_bc=vocab_bc).count()
+    n = annotate(spark, docs, onto, PipelineConfig()).count()
     return time.time() - t0, n
 
 once()  # warm-up (excluded; JIT + python-worker spin-up)

@@ -53,14 +53,11 @@ def main() -> None:
     docs = spark.createDataFrame(small + giants, DOCUMENTS_SCHEMA).repartition(64).cache()
     n_docs = docs.count()
     total_mb = docs.agg(F.sum(F.length("content"))).collect()[0][0] / 1e6
-    dict_df = onto.dict_df(spark).cache()
-    dict_df.count()
-    vocab_bc = spark.sparkContext.broadcast(onto.prune_vocab())
 
     def run(chunk_bytes: int) -> tuple[float, int]:
         cfg = PipelineConfig(chunk_target_bytes=chunk_bytes)
         t0 = time.time()
-        n = annotate(spark, docs, onto, cfg, dict_df=dict_df, vocab_bc=vocab_bc).count()
+        n = annotate(spark, docs, onto, cfg).count()
         return time.time() - t0, n
 
     run(4096)  # warm-up

@@ -73,7 +73,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     )
     args = p.parse_args(argv)
 
-    from phenobert_spark.config import get_spark
+    from phenobert_spark.config import get_spark, local_frame
     from phenobert_spark.ontology import fixture_ontology, get_ontology
     from phenobert_spark.operators.kg_metrics import (
         concept_information_content,
@@ -106,9 +106,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         for node, ancs in onto.ancestors().items()
         for anc in ancs | {node}
     ]
-    closure_self = spark.createDataFrame(
-        closure_rows, "node string, anc string"
-    )
+    closure_self = local_frame(spark, closure_rows, "node string, anc string")
 
     ic = concept_information_content(
         ann, closure_self, concept_col="concept"
@@ -130,8 +128,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     ).parquet(f"{args.output}/communities")
 
     if args.seeds:
-        seeds = spark.createDataFrame(
-            [(s,) for s in args.seeds.split(",")], "node string"
+        seeds = local_frame(
+            spark, [(s,) for s in args.seeds.split(",")], "node string"
         )
     else:
         # deterministic default: the most-annotated concepts
@@ -208,8 +206,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         f"{args.output}/fused_confidence"
     )
 
-    concept_nodes = spark.createDataFrame(
-        [(c,) for c in onto.ancestors().keys()], "obj string"
+    concept_nodes = local_frame(
+        spark, [(c,) for c in onto.ancestors().keys()], "obj string"
     )
     validate_shapes(
         mention_triples.select("subj", "pred", "obj"),

@@ -7,15 +7,17 @@
   README.md:144-151).
 * ``link_phrases``   — reference api.get_most_related_HPO_term
   (api.py:69-124): phrases -> best HPO id or "None" (the entity-linking
-  core without span logic).
+  core without span logic: one candidate row per phrase, linked by the
+  same ``pipeline.link_dictionary`` tiers ``annotate`` uses).
 * ``export_reference_tsv`` — reference's one-file-per-document output
   sink (S7, util.py:1039-1042) for side-by-side parity diffing.
 * ``SearchIndex``    — reference gene_reviews_search_engine.py:8-46:
   inverted hpo -> documents index with boolean AND/OR queries.
 
 Same engine underneath: these wrappers build one-row / small DataFrames
-and run the identical pipeline — there is no second code path (the
-reference shares this property: its API calls the same functions).
+and run the pipeline's own functions under the caller's
+``PipelineConfig`` — there is no second code path (the reference shares
+this property: its API calls the same functions).
 """
 
 from __future__ import annotations
@@ -25,10 +27,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import PipelineConfig
+from .config import PipelineConfig, local_frame
 from .corpus import DOCUMENTS_SCHEMA
 from .ontology import Ontology, get_ontology
-from .pipeline import annotate
+from .operators.candidates import CANDIDATES_SCHEMA
+from .pipeline import annotate, link_dictionary
 
 
 def annotate_text(
@@ -64,8 +67,9 @@ def link_phrases(
 ) -> list[tuple[str, str]]:
     """Entity-linking core (E3): each phrase -> (phrase, hpo_id|'None').
 
-    Dictionary tiers first; misses go through the model-analog stages
-    (the reference's CNN->BERT path, api.py:69-124)."""
+    Dictionary tiers first (``pipeline.link_dictionary``, as in
+    ``annotate``); misses go through the model-analog stages (the
+    reference's CNN->BERT path, api.py:69-124)."""
     from .functions.normalize import (
         lemma_key_of,
         process_str,
@@ -73,7 +77,6 @@ def link_phrases(
         sorted_bag_key,
         stem_key_of,
     )
-    from .operators.dict_link import dictionary_link
 
     onto = onto or get_ontology()
     rows = []
@@ -82,22 +85,16 @@ def link_phrases(
         key = sorted_bag_key(toks)
         rows.append(
             (str(i), 0, len(p), p, key, lemma_key_of(key), stem_key_of(toks),
-             len(toks), False)
+             len(toks), False, False)
         )
-    cand = spark.createDataFrame(
-        rows,
-        "doc_id string, start int, end int, mention string, key string, "
-        "lemma_key string, stem_key string, n_tokens int, negated boolean",
-    )
-    linked = dictionary_link(cand, onto.dict_df(spark))
-    hits = {int(r.doc_id): r.hpo_id for r in linked.filter("hpo_id is not null").collect()}
-    if cfg.use_model_stages:
-        misses = linked.filter("hpo_id is null").drop("hpo_id", "score")
-        if misses.take(1):
-            from .linking.infer import model_link
+    cand = local_frame(spark, rows, CANDIDATES_SCHEMA)
+    matched, misses = link_dictionary(spark, cand, onto, cfg)
+    hits = {int(r.doc_id): r.hpo_id for r in matched.collect()}
+    if cfg.use_model_stages and misses.take(1):
+        from .linking.infer import model_link
 
-            for r in model_link(spark, misses, onto, cfg).collect():
-                hits[int(r.doc_id)] = r.hpo_id
+        for r in model_link(spark, misses, onto, cfg).collect():
+            hits[int(r.doc_id)] = r.hpo_id
     return [(p, hits.get(i, "None")) for i, p in enumerate(phrases)]
 
 

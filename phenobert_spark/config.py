@@ -1,16 +1,16 @@
 """Engine configuration, SparkSession factory and driver-table helper.
 
-Thresholds mirror the reference defaults (reference:
-phenobert/utils/annotate.py:18-20 — p1=0.8 L1 router, p2=0.6 subtree
-scorer, p3=0.9 pair re-ranker). Spark settings are tuned for the
-local[N] sandbox but expressed the way a 1000-executor cluster job
-would set them (AQE on, skew-join on, Arrow batching for pandas UDFs).
+The reference's three thresholds (phenobert/utils/annotate.py:18-20 —
+p1=0.8 L1 router, p2=0.6 subtree scorer, p3=0.9 pair re-ranker) live on
+as ``model_p1``..``model_p3``, recalibrated for the model-analog
+stages' score space. Spark settings are tuned for the local[N] sandbox
+but expressed the way a 1000-executor cluster job would set them (AQE on, skew-join on, Arrow batching for pandas UDFs).
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
@@ -26,14 +26,9 @@ TESTDATA_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 class PipelineConfig:
     """Knobs of the annotation pipeline (names follow the reference CLI)."""
 
-    param1: float = 0.8          # L1 router threshold (annotate.py:18)
-    param2: float = 0.6          # subtree scorer threshold (annotate.py:19)
-    param3: float = 0.9          # pair re-ranker threshold (annotate.py:20)
     use_longest: bool = True     # keep maximal spans (annotate.py -al)
     use_model_stages: bool = False  # Step-2/3 analogue (deterministic path off by default)
     max_kmer_len: int = 10       # k-mer cap (util.py:1006)
-    simple_dict_keys: bool = True  # ALSO index dictionary under stopword-simplified keys
-    vocab_prune: bool = True     # exact OOV k-mer pruning in candidate gen
     # synonym-variant dictionary tier (ontology.mined_substitutions):
     # min number of concepts a substitution must co-vary in to be
     # trusted — token-level (1<->1) and phrase-level (1<->2, 2<->2)
@@ -83,17 +78,11 @@ class PipelineConfig:
     # fuzzy_idf acceptance: best concept score must beat the runner-up
     # by at least this margin (0 = accept ties; calibrated on val)
     model_margin: float = 0.0
-    # F7 substitute gate: a clause contributes candidates only if it
-    # holds a dictionary token appearing in <= gate_max_df concepts
-    # (Ontology.head_vocab); None disables. Calibrated on val.
-    gate_max_df: int | None = None
     model_max_tokens: int = 6    # longest phrase sent to the model stage
     # Skew handling: long documents are split into independent chunks at
     # sentence-safe boundaries before the candidate UDF (north rule:
     # explicit salting for skewed large-document partitions).
     chunk_target_bytes: int = 4096
-    # Candidate-stage parallelism: partitions for the salted repartition.
-    candidate_partitions: int | None = None  # None -> spark.sql.shuffle.partitions
 
 
 def get_spark(

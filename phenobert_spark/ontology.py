@@ -35,7 +35,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -65,10 +64,13 @@ COMBINING_PREFIXES = (
     "gastro", "cardio", "broncho", "naso", "oro",
 )
 
+# Concept-frequency ceiling of a specific head token (Ontology.head_vocab).
+HEAD_MAX_DF = 200
+
 # Anatomical adjective -> organ-noun correspondences (standard medical
 # English, public knowledge). Seeded alongside the ontology-MINED
-# substitution pairs and subject to the same unambiguous-variant
-# filtering, so a swap that would make two concepts collide is dropped.
+# substitution pairs and subject to the same collision rule: a variant
+# two concepts generate goes to one of them (dict_df's unique_best).
 _SEED_PAIRS = [
     ("ophthalmic", "eye"), ("ocular", "eye"), ("otologic", "ear"),
     ("otic", "ear"), ("aural", "ear"), ("renal", "kidney"),
@@ -82,8 +84,8 @@ _SEED_PAIRS = [
     # finding with interchangeable heads: "skin changes" ~ "skin
     # abnormality"). Mined counts for these sit below the x10 trust
     # threshold (3/2/2/1/1 co-variations) but the class itself is
-    # standard clinical-English usage; each pair still passes the
-    # ambiguous-variant filter before any dictionary row is emitted.
+    # standard clinical-English usage; their variants go through the
+    # same collision rule.
     # ("abnormality","feature") and ("abnormality","finding") are
     # excluded: "facial features" / "clinical findings" are routine
     # benign prose, and the pair cost GeneReviews -0.7 F1 (precision
@@ -320,25 +322,21 @@ class Ontology:
         cached[ck] = out
         return out
 
-    def head_vocab(self, max_df: int = 200) -> frozenset[str]:
+    def head_vocab(self) -> frozenset[str]:
         """Specific phenotype HEAD tokens: dictionary tokens appearing
-        in at most ``max_df`` concepts. Low concept-frequency marks a
-        specific head ("ataxia" df=14, "cataract" df=43) vs a generic
-        modifier ("abnormality" df=1186, "increased" df=739). Used as
-        the F7 substitute gate (the reference gates fallback phrases on
-        Stanza PROBLEM sentences, util.py:898-922; Stanza is unavailable
-        and nondeterministic, so clause-level lexical evidence stands
-        in)."""
-        cached = self.__dict__.setdefault("_head_cache", {})
-        if max_df in cached:
-            return cached[max_df]
-        tok2c: dict[str, set[str]] = {}
-        for key, hpo in list(self.phrase2hpo.items()) + list(self.simple2hpo.items()):
-            for t in key.split():
-                tok2c.setdefault(t, set()).add(hpo)
-        out = frozenset(t for t, cs in tok2c.items() if len(cs) <= max_df)
-        cached[max_df] = out
-        return out
+        in at most ``HEAD_MAX_DF`` concepts. Low concept-frequency marks
+        a specific head ("ataxia" df=14, "cataract" df=43) vs a generic
+        modifier ("abnormality" df=1186, "increased" df=739). The
+        drop-one dictionary tier elides only non-head tokens."""
+        if "_heads" not in self.__dict__:
+            tok2c: dict[str, set[str]] = {}
+            for key, hpo in list(self.phrase2hpo.items()) + list(self.simple2hpo.items()):
+                for t in key.split():
+                    tok2c.setdefault(t, set()).add(hpo)
+            self.__dict__["_heads"] = frozenset(
+                t for t, cs in tok2c.items() if len(cs) <= HEAD_MAX_DF
+            )
+        return self.__dict__["_heads"]
 
     def prune_vocab(
         self,
@@ -409,16 +407,16 @@ class Ontology:
     ) -> DataFrame:
         """The broadcast dictionary dimension for the J1 equi-join.
 
-        One row per unique key; strict keys win over simplified keys,
+        One row per (key, prio); strict keys win over simplified keys,
         later insertions win within a priority class (dict-overwrite
         semantics of util.py:324-327).
 
         ``syn_min_count``: when set, adds prio-3 rows — single-token
         synonym substitutions of every key in LEMMA space (probed by the
         candidates' existing lemma_key column), using pairs mined by
-        :meth:`synonym_pairs`. Variants that collide with the existing
-        lemma probe space or map ambiguously to several concepts are
-        dropped.
+        :meth:`mined_substitutions`. Variants that collide with the
+        existing lemma probe space are dropped; a variant several
+        concepts generate goes to one of them (``unique_best``).
         """
         # Two cache layers: the built rows (per substitution key, so
         # repeat annotate() calls skip variant regeneration) and the
@@ -466,7 +464,7 @@ class Ontology:
                 base.setdefault(key, hpo)
                 base_prio.setdefault(key, 1)
 
-        def unique_best(cands: dict[str, int]) -> str | None:
+        def unique_best(cands: dict[str, int]) -> str:
             """Resolve a derived-variant collision: the concept whose
             SOURCE key had the best (lowest) trust class wins (strict
             over simplified — the same ordering the probe tiers use); a
@@ -491,7 +489,8 @@ class Ontology:
         # a key's tokens are already base forms. A key whose
         # lemma/orthography-folded bag differs ("bowed tibiae" ->
         # "bowed tibia") gets an explicit row so inflected or
-        # British-spelled mentions meet it; ambiguous folds are dropped.
+        # British-spelled mentions meet it; ambiguous folds resolve by
+        # unique_best.
         lemma_variants: dict[str, dict[str, int]] = {}
         for key, hpo in base.items():
             lk = lbag_key(key.split())
@@ -499,27 +498,22 @@ class Ontology:
                 slot = lemma_variants.setdefault(lk, {})
                 slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
         for lk, hpos in lemma_variants.items():
-            win = unique_best(hpos)
-            if win is not None:
-                rows.append((lk, win, 1))
+            rows.append((lk, unique_best(hpos), 1))
         lemma_space = set(base) | set(lemma_variants)
-        # Combining-form split variants (prio 3): single-token Latin
-        # compounds also written hyphenated/split in prose ("supraauricular
-        # sinus" ~ "supra-auricular sinuses"). Split on a pinned public
-        # combining-prefix list; unambiguous variants only.
-        split_variants: dict[str, dict[str, int]] = {}
+        # Prio 3, two families in ONE collision dict, so a key both
+        # generate still gets one row. Combining-form split variants:
+        # single-token Latin compounds also written hyphenated/split in
+        # prose ("supraauricular sinus" ~ "supra-auricular sinuses"),
+        # split on a pinned public combining-prefix list.
+        variants: dict[str, dict[str, int]] = {}
         for key, hpo in base.items():
             toks = key.split()
             for i, t in enumerate(toks):
                 for p in COMBINING_PREFIXES:
                     if t.startswith(p) and len(t) - len(p) >= 4:
                         v = lbag_key(toks[:i] + [p, t[len(p):]] + toks[i + 1:])
-                        slot = split_variants.setdefault(v, {})
+                        slot = variants.setdefault(v, {})
                         slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
-        for v, hpos in split_variants.items():
-            win = unique_best(hpos)
-            if win is not None and v not in lemma_space:
-                rows.append((v, win, 3))
         if syn_min_count is not None:
             subs = list(
                 self.mined_substitutions(syn_min_count, syn_phrase_min_count)
@@ -530,7 +524,6 @@ class Ontology:
             by_trigger: dict[str, list[tuple[frozenset, frozenset]]] = {}
             for a, b in subs:
                 by_trigger.setdefault(min(a), []).append((a, b))
-            variants: dict[str, dict[str, int]] = {}
             for key, hpo in base.items():
                 lbag = {lemma(t) for t in key.split()}
                 for tok in lbag:
@@ -539,10 +532,9 @@ class Ontology:
                             v = " ".join(sorted((lbag - a) | b))
                             slot = variants.setdefault(v, {})
                             slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
-            for v, hpos in variants.items():
-                win = unique_best(hpos)
-                if win is not None and v not in lemma_space:
-                    rows.append((v, win, 3))
+        for v, hpos in variants.items():
+            if v not in lemma_space:
+                rows.append((v, unique_best(hpos), 3))
         if drop_one:
             # Drop-one fuzzy tier (prio 4): a mention that names a
             # concept with one dictionary token elided ("lacrimal
@@ -550,10 +542,9 @@ class Ontology:
             # trained BERT re-ranker accepts such near-matches
             # (model.py:359-432, threshold param3); this is the
             # deterministic dictionary-side analog. A variant must keep
-            # a specific HEAD token (concept-frequency <= 200) so generic
-            # residues like "abnormality of" never match alone, and must
-            # be unambiguous across concepts.
-            heads = self.head_vocab(200)
+            # a specific HEAD token (``head_vocab``) so generic
+            # residues like "abnormality of" never match alone.
+            heads = self.head_vocab()
             d1_variants: dict[str, dict[str, int]] = {}
             for key, hpo in base.items():
                 toks = key.split()
@@ -568,9 +559,8 @@ class Ontology:
                         slot = d1_variants.setdefault(" ".join(sorted(rest)), {})
                         slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
             for v, hpos in d1_variants.items():
-                win = unique_best(hpos)
-                if win is not None and v not in lemma_space:
-                    rows.append((v, win, 4))
+                if v not in lemma_space:
+                    rows.append((v, unique_best(hpos), 4))
         cache[ck] = rows
         df = local_frame(spark, rows, DICT_SCHEMA)
         df_cache[sk] = df

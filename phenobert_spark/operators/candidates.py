@@ -36,7 +36,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -175,9 +174,7 @@ def candidates_of_text(
     text: str,
     chunk_start: int = 0,
     max_kmer_len: int = 10,
-    singleton_stopwords: frozenset[str] = NLTK_STOPWORDS,
     vocab: frozenset[str] | set[str] | None = None,
-    gate_vocab: frozenset[str] | None = None,
 ) -> list[tuple[int, int, str, str, str, str, int, bool, bool]]:
     """Plain-Python core (unit-testable without Spark). Returns tuples
     (start, end, mention, key, lemma_key, stem_key, n_tokens, negated,
@@ -196,15 +193,6 @@ def candidates_of_text(
     seen: set[tuple[int, int, str]] = set()
     out: list[tuple[int, int, str, str, str, int, bool]] = []
     for clause in _clauses(tokens):
-        # F7 substitute gate: the reference only lets sentences holding
-        # a Stanza PROBLEM entity contribute phrases (util.py:898-922);
-        # here a clause contributes only if it holds a SPECIFIC
-        # phenotype head token (low concept-frequency dictionary token,
-        # Ontology.head_vocab). None disables (gate-everything-in).
-        if gate_vocab is not None and not any(
-            t in gate_vocab or lemma(t) in gate_vocab for t, _, _ in clause
-        ):
-            continue
         for phrase, junction in _conjunction_phrases(clause):
             # negation granularity: per conjunction-free phrase — the
             # reference's fallback path splits on and/or BEFORE flagging
@@ -240,7 +228,7 @@ def candidates_of_text(
                     kmer = simple[i : i + j + 1]
                     if j == 0:
                         t0 = kmer[0][0]
-                        if t0 in singleton_stopwords or is_num(t0):
+                        if t0 in NLTK_STOPWORDS or is_num(t0):
                             continue
                     start = kmer[0][1]
                     end = kmer[-1][2]
@@ -272,18 +260,16 @@ def candidates_of_text(
 
 
 def generate_candidates(
-    chunks: DataFrame, max_kmer_len: int = 10, vocab_bc=None, gate_bc=None
+    chunks: DataFrame, max_kmer_len: int = 10, vocab_bc=None
 ) -> DataFrame:
     """chunks(doc_id, chunk_id, chunk_start, chunk_text) -> candidates DF.
 
     ``vocab_bc``: optional ``sc.broadcast(frozenset)`` of dictionary
     vocabulary tokens for exact candidate pruning (see
-    candidates_of_text). ``gate_bc``: optional broadcast head-token set
-    for the F7 substitute clause gate."""
+    candidates_of_text)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vocab = vocab_bc.value if vocab_bc is not None else None
-        gate = gate_bc.value if gate_bc is not None else None
         cols = ["doc_id", "start", "end", "mention", "key", "lemma_key",
                 "stem_key", "n_tokens", "negated", "gappy"]
         for pdf in batches:
@@ -296,7 +282,6 @@ def generate_candidates(
                     int(cstart),
                     max_kmer_len=max_kmer_len,
                     vocab=vocab,
-                    gate_vocab=gate,
                 ):
                     rows.append((doc_id, *cand))
             yield pd.DataFrame(rows, columns=cols)

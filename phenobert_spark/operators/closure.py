@@ -19,6 +19,7 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..config import local_frame
 from ._fixpoint import iterate
 
 
@@ -334,9 +335,7 @@ def star_components(
             + ", component "
             + rep_edges.schema["src"].dataType.simpleString()
         )
-        rep_labels = spark.createDataFrame(
-            [(n, find(n)) for n in parent], schema
-        )
+        rep_labels = local_frame(spark, [(n, find(n)) for n in parent], schema)
     else:
         rep_labels = connected_components(rep_edges, max_iters=max_iters)
     doc_labels = (

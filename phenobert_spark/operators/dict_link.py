@@ -35,8 +35,7 @@ def dictionary_link(
     """candidates(key, lemma_key, ...) x dict(key, hpo_id, prio) ->
     + columns (hpo_id nullable, score nullable).
 
-    A key can appear once in dict_df (unique by construction). The
-    strict-key match wins; lemma-key match fills the misses — the exact
+    (key, prio) is unique in dict_df. The strict-key match wins; lemma-key match fills the misses — the exact
     composition of the reference's two-probe lookup.
 
     ``has_syn_tier`` / ``has_drop_one``: whether dict_df carries prio-3 /

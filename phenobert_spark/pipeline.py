@@ -24,7 +24,7 @@ from .config import PipelineConfig, local_frame
 from .corpus import chunked, with_doc_id
 from .ontology import Ontology
 from .operators.candidates import generate_candidates
-from .operators.dict_link import dictionary_link
+from .operators.dict_link import dictionary_link, drop_one_link
 from .operators.spans import (
     keep_maximal_spans,
     suppress_contained_in,
@@ -59,13 +59,44 @@ def _droppable_df(spark: SparkSession) -> DataFrame:
     )
 
 
+def link_dictionary(
+    spark: SparkSession, cands: DataFrame, onto: Ontology, cfg: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """candidates -> (matched, misses) through the dictionary tiers
+    ``cfg`` selects: the one place ``cfg`` maps onto ``Ontology.dict_df``
+    and ``dictionary_link`` (``annotate`` and ``api.link_phrases`` both
+    link through it). ``matched`` carries hpo_id/score, including the
+    query-side drop-one hits when ``cfg.drop_one_query``; ``misses`` are
+    the candidates no tier linked, without those two columns."""
+    dict_df = onto.dict_df(
+        spark,
+        syn_min_count=cfg.syn_tier_min_count,
+        syn_phrase_min_count=cfg.syn_phrase_min_count,
+        drop_one=cfg.drop_one_dict,
+    )
+    linked = dictionary_link(
+        cands,
+        dict_df,
+        has_syn_tier=cfg.syn_tier_min_count is not None,
+        has_drop_one=cfg.drop_one_dict,
+    )
+    matched = linked.filter(F.col("hpo_id").isNotNull())
+    misses = linked.filter(F.col("hpo_id").isNull()).drop("hpo_id", "score")
+    if cfg.drop_one_query:
+        fuzzy = drop_one_link(
+            misses.filter(F.col("n_tokens").between(3, 7)),
+            dict_df,
+            _droppable_df(spark),
+        )
+        matched = matched.unionByName(fuzzy.select(*matched.columns))
+    return matched, misses
+
+
 def annotate(
     spark: SparkSession,
     docs: DataFrame,
     onto: Ontology,
     cfg: PipelineConfig = PipelineConfig(),
-    dict_df: DataFrame | None = None,
-    vocab_bc=None,
 ) -> DataFrame:
     """documents(repo, path, commit, lang, content) -> triples DF.
 
@@ -76,99 +107,53 @@ def annotate(
     """
     docs = with_doc_id(docs)
     chunks = chunked(docs.select("doc_id", "content"), cfg.chunk_target_bytes)
-    nparts = cfg.candidate_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+    # an explicit count: without one, AQE may coalesce the salted exchange
+    chunks = chunks.repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id", "chunk_id"
     )
-    chunks = chunks.repartition(nparts, "doc_id", "chunk_id")
 
     # Exact candidate pruning: k-mers with out-of-vocabulary tokens are
     # provable dictionary misses (~20-50x fewer candidate rows). The
-    # model stages want the over-generated set, so pruning is off there.
-    if vocab_bc is None and cfg.vocab_prune:
-        # broadcast cache: the vocab object itself is already cached on
-        # the ontology, but sc.broadcast() re-serializes and re-ships it
-        # on every annotate() call — repeated invocations (bench loops,
-        # notebook sessions) reuse the broadcast as long as the same
-        # SparkContext is alive (keyed by applicationId)
-        bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
-        bk = (
-            spark.sparkContext.applicationId,
-            cfg.use_model_stages,
-            cfg.syn_tier_min_count,
-            cfg.syn_phrase_min_count,
-        )
-        vocab_bc = bc_cache.get(bk)
-        if vocab_bc is None:
-            if cfg.use_model_stages:
-                # relaxed predicate: keep morphological variants for the
-                # fuzzy model stage (prefix-5 / lemma adjacency)
-                from .linking.models import RelaxedVocab
+    # model stages get a relaxed predicate that keeps morphological
+    # variants. Broadcast cache: the vocab object itself is already
+    # cached on the ontology, but sc.broadcast() re-serializes and
+    # re-ships it on every annotate() call — repeated invocations (bench
+    # loops, notebook sessions) reuse the broadcast as long as the same
+    # SparkContext is alive (keyed by applicationId)
+    bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
+    bk = (
+        spark.sparkContext.applicationId,
+        cfg.use_model_stages,
+        cfg.syn_tier_min_count,
+        cfg.syn_phrase_min_count,
+    )
+    vocab_bc = bc_cache.get(bk)
+    if vocab_bc is None:
+        if cfg.use_model_stages:
+            # fuzzy model stage: prefix-5 / lemma adjacency
+            from .linking.models import RelaxedVocab
 
-                vocab_bc = spark.sparkContext.broadcast(
-                    RelaxedVocab(onto.vocab())
-                )
-            else:
-                vocab_bc = spark.sparkContext.broadcast(
-                    onto.prune_vocab(
-                        syn_min_count=cfg.syn_tier_min_count,
-                        syn_phrase_min_count=cfg.syn_phrase_min_count,
-                    )
-                )
-            bc_cache[bk] = vocab_bc
-    gate_bc = None
-    if cfg.gate_max_df is not None:
-        bc_cache = onto.__dict__.setdefault("_vocab_bc_cache", {})
-        gk = (spark.sparkContext.applicationId, "gate", cfg.gate_max_df)
-        gate_bc = bc_cache.get(gk)
-        if gate_bc is None:
-            gate_bc = spark.sparkContext.broadcast(
-                onto.head_vocab(cfg.gate_max_df)
+            vocab = RelaxedVocab(onto.vocab())
+        else:
+            vocab = onto.prune_vocab(
+                syn_min_count=cfg.syn_tier_min_count,
+                syn_phrase_min_count=cfg.syn_phrase_min_count,
             )
-            bc_cache[gk] = gate_bc
-    cands = generate_candidates(
-        chunks, cfg.max_kmer_len, vocab_bc=vocab_bc, gate_bc=gate_bc
-    )
-    dict_df = (
-        dict_df
-        if dict_df is not None
-        else onto.dict_df(
-            spark,
-            syn_min_count=cfg.syn_tier_min_count,
-            syn_phrase_min_count=cfg.syn_phrase_min_count,
-            drop_one=cfg.drop_one_dict,
-        )
-    )
-    linked = dictionary_link(
-        cands,
-        dict_df,
-        has_syn_tier=cfg.syn_tier_min_count is not None,
-        has_drop_one=cfg.drop_one_dict,
-    )
-
-    matched = linked.filter(F.col("hpo_id").isNotNull())
-
-    if cfg.drop_one_query:
-        from .operators.dict_link import drop_one_link
-
-        fuzzy_misses = linked.filter(
-            F.col("hpo_id").isNull() & F.col("n_tokens").between(3, 7)
-        ).drop("hpo_id", "score")
-        fuzzy = drop_one_link(fuzzy_misses, dict_df, _droppable_df(spark))
-        matched = matched.unionByName(fuzzy.select(*matched.columns))
+        vocab_bc = bc_cache[bk] = spark.sparkContext.broadcast(vocab)
+    cands = generate_candidates(chunks, cfg.max_kmer_len, vocab_bc=vocab_bc)
+    matched, misses = link_dictionary(spark, cands, onto, cfg)
 
     if cfg.use_model_stages:
         from .linking.infer import model_link
 
         unmatched = (
-            linked.filter(F.col("hpo_id").isNull())
-            .filter(F.col("n_tokens") <= cfg.model_max_tokens)
+            misses.filter(F.col("n_tokens") <= cfg.model_max_tokens)
             # fuzzy acceptance of a NEGATED candidate is pure FP risk:
             # the dictionary path keeps negated matches only because
             # the reference emits them flagged (util.py:1171-1209); a
             # model-stage guess on top of a negation cue has no parity
             # precedent and measured -0.4 val precision.
             .filter(~F.col("negated"))
-            .drop("hpo_id", "score")
         )
         # J3: skip candidates nested inside an already-matched span
         # (gappy recovered spans don't contain what they don't cover).

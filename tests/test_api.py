@@ -45,6 +45,33 @@ def test_link_phrases(spark, onto):
     assert got[2][1] == "None"
 
 
+def test_link_phrases_uses_configured_synonym_tier(spark, onto):
+    """Every phrase only the synonym tier links ("digital short toe" ->
+    HP:0001156) gets from link_phrases the id annotate_text reports for
+    it under the same config."""
+    cfg = PipelineConfig()
+    syn = {
+        r.key
+        for r in onto.dict_df(spark, syn_min_count=10).collect()
+        if r.prio == 3
+    }
+    phrases = sorted(syn - {r.key for r in onto.dict_df(spark).collect()})
+    assert len(phrases) == 10 and "digital short toe" in phrases
+    text, starts = "", []
+    for p in phrases:
+        starts.append(len(text))
+        text += p + ". "
+    by_phrase: dict[int, set[str]] = {}
+    for line in annotate_text(spark, text, onto, cfg).splitlines():
+        start, _, _, hpo = line.split("\t")[:4]
+        i = max(j for j, s in enumerate(starts) if s <= int(start))
+        by_phrase.setdefault(i, set()).add(hpo)
+    assert sorted(by_phrase) == list(range(len(phrases)))
+    want = [(p, *by_phrase[i]) for i, p in enumerate(phrases)]
+    assert link_phrases(spark, phrases, onto, cfg) == want
+    assert ("digital short toe", "HP:0001156") in want
+
+
 def test_export_reference_tsv(spark, onto, tmp_path):
     docs, _ = synthesize_corpus(spark, onto, n_docs=4)
     triples = annotate(spark, docs, onto, PipelineConfig())

@@ -210,6 +210,28 @@ def test_drop_one_tiers(spark):
     assert got_def.count() == 0
 
 
+def test_prio3_split_and_synonym_variants_share_one_row(spark):
+    """A key that both prio-3 families generate gets ONE row, resolved
+    like any variant collision: the concept whose source key is strict
+    beats one whose source key is simplified."""
+    from phenobert_spark.api import annotate_text
+    from phenobert_spark.config import PipelineConfig
+    from phenobert_spark.ontology import _ingest_pairs
+
+    # combining-prefix split of a strict key vs the seeded eye~ocular
+    # swap of a simplified key: both give "mass ocular supra"
+    onto = _ingest_pairs(
+        [("Supraocular mass", "HP:0000200"), ("Mass of the supra eye", "HP:0000100")],
+        {},
+        {},
+    )
+    rows = [tuple(r) for r in onto.dict_df(spark, syn_min_count=10).collect()]
+    assert len({(k, p) for k, _, p in rows}) == len(rows), rows
+    assert ("mass ocular supra", "HP:0000200", 3) in rows
+    out = annotate_text(spark, "supra-ocular mass.", onto, PipelineConfig())
+    assert out.split("\t")[3] == "HP:0000200", out
+
+
 def test_clean_surface_and_slash_variants():
     from phenobert_spark.ontology import _clean_surface, _slash_variants
 

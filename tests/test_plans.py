@@ -477,3 +477,25 @@ def test_annotate_and_kg_edges_read_no_python_rdd(spark, onto, tmp_path):
     ).unionByName(onto_edges)
     plan = _formatted_plan(spark, edges)
     assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+
+
+def test_star_components_reads_no_python_rdd(spark):
+    """star_components' driver union-find labels (the branch every rep
+    graph under 2M edges takes) reach the plan as local rows: its only
+    ``Scan ExistingRDD`` leaves are the JVM-side localCheckpoints, none
+    a pickled ``applySchemaToPythonRDD`` table."""
+    from phenobert_spark.config import local_frame
+    from phenobert_spark.operators.closure import star_components
+
+    # doc 2 shares reps 1 and 3, so the rep graph has an edge to label
+    edges = local_frame(
+        spark, [(1, 2), (3, 2), (3, 4), (5, 6)], "src bigint, dst bigint"
+    )
+    labels = star_components(edges)
+    plan = _formatted_plan(spark, labels)
+    leaves = [l for l in plan.splitlines() if ", ExistingRDD," in l]
+    assert all(" at localCheckpoint " in l for l in leaves), plan
+    assert "LocalTableScan" in plan, plan
+    assert sorted(map(tuple, labels.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5)
+    ]
