@@ -42,8 +42,8 @@ def annotate_text(
 ) -> str:
     """Free text -> TSV annotation string (reference output format)."""
     onto = onto or get_ontology()
-    docs = spark.createDataFrame(
-        [("api", "input.txt", "0" * 40, "en", text)], DOCUMENTS_SCHEMA
+    docs = local_frame(
+        spark, [("api", "input.txt", "0" * 40, "en", text)], DOCUMENTS_SCHEMA
     )
     rows = (
         annotate(spark, docs, onto, cfg)

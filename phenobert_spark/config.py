@@ -19,8 +19,6 @@ from pyspark.sql.types import DataType, StructType
 # source for ontology surface forms + golden corpora; never imported.
 REFERENCE_ROOT = os.environ.get("PHENOBERT_REFERENCE_ROOT", "/root/reference")
 
-TESTDATA_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 @dataclass(frozen=True)
 class PipelineConfig:

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .config import REFERENCE_ROOT
+from .config import REFERENCE_ROOT, local_frame
 
 DOCUMENTS_SCHEMA = StructType(
     [
@@ -175,7 +175,7 @@ def load_reference_corpus(
     for fname in sorted(os.listdir(corpus_dir)):
         with open(os.path.join(corpus_dir, fname), encoding="utf-8") as fh:
             rows.append((dataset, fname, "0" * 40, "en", fh.read()))
-    return spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    return local_frame(spark, rows, DOCUMENTS_SCHEMA)
 
 
 def parse_gold_rows(
@@ -214,7 +214,7 @@ def load_reference_gold(
 ) -> DataFrame:
     """Parse the shipped gold ``ann/`` dirs into gold_annotations rows,
     keyed by corpus file name (joinable to documents.path)."""
-    return spark.createDataFrame(parse_gold_rows(dataset, root), GOLD_SCHEMA)
+    return local_frame(spark, parse_gold_rows(dataset, root), GOLD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,8 @@
 """Text normalization primitives (SURVEY.md §2.7 T1–T11).
 
-Each primitive exists twice, by design:
-
-* a plain-Python form, used on the driver to build the broadcast
-  dictionary and inside Arrow-batched pandas UDFs (vectorized over
-  batches, never per-row Spark Python UDFs), and
-* a Spark Column form built from ``pyspark.sql.functions`` so that
-  simple normalizations stay JVM-side / whole-stage-codegen when used
-  relationally.
+Each primitive is plain Python, used on the driver to build the
+broadcast dictionary and inside Arrow-batched pandas UDFs (vectorized
+over batches, never per-row Spark Python UDFs).
 
 Semantics re-expressed from the reference (phenobert/utils/util.py:
 processStr 708-719, strip_accents 698-705, isNum 722-731, simplify
@@ -24,16 +19,11 @@ import re
 import unicodedata
 from functools import lru_cache
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # --- T1: type-notation regex ("B-12" -> "B12"); same PCRE works in Java.
 TYPE_NOTATION_RE = re.compile(r"(?<=[A-Z])-(?=[\d])")
-TYPE_NOTATION_PATTERN = r"(?<=[A-Z])-(?=[\d])"
 
 # --- T3: punctuation -> space (reference char class, util.py:715).
 PUNCT_RE = re.compile(r"[-_\"'\\\t\r\n‘’]")
-PUNCT_PATTERN = r"[-_\"'\\\t\r\n‘’]"
 # Document-level variant (util.py:887-889): newlines are NOT spaced out —
 # they become sentence breaks via NEWLINE_RE below.
 PUNCT_TEXT_RE = re.compile(r"[-_\"'\\\t‘’]")
@@ -303,25 +293,4 @@ def normalize_text_keep_len(text: str) -> str:
 def tokenize_with_offsets(text: str) -> list[tuple[str, int, int]]:
     """T5: word tokens with char spans over (normalized) text."""
     return [(m.group(0), m.start(), m.end()) for m in TOKEN_RE.finditer(text)]
-
-
-# ---------------------------------------------------------------------------
-# Spark Column forms (JVM-side, codegen-friendly)
-# ---------------------------------------------------------------------------
-
-def col_process_str(c: Column) -> Column:
-    """Column form of T1+T3+lower → ARRAY<STRING> of tokens.
-
-    (Accent folding is ASCII-passthrough JVM-side; non-ASCII corpora go
-    through the pandas-UDF path where the Python form is authoritative.)
-    """
-    c = F.regexp_replace(c, TYPE_NOTATION_PATTERN, "")
-    c = F.lower(c)
-    c = F.regexp_replace(c, PUNCT_PATTERN, " ")
-    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != F.lit(""))
-
-
-def col_sorted_bag_key(tokens: Column) -> Column:
-    """T9 as a Column: array_join(array_sort(tokens), ' ')."""
-    return F.array_join(F.array_sort(tokens), " ")
 

@@ -309,38 +309,3 @@ def annotate_delta(
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "triples"))
-
-
-def write_zordered(
-    df: DataFrame,
-    out_dir: str,
-    zcols: tuple[str, str],
-    n_files: int = 64,
-    bits: int = 16,
-) -> None:
-    """Z-order-clustered parquet sink: interleave the two (already
-    int-quantized, non-negative) ``zcols`` into a Morton key
-    (operators/layout.morton_key), range-partition the write on it,
-    and sort within each file — so every output file's min-max zone
-    maps confine BOTH dimensions and a reader's predicate on either
-    column prunes files instead of scanning all of them (the q201
-    arithmetic, applied to the actual filesystem; file-level range
-    narrowing is pinned in tests/test_materialize.py).
-
-    ``repartitionByRange`` samples boundaries (no global sort — the
-    10^12-row-safe form); the per-file sort is a local
-    sortWithinPartitions. The transient _zkey never reaches disk.
-    """
-    from .operators.layout import morton_key
-
-    x, y = zcols
-    keyed = df.withColumn(
-        "_zkey", morton_key(F.col(x), F.col(y), bits=bits)
-    )
-    (
-        keyed.repartitionByRange(n_files, F.col("_zkey"))
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(out_dir)
-    )

@@ -6,7 +6,6 @@ no UDFs), portable hashing via md5 so every operator has an exact
 DuckDB oracle (plans/contract_queries q12/q16/q17/q18 call these
 functions and the driver value-checks them):
 
-* ``exact_dedup``        — content-hash groupBy, keep one survivor.
 * ``minhash_signatures`` — k seeded MinHashes over w-token shingles.
 * ``lsh_candidate_pairs``— banding + bucket self-join (the scale path:
   only same-band pairs materialize, never the full cross-join).
@@ -39,19 +38,6 @@ def _shingles(text_col, w: int = 3):
     return F.transform(
         F.sequence(F.lit(1), n),
         lambda i: F.array_join(F.slice(toks, i, w), " "),
-    )
-
-
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the smallest id per identical content hash."""
-    w = Window.partitionBy("_h").orderBy(F.col(id_col).asc())
-    return (
-        df.withColumn("_h", F.md5(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_h", "_rn")
     )
 
 

@@ -105,33 +105,3 @@ def funnel(
             .drop("_rn")
         )
     return out
-
-
-def funnel_counts(
-    events: DataFrame,
-    stages: list[str],
-    **kwargs,
-) -> DataFrame:
-    """Stage-level conversion summary: (stage_idx, stage, n_users)
-    with n_users = users whose funnel reached that stage in order.
-    One extra single-row-per-user aggregate over :func:`funnel`."""
-    f = funnel(events, stages, **kwargs)
-    counts = f.agg(
-        *[
-            F.count(f"t{k}").cast("bigint").alias(f"t{k}")
-            for k in range(1, len(stages) + 1)
-        ]
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("stage_idx"),
-                F.lit(stage).alias("stage"),
-                F.col(f"t{k}").alias("n_users"),
-            )
-            for k, stage in enumerate(stages, start=1)
-        ]
-    )
-    return counts.select(F.explode(pairs).alias("s")).select(
-        "s.stage_idx", "s.stage", "s.n_users"
-    )

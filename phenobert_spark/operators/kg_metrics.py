@@ -1451,46 +1451,6 @@ def edge_triangle_support(
     )
 
 
-def k_truss(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 30,
-) -> DataFrame:
-    """Maximal k-truss (Cohen 2008): the largest edge subset in which
-    every edge participates in >= k-2 triangles WITHIN the subset —
-    the standard cohesive-community core, stricter than k-core and
-    the usual next step after :func:`triangle_count` flags dense
-    regions. Iterative peel: recompute per-edge support on the
-    surviving edges (each round is the verified
-    :func:`edge_triangle_support` plan) and drop edges below k-2
-    until a fixpoint; rounds are bounded by the peel depth and each
-    strictly shrinks the edge set. Warns if ``max_iters`` runs out
-    first. Returns the surviving (u, v) edges, u < v.
-    """
-    if k < 2:
-        raise ValueError("k must be >= 2")
-
-    def peel(cur, i):
-        return (
-            edge_triangle_support(cur, src="a", dst="b")
-            .filter(F.col("support") >= k - 2)
-            .select(F.col("u").alias("a"), F.col("v").alias("b"))
-        )
-
-    cur = iterate(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct(),
-        peel,
-        rounds=max_iters,
-        until=lambda s: s.count(),
-    )
-    return cur.select(F.col("a").alias("u"), F.col("b").alias("v")).orderBy("u", "v")
-
-
 def wl_refinement(
     edges: DataFrame,
     rounds: int = 3,

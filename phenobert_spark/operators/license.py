@@ -6,14 +6,13 @@ every code training-data pipeline applies is a license filter (The
 Stack, Kocetkov et al. 2022: keep only permissively-licensed files).
 This module is the Spark-first version of that gate:
 
-* :func:`detect_license` — classify each file by canonical license
+* :func:`license_column` — classify each file by canonical license
   phrase, JVM-side (``Column.contains`` over a lowered projection, no
   UDF, whole-stage codegen); first marker wins, unmatched files are
-  ``unknown``.
+  ``unknown``. The gate is a filter on it against ``PERMISSIVE``
+  (MIT / Apache-2.0 / BSD-3-Clause).
 * :func:`license_rollup` — per-(repo, license) file counts with a
   permissive flag: the corpus-audit table a release needs.
-* :func:`filter_permissive` — the actual gate; keeps MIT /
-  Apache-2.0 / BSD-3-Clause files.
 
 Scale notes: detection is a map-only pass (the license column is
 derived before any shuffle and the content column is DROPPED by the
@@ -55,13 +54,6 @@ def license_column(text_col: str = "content") -> F.Column:
     return expr
 
 
-def detect_license(
-    df: DataFrame, text_col: str = "content", out_col: str = "license"
-) -> DataFrame:
-    """Add an ``out_col`` SPDX-id column; map-only, no shuffle."""
-    return df.withColumn(out_col, license_column(text_col))
-
-
 def license_rollup(
     df: DataFrame, repo_col: str = "repo", text_col: str = "content"
 ) -> DataFrame:
@@ -80,10 +72,3 @@ def license_rollup(
             F.col("license").isin(*sorted(PERMISSIVE)),
         )
     )
-
-
-def filter_permissive(
-    df: DataFrame, text_col: str = "content"
-) -> DataFrame:
-    """The release gate: keep only permissively-licensed files."""
-    return df.filter(license_column(text_col).isin(*sorted(PERMISSIVE)))

@@ -4,9 +4,9 @@ Images/audio/video ride through the engine as ``binary`` columns with
 mime + metadata; all Spark-side plumbing (schema, partition safety,
 Arrow batch shape) is real and tested. The actual decode kernels
 (image resize, audio resample, video frame-sample) require codec
-libraries that are not in this container, so ``decode_payload`` is an
-explicit, clearly-marked stub behind an import gate; the deterministic
-byte-statistics extractor below exercises the identical dataflow.
+libraries that are not in this container; the deterministic
+byte-statistics extractor below exercises the identical dataflow, and
+a real decoder would slot into the same mapInPandas kernels.
 """
 
 from __future__ import annotations
@@ -35,25 +35,6 @@ FEATURES_SCHEMA = StructType(
         StructField("payload_sha", StringType(), False),
     ]
 )
-
-
-def decode_payload(payload: bytes, mime: str):
-    """Decode an image/audio/video payload into a tensor.
-
-    STUB: codec libraries (Pillow / soundfile / av) are unavailable in
-    this environment. On a production cluster this body becomes e.g.
-    ``PIL.Image.open(io.BytesIO(payload)).resize(...)`` inside the same
-    mapInPandas kernel; the engine's dataflow is unchanged.
-    """
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "media decode requires codec libraries not present in this "
-            "environment; the Spark-side plumbing is exercised via "
-            "extract_binary_features"
-        ) from exc
-    raise NotImplementedError("wire the real decoder here when codecs exist")
 
 
 def extract_binary_features(blobs: DataFrame) -> DataFrame:
@@ -118,7 +99,7 @@ def sample_frames(
     This is the real plumbing of a decode->frame-sample stage: the
     explode factor, Arrow batch shape, and per-frame keys are identical
     whether the payload is a fake container (here) or a production
-    codec stream (decode_payload, env-gated).
+    codec stream.
     """
     import hashlib as _hl
 
@@ -163,8 +144,8 @@ def resize_grids(
     real codec would hand over); area-average pooling shrinks it to
     out_size x out_size. The pooling kernel is the real one (pure numpy
     reshape/mean per Arrow batch) — only the codec decode in front of it
-    is env-gated (decode_payload). Rows whose payload is smaller than
-    one output cell per axis are dropped.
+    is missing. Rows whose payload is smaller than one output cell per
+    axis are dropped.
 
     Returns (doc_id, grid BINARY of out_size*out_size uint8 bytes,
     grid_sha).

@@ -702,65 +702,3 @@ def gram_matrix(
         .agg(F.round(F.sum("g"), 4).alias("g"))
         .orderBy("i", "j")
     )
-
-
-def pca_components(gram: DataFrame, n_rows: int, k: int = 8) -> "np.ndarray":
-    """Top-k principal directions from a :func:`gram_matrix` result:
-    collect the d x d upper triangle (d^2 values — driver-side small
-    by construction, NEVER corpus-sized), mirror it, eigendecompose
-    with numpy. Uncentered PCA (classic SVD-of-gram); callers wanting
-    covariance PCA subtract the column means from X upstream (one
-    extra narrow pass). Returns the (d, k) eigenvector matrix,
-    eigenvalue-descending, sign-canonicalized (largest-|.| coordinate
-    positive) so the projection is deterministic across runs and
-    platforms.
-    """
-    rows = gram.collect()
-    d = max(r.j for r in rows) + 1
-    g = np.zeros((d, d))
-    for r in rows:
-        g[r.i, r.j] = r.g
-        g[r.j, r.i] = r.g
-    vals, vecs = np.linalg.eigh(g / max(n_rows, 1))
-    order = np.argsort(vals)[::-1][:k]
-    w = vecs[:, order]
-    for c in range(w.shape[1]):
-        a = np.argmax(np.abs(w[:, c]))
-        if w[a, c] < 0:
-            w[:, c] = -w[:, c]
-    return w
-
-
-def project_embeddings(
-    embs: DataFrame,
-    components: "np.ndarray",
-    id_col: str = "vec_id",
-    feat_col: str = "embedding",
-) -> DataFrame:
-    """Project an embedding column onto precomputed principal
-    directions: broadcast the (d, k) matrix inside a ``mapInPandas``
-    kernel (one matmul per Arrow batch), return
-    (id, projection array<double>). Narrow — zero shuffles; the
-    dimensionality-reduced vectors feed the ANN/dedup family at k/d
-    of the wire cost."""
-    from pyspark.sql.types import ArrayType
-
-    w = components
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType(), False),
-            StructField("projection", ArrayType(DoubleType(), False), False),
-        ]
-    )
-
-    def proj(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            x = np.stack(b[feat_col].to_numpy()).astype(np.float64)
-            p = x @ w
-            yield pd.DataFrame(
-                {id_col: b[id_col].to_numpy(), "projection": list(p)}
-            )
-
-    return embs.select(id_col, feat_col).mapInPandas(proj, schema=out_schema)

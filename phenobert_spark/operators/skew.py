@@ -1,25 +1,19 @@
-"""Explicit skew handling for large joins and aggregations: salting.
+"""Explicit skew handling for large joins: salting.
 
 The north-rule failure mode: a shuffle join keyed on a power-law
 column (document host, hot HPO concept, mega-repo) sends one key's
 entire row set to ONE reducer — the 999 idle executors watch the
 1000th spill. AQE's skew-join splits oversized PARTITIONS, but it
 cannot split a single oversized KEY; that needs salting, which is a
-semantic rewrite and therefore an operator, not a config:
+semantic rewrite and therefore an operator, not a config.
 
-* :func:`salted_join` — fact side gets a deterministic salt in
-  [0, factor); the dimension side is EXPLODED ``factor``× so every
-  (key, salt) bucket finds its dim row. One hot key now lands on
-  ``factor`` reducers. Exact same join result as the unsalted join
-  (q204 proves it against a plain-SQL oracle), at the cost of
-  ``factor``× the dim shuffle volume — the classic trade when the
-  dim is too big to broadcast and the fact is skewed.
-* :func:`salted_count` — two-stage aggregation for skewed groupBy:
-  count by (key, salt) first (spreads the hot key), then re-reduce
-  by key. Spark's partial aggregation already does this for
-  algebraic aggregates; the explicit form exists for the cases that
-  defeat map-side combine (high-cardinality maps, collect-style
-  accumulators) and as the documented pattern.
+:func:`salted_join` gives the fact side a deterministic salt in
+[0, factor) and EXPLODES the dimension side ``factor``× so every
+(key, salt) bucket finds its dim row. One hot key now lands on
+``factor`` reducers. Exact same join result as the unsalted join
+(q204 proves it against a plain-SQL oracle), at the cost of
+``factor``× the dim shuffle volume — the classic trade when the dim
+is too big to broadcast and the fact is skewed.
 
 The salt is ``pmod(xxhash64(id_cols), factor)`` — deterministic
 (resumable/checkpoint-stable, unlike a random salt) and uniform over
@@ -73,25 +67,3 @@ def salted_join(
     )
     out = f.join(d, on=[on, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def salted_count(
-    df: DataFrame,
-    key: str,
-    factor: int = 16,
-    salt_by: list[str] | None = None,
-) -> DataFrame:
-    """Skew-proof ``groupBy(key).count()``: pre-aggregate by
-    (key, salt), then re-reduce the ``factor``-bounded partials by
-    key. Output: (key, n)."""
-    salt_cols = salt_by or df.columns
-    return (
-        df.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(factor)),
-        )
-        .groupBy(key, "_salt")
-        .agg(F.count("*").alias("_pn"))
-        .groupBy(key)
-        .agg(F.sum("_pn").alias("n"))
-    )

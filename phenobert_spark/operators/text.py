@@ -22,9 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: GPT-2-style pre-tokenization, restricted to lookahead-free syntax so
-#: Java regex and DuckDB RE2 count identically (see q13).
-BPE_PRETOKEN_RE = " ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+"
 
 QUALITY_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "on",
@@ -667,7 +664,7 @@ def bpe_train(
 
 #: PII patterns, restricted to lookahead-free syntax so Java regex
 #: (Spark) and RE2 (DuckDB) match identical spans — same discipline as
-#: BPE_PRETOKEN_RE. Conservative by design: scrubbing favors recall,
+#: q13's BPE pre-tokenizer. Conservative by design: scrubbing favors recall,
 #: and a '<EMAIL>'/'<IP>' token is cheap to a language model.
 PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4_RE = r"\b(\d{1,3}\.){3}\d{1,3}\b"

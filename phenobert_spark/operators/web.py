@@ -1,4 +1,4 @@
-"""Web-corpus URL hygiene: canonicalization and host-level rollup.
+"""Web-corpus URL hygiene: canonicalization.
 
 A web-scale KG ingest keys everything on the URL — dedup, provenance
 fusion (entity_resolution.fuse_triples weights sources), per-site
@@ -117,24 +117,4 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
         F.when(is_url, host).alias("host"),
         F.when(is_url, reg).alias("reg_domain"),
         F.when(is_url, canon).alias("canon_url"),
-    )
-
-
-def host_rollup(canon: DataFrame) -> DataFrame:
-    """Per-registrable-domain crawl profile over canonicalized rows:
-    page count, distinct canonical pages, distinct hosts — the table
-    a crawl scheduler budgets from and a dedup pass stratifies by.
-
-    One hash aggregation on ``reg_domain``; distincts are per-group
-    HashAggregate expands, all map-side combinable. Malformed rows
-    (NULL reg_domain) are excluded — they carry no site identity.
-    """
-    return (
-        canon.filter(F.col("reg_domain").isNotNull())
-        .groupBy("reg_domain")
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("canon_url").cast("bigint").alias("n_pages"),
-            F.countDistinct("host").cast("bigint").alias("n_hosts"),
-        )
     )

@@ -31,9 +31,6 @@ from .operators.spans import (
     suppress_containing,
 )
 
-TRIPLES_COLS = [
-    "doc_id", "pred", "hpo_id", "start", "end", "mention", "score", "negated",
-]
 
 # Closed class of degree/laterality/temporal modifiers a mention may
 # carry WITHOUT changing which concept it denotes ("severe X" -> X).

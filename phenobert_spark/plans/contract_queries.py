@@ -6278,7 +6278,7 @@ def q172(spark, sf_dir):
     doc_id-derived email block (1 + doc_id % 3 copies) and one IP into
     BOTH engines' inputs — the oracle checks the redaction/counting
     SEMANTICS, not the fixture. Patterns are lookahead-free so Java
-    regex and RE2 agree span-for-span (BPE_PRETOKEN_RE discipline).
+    regex and RE2 agree span-for-span (q13's pre-tokenizer discipline).
     Map-only pass: no shuffle, whole-stage codegen."""
     from ..operators.text import pii_redact
 
@@ -6854,8 +6854,8 @@ def q182(spark, sf_dir):
 def q183(spark, sf_dir):
     """Per-edge triangle support (operators/kg_metrics.
     edge_triangle_support) on q123's near-duplicate similarity graph
-    — the quantity k-truss peeling consumes (kg_metrics.k_truss
-    composes this in a peel loop, pytest-pinned). Degree-oriented
+    — the quantity k-truss peeling consumes (an edge in a k-truss
+    needs support >= k-2). Degree-oriented
     enumeration finds each triangle once at its lowest-degree vertex
     (no hub fan-out), then explodes it into canonical edges for one
     combinable count; the oracle brute-forces the triple self-join

@@ -59,50 +59,3 @@ def read_documents(spark: SparkSession, source: str) -> DataFrame:
             F.col("text").alias("content"),
         )
     raise ValueError(f"unrecognized documents source shape: {df.columns}")
-
-
-def read_jsonl_documents(
-    spark: SparkSession,
-    source: str,
-    field_map: dict[str, str] | None = None,
-) -> DataFrame:
-    """JSONL corpus adapter: newline-delimited JSON (the common
-    web-crawl / dataset-dump interchange format) -> the canonical
-    documents schema. ``field_map`` renames source fields, e.g.
-    ``{"content": "text", "repo": "source"}`` when the dump uses
-    (text, source, ...) keys; unmapped canonical columns fall back to
-    deterministic defaults (repo='jsonl', commit=40 zeros, lang='en')
-    so partial dumps still load.
-
-    The schema is EXPLICIT (never inferred): schema inference would
-    scan the 100-TB dump twice and silently unify conflicting types;
-    here malformed rows land as nulls in the declared columns and are
-    dropped with the content-null filter, a visible count.
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    fm = field_map or {}
-    src_field = {canon: fm.get(canon, canon) for canon in (
-        "repo", "path", "commit", "lang", "content"
-    )}
-    read_schema = StructType(
-        [StructField(f, StringType()) for f in sorted(set(src_field.values()))]
-    )
-    raw = spark.read.schema(read_schema).json(source)
-    defaults = {
-        "repo": F.lit("jsonl"),
-        # content-derived fallback identity: monotonically_increasing_id
-        # varies with partitioning, so re-ingesting the same dump would
-        # mint different document identities and break downstream
-        # dedup/join stability; a content hash is reproducible
-        "path": F.sha2(F.coalesce(F.col(src_field["content"]), F.lit("")), 256),
-        "commit": F.lit("0" * 40),
-        "lang": F.lit("en"),
-    }
-    cols = []
-    for canon in ("repo", "path", "commit", "lang", "content"):
-        c = F.col(src_field[canon])
-        if canon in defaults:
-            c = F.coalesce(c, defaults[canon])
-        cols.append(c.alias(canon))
-    return raw.select(*cols).filter(F.col("content").isNotNull())

@@ -15,13 +15,12 @@ Two entry points:
   its partial output instead of appending duplicates (foreachBatch
   redelivers the same batch_id on replay — that id is the idempotency
   key).
-* ``windowed_event_rollup`` — watermarked tumbling-window aggregation
-  (the streaming form of contract query q24): late rows beyond the
-  watermark are dropped and per-window state is bounded.
-* ``sessionize_stream`` — custom stateful operator
-  (``applyInPandasWithState``, GroupState per user + event-time
-  timeout): gap-based sessionization, the streaming twin of batch
-  contract query q34.
+* ``kg_upsert_stream`` — fold a streaming add/remove changelog into
+  versioned KG snapshots (``latest_kg_snapshot`` reads the newest).
+
+Streaming operator twins of the batch registry (windowed rollups,
+sessionization, cross-batch dedup) are out of scope (SURVEY.md §2.9,
+§7.3): the batch queries cover them.
 
 On a cluster the source/sink would be Iceberg tables (incremental scan
 + append); file parquet streams are the sandbox stand-in with identical
@@ -80,297 +79,6 @@ def annotate_stream(
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def windowed_event_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup over a streaming events
-    DataFrame (ts, event_type, value): the streaming twin of the batch
-    q24 oracle — late data beyond ``watermark`` is dropped, state per
-    window is finite."""
-    # parquet timestamps may arrive as TIMESTAMP_NTZ; watermarks require
-    # event-time TIMESTAMP (session TZ is pinned to UTC in config)
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-SESSIONS_SCHEMA = "user_id bigint, session_id bigint, n_events bigint, duration_s bigint"
-_SESS_STATE_SCHEMA = "last_t bigint, start_t bigint, sess_id bigint, n bigint"
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap_s: int = 1800,
-    watermark: str = "2 hours",
-    idle_ttl_s: int | None = None,
-) -> DataFrame:
-    """Custom stateful operator: gap-based sessionization over a
-    streaming events DataFrame (ts, user_id) via
-    ``applyInPandasWithState`` — the streaming twin of batch contract
-    query q34 (lag -> boundary -> running-sum), with identical output
-    rows for in-order data.
-
-    Semantics per user (GroupState):
-
-    * events within ``gap_s`` of the previous one extend the open
-      session; a larger gap closes it and emits
-      ``(user_id, session_id, n_events, duration_s)`` (append mode);
-    * a LATE event (within the watermark but older than the state's
-      last seen timestamp) folds into the open session — it bumps the
-      event count and may widen the session start, but never moves
-      ``last_t`` backward, so durations stay non-negative and the
-      timeout horizon is monotone. (The batch twin, which sorts all
-      data first, may place such an event differently — the usual
-      streaming/batch contract, same cutoff note as below.)
-    * the trailing open session is flushed by an EVENT-TIME timeout
-      once the watermark passes ``last_t + gap_s`` — emission needs no
-      terminal sentinel, just stream progress;
-    * after a flush the state row stays as an idle marker carrying the
-      session counter, so a user who returns later continues numbering
-      exactly like the batch running-sum. State is therefore one small
-      row per DISTINCT user — not per event. Over an unbounded user
-      universe even that grows monotonically, so ``idle_ttl_s`` bounds
-      the horizon: a marker idle past the TTL is EVICTED once the
-      watermark passes ``last_t + gap_s + idle_ttl_s``. A user who
-      returns after eviction restarts session numbering at 1 (callers
-      who need global numbering persist the counter in the sink and
-      renumber there); with the default ``None`` markers are kept
-      forever (exact numbering, unbounded-user caveat documented).
-
-    Late events beyond ``watermark`` are dropped by the engine before
-    reaching the state function (the batch twin, which sees all data,
-    has no such cutoff — the usual streaming/batch contract).
-    """
-    ev = (
-        events.select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-        .withWatermark("ts", watermark)
-    )
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        (user_id,) = key
-        cols = ["user_id", "session_id", "n_events", "duration_s"]
-        if state.hasTimedOut:
-            last_t, start_t, sess_id, n = state.get
-            if n <= 0:
-                # idle marker hit its TTL: evict — numbering restarts
-                # if this user ever returns
-                state.remove()
-                return
-            # flush the open session; keep the counter as an idle marker
-            state.update((-1, -1, sess_id, 0))
-            if idle_ttl_s is not None:
-                wm_ms = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(
-                    max((last_t + gap_s + idle_ttl_s) * 1000, wm_ms + 1)
-                )
-            yield pd.DataFrame(
-                [(user_id, sess_id, n, last_t - start_t)], columns=cols
-            )
-            return
-        ts: list[int] = sorted(
-            t
-            for pdf in pdf_iter
-            for t in (pdf["ts"].astype("int64") // 10**9).tolist()
-        )
-        if state.exists:
-            last_t, start_t, sess_id, n = state.get
-            if last_t < 0:  # idle marker
-                last_t = start_t = None
-        else:
-            last_t = start_t = None
-            sess_id = 0
-            n = 0
-        out = []
-        for t in ts:
-            if last_t is None:
-                sess_id += 1
-                start_t = t
-                n = 1
-            elif t <= last_t:
-                # late within-watermark event: fold into the open
-                # session without moving last_t backward
-                n += 1
-                start_t = min(start_t, t)
-                continue
-            elif t - last_t > gap_s:
-                out.append((user_id, sess_id, n, last_t - start_t))
-                sess_id += 1
-                start_t = t
-                n = 1
-            else:
-                n += 1
-            last_t = t
-        if last_t is not None:
-            state.update((last_t, start_t, sess_id, n))
-            # flush the open session once the watermark passes the gap;
-            # the timestamp must sit strictly beyond the current
-            # watermark or the engine rejects it
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max((last_t + gap_s) * 1000, wm_ms + 1))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
-        SESSIONS_SCHEMA,
-        _SESS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def dedup_stream(docs: DataFrame) -> DataFrame:
-    """Stateful cross-batch exact dedup: content-addressed doc_id with
-    streaming ``dropDuplicates`` — the state store remembers every seen
-    doc_id across micro-batches, so a document replayed in a later file
-    (a re-crawl, a retry) is emitted exactly once.
-
-    State is unbounded by design here (content hashes are the dedup
-    universe); bound it with ``withWatermark`` +
-    ``dropDuplicatesWithinWatermark`` when ingestion time is available.
-    """
-    return docs.withColumn("doc_id", F.sha2(F.col("content"), 256)).dropDuplicates(
-        ["doc_id"]
-    )
-
-
-def run_stream_to_completion(query: StreamingQuery, timeout_sec: int = 120) -> None:
-    """Drive an availableNow stream until it drains (test helper)."""
-    query.awaitTermination(timeout_sec)
-    if query.isActive:
-        query.stop()
-
-
-def windowed_hll_rollup(
-    events: DataFrame,
-    key_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    p: int = 9,
-) -> DataFrame:
-    """Streaming distinct-count sketch: watermarked tumbling-window
-    HyperLogLog registers over an event stream — the streaming twin of
-    batch ``sketches.hll_registers`` (q120's verified kernel) and the
-    scale answer to "distinct users per hour" on an unbounded stream.
-
-    Exact streaming COUNT(DISTINCT) would hold every key in state
-    forever-growing per window; the register MAX is (a) bounded at
-    2^p rows of state per window, (b) an associative+commutative
-    aggregate Structured Streaming can maintain incrementally in
-    append mode, and (c) identical to the batch register table on the
-    same data (pinned in tests/test_streaming.py), so a downstream
-    consumer can merge stream-hours into day sketches by the same
-    groupBy-max with no reprocessing.
-
-    Finalization to an estimate is one tiny batch select over the
-    emitted registers (``sketches.hll_distinct``'s arithmetic);
-    emitting registers rather than estimates keeps the stream output
-    mergeable — the property estimates don't have.
-    """
-    from ..operators.sketches import _md5_u32
-
-    w = 32 - p
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    h = _md5_u32(F.col(key_col))
-    bucket = F.floor(h / F.lit(float(1 << w))).cast("int")
-    rest = h % F.lit(1 << w)
-    rho = (
-        F.when(rest == 0, F.lit(w + 1))
-        .otherwise(F.lit(w + 1) - F.length(F.bin(rest)))
-        .cast("int")
-    )
-    return (
-        events.withWatermark("ts", watermark)
-        .select("ts", bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(F.window("ts", window).alias("w"), "bucket")
-        .agg(F.max("rho").alias("rho"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_start"),
-            "bucket",
-            "rho",
-        )
-    )
-
-
-def windowed_countmin_rollup(
-    events: DataFrame,
-    key_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    depth: int = 4,
-    width_bits: int = 10,
-) -> DataFrame:
-    """Streaming frequency sketch: watermarked per-window count-min
-    cells over an event stream — the streaming twin of batch
-    ``sketches.countmin_table`` (q128's verified kernel), for "how
-    often is key X hitting us per hour" without per-key state.
-
-    Like :func:`windowed_hll_rollup`, the emitted artifact is the RAW
-    mergeable cell table (window, row, bucket, c): state per window is
-    bounded at depth x 2^width_bits cells no matter the key
-    cardinality, the count aggregate maintains incrementally in append
-    mode, cells are pinned equal to the batch table on the same data
-    (tests), and stream-hours merge into day sketches by summing
-    cells. Probing is batch-side ``sketches.countmin_estimate``.
-
-    The depth fan-out is one narrow explode (each event contributes
-    ``depth`` cells); the hash string 'cm<row>:' || key matches the
-    batch/oracle form digit for digit.
-    """
-    w = 1 << width_bits
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    rows = F.explode(
-        F.array(*[F.lit(r) for r in range(depth)])
-    ).alias("row")
-    fanned = events.select("ts", F.col(key_col).cast("string").alias("_k"), rows)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("cm"),
-                        F.col("row").cast("string"),
-                        F.lit(":"),
-                        F.col("_k"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % F.lit(w)
-    )
-    return (
-        fanned.withWatermark("ts", watermark)
-        .select("ts", "row", bucket.alias("bucket"))
-        .groupBy(F.window("ts", window).alias("w"), "row", "bucket")
-        .agg(F.count("*").alias("c"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_start"),
-            "row",
-            "bucket",
-            "c",
-        )
     )
 
 

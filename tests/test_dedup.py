@@ -4,7 +4,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from phenobert_spark.operators.dedup import (
-    exact_dedup,
     hamming_neighbors,
     hamming_neighbors_banded,
     jaccard_pairs,
@@ -27,12 +26,6 @@ ROWS = [
 
 def _docs(spark):
     return spark.createDataFrame(ROWS, "doc_id int, text string")
-
-
-def test_exact_dedup(spark):
-    out = exact_dedup(_docs(spark))
-    ids = {r.doc_id for r in out.collect()}
-    assert ids == {1, 3, 4, 6}  # smallest id survives per hash group
 
 
 def test_minhash_identical_signatures(spark):

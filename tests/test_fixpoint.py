@@ -33,7 +33,6 @@ LOOP_OPERATORS = {
     ),
     "k_core": lambda e, s: kg_metrics.k_core(e, k=2, iters=5),
     "hyperball": lambda e, s: kg_metrics.hyperball(e, radius=5, p=4),
-    "k_truss": lambda e, s: kg_metrics.k_truss(e, k=3),
     "wl_refinement": lambda e, s: kg_metrics.wl_refinement(e, rounds=5),
     "bfs_distances": lambda e, s: closure.bfs_distances(e, s),
     "sssp_distances": lambda e, s: closure.sssp_distances(e, s),

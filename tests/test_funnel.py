@@ -5,7 +5,7 @@ import datetime as dt
 
 import pyspark.sql.functions as F
 
-from phenobert_spark.operators.funnel import funnel, funnel_counts
+from phenobert_spark.operators.funnel import funnel
 
 STAGES = ["view", "click", "purchase"]
 
@@ -96,22 +96,6 @@ def test_funnel_max_span_later_anchor_converts(spark):
     }
     assert out[1] == (_ts(3000), _ts(3100), _ts(4000))
     assert out[2] == (_ts(100), _ts(200), _ts(3650))
-
-
-def test_funnel_counts(spark):
-    ev = _events(
-        spark,
-        [
-            (1, 10, "view"), (1, 20, "click"), (1, 30, "purchase"),
-            (2, 10, "view"), (2, 20, "click"),
-            (3, 10, "view"),
-        ],
-    )
-    got = {
-        (r.stage_idx, r.stage): r.n_users
-        for r in funnel_counts(ev, STAGES).collect()
-    }
-    assert got == {(1, "view"): 3, (2, "click"): 2, (3, "purchase"): 1}
 
 
 def test_funnel_plan_no_cartesian(spark):

@@ -335,51 +335,6 @@ def test_edge_support_random_brute(spark):
     assert got == _support_ref(edges)
 
 
-def _truss_ref(edges, k):
-    """Reference peel for the maximal k-truss."""
-    cur = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
-    while True:
-        sup = _support_ref(list(cur))
-        nxt = {e for e in cur if sup[e] >= k - 2}
-        if nxt == cur:
-            return cur
-        cur = nxt
-
-
-def test_k_truss_peels_to_the_clique(spark):
-    from phenobert_spark.operators.kg_metrics import k_truss
-
-    # K4 core + a triangle hanging off node 3 + a chain: the 4-truss
-    # is exactly the K4 (each K4 edge has support 2 within it); the
-    # hanging triangle survives only at k=3.
-    k4 = list(itertools.combinations(range(4), 2))
-    tri = [(3, 10), (3, 11), (10, 11)]
-    chain = [(11, 12), (12, 13)]
-    edges = k4 + tri + chain
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got4 = {(r.u, r.v) for r in k_truss(e, k=4).collect()}
-    assert got4 == set(k4) == _truss_ref(edges, 4)
-    got3 = {(r.u, r.v) for r in k_truss(e, k=3).collect()}
-    assert got3 == set(k4) | set(tri) == _truss_ref(edges, 3)
-
-
-def test_k_truss_random_and_validations(spark):
-    from phenobert_spark.operators.kg_metrics import k_truss
-
-    rng = random.Random(53)
-    edges = [
-        (a, b)
-        for a in range(18)
-        for b in range(18)
-        if a < b and rng.random() < 0.3
-    ]
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.u, r.v) for r in k_truss(e, k=4).collect()}
-    assert got == _truss_ref(edges, 4)
-    with pytest.raises(ValueError):
-        k_truss(e, k=1)
-
-
 def _wl_ref(edges, rounds, labels=None):
     """Driver-side 1-WL twin (md5 colors, sorted neighbor multiset)."""
     import hashlib

@@ -3,8 +3,7 @@
 from phenobert_spark.operators.license import (
     LICENSE_MARKERS,
     PERMISSIVE,
-    detect_license,
-    filter_permissive,
+    license_column,
     license_rollup,
 )
 
@@ -12,6 +11,10 @@ MIT = "Permission is hereby granted, free of charge, to any person."
 APACHE = "Licensed under the Apache License, Version 2.0 (the License)."
 GPL = "under the terms of the GNU General Public License as published"
 BSD = "Redistribution and use in source and binary forms, with or without"
+
+
+def _detect(df):
+    return df.withColumn("license", license_column())
 
 
 def _corpus(spark):
@@ -30,7 +33,7 @@ def _corpus(spark):
 
 def test_detect_license_classification_and_priority(spark):
     got = {
-        r.path: r.license for r in detect_license(_corpus(spark)).collect()
+        r.path: r.license for r in _detect(_corpus(spark)).collect()
     }
     assert got == {
         "a.py": "MIT",
@@ -47,11 +50,12 @@ def test_detect_license_case_insensitive(spark):
         [("r", "x", MIT.upper()), ("r", "y", MIT.lower())],
         "repo string, path string, content string",
     )
-    assert {r.license for r in detect_license(df).collect()} == {"MIT"}
+    assert {r.license for r in _detect(df).collect()} == {"MIT"}
 
 
 def test_filter_permissive_gate(spark):
-    kept = {r.path for r in filter_permissive(_corpus(spark)).collect()}
+    gate = license_column().isin(*sorted(PERMISSIVE))
+    kept = {r.path for r in _corpus(spark).filter(gate).collect()}
     assert kept == {"a.py", "b.py", "d.py", "f.py"}
     assert PERMISSIVE == {"MIT", "Apache-2.0", "BSD-3-Clause"}
 
@@ -73,7 +77,7 @@ def test_license_rollup_counts_and_flags(spark):
 
 def test_detect_license_plan_is_map_only(spark):
     df = _corpus(spark)
-    plan = detect_license(df)._jdf.queryExecution().explainString(
+    plan = _detect(df)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )

@@ -223,38 +223,3 @@ def test_annotate_delta_incremental_ingest(spark, onto, corpus, tmp_path):
     # idempotent: same snapshot again -> nothing to do
     res2 = annotate_delta(spark, day2, onto, out, n_buckets=8)
     assert res2["invalidated"] == [] and res2["processed"] == 0
-
-
-def test_write_zordered_confines_file_zones(spark, tmp_path):
-    """The clustered writer must leave per-file value ranges far
-    narrower than the global range on BOTH z dimensions — that
-    narrowing IS the file-skipping payoff (q201's arithmetic on the
-    real filesystem)."""
-    import glob
-    import os
-
-    from phenobert_spark.materialize import write_zordered
-
-    rows = [(i, i % 64, (i * 7) % 64) for i in range(4096)]
-    df = spark.createDataFrame(rows, "id long, x long, y long")
-    out = str(tmp_path / "zordered")
-    write_zordered(df, out, zcols=("x", "y"), n_files=16, bits=6)
-
-    files = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
-    assert 2 <= len(files) <= 16
-    import pyarrow.parquet as pq
-
-    widths_x, widths_y = [], []
-    for f in files:
-        t = pq.read_table(f)
-        xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-        widths_x.append(max(xs) - min(xs))
-        widths_y.append(max(ys) - min(ys))
-    # global width is 63 on both axes; clustered files must average
-    # well under half of it on each
-    assert sum(widths_x) / len(widths_x) < 32
-    assert sum(widths_y) / len(widths_y) < 32
-    # schema round-trips without the transient key
-    got = spark.read.parquet(out)
-    assert set(got.columns) == {"id", "x", "y"}
-    assert got.count() == 4096

@@ -86,15 +86,3 @@ def test_normalize_text_keep_len():
     # newline after punctuation is plain whitespace.
     assert out == "head ache noted.no fever."
     assert N.normalize_text_keep_len("done.\nNext") == "done. next"
-
-
-def test_column_forms_match_python(spark):
-    import pyspark.sql.functions as F
-
-    rows = [("Short-stature And B-12 Deficiency",), ("Multicystic  kidneys",)]
-    df = spark.createDataFrame(rows, "s string").select(
-        N.col_sorted_bag_key(N.col_process_str(F.col("s"))).alias("key"), "s"
-    )
-    got = {r.s: r.key for r in df.collect()}
-    for s, key in got.items():
-        assert key == N.sorted_bag_key(N.process_str(s))

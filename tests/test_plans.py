@@ -499,3 +499,46 @@ def test_star_components_reads_no_python_rdd(spark):
     assert sorted(map(tuple, labels.collect())) == [
         (1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5)
     ]
+
+
+def _analyzed_leaf(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_annotate_text_documents_frame_is_local_relation(spark, onto, monkeypatch):
+    """annotate_text's one-row documents frame reaches the JVM as
+    Arrow local rows, not a pickled Python RDD."""
+    from phenobert_spark import api
+
+    seen = []
+
+    def capture(spark_, docs, onto_, cfg):
+        seen.append(docs)
+        return annotate(spark_, docs, onto_, cfg)
+
+    monkeypatch.setattr(api, "annotate", capture)
+    api.annotate_text(spark, "Patient presents with severe headache.", onto)
+    assert [_analyzed_leaf(d) for d in seen] == ["LocalRelation"]
+
+
+def test_reference_loaders_are_local_relations(spark, tmp_path):
+    """load_reference_corpus / load_reference_gold build their frames
+    as Arrow local rows (checked over a fake reference root)."""
+    from phenobert_spark.corpus import load_reference_corpus, load_reference_gold
+
+    data = tmp_path / "phenobert" / "data" / "ID-68"
+    (data / "corpus").mkdir(parents=True)
+    (data / "ann").mkdir()
+    (data / "corpus" / "1.txt").write_text("Short stature.\n", encoding="utf-8")
+    (data / "ann" / "1.txt").write_text(
+        "0\t13\tShort stature\tHP:0004322\n", encoding="utf-8"
+    )
+    docs = load_reference_corpus(spark, "ID-68", root=str(tmp_path))
+    gold = load_reference_gold(spark, "ID-68", root=str(tmp_path))
+    assert _analyzed_leaf(docs) == _analyzed_leaf(gold) == "LocalRelation"
+    assert [tuple(r) for r in docs.collect()] == [
+        ("ID-68", "1.txt", "0" * 40, "en", "Short stature.\n")
+    ]
+    assert [tuple(r) for r in gold.collect()] == [
+        ("1.txt", 0, 13, "Short stature", "HP:0004322")
+    ]

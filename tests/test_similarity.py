@@ -380,39 +380,6 @@ def test_gram_matrix_matches_numpy(spark):
         assert abs(r.g - round(g[r.i, r.j], 4)) < 1e-9, (r.i, r.j)
 
 
-def test_pca_project_recovers_dominant_direction(spark):
-    import numpy as np
-
-    from phenobert_spark.operators.similarity import (
-        gram_matrix,
-        pca_components,
-        project_embeddings,
-    )
-
-    rng = np.random.default_rng(11)
-    # variance concentrated on axis 0: top component must align with it
-    x = np.concatenate(
-        [rng.normal(0, 10, size=(60, 1)), rng.normal(0, 0.1, size=(60, 3))],
-        axis=1,
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
-        "vec_id long, embedding array<float>",
-    )
-    w = pca_components(gram_matrix(df), n_rows=60, k=2)
-    assert w.shape == (4, 2)
-    # orthonormal columns
-    assert np.allclose(w.T @ w, np.eye(2), atol=1e-8)
-    assert abs(w[0, 0]) > 0.99  # dominant axis recovered
-    proj = project_embeddings(df, w).collect()
-    assert len(proj) == 60 and len(proj[0].projection) == 2
-    # projection matches driver-side matmul
-    by_id = {r.vec_id: np.array(r.projection) for r in proj}
-    expect = x.astype(np.float64) @ w
-    for i in range(60):
-        assert np.allclose(by_id[i], expect[i], atol=1e-9)
-
-
 def test_lsh_neardup_recall_floor(spark):
     """Serving-config evidence for the LSH dedup family (the q38/q32
     pairing, quantified): on a near-dup-rich corpus (one seeded noisy

@@ -1,6 +1,6 @@
 from pyspark.sql import functions as F
 
-from phenobert_spark.operators.skew import salted_count, salted_join
+from phenobert_spark.operators.skew import salted_join
 
 
 def _fact(spark):
@@ -52,13 +52,6 @@ def test_salted_join_spreads_hot_key(spark):
         f.filter(F.col("k") == 0).select("_salt").distinct().count()
     )
     assert buckets > 1
-
-
-def test_salted_count_matches_plain(spark):
-    fact = _fact(spark)
-    plain = {r.k: r["count"] for r in fact.groupBy("k").count().collect()}
-    salted = {r.k: r.n for r in salted_count(fact, "k", factor=8).collect()}
-    assert salted == plain
 
 
 def test_salted_join_rejects_bad_args(spark):

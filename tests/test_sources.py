@@ -37,26 +37,3 @@ def test_raw_text_dir_adapter(spark):
     assert got.count() == 68
     row = got.filter("path = '09DG00835'").collect()
     assert len(row) == 1 and len(row[0].content) > 100
-
-
-def test_read_jsonl_documents(spark, tmp_path):
-    import json
-
-    from phenobert_spark.sources.tables import read_jsonl_documents
-
-    p = tmp_path / "dump.jsonl"
-    rows = [
-        {"text": "hello world", "source": "crawl1", "lang": "en",
-         "path": "a/1"},
-        {"text": "bonjour", "source": "crawl2", "path": "a/2"},  # no lang
-        {"source": "crawl3", "path": "a/3"},                      # no text
-    ]
-    p.write_text("\n".join(json.dumps(r) for r in rows))
-    out = read_jsonl_documents(
-        spark, str(p), field_map={"content": "text", "repo": "source"}
-    )
-    got = {r.path: (r.repo, r.lang, r.content, r.commit) for r in out.collect()}
-    assert got["a/1"] == ("crawl1", "en", "hello world", "0" * 40)
-    assert got["a/2"][1] == "en"  # lang default
-    assert "a/3" not in got       # content-null row dropped
-    assert set(out.columns) == {"repo", "path", "commit", "lang", "content"}

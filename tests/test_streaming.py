@@ -1,17 +1,18 @@
 """Structured Streaming incremental ingestion (streaming/incremental)."""
 
-import os
-
 import pyspark.sql.functions as F
 
 from phenobert_spark.config import PipelineConfig
 from phenobert_spark.corpus import synthesize_corpus
 from phenobert_spark.pipeline import annotate
-from phenobert_spark.streaming.incremental import (
-    annotate_stream,
-    run_stream_to_completion,
-    windowed_event_rollup,
-)
+from phenobert_spark.streaming.incremental import annotate_stream
+
+
+def run_stream_to_completion(query, timeout_sec: int = 120) -> None:
+    """Drive an availableNow stream until it drains."""
+    query.awaitTermination(timeout_sec)
+    if query.isActive:
+        query.stop()
 
 
 def test_incremental_annotation_matches_batch(spark, onto, tmp_path):
@@ -52,79 +53,6 @@ def test_incremental_annotation_matches_batch(spark, onto, tmp_path):
     assert n_total == len(want)
 
 
-def test_windowed_rollup_streaming_matches_batch(spark, tmp_path):
-    """The watermarked streaming rollup equals the batch groupBy on a
-    bounded input (and the batch q24 oracle semantics)."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "ev")
-    events.write.parquet(in_dir)
-    stream = (
-        spark.readStream.schema(events.schema).parquet(in_dir)
-    )
-    rolled = windowed_event_rollup(stream)
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName("rollup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    run_stream_to_completion(q)
-    # append mode emits only windows finalized by the watermark; verify
-    # every emitted row matches the batch computation exactly
-    got = {
-        tuple(r) for r in spark.sql("select * from rollup_test").collect()
-    }
-    batch = (
-        events.groupBy(
-            F.unix_timestamp(F.date_trunc("hour", "ts")).alias("hour_start"),
-            "event_type",
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-    )
-    want = {tuple(r) for r in batch.collect()}
-    assert got <= want
-    assert len(got) > 0 or events.count() == 0
-
-
-def test_stateful_cross_batch_dedup(spark, onto, tmp_path):
-    """A document replayed in a later micro-batch is emitted once: the
-    dropDuplicates state store spans batches via the checkpoint."""
-    from phenobert_spark.corpus import DOCUMENTS_SCHEMA
-    from phenobert_spark.streaming.incremental import dedup_stream
-
-    docs, _ = synthesize_corpus(spark, onto, n_docs=6)
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    )
-    docs.limit(4).write.mode("append").parquet(in_dir)
-
-    def drain():
-        stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
-        q = (
-            dedup_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        run_stream_to_completion(q)
-
-    drain()
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == 4
-    # wave 2 REPLAYS two old docs + brings two new ones
-    docs.limit(2).write.mode("append").parquet(in_dir)       # replays
-    docs.subtract(docs.limit(4)).write.mode("append").parquet(in_dir)  # new
-    drain()
-    out = spark.read.parquet(out_dir)
-    assert out.count() == 6                       # replays suppressed
-    assert out.select("doc_id").distinct().count() == 6
-
-
 def test_replayed_batch_overwrites_not_appends(spark, onto, tmp_path):
     """Crash between the sink write and the offset commit => the batch
     is redelivered with the SAME batch_id. The partition-overwrite sink
@@ -160,305 +88,6 @@ def test_replayed_batch_overwrites_not_appends(spark, onto, tmp_path):
     assert replayed == first  # no duplicate rows from the replay
 
 
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """Stateful gap sessionization (applyInPandasWithState) emits the
-    SAME rows as the batch lag/running-sum twin (q34 logic): sessions
-    closed by an in-stream gap, sessions split across micro-batches,
-    and trailing sessions flushed by the event-time timeout."""
-    import datetime as dt
-
-    from pyspark.sql import Window
-
-    from phenobert_spark.streaming.incremental import (
-        run_stream_to_completion,
-        sessionize_stream,
-    )
-
-    def t(sec):
-        return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=sec)
-
-    # user 1: [0,600,1200] | gap | [5000,5600]; user 2: [100] | [9000];
-    # user 3 spans the wave boundary: [2900] + [3100] = ONE session
-    rows = [
-        (1, t(0)), (1, t(600)), (1, t(1200)), (1, t(5000)), (1, t(5600)),
-        (2, t(100)), (2, t(9000)),
-        (3, t(2900)), (3, t(3100)),
-    ]
-    wave1 = [r for r in rows if r[1] < t(3000)]
-    wave2 = [r for r in rows if r[1] >= t(3000)]
-    # far-future sentinel user advances the watermark past every real
-    # last_t + gap so trailing sessions flush; its own rows are dropped
-    # from the comparison
-    sentinel = [(99, t(100_000)), (99, t(100_001))]
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id bigint, ts timestamp"
-
-    def run_wave(batch_rows):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        out = sessionize_stream(stream, gap_s=1800, watermark="1 second")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        run_stream_to_completion(q)
-
-    for batch_rows in (wave1, wave2, sentinel):
-        run_wave(batch_rows)
-
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id != 99
-    }
-
-    # batch twin (q34 logic) over the real events
-    ev = spark.createDataFrame(rows, schema).select(
-        "user_id", F.unix_timestamp("ts").alias("t")
-    )
-    w = Window.partitionBy("user_id").orderBy("t")
-    marked = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("t").over(w).isNull() | ((F.col("t") - F.lag("t").over(w)) > 1800),
-            1,
-        ).otherwise(0),
-    )
-    sess = marked.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    want = {
-        tuple(r)
-        for r in sess.groupBy("user_id", "session_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.max("t") - F.min("t")).alias("duration_s"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_sessionize_stream_idle_ttl_evicts_and_renumbers(spark, tmp_path):
-    """idle_ttl_s bounds the state horizon: a flushed user's idle
-    marker is EVICTED once the watermark passes last_t + gap + ttl, so
-    a user returning after eviction restarts session numbering at 1 —
-    while a user returning while the marker is alive continues
-    numbering exactly like the batch running-sum."""
-    import collections
-    import datetime as dt
-
-    from phenobert_spark.streaming.incremental import (
-        run_stream_to_completion,
-        sessionize_stream,
-    )
-
-    def t(sec):
-        return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=sec)
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id bigint, ts timestamp"
-
-    def run_wave(batch_rows):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        out = sessionize_stream(
-            stream, gap_s=1800, watermark="1 second", idle_ttl_s=3600
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        run_stream_to_completion(q)
-
-    # u1: sess 1 (t=0), sess 2 (t=5000) -> both flushed, marker evicted
-    #     by wave 3's watermark, returns at t=50000 -> renumbered sess 1
-    # u2: sess 1 (t=4000) flushed; returns at t=21000 while its marker
-    #     is still alive -> numbering CONTINUES (sess 2)
-    run_wave([(1, t(0)), (1, t(5000)), (2, t(4000))])
-    run_wave([(97, t(20_000))])  # flush u1/u2 open sessions
-    run_wave([(2, t(21_000)), (96, t(40_000))])  # u1 marker evicts here
-    run_wave([(1, t(50_000)), (95, t(100_000))])  # u1 returns, post-TTL
-
-    got = collections.Counter(
-        (r.user_id, r.session_id, r.n_events, r.duration_s)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id in (1, 2)
-    )
-    want = collections.Counter(
-        [
-            (1, 1, 1, 0),  # first session
-            (1, 2, 1, 0),  # gap-split continuation
-            (1, 1, 1, 0),  # RETURN AFTER EVICTION: numbering restarted
-            (2, 1, 1, 0),
-            (2, 2, 1, 0),  # return within TTL: numbering continued
-        ]
-    )
-    assert got == want, got
-
-
-def test_sessionize_stream_late_event_folds_forward(spark, tmp_path):
-    """A late event (within the watermark, older than the state's
-    last_t) folds into the open session without moving last_t backward:
-    the session's event count grows, duration stays non-negative, and
-    the timeout horizon is monotone."""
-    import datetime as dt
-
-    from phenobert_spark.streaming.incremental import (
-        run_stream_to_completion,
-        sessionize_stream,
-    )
-
-    def t(sec):
-        return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=sec)
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id bigint, ts timestamp"
-
-    def run_wave(batch_rows):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        # generous watermark so the late event is NOT engine-dropped
-        out = sessionize_stream(stream, gap_s=1800, watermark="10 hours")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        run_stream_to_completion(q)
-
-    run_wave([(1, t(1000)), (1, t(1500))])      # open session, last_t=1500
-    run_wave([(1, t(1200))])                     # LATE: folds in, n -> 3
-    run_wave([(9, t(200_000)), (9, t(200_001))])  # sentinel: flush
-
-    got = [
-        (r.user_id, r.session_id, r.n_events, r.duration_s)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id == 1
-    ]
-    assert got == [(1, 1, 3, 500)], got  # start 1000, last 1500, 3 events
-
-
-def test_windowed_hll_stream_matches_batch_registers(spark, tmp_path):
-    """The streaming per-window HLL register table equals the batch
-    hll_registers grouped by the same window start — so stream-emitted
-    sketches merge/finalize exactly like batch ones (q120 kernel)."""
-    from phenobert_spark.operators.sketches import hll_registers
-    from phenobert_spark.streaming.incremental import windowed_hll_rollup
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    in_dir = str(tmp_path / "ev_hll")
-    events.write.parquet(in_dir)
-    stream = spark.readStream.schema(events.schema).parquet(in_dir)
-    q = (
-        windowed_hll_rollup(stream, p=7)
-        .writeStream.format("memory")
-        .queryName("hll_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_hll"))
-        .start()
-    )
-    run_stream_to_completion(q)
-    got = {
-        tuple(r)
-        for r in spark.sql("select * from hll_stream_test").collect()
-    }
-    batch = hll_registers(
-        events.withColumn(
-            "hour_start",
-            F.unix_timestamp(F.date_trunc("hour", F.col("ts").cast("timestamp"))),
-        ),
-        "user_id",
-        ["hour_start"],
-        p=7,
-    ).select("hour_start", "bucket", "rho")
-    want = {tuple(r) for r in batch.collect()}
-    # append mode only emits watermark-finalized windows
-    assert got <= want
-    assert len(got) > 0
-
-
-def test_windowed_countmin_stream_matches_batch_cells(spark, tmp_path):
-    """Streaming per-window count-min cells equal the batch
-    countmin_table grouped by the same window start (q128 kernel)."""
-    from phenobert_spark.operators.sketches import countmin_table
-    from phenobert_spark.streaming.incremental import windowed_countmin_rollup
-
-    all_events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # cap to the earliest few hours: the batch twin below runs one
-    # countmin_table per distinct hour, and 70 hours = 70 Spark jobs
-    lo = all_events.agg(F.min("ts")).first()[0]
-    import datetime as dt
-
-    events = all_events.filter(
-        F.col("ts") < F.lit(lo + dt.timedelta(hours=4))
-    )
-    in_dir = str(tmp_path / "ev_cms")
-    events.write.parquet(in_dir)
-    stream = spark.readStream.schema(events.schema).parquet(in_dir)
-    q = (
-        windowed_countmin_rollup(stream, depth=3, width_bits=8)
-        .writeStream.format("memory")
-        .queryName("cms_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_cms"))
-        .start()
-    )
-    run_stream_to_completion(q)
-    got = {
-        tuple(r)
-        for r in spark.sql("select * from cms_stream_test").collect()
-    }
-    hourly = events.withColumn(
-        "hour_start",
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts").cast("timestamp"))),
-    )
-    want = set()
-    for h in [r.hour_start for r in hourly.select("hour_start").distinct().collect()]:
-        cells = countmin_table(
-            hourly.filter(F.col("hour_start") == h),
-            "user_id",
-            depth=3,
-            width_bits=8,
-        ).collect()
-        want |= {(h, r.row, r.bucket, r.c) for r in cells}
-    assert got <= want  # append emits only watermark-finalized windows
-    assert len(got) > 0
-
-
 def test_kg_upsert_stream_matches_batch_replay(spark, tmp_path):
     """Two changelog micro-batches folded by kg_upsert_stream produce
     the same live-triple set as batch kg_time_travel over the full log
@@ -468,7 +97,6 @@ def test_kg_upsert_stream_matches_batch_replay(spark, tmp_path):
     from phenobert_spark.streaming.incremental import (
         kg_upsert_stream,
         latest_kg_snapshot,
-        run_stream_to_completion,
     )
 
     schema = "subj string, pred string, obj string, ts int, op string"

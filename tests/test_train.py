@@ -1,18 +1,31 @@
 """Trained linking models (linking/train.py): the supervision-fit
 analogs of the reference's Step-2 training loop
-(phenobert/utils/train.py:85-112, model.py:359-432) — including the A7
-training-accuracy counters."""
+(phenobert/utils/train.py:85-112) — the A7 training-accuracy
+counters."""
 
 import numpy as np
-import pytest
 
 from phenobert_spark.linking.train import (
-    AlignFeaturizer,
     LogisticModel,
+    fit_logistic_df,
     fit_logistic_numpy,
-    fit_logistic_spark,
-    mine_match_examples,
 )
+
+
+def fit_logistic_spark(spark, X, y, epochs, n_partitions):
+    """Train :func:`fit_logistic_df` on a driver array, sharded over
+    ``n_partitions``."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "pid": np.arange(len(X), dtype=np.int64),
+            "x": list(X.astype(np.float64)),
+            "y": y.astype(np.float64),
+        }
+    )
+    sdf = spark.createDataFrame(pdf).repartition(n_partitions, "pid")
+    return fit_logistic_df(sdf, n_features=X.shape[1], epochs=epochs)
 
 
 def _toy_data(n=400, d=6, flip=0.05):
@@ -58,30 +71,6 @@ def test_fit_deterministic(spark):
     b = fit_logistic_spark(spark, X, y, epochs=10, n_partitions=5)
     assert np.array_equal(a.w, b.w)
     assert a.counters == b.counters
-
-
-def test_mine_match_examples_fixture(onto):
-    ex = mine_match_examples(onto)
-    ys = {e[2] for e in ex}
-    assert ys <= {0, 1}
-    # positives are same-concept surface pairs; at least some of each
-    # class on the fixture ontology
-    assert any(e[2] == 1 for e in ex)
-    assert any(e[2] == 0 for e in ex)
-    # deterministic mining
-    assert ex == mine_match_examples(onto)
-
-
-def test_align_featurizer_orders_matches(onto):
-    feat = AlignFeaturizer(onto)
-    f_same = feat.features(("muscular", "hypotonia"), ("hypotonia",))
-    f_diff = feat.features(("muscular", "hypotonia"), ("cataract",))
-    # identical head token -> higher coverage features everywhere
-    assert f_same[2] > f_diff[2]
-    assert f_same[0] > f_diff[0]
-    # feature vector shape/stability
-    assert len(f_same) == AlignFeaturizer.N_FEATURES
-    assert np.array_equal(f_same, feat.features(("muscular", "hypotonia"), ("hypotonia",)))
 
 
 def test_logistic_model_proba_monotone():

@@ -1,6 +1,6 @@
 import pytest
 
-from phenobert_spark.operators.web import canonicalize_urls, host_rollup
+from phenobert_spark.operators.web import canonicalize_urls
 
 
 def _canon(spark, urls):
@@ -58,24 +58,6 @@ def test_canonicalize_malformed_and_single_label(spark):
     assert got["http://localhost:9000/x"] == (
         "http", "localhost", "localhost", "http://localhost:9000/x"
     )
-
-
-def test_host_rollup_counts(spark):
-    df = spark.createDataFrame(
-        [
-            ("http://www.a.example.com/x?utm_source=1",),
-            ("http://a.example.com/x",),  # same canonical page
-            ("http://b.example.com/y",),
-            ("http://other.org/z",),
-            ("garbage",),
-        ],
-        "url string",
-    )
-    rows = {
-        r.reg_domain: (r.n_rows, r.n_pages, r.n_hosts)
-        for r in host_rollup(canonicalize_urls(df)).collect()
-    }
-    assert rows == {"example.com": (3, 2, 2), "other.org": (1, 1, 1)}
 
 
 def _bcubed_ref(rows):

@@ -12,11 +12,18 @@ tree of every frame an action materializes while the query is built
 and collected (localCheckpoint, count, isEmpty, collect): the
 per-round plans of an iterative operator, which its final plan no
 longer shows.
+
+Run-specific tokens are masked so two dumps of unchanged code are
+byte-identical: expression ids print as ``#n``, exchange plan ids as
+``[plan_id=n]``, the workload's temporary directory as ``<work>`` and
+an ``Observation``'s random name as ``CollectMetrics <observation>``.
 """
 
 import contextlib
 import io
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -30,6 +37,17 @@ def _explain(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _mask(text: str) -> str:
+    for pattern, repl in [
+        (r"CollectMetrics [0-9a-f-]{36}", "CollectMetrics <observation>"),
+        (r"#\d+", "#n"),
+        (r"\[plan_id=\d+\]", "[plan_id=n]"),
+        (re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<work>"),
+    ]:
+        text = re.sub(pattern, repl, text)
+    return text
 
 
 def _work_tree(df) -> str:
@@ -87,8 +105,6 @@ def _perfbench_actions(spark, name: str) -> str:
     """Every action one call of a perfbench workload runs, over the
     1,000 seed-1 notes (kg_rank ranks the graph a build of them
     commits)."""
-    import tempfile
-
     from perfbench import inputs, workloads
     from phenobert_spark.ontology import get_ontology
 
@@ -180,7 +196,7 @@ def main():
             text = _explain(QUERIES[name](spark, sf_dir))
         path = f"{outdir}/{name}_{tag}.txt"
         with open(path, "w") as f:
-            f.write(text)
+            f.write(_mask(text))
         print("wrote", path)
     spark.stop()
 
