@@ -34,6 +34,13 @@ from .operators.candidates import CANDIDATES_SCHEMA
 from .pipeline import annotate, link_dictionary
 
 
+def _tsv_line(r) -> str:
+    """One triple in the reference output format (util.py:1196-1209):
+    ``start\\tend\\tmention\\tHP:id\\tscore[\\tNeg]``, score to 2 places."""
+    line = f"{r.start}\t{r.end}\t{r.mention}\t{r.hpo_id}\t{r.score:.2f}"
+    return line + "\tNeg" if r.negated else line
+
+
 def annotate_text(
     spark: SparkSession,
     text: str,
@@ -50,12 +57,7 @@ def annotate_text(
         .orderBy("start", "end", "hpo_id")
         .collect()
     )
-    out = []
-    for r in rows:
-        line = f"{r.start}\t{r.end}\t{r.mention}\t{r.hpo_id}\t{r.score:.2f}"
-        if r.negated:
-            line += "\tNeg"
-        out.append(line)
+    out = [_tsv_line(r) for r in rows]
     return "\n".join(out) + ("\n" if out else "")
 
 
@@ -108,10 +110,7 @@ def export_reference_tsv(
     rows = triples.orderBy("doc_id", "start", "end", "hpo_id").collect()
     by_doc: dict[str, list[str]] = {}
     for r in rows:
-        line = f"{r.start}\t{r.end}\t{r.mention}\t{r.hpo_id}\t{r.score:.2f}"
-        if r.negated:
-            line += "\tNeg"
-        by_doc.setdefault(r.doc_id, []).append(line)
+        by_doc.setdefault(r.doc_id, []).append(_tsv_line(r))
     for doc_id, lines in by_doc.items():
         with open(os.path.join(out_dir, f"{doc_id}.tsv"), "w", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")

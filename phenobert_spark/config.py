@@ -50,22 +50,17 @@ class PipelineConfig:
     # reference's p1/p2/p3 live in a different score space)
     model_p1: float = 0.0        # L1 routing cosine (0 = route everywhere)
     model_p2: float = 0.30       # concept centroid cosine floor (M3)
-    # M4 acceptance. Calibrated for the fuzzy_idf scorer (round 3,
-    # val-swept then held-out-verified: precision-safe on all four
-    # corpora at 0.9 — ID-68 +0.17 F1, val +0.05, GR 0.00, GSC+
-    # −0.07). The legacy "align" scorer's space calibrates to 0.75.
+    # M4 acceptance for the IDF-weighted coverage scorer
+    # (linking.models.pair_score_idf, validated offline in
+    # tools/model_lab.py). Calibrated round 3, val-swept then
+    # held-out-verified: precision-safe on all four corpora at 0.9 —
+    # ID-68 +0.17 F1, val +0.05, GR 0.00, GSC+ −0.07.
     model_p3: float = 0.9
     model_topk: int = 50         # concepts per routed phrase (W1, util.py:1142)
     # GCN-analog ancestor smoothing of concept centroids (M3): mix
     # weight of L1-parent centroids (util.py:540-575 semantics on the
     # rebuilt 2-level DAG); 0 disables. Calibrated on val.
     model_gcn_lambda: float = 0.4
-    # M4 scorer: "align" = min-coverage bidirectional alignment
-    # (pair_score), "fuzzy_idf" = IDF-weighted coverage with stem and
-    # mined-substitution bridges (pair_score_idf — the recall scorer
-    # validated offline in tools/model_lab.py). Thresholds live in a
-    # different space per scorer; calibrated on val.
-    model_scorer: str = "fuzzy_idf"
     # co-variation floor for the scorer's substitution bridges
     # (ConceptIndex.build subs_min_count). x3 was measured: val ~flat,
     # GeneReviews +0.5..0.9 F1 but ID-68 -0.6 / GSC+ -0.4 — net

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..ontology import Ontology
-from .models import ConceptIndex, HashedEncoder, pair_score, pair_score_idf
+from .models import ConceptIndex, HashedEncoder, pair_score_idf
 
 _WORKER_ENCODER: HashedEncoder | None = None
 
@@ -73,7 +73,6 @@ def model_link(
     bc = spark.sparkContext.broadcast(index)
     p1, p2, p3 = cfg.model_p1, cfg.model_p2, cfg.model_p3
     topk = cfg.model_topk
-    fuzzy = cfg.model_scorer == "fuzzy_idf"
     margin = cfg.model_margin
 
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -119,10 +118,7 @@ def model_link(
                 best_hpo, best_score, second = None, 0.0, 0.0
                 for ci in cand_idx:
                     cid = idx.concept_ids[ci]
-                    if fuzzy:
-                        s = pair_score_idf(enc, phrases[r], cid, idx)
-                    else:
-                        s = pair_score(enc, phrases[r], vecs[r], cid, idx)
+                    s = pair_score_idf(enc, phrases[r], cid, idx)
                     if s > best_score:
                         best_hpo, best_score, second = cid, s, best_score
                     elif s > second:

@@ -237,8 +237,8 @@ _ALIGN_CACHE: dict[int, dict[str, tuple]] = {}
 def _surface_align_data(
     enc: HashedEncoder, concept_id: str, index: ConceptIndex
 ) -> tuple:
-    """(tokens, lemmas, vec matrix, surface bounds, stems, idf) for a
-    concept's surface tokens, cached per worker."""
+    """(lemmas, vec matrix, surface bounds, stems, idf) for a concept's
+    surface tokens, cached per worker."""
     from ..functions.normalize import stem
 
     cache = _ALIGN_CACHE.setdefault(id(index), {})
@@ -260,7 +260,6 @@ def _surface_align_data(
     lems = [lemma(t) for t in toks]
     idf_map = index.token_idf or {}
     data = (
-        np.array(toks, dtype=object),
         np.array(lems, dtype=object),
         mat,
         bounds,
@@ -269,50 +268,6 @@ def _surface_align_data(
     )
     cache[concept_id] = data
     return data
-
-
-def pair_score(
-    enc: HashedEncoder,
-    phrase: str,
-    phrase_vec: np.ndarray,
-    concept_id: str,
-    index: ConceptIndex,
-) -> float:
-    """M4 analog: bidirectional fuzzy token alignment — the best surface
-    of the concept, scored as the WORST per-token best-match similarity
-    in both directions (every surface token must be witnessed by a
-    phrase token and vice versa). Spans that merely share a word score
-    low; morphological variants ("mutilating" ~ "mutilation") score
-    high. This is fuzzy dictionary containment, the high-precision
-    stand-in for the reference's trained match classifier.
-
-    Vectorized: the concept's surface tokens live in one cached
-    (n_tok, dim) matrix; a call is a single (n_tok, m) BLAS matmul plus
-    an exact/lemma equality override, then per-surface min/max over the
-    slice — no per-token Python loop."""
-    ptoks = phrase.split()
-    if not ptoks:
-        return 0.0
-    tokarr, lemarr, mat, bounds, _, _ = _surface_align_data(enc, concept_id, index)
-    if not bounds:
-        return 0.0
-    pvec = np.vstack([enc._token_vec(t) for t in ptoks])  # (m, dim)
-    sims = mat @ pvec.T  # (n_tok, m)
-    parr = np.array(ptoks, dtype=object)
-    plem = np.array([lemma(t) for t in ptoks], dtype=object)
-    eq = (tokarr[:, None] == parr[None, :]) | (lemarr[:, None] == plem[None, :])
-    np.copyto(sims, 1.0, where=eq)
-    best = 0.0
-    for a, b in bounds:
-        sub = sims[a:b]
-        cover_s = float(sub.max(axis=1).min())  # surface tokens witnessed
-        if cover_s <= best:
-            continue
-        cover_p = float(sub.max(axis=0).min())  # phrase tokens witnessed
-        score = min(cover_s, cover_p)
-        if score > best:
-            best = score
-    return best
 
 
 # Abnormality/direction-bearing tokens (lemma space): the semantic
@@ -390,15 +345,17 @@ def pair_score_idf(
     concept_id: str,
     index: ConceptIndex,
 ) -> float:
-    """IDF-weighted fuzzy alignment (the validated recall scorer from
-    tools/model_lab.py): like :func:`pair_score` but each side's
-    coverage is an IDF-WEIGHTED mean instead of a min — an unmatched
-    low-information modifier ("abnormally", "mild") costs little while
-    an unmatched head token costs a lot. Token equality extends to
-    stem equality and the mined substitution bridges (index.subs).
+    """M4 analog, IDF-weighted fuzzy alignment (the validated recall
+    scorer from tools/model_lab.py): the best surface of the concept,
+    scored by how well each side's tokens are witnessed by the other's
+    — each side's coverage is an IDF-WEIGHTED mean of per-token
+    best-match similarities, so an unmatched low-information modifier
+    ("abnormally", "mild") costs little while an unmatched head token
+    costs a lot. Token equality extends to stem equality and the mined
+    substitution bridges (index.subs).
 
     Offline on the val FN dump this ranks the gold concept first for
-    50/102 misses (vs ~0 recovered by the min-coverage form); the
+    50/102 misses (vs ~0 recovered by a min-coverage alignment); the
     acceptance threshold/margin are calibrated end-to-end on val
     (cfg.model_p3 / cfg.model_margin)."""
     from ..functions.normalize import stem
@@ -406,7 +363,7 @@ def pair_score_idf(
     ptoks = phrase.split()
     if not ptoks:
         return 0.0
-    tokarr, lemarr, mat, bounds, stemarr, idfarr = _surface_align_data(
+    lemarr, mat, bounds, stemarr, idfarr = _surface_align_data(
         enc, concept_id, index
     )
     if not bounds:

@@ -178,16 +178,14 @@ def run_with_checkpoint(
             # (dynamic overwrite only touches partitions present in the
             # output). Driver-side metadata op, O(batch).
             _delete_partitions(spark, triples_dir, batch)
-            prev_mode = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+            # the per-write option leaves every other write in the
+            # session on the session's own overwrite mode
+            (
+                triples.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(triples_dir)
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                triples.write.mode("overwrite").partitionBy("bucket").parquet(
-                    triples_dir
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
             n_triples = counts.get
         finally:
             part.unpersist()

@@ -142,16 +142,25 @@ def minhash_signatures(
     )
 
 
+def _bands_and_signatures(
+    signatures: DataFrame, bands: list[list[str]] | None
+) -> tuple[list[list[str]], DataFrame]:
+    """``bands``, by default the mh* signature columns split in two
+    halves (one band for a single column), and the signatures,
+    checkpointed so that the per-band branches do not re-derive them."""
+    if bands is None:
+        sig_cols = [c for c in signatures.columns if c.startswith("mh")]
+        half = max(len(sig_cols) // 2, 1)
+        bands = [sig_cols[:half], sig_cols[half:] or sig_cols[:half]]
+    return bands, signatures.localCheckpoint(eager=False)
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, bands: list[list[str]] | None = None
 ) -> DataFrame:
     """Band the signature columns and self-join on band hash ->
     (doc_a < doc_b) near-duplicate candidate pairs."""
-    sig_cols = [c for c in signatures.columns if c.startswith("mh")]
-    if bands is None:
-        half = max(len(sig_cols) // 2, 1)
-        bands = [sig_cols[:half], sig_cols[half:] or sig_cols[:half]]
-    sig = signatures.localCheckpoint(eager=False)  # don't re-derive per branch
+    bands, sig = _bands_and_signatures(signatures, bands)
     banded = None
     for cols in bands:
         b = sig.select("doc_id", F.md5(F.concat(*cols)).alias("band"))
@@ -198,13 +207,7 @@ def lsh_star_edges(
     its collision bound at ~10^10-doc scale instead of sharing one
     pool across every band.
     """
-    from pyspark.sql import Window
-
-    sig_cols = [c for c in signatures.columns if c.startswith("mh")]
-    if bands is None:
-        half = max(len(sig_cols) // 2, 1)
-        bands = [sig_cols[:half], sig_cols[half:] or sig_cols[:half]]
-    sig = signatures.localCheckpoint(eager=False)  # don't re-derive per branch
+    bands, sig = _bands_and_signatures(signatures, bands)
     banded = None
     for i, cols in enumerate(bands):
         b = sig.select(

@@ -19,7 +19,7 @@ post-join reductions are skew-free and combiner-friendly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._fixpoint import iterate
@@ -282,31 +282,71 @@ def pagerank(
         return nodes.select("node", F.lit(1.0 / n).alias("rank"))
 
     def step(rank, i):
-        w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
-            "_s", (F.col("rank") / F.col("_od")).alias("_w")
-        )
-        contrib = (
-            ep.join(w, on="_s")
-            .groupBy(F.col("_t").alias("node"))
-            .agg(F.sum("_w").alias("_in"))
-        )
-        return nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ).alias("rank"),
-        )
+        return _walk_step(rank, ep, deg, nodes, F.lit((1.0 - damping) / n), damping)
 
     return iterate(start, step, rounds=iters, invariants=(ep, deg, nodes))
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
+def _walk_step(
+    rank: DataFrame,
+    ep: DataFrame,
+    deg: DataFrame,
+    nodes: DataFrame,
+    teleport: Column,
+    damping: float,
 ) -> DataFrame:
-    """Per-node triangle counts + local clustering coefficient over an
-    undirected graph (self-loops and duplicate/reversed edges are
-    normalized away). Returns (node, degree, triangles, clustering).
+    """One random-walk round of :func:`pagerank` and
+    :func:`personalized_pagerank`: each node's rank is ``teleport``
+    plus ``damping`` times the rank mass its in-neighbors push along
+    their out-edges (a node with no in-edge keeps ``teleport`` alone).
+    ``ep`` is the source-partitioned (_s, _t) edge table, ``deg`` its
+    (_s, _od) out-degree and ``nodes`` the node universe, whose extra
+    columns (a seed flag) may feed ``teleport``."""
+    w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
+        "_s", (F.col("rank") / F.col("_od")).alias("_w")
+    )
+    contrib = (
+        ep.join(w, on="_s")
+        .groupBy(F.col("_t").alias("node"))
+        .agg(F.sum("_w").alias("_in"))
+    )
+    return nodes.join(contrib, on="node", how="left").select(
+        "node",
+        (teleport + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))).alias(
+            "rank"
+        ),
+    )
+
+
+def _undirected(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The undirected simple graph under a directed edge table:
+    self-loops dropped and every edge kept once as its canonical
+    (a, b) = (least, greatest) pair. Returns ``(und, sym, deg)``: the
+    canonical edges (eagerly checkpointed, because every caller reads
+    them more than once), the symmetric (a, b) list with both
+    orientations, and the per-node degree (node, degree)."""
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+        F.col("a") != F.col("b")
+    )
+    und = (
+        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
+    return und, sym, deg
+
+
+def _triangles(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Every triangle of the undirected graph exactly once, as (w, x, y)
+    with w the lowest vertex in (degree, id) order and x before y.
+    Returns ``(und, deg, tris)``; ``und`` and ``deg`` are the
+    :func:`_undirected` canonical edges and degrees.
 
     The scale-critical choice is DEGREE ORDERING (Cohen 2009 /
     Suri-Vassilvitskii "Counting Triangles and the Curse of the Last
@@ -317,22 +357,8 @@ def triangle_count(
     hub materializes d^2 candidate rows and one reducer eats the
     whole graph; with it the wedge count is bounded by sum of
     min-degree^2 over the orientation, the standard O(m^{3/2}) bound.
-
-    Plan: two equi-joins (wedge build + closure probe), both on node
-    keys; degree is one keyed count; everything map-side combinable.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("degree")
-    )
+    Two equi-joins (wedge build + closure probe), both on node keys."""
+    und, _, deg = _undirected(edges, src, dst)
     # orient every edge lower-(degree, id) -> higher-(degree, id)
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
@@ -362,6 +388,22 @@ def triangle_count(
         oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y")),
         on=["x", "y"],
     )
+    return und, deg, tris
+
+
+def triangle_count(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Per-node triangle counts + local clustering coefficient over an
+    undirected graph (self-loops and duplicate/reversed edges are
+    normalized away). Returns (node, degree, triangles, clustering).
+
+    Triangles come from the degree-ordered enumerator
+    :func:`_triangles` (no wedge fan-out at hubs, the O(m^{3/2})
+    bound); degree is one keyed count and the per-node tally is
+    map-side combinable.
+    """
+    _, deg, tris = _triangles(edges, src, dst)
     per_node = (
         tris.select(F.col("w").alias("node"))
         .unionByName(tris.select(F.col("x").alias("node")))
@@ -532,15 +574,14 @@ def personalized_pagerank(
     identical arithmetic; dangling mass is dropped, as in
     :func:`pagerank` (documented simplification).
 
-    Plan per iteration: identical shape to :func:`pagerank` (one
-    rank-onto-edges equi-join + one dst-keyed aggregate + a node-set
-    left join); the reset vector is a broadcast-joined flag column
-    computed once.
+    Plan per iteration: the walk step :func:`_walk_step` it shares
+    with :func:`pagerank` (one rank-onto-edges equi-join + one
+    dst-keyed aggregate + a node-set left join); the reset vector is a
+    broadcast-joined flag column computed once.
     """
-    # Same shape as :func:`pagerank`: one exchange of the edge table
-    # total (hash-partitioned on the source key, cached), degree
-    # aggregate exchange-free on top of it, degree attached to the
-    # rank side per round, node set from degree keys + distinct
+    # As in :func:`pagerank`: one exchange of the edge table total
+    # (hash-partitioned on the source key, cached), degree aggregate
+    # exchange-free on top of it, node set from degree keys + distinct
     # destinations.
     seed_nodes = seeds.select(
         F.col(seeds.columns[0]).alias("node")
@@ -576,21 +617,7 @@ def personalized_pagerank(
     ).otherwise(F.lit(0.0))
 
     def step(rank, i):
-        w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
-            "_s", (F.col("rank") / F.col("_od")).alias("_w")
-        )
-        contrib = (
-            ep.join(w, on="_s")
-            .groupBy(F.col("_t").alias("node"))
-            .agg(F.sum("_w").alias("_in"))
-        )
-        return nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * reset
-                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-            ).alias("rank"),
-        )
+        return _walk_step(rank, ep, deg, nodes, F.lit(1.0 - damping) * reset, damping)
 
     return iterate(
         nodes.select("node", reset.alias("rank")),
@@ -756,19 +783,8 @@ def link_prediction(
     neighbors are super-hubs — an explicit, documented recall trade.
     deg(z) >= 2 for every wedge center, so ln(deg) is never 0.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("_deg")
-    )
-    center = deg.withColumnRenamed("node", "z").withColumnRenamed("_deg", "_dz")
+    und, sym, deg = _undirected(edges, src, dst)
+    center = deg.withColumnRenamed("node", "z").withColumnRenamed("degree", "_dz")
     if max_center_degree is not None:
         center = center.filter(F.col("_dz") <= max_center_degree)
     n1 = sym.select(F.col("a").alias("z"), F.col("b").alias("x"))
@@ -794,8 +810,8 @@ def link_prediction(
         on=["node_a", "node_b"],
         how="anti",
     ).filter(F.col("common_neighbors") >= min_cn)
-    da = deg.select(F.col("node").alias("node_a"), F.col("_deg").alias("_da"))
-    db = deg.select(F.col("node").alias("node_b"), F.col("_deg").alias("_db"))
+    da = deg.select(F.col("node").alias("node_a"), F.col("degree").alias("_da"))
+    db = deg.select(F.col("node").alias("node_b"), F.col("degree").alias("_db"))
     return (
         pairs.join(da, on="node_a")
         .join(db, on="node_b")
@@ -894,21 +910,14 @@ def graph_summary(
     evaluate identical operands. Plan: one degree aggregate + one
     broadcast of the dim-sized degree table back onto edges + a
     single global aggregate — map-side combinable throughout.
+
+    A graph with no edge left once self-loops are dropped profiles as
+    n_nodes = n_edges = 0 with NULL avg_degree, max_degree and
+    assortativity.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("d")
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("d").alias("_da"))
-    db = deg.select(F.col("node").alias("b"), F.col("d").alias("_db"))
+    _, sym, deg = _undirected(edges, src, dst)
+    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
+    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
     joined = sym.join(da, on="a").join(db, on="b")
     stats = joined.agg(
         F.count("*").alias("_n"),  # = 2 * n_edges
@@ -919,7 +928,7 @@ def graph_summary(
     counts = F.broadcast(
         deg.agg(
             F.count("*").cast("bigint").alias("n_nodes"),
-            F.max("d").cast("bigint").alias("max_degree"),
+            F.max("degree").cast("bigint").alias("max_degree"),
         )
     )
     num = (
@@ -934,9 +943,10 @@ def graph_summary(
         "n_nodes",
         (F.col("_n") / F.lit(2)).cast("bigint").alias("n_edges"),
         # mean degree = 2E/N = |sym| / N  (_sx is Σdeg², used by r only)
-        (F.col("_n").cast("double") / F.col("n_nodes").cast("double")).alias(
-            "avg_degree"
-        ),
+        F.when(
+            F.col("n_nodes") > 0,
+            F.col("_n").cast("double") / F.col("n_nodes").cast("double"),
+        ).alias("avg_degree"),
         "max_degree",
         F.when(den != 0, num / den).alias("assortativity"),
     )
@@ -1195,6 +1205,27 @@ def harmonic_centrality(hb: DataFrame) -> DataFrame:
     )
 
 
+def _string_edges(
+    edges: DataFrame, src: str, dst: str, caller: str
+) -> tuple[DataFrame, int]:
+    """Canonical undirected string edges (u, v) with u < v, self-loops
+    dropped and duplicates removed, and their count m. Raises
+    ``ValueError`` naming ``caller`` when no edge is left: modularity
+    divides by m."""
+    e = (
+        edges.select(
+            F.least(F.col(src).cast("string"), F.col(dst).cast("string")).alias("u"),
+            F.greatest(F.col(src).cast("string"), F.col(dst).cast("string")).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    m = e.count()
+    if m == 0:
+        raise ValueError(f"{caller} needs at least one edge")
+    return e, m
+
+
 def modularity(
     edges: DataFrame,
     communities: DataFrame,
@@ -1225,21 +1256,11 @@ def modularity(
     Returns (community, within_edges, degree_sum, contribution)
     with contribution rounded to 6 decimals.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src).cast("string"), F.col(dst).cast("string")).alias("u"),
-            F.greatest(F.col(src).cast("string"), F.col(dst).cast("string")).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e, m = _string_edges(edges, src, dst, "modularity")
     com = communities.select(
         F.col(node_col).cast("string").alias("node"),
         F.col(community_col).cast("string").alias("community"),
     )
-    m = e.count()
-    if m == 0:
-        raise ValueError("modularity needs at least one edge")
     labeled = (
         e.join(com.select(F.col("node").alias("u"), F.col("community").alias("cu")), "u")
         .join(com.select(F.col("node").alias("v"), F.col("community").alias("cv")), "v")
@@ -1308,17 +1329,7 @@ def refine_communities(
     rounded to 9 decimals (the argmax ranks on the rounded value, so
     the choice is reproducible across engines and platforms).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src).cast("string"), F.col(dst).cast("string")).alias("u"),
-            F.greatest(F.col(src).cast("string"), F.col(dst).cast("string")).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    m = e.count()
-    if m == 0:
-        raise ValueError("refine_communities needs at least one edge")
+    e, m = _string_edges(edges, src, dst, "refine_communities")
     com = communities.select(
         F.col(node_col).cast("string").alias("node"),
         F.col(community_col).cast("string").alias("community"),
@@ -1386,11 +1397,8 @@ def edge_triangle_support(
     contain it — the quantity k-truss peeling and cohesive-subgraph
     mining consume (an edge in a k-truss needs support >= k-2).
 
-    Same degree-orientation discipline as :func:`triangle_count`
-    (Suri-Vassilvitskii): every triangle is enumerated exactly once at
-    its lowest-(degree, id) vertex, so hub nodes produce no wedge
-    fan-out and the wedge volume keeps the O(m^{3/2}) bound. Each
-    found triangle is then exploded into its three edges in CANONICAL
+    Each triangle, found once by the degree-ordered enumerator
+    :func:`_triangles`, is exploded into its three edges in CANONICAL
     (min-id, max-id) form — note the canonical key deliberately
     differs from the (degree, id) orientation used for enumeration —
     and the support is one map-side-combinable count, left-joined back
@@ -1398,41 +1406,7 @@ def edge_triangle_support(
 
     Returns (u, v, support) with u < v, sorted.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    und = (
-        e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
-    ranked = und.join(da, on="a").join(db, on="b")
-    fwd = F.struct(F.col("_da"), F.col("a")) < F.struct(F.col("_db"), F.col("b"))
-    oriented = ranked.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).localCheckpoint(eager=True)
-    o1 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("x"))
-    o2 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("y"))
-    dx = deg.select(F.col("node").alias("x"), F.col("degree").alias("_dx"))
-    dy = deg.select(F.col("node").alias("y"), F.col("degree").alias("_dy"))
-    wedges = (
-        o1.join(o2, on="w")
-        .join(dx, on="x")
-        .join(dy, on="y")
-        .filter(
-            F.struct(F.col("_dx"), F.col("x")) < F.struct(F.col("_dy"), F.col("y"))
-        )
-        .select("w", "x", "y")
-    )
-    tris = wedges.join(
-        oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y")),
-        on=["x", "y"],
-    )
+    und, deg, tris = _triangles(edges, src, dst)
     tri_edges = (
         tris.select(F.col("w").alias("p"), F.col("x").alias("q"))
         .unionByName(tris.select(F.col("w").alias("p"), F.col("y").alias("q")))

@@ -237,6 +237,22 @@ def histogram_quantiles(
     )
 
 
+def _countmin_bucket(key_col: str, row: int, width_bits: int) -> Column:
+    """Bucket of ``key_col`` in count-min row ``row``: the first 8 hex
+    digits of md5('cm<row>:' || key) mod 2^width_bits. The table and
+    its probes must hash identically, so both read this one
+    definition."""
+    return F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit(f"cm{row}:"), F.col(key_col).cast("string"))),
+            1,
+            8,
+        ),
+        16,
+        10,
+    ).cast("bigint") % F.lit(1 << width_bits)
+
+
 def countmin_table(
     df: DataFrame,
     key_col: str,
@@ -258,25 +274,8 @@ def countmin_table(
     """
     if depth < 1 or width_bits < 1:
         raise ValueError("depth and width_bits must be >= 1")
-    w = 1 << width_bits
     rows = []
     for r in range(depth):
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"cm{r}:"), F.col(key_col).cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % F.lit(w)
-        )
         weight = (
             F.col(weight_col).cast("bigint")
             if weight_col
@@ -285,7 +284,7 @@ def countmin_table(
         rows.append(
             df.select(
                 F.lit(r).alias("row"),
-                bucket.alias("bucket"),
+                _countmin_bucket(key_col, r, width_bits).alias("bucket"),
                 weight.alias("_w"),
             )
         )
@@ -312,29 +311,12 @@ def countmin_estimate(
     the cell table, min-reduce per key. The cell table is
     dim-table-sized (depth * width rows) — broadcast territory — so
     the probe side never shuffles at all."""
-    w = 1 << width_bits
     lookups = None
     for r in range(depth):
-        bucket = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"cm{r}:"), F.col(key_col).cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % F.lit(w)
-        )
         p = probes.select(
             F.col(key_col).alias("key"),
             F.lit(r).alias("row"),
-            bucket.alias("bucket"),
+            _countmin_bucket(key_col, r, width_bits).alias("bucket"),
         )
         lookups = p if lookups is None else lookups.unionByName(p)
     return (

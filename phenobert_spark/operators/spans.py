@@ -72,6 +72,16 @@ def keep_maximal_spans(
     )
 
 
+def _probe_anchor_union(
+    probe: DataFrame, anchors: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Probe rows flagged ``_anchor`` 0 and the anchors' (keys, start,
+    end) rows flagged ``_anchor`` 1, in one frame for one window pass."""
+    p = probe.withColumn("_anchor", F.lit(0))
+    a = anchors.select(*keys, "start", "end").withColumn("_anchor", F.lit(1))
+    return p.unionByName(a, allowMissingColumns=True)
+
+
 def suppress_contained_in(
     probe: DataFrame, anchors: DataFrame, keys: list[str] | None = None
 ) -> DataFrame:
@@ -83,9 +93,7 @@ def suppress_contained_in(
     equal probes via a flag, and only anchor ends feed the running max.
     """
     keys = keys or ["doc_id"]
-    p = probe.withColumn("_anchor", F.lit(0))
-    a = anchors.select(*keys, "start", "end").withColumn("_anchor", F.lit(1))
-    both = p.unionByName(a, allowMissingColumns=True)
+    both = _probe_anchor_union(probe, anchors, keys)
     w = (
         Window.partitionBy(*keys)
         .orderBy(F.col("start").asc(), F.col("end").desc(), F.col("_anchor").desc())
@@ -114,9 +122,7 @@ def suppress_containing(
     a range frame over rows starting at or after the probe, and the
     MIN anchor end in that frame decides containment."""
     keys = keys or ["doc_id"]
-    p = probe.withColumn("_anchor", F.lit(0))
-    a = anchors.select(*keys, "start", "end").withColumn("_anchor", F.lit(1))
-    both = p.unionByName(a, allowMissingColumns=True)
+    both = _probe_anchor_union(probe, anchors, keys)
     w = (
         Window.partitionBy(*keys)
         .orderBy(F.col("start").asc())

@@ -571,6 +571,19 @@ def test_graph_summary_regular_graph_null_assortativity(spark):
     assert r.assortativity is None
 
 
+@pytest.mark.parametrize("rows", [[], [("a", "a")]], ids=["empty", "self_loop_only"])
+def test_graph_summary_no_edges(spark, rows):
+    """No edge survives self-loop removal: a one-row profile with zero
+    counts and NULL degree statistics, not a DIVIDE_BY_ZERO under ANSI
+    mode."""
+    from phenobert_spark.operators.kg_metrics import graph_summary
+
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    [r] = graph_summary(edges).collect()
+    assert (r.n_nodes, r.n_edges) == (0, 0)
+    assert (r.avg_degree, r.max_degree, r.assortativity) == (None, None, None)
+
+
 def test_ranking_metrics_hand_computed(spark):
     """q1: positive ranks 2 of 3; q2: positive ranks 1; q3 has no
     positive -> dropped. MRR = (1/2 + 1)/2 = 0.75."""

@@ -1,16 +1,10 @@
 """Model-analog linking stages (M1-M4, linking/)."""
 
 import numpy as np
-import pytest
 
 from phenobert_spark.config import PipelineConfig
 from phenobert_spark.corpus import DOCUMENTS_SCHEMA
-from phenobert_spark.linking.models import (
-    ConceptIndex,
-    HashedEncoder,
-    RelaxedVocab,
-    pair_score,
-)
+from phenobert_spark.linking.models import HashedEncoder, RelaxedVocab
 from phenobert_spark.pipeline import annotate
 
 
@@ -31,19 +25,6 @@ def test_encoder_similarity_ordering():
     c = enc.encode(["cardiomyopathy"])[0]
     assert float(a @ b) > 0.5
     assert float(a @ b) > float(a @ c)
-
-
-def test_pair_score_bidirectional(onto):
-    idx = ConceptIndex.build(onto)
-    enc = HashedEncoder(idx.dim)
-    vec = enc.encode(["seizure"])[0]
-    # exact surface -> 1.0
-    assert pair_score(enc, "seizure", vec, "HP:0001250", idx) == pytest.approx(1.0)
-    # morphological variant scores high; unrelated concept scores low
-    v2 = enc.encode(["seizures severe"])[0]
-    hi = pair_score(enc, "epileptic seizures", v2, "HP:0001250", idx)
-    lo = pair_score(enc, "epileptic seizures", v2, "HP:0001156", idx)
-    assert hi > 0.7 > lo
 
 
 def test_relaxed_vocab(onto):

@@ -2,10 +2,11 @@
 kg_pagerank bench composition) to <outdir>/<name>_<tag>.txt.
 
 Usage: python tools/dump_plans.py <outdir> <tag> [--actions] <query> [query ...]
-  (query "kg_pagerank" dumps the bench's pagerank composition; queries
-  "build_dense" and "kg_rank" record every action of that perfbench
-  workload's call on seed 1, writes included — kg_rank's file starts
-  with the formatted plan of its edge frame)
+  (query "kg_pagerank" records every action of bench.py's composition,
+  ``pagerank(kg_edges, iters=3).count()``; queries "build_dense" and
+  "kg_rank" record every action of that perfbench workload's call on
+  seed 1, writes included — kg_rank's file starts with the formatted
+  plan of its edge frame)
 
 --actions instead records, in execution order, the physical operator
 tree of every frame an action materializes while the query is built
@@ -101,6 +102,17 @@ def _recording_actions(spark, out: list):
             setattr(cls, meth, orig)
 
 
+def _actions(spark, run) -> str:
+    """Every action ``run()`` executes, numbered, with its plan."""
+    steps = []
+    with _recording_actions(spark, steps):
+        run()
+    return "".join(
+        f"==== action {i}: {meth} ====\n{plan}\n"
+        for i, (meth, plan) in enumerate(steps, 1)
+    )
+
+
 def _perfbench_actions(spark, name: str) -> str:
     """Every action one call of a perfbench workload runs, over the
     1,000 seed-1 notes (kg_rank ranks the graph a build of them
@@ -109,23 +121,22 @@ def _perfbench_actions(spark, name: str) -> str:
     from phenobert_spark.ontology import get_ontology
 
     onto = get_ontology()
-    steps, text = [], ""
     with tempfile.TemporaryDirectory() as work:
         rows, _ = inputs.dense_corpus(onto, workloads.N_DOCS, 1)
         workloads.write_docs(rows, f"{work}/docs", 4)
         if name == "build_dense":
-            with _recording_actions(spark, steps):
-                workloads.build(spark, onto, f"{work}/docs", f"{work}/out")
-        else:
-            workloads.build(spark, onto, f"{work}/docs", f"{work}/out")
-            edges = workloads.kg_edges(spark, onto, f"{work}/out")
-            text = "==== edge frame ====\n" + _explain(edges) + "\n"
-            with _recording_actions(spark, steps):
-                workloads.rank_pagerank(edges, f"{work}/rank")
-    return text + "".join(
-        f"==== action {i}: {meth} ====\n{plan}\n"
-        for i, (meth, plan) in enumerate(steps, 1)
-    )
+            return _actions(
+                spark,
+                lambda: workloads.build(spark, onto, f"{work}/docs", f"{work}/out"),
+            )
+        workloads.build(spark, onto, f"{work}/docs", f"{work}/out")
+        edges = workloads.kg_edges(spark, onto, f"{work}/out")
+        return (
+            "==== edge frame ====\n"
+            + _explain(edges)
+            + "\n"
+            + _actions(spark, lambda: workloads.rank_pagerank(edges, f"{work}/rank"))
+        )
 
 
 def main():
@@ -140,58 +151,18 @@ def main():
 
     for name in names:
         if name == "kg_pagerank":
-            # the operator returns an eagerly-checkpointed RDD (whose
-            # explain is a bare RDD scan), so mirror ONE loop-body
-            # update of operators/kg_metrics.pagerank here to expose
-            # the per-iteration plan the operator repeats
+            from phenobert_spark.operators.kg_metrics import pagerank
+
             li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
             edges = li.select(
                 F.concat(F.lit("O"), F.col("l_orderkey")).alias("src"),
                 F.concat(F.lit("S"), F.col("l_suppkey")).alias("dst"),
             ).distinct()
-            ep = (
-                edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t"))
-                .repartition("_s")
-                .persist()
-            )
-            deg = ep.groupBy("_s").agg(
-                F.count("*").cast("double").alias("_od")
-            ).persist()
-            nodes = (
-                deg.select(F.col("_s").alias("node"))
-                .unionByName(ep.select(F.col("_t").alias("node")).distinct())
-                .distinct()
-                .persist()
-            )
-            n = float(nodes.count())
-            rank = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-            w = deg.join(rank.withColumnRenamed("node", "_s"), on="_s").select(
-                "_s", (F.col("rank") / F.col("_od")).alias("_w")
-            )
-            contrib = (
-                ep.join(w, on="_s")
-                .groupBy(F.col("_t").alias("node"))
-                .agg(F.sum("_w").alias("_in"))
-            )
-            df = nodes.join(contrib, on="node", how="left").select(
-                "node",
-                (
-                    F.lit(0.15 / n)
-                    + F.lit(0.85) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            text = _explain(df)
+            text = _actions(spark, lambda: pagerank(edges, iters=3).count())
         elif name in ("build_dense", "kg_rank"):
             text = _perfbench_actions(spark, name)
         elif actions:
-            steps = []
-            with _recording_actions(spark, steps):
-                df = QUERIES[name](spark, sf_dir)
-                df.collect()
-            text = "".join(
-                f"==== action {i}: {meth} ====\n{plan}\n"
-                for i, (meth, plan) in enumerate(steps, 1)
-            )
+            text = _actions(spark, lambda: QUERIES[name](spark, sf_dir).collect())
         else:
             text = _explain(QUERIES[name](spark, sf_dir))
         path = f"{outdir}/{name}_{tag}.txt"

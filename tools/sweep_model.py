@@ -33,7 +33,6 @@ def main():
             datasets = sys.argv[i + 1].split(",")
 
     grid = {
-        "model_scorer": ["fuzzy_idf"],
         "model_p2": [0.30],
         "model_topk": [50],
         "model_p3": [0.65, 0.70, 0.75, 0.80],
