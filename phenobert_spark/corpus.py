@@ -76,6 +76,13 @@ def with_doc_id(docs: DataFrame) -> DataFrame:
     return docs.withColumn("doc_id", F.sha2(F.col("content"), 256))
 
 
+def bucket_of(col: F.Column, n_buckets: int) -> F.Column:
+    """The checkpoint bucket of a doc_id: the materializer's unit of
+    resume and partitioned write. Every manifest on disk is keyed by
+    this hash, so it never changes."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
 CHUNK_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),

@@ -35,13 +35,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig, local_frame
-from .corpus import with_doc_id
+from .corpus import bucket_of, with_doc_id
 from .ontology import Ontology
 from .pipeline import annotate
-
-
-def bucket_of(col: F.Column, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def _doc_xor(doc_id_col: str = "doc_id") -> F.Column:
@@ -128,6 +124,13 @@ def run_with_checkpoint(
       after the triples job commits. A crash between the two leaves
       buckets without manifest rows -> they are reprocessed and their
       partitions overwritten; never double-counted.
+    * **One task and one file per bucket**: ``annotate`` clusters the
+      span windows on the bucket (``n_buckets``), so one explicit-count
+      exchange, which AQE never coalesces, and one sort serve both
+      windows and the ``partitionBy("bucket")`` writer. Each bucket
+      lands in exactly one write task, never as one small file per
+      (shuffle task, bucket): 51,200 files for 256 buckets over 200
+      shuffle partitions.
     * **Manifest from one aggregation** of the persisted input plus
       per-bucket triple counts observed (``DataFrame.observe``) on the
       triples write itself — the output is never read back. The counts
@@ -166,8 +169,7 @@ def run_with_checkpoint(
             # input: a re-applied map-stage update would cancel an XOR.
             counts = Observation()
             triples = (
-                annotate(spark, part.drop("bucket"), onto, cfg)
-                .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+                annotate(spark, part.drop("bucket"), onto, cfg, n_buckets=n_buckets)
                 .observe(
                     counts,
                     *[F.count_if(F.col("bucket") == b).alias(f"b{b}") for b in batch],

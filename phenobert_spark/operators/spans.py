@@ -40,6 +40,29 @@ def _prev_max_end(partition_cols: list[str]) -> "F.Column":
     return F.max("end").over(w)
 
 
+def drop_same_extent(
+    df: DataFrame, keys: list[str], tiebreak: tuple["F.Column", ...] = ()
+) -> DataFrame:
+    """Keep one row per (keys, start, end): the first in
+    (start ASC, end DESC, *tiebreak) order. That order extends the
+    maximal-span window's, so duplicates sit adjacent (a lag() finds
+    them without a second exchange on the extent) and one sort serves
+    this window and :func:`keep_maximal_spans` on the same ``keys``."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("start").asc(), F.col("end").desc(), *tiebreak
+    )
+    return (
+        df.withColumn("_ps", F.lag("start").over(w))
+        .withColumn("_pe", F.lag("end").over(w))
+        .filter(
+            F.col("_ps").isNull()
+            | (F.col("_ps") != F.col("start"))
+            | (F.col("_pe") != F.col("end"))
+        )
+        .drop("_ps", "_pe")
+    )
+
+
 def keep_maximal_spans(
     df: DataFrame, keys: list[str] | None = None, gappy_col: str | None = None
 ) -> DataFrame:

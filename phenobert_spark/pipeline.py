@@ -12,20 +12,26 @@ Physical plan (two shuffles total on the hot path, SURVEY.md §4):
       -> (optional model stages, pandas UDFs)         [narrow]
       -> window dedup + maximal spans (J4)            [shuffle 2: doc_id]
       -> triples
+
+Under the materializer (``annotate(..., n_buckets=n)``) shuffle 2 is
+keyed on the checkpoint bucket instead: the windows partition by
+(bucket, doc_id), and one sort serves both windows and the
+partitioned writer, so each bucket is written by one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .canonicalize import canonicalize_ids
 from .config import PipelineConfig, local_frame
-from .corpus import chunked, with_doc_id
+from .corpus import bucket_of, chunked, with_doc_id
 from .ontology import Ontology
 from .operators.candidates import generate_candidates
 from .operators.dict_link import dictionary_link, drop_one_link
 from .operators.spans import (
+    drop_same_extent,
     keep_maximal_spans,
     suppress_contained_in,
     suppress_containing,
@@ -94,6 +100,8 @@ def annotate(
     docs: DataFrame,
     onto: Ontology,
     cfg: PipelineConfig = PipelineConfig(),
+    *,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """documents(repo, path, commit, lang, content) -> triples DF.
 
@@ -101,13 +109,17 @@ def annotate(
     generation; nothing downstream carries document bodies (critical for
     the 100 TB scan — SURVEY.md §4 'never carry content past candidate
     generation').
+
+    ``n_buckets`` (the materializer's checkpoint bucketing) adds a
+    ``bucket`` column and clusters the span windows on it, so the
+    triples arrive partitioned and sorted for a ``partitionBy("bucket")``
+    write.
     """
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = with_doc_id(docs)
     chunks = chunked(docs.select("doc_id", "content"), cfg.chunk_target_bytes)
     # an explicit count: without one, AQE may coalesce the salted exchange
-    chunks = chunks.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id", "chunk_id"
-    )
+    chunks = chunks.repartition(shuffle_partitions, "doc_id", "chunk_id")
 
     # Exact candidate pruning: k-mers with out-of-vocabulary tokens are
     # provable dictionary misses (~20-50x fewer candidate rows). The
@@ -164,33 +176,31 @@ def annotate(
         if model_matched is not None:
             matched = matched.unionByName(model_matched.select(*matched.columns))
 
+    # Both span windows share one exchange and one sort. Under the
+    # materializer that exchange is keyed on the bucket, with an explicit
+    # count so AQE cannot coalesce it: then it also satisfies the
+    # partitioned writer's clustering and ordering.
+    keys = ["doc_id"]
+    if n_buckets is not None:
+        matched = matched.withColumn(
+            "bucket", bucket_of(F.col("doc_id"), n_buckets)
+        ).repartition(shuffle_partitions, "bucket")
+        keys = ["bucket", "doc_id"]
     # Deduplicate identical char spans (full phrase vs A+B recovery over
     # the same extent): reference keeps the variant with more tokens
     # (use_longest measures word count, util.py:1180-1185).
-    # Partition by doc_id only — the same partitioning the maximal-span
-    # window needs — so the two windows share ONE exchange (the
-    # (doc,start,end) grouping is resolved by sort order + lag instead
-    # of a second shuffle).
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("start").asc(),
-        F.col("end").asc(),
-        F.col("score").desc(),
-        F.col("n_tokens").desc(),
-        F.col("hpo_id").asc(),
-    )
-    matched = (
-        matched.withColumn("_ps", F.lag("start").over(w))
-        .withColumn("_pe", F.lag("end").over(w))
-        .filter(
-            F.col("_ps").isNull()
-            | (F.col("_ps") != F.col("start"))
-            | (F.col("_pe") != F.col("end"))
-        )
-        .drop("_ps", "_pe")
+    matched = drop_same_extent(
+        matched,
+        keys,
+        tiebreak=(
+            F.col("score").desc(),
+            F.col("n_tokens").desc(),
+            F.col("hpo_id").asc(),
+        ),
     )
 
     final = (
-        keep_maximal_spans(matched, gappy_col="gappy")
+        keep_maximal_spans(matched, keys=keys, gappy_col="gappy")
         if cfg.use_longest
         else matched
     )
@@ -203,5 +213,6 @@ def annotate(
         "mention",
         "score",
         "negated",
+        *(["bucket"] if n_buckets is not None else []),
     )
     return canonicalize_ids(triples, spark, onto)

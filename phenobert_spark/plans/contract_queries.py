@@ -197,28 +197,15 @@ def q04(spark, sf_dir):
     This is the exact operator the annotation pipeline uses for span
     dedup (operators/spans.keep_maximal_spans).
 
-    Round-6 (guide §2.4): the exact-duplicate drop runs as a lag()
-    window over the SAME (user_id; start asc, end desc) spec the
-    maximal-span window uses — duplicates are adjacent in that order,
-    so one exchange + one sort serve both windows, where the previous
-    ``distinct()`` paid a second full exchange on (user, start, end).
-    Same rows out (the pipeline dedups spans the same way)."""
-    from ..operators.spans import keep_maximal_spans
+    The exact-duplicate drop is the pipeline's own
+    ``spans.drop_same_extent``: a lag() window over the SAME
+    (user_id; start asc, end desc) spec the maximal-span window uses —
+    duplicates are adjacent in that order, so one exchange + one sort
+    serve both windows, where a ``distinct()`` would pay a second full
+    exchange on (user, start, end)."""
+    from ..operators.spans import drop_same_extent, keep_maximal_spans
 
-    iv = _event_intervals(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("start").asc(), F.col("end").desc()
-    )
-    dedup = (
-        iv.withColumn("_ps", F.lag("start").over(w))
-        .withColumn("_pe", F.lag("end").over(w))
-        .filter(
-            F.col("_ps").isNull()
-            | (F.col("_ps") != F.col("start"))
-            | (F.col("_pe") != F.col("end"))
-        )
-        .drop("_ps", "_pe")
-    )
+    dedup = drop_same_extent(_event_intervals(spark, sf_dir), ["user_id"])
     return keep_maximal_spans(dedup, keys=["user_id"]).orderBy(
         "user_id", "start", "end"
     )

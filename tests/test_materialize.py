@@ -165,6 +165,29 @@ def test_single_input_scan_regardless_of_buckets(spark, onto, tmp_path):
     assert acc.value == 12
 
 
+def test_one_file_per_bucket(spark, onto, corpus, tmp_path):
+    """Each bucket is written by exactly one task, with more shuffle
+    partitions than buckets and AQE coalescing off (as at scale, where
+    nothing coalesces), instead of one file per (task, bucket)."""
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        run_with_checkpoint(spark, corpus, onto, str(tmp_path / "g"), n_buckets=4)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    buckets = sorted((tmp_path / "g" / "triples").glob("bucket=*"))
+    assert buckets
+    assert {b.name: len(list(b.glob("*.parquet"))) for b in buckets} == {
+        b.name: 1 for b in buckets
+    }
+
+
 def test_partial_write_without_manifest_is_replaced(spark, onto, corpus, tmp_path):
     """Crash AFTER the triples write but BEFORE the manifest commit:
     resume must overwrite the orphaned partitions, never append

@@ -1,6 +1,8 @@
 """Physical-plan regression tests: the plan properties the engine is
 designed around must not silently rot (SURVEY.md §4)."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from phenobert_spark.config import PipelineConfig
@@ -16,16 +18,73 @@ def _formatted_plan(spark, df) -> str:
 
 def test_annotate_plan_shape(spark, onto):
     """All dictionary joins broadcast; no sort-merge join; exactly two
-    data shuffles (salt repartition + the shared doc_id window)."""
+    data shuffles (salt repartition + the shared doc_id window) and one
+    sort serving both span windows."""
     docs, _ = synthesize_corpus(spark, onto, n_docs=5)
     plan = _formatted_plan(spark, annotate(spark, docs, onto, PipelineConfig()))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4  # 3 dict tiers + alt-id
     # data exchanges (detail headers "(N) Exchange"), excluding broadcasts
-    import re
-
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange$", plan, re.MULTILINE))
     assert n_exchanges <= 2, plan
+    assert len(re.findall(r"^\(\d+\) Sort$", plan, re.MULTILINE)) == 1, plan
+
+
+def _final_plan_tree(desc: str) -> dict[int, tuple[str, int | None]]:
+    """{node id: (operator name, parent id)} of the ``== Final Plan ==``
+    tree in a formatted AQE plan description."""
+    final = desc.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    tree, stack = {}, []  # stack: (name column, node id) of open ancestors
+    for line in final.splitlines():
+        m = re.match(r"^([ :+-]*)(?:\* )?([A-Za-z][^(]*?) \((\d+)\)", line)
+        if not m:
+            continue
+        col, node = len(m.group(1)), int(m.group(3))
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        tree[node] = (m.group(2), stack[-1][1] if stack else None)
+        stack.append((col, node))
+    return tree
+
+
+def test_checkpointed_write_shares_the_window_exchange(spark, onto, tmp_path):
+    """The materializer's triples write, as executed (AQE's final plan
+    from the SQL status store): one hash exchange above the candidate
+    stage, keyed on the bucket and never coalesced, and one sort in the
+    result stage serving both span windows and the partitioned writer."""
+    from phenobert_spark.materialize import run_with_checkpoint
+    from tools.dump_plans import executed_plan
+
+    docs, _ = synthesize_corpus(spark, onto, n_docs=12)
+    run_with_checkpoint(spark, docs, onto, str(tmp_path / "g"), n_buckets=4)
+    desc = executed_plan(spark, str(tmp_path / "g" / "triples"))
+    tree = _final_plan_tree(desc)
+
+    def path_up(node):
+        while node is not None:
+            yield node
+            node = tree[node][1]
+
+    candidates = min(
+        (n for n, (name, _) in tree.items() if name == "MapInPandas"),
+        key=lambda n: len(list(path_up(n))),
+    )
+    above = [tree[n][0] for n in path_up(candidates)]
+    assert above.count("Exchange") == 1 and "AQEShuffleRead" not in above, desc
+    exchange = next(n for n in path_up(candidates) if tree[n][0] == "Exchange")
+    args = re.search(rf"^\({exchange}\) Exchange\n.*\nArguments: (.*)$", desc, re.M)
+    assert args.group(1).startswith("hashpartitioning(bucket#"), desc
+
+    def result_stage(node):
+        yield node
+        for child, (name, parent) in tree.items():
+            if parent == node and not name.endswith("QueryStage"):
+                yield from result_stage(child)
+
+    root = next(n for n, (_, parent) in tree.items() if parent is None)
+    assert [tree[n][0] for n in result_stage(root)].count("Sort") == 1, desc
+    write = next(n for n, (name, _) in tree.items() if name == "WriteFiles")
+    assert [name for name, parent in tree.values() if parent == write] != ["Sort"], desc
 
 
 def test_parquet_filter_pushdown(spark):

@@ -1,7 +1,9 @@
 """Local replica of the driver's correctness gate: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over
 the same parquet tables; compare row count, column names, and
-order-insensitive values.
+order-insensitive values. An oracle still running after
+``ORACLE_TIMEOUT_S`` is interrupted and reported as TIMEOUT: never a
+pass, and the run exits non-zero.
 
 Usage: python tools/check_contract.py [sf_dir] [query_name ...]
 """
@@ -10,11 +12,14 @@ from __future__ import annotations
 
 import math
 import sys
+import threading
 import time
 
 import duckdb
 
 sys.path.insert(0, ".")
+
+ORACLE_TIMEOUT_S = 300
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -103,6 +108,17 @@ def canon(rows, cols):
     return sorted(out)
 
 
+def run_oracle(con, sql):
+    """``sql``'s result as an Arrow table; raises
+    ``duckdb.InterruptException`` once it has run ``ORACLE_TIMEOUT_S``."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+    timer.start()
+    try:
+        return con.execute(sql).arrow()
+    finally:
+        timer.cancel()
+
+
 def main():
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
@@ -122,7 +138,7 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    failures, timeouts = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -141,13 +157,17 @@ def main():
             continue
         try:
             con = fresh_con()
-            tbl = con.execute(oracles[name]).arrow()
+            tbl = run_oracle(con, oracles[name])
             duck_cols = tbl.column_names
             duck_types = {f.name: _type_class(f.type) for f in tbl.schema}
             duck_rows = [
                 tuple(row[c] for c in duck_cols) for row in tbl.to_pylist()
             ]
             con.close()
+        except duckdb.InterruptException:
+            timeouts.append(name)
+            print(f"TIMEOUT {name}: oracle still running after {ORACLE_TIMEOUT_S}s")
+            continue
         except Exception as exc:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {str(exc)[:300]}")
@@ -181,6 +201,9 @@ def main():
     spark.stop()
     if failures:
         print("FAILURES:", failures)
+    if timeouts:
+        print("TIMEOUTS:", timeouts)
+    if failures or timeouts:
         sys.exit(1)
     print("all contract queries match")
 

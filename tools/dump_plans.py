@@ -12,12 +12,14 @@ Usage: python tools/dump_plans.py <outdir> <tag> [--actions] <query> [query ...]
 tree of every frame an action materializes while the query is built
 and collected (localCheckpoint, count, isEmpty, collect): the
 per-round plans of an iterative operator, which its final plan no
-longer shows.
+longer shows. A parquet write is recorded after it runs, as the final
+adaptive plan Spark's SQL status store holds for it: the plan before
+execution shows neither the writer's own sort nor AQE's coalescing.
 
 Run-specific tokens are masked so two dumps of unchanged code are
 byte-identical: expression ids print as ``#n``, exchange plan ids as
 ``[plan_id=n]``, the workload's temporary directory as ``<work>`` and
-an ``Observation``'s random name as ``CollectMetrics <observation>``.
+an ``Observation``'s random name as ``<observation>``.
 """
 
 import contextlib
@@ -25,6 +27,7 @@ import io
 import re
 import sys
 import tempfile
+import time
 
 sys.path.insert(0, ".")
 
@@ -42,7 +45,7 @@ def _explain(df) -> str:
 
 def _mask(text: str) -> str:
     for pattern, repl in [
-        (r"CollectMetrics [0-9a-f-]{36}", "CollectMetrics <observation>"),
+        (r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<observation>"),
         (r"#\d+", "#n"),
         (r"\[plan_id=\d+\]", "[plan_id=n]"),
         (re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<work>"),
@@ -60,7 +63,8 @@ def _work_tree(df) -> str:
     def walk(node, depth):
         if node.nodeName() == "AdaptiveSparkPlan":
             node = node.executedPlan()
-        lines.append("  " * depth + node.simpleString(4)[:160])
+        # masked before the cut, so the cut falls in the same place
+        lines.append("  " * depth + _mask(node.simpleString(4))[:160])
         if node.nodeName() == "InMemoryTableScan":
             rel = node.relation()
             if not rel.cacheBuilder().isCachedColumnBuffersLoaded():
@@ -74,11 +78,32 @@ def _work_tree(df) -> str:
     return "\n".join(lines) + "\n"
 
 
+def executed_plan(spark, marker: str = "") -> str:
+    """The formatted physical plan Spark's SQL status store holds for the
+    session's latest ended execution whose plan contains ``marker``:
+    AQE's final plan. The store records an ended execution's last state
+    asynchronously, after its listener events are delivered, together
+    with its aggregated metrics, so this waits for those (at most 30 s)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.monotonic() + 30
+    while True:
+        executions = store.executionsList()
+        latest = next(
+            e
+            for e in map(executions.apply, reversed(range(executions.size())))
+            if marker in e.physicalPlanDescription()
+        )
+        if latest.metricValues() is not None or time.monotonic() > deadline:
+            return latest.physicalPlanDescription()
+        time.sleep(0.05)
+
+
 @contextlib.contextmanager
 def _recording_actions(spark, out: list):
-    """Append (action, plan) for every listed DataFrame action and every
-    parquet write run inside the block, the plan explained just before
-    the action executes."""
+    """Append (action, plan) for every listed DataFrame action, its plan
+    explained just before the action executes, and for every parquet
+    write run inside the block, its executed plan."""
     DataFrame = type(spark.range(0))
 
     Writer = type(spark.range(0).write)
@@ -90,8 +115,11 @@ def _recording_actions(spark, out: list):
         saved.append((cls, meth, orig))
 
         def wrapped(self, *a, _orig=orig, _meth=meth, **kw):
-            df = self._df if isinstance(self, Writer) else self
-            out.append((_meth, _work_tree(df)))
+            if isinstance(self, Writer):
+                result = _orig(self, *a, **kw)
+                out.append((_meth, executed_plan(spark)))
+                return result
+            out.append((_meth, _work_tree(self)))
             return _orig(self, *a, **kw)
 
         setattr(cls, meth, wrapped)
