@@ -36,16 +36,15 @@ class PipelineConfig:
     # default-off — on val it moved F1 < +0.002 while shaving precision
     # on the held-out corpora (measured round 2).
     syn_phrase_min_count: int | None = None
-    # drop-one fuzzy tiers (deterministic analog of the reference's
+    # drop-one fuzzy tier (deterministic analog of the reference's
     # BERT near-match acceptance, model.py:359-432): dictionary-side
-    # variants (mention elides one generic dict token) and query-side
-    # probe (mention carries one extra token). Both default-off after
-    # calibration: dict-side gains val F1 +0.7pt but is flat-to-negative
-    # on the held-out corpora (ID-68 -0.1, GeneReviews -0.4); query-side
-    # is val-negative (longer fuzzy spans shadow exact sub-spans in
-    # maximal-span dedup). Measured round 2.
+    # variants, where a mention elides one generic dict token.
+    # Default-off after calibration: val F1 +0.7pt but flat-to-negative
+    # on the held-out corpora (ID-68 -0.1, GeneReviews -0.4; measured
+    # round 2). There is no query-side twin (a mention carrying one
+    # extra token): it measured val-negative, and candidate pruning
+    # never lets a k-mer with a token outside the dictionary reach it.
     drop_one_dict: bool = False
-    drop_one_query: bool = False
     # model-analog stage thresholds (calibrated on the val corpus; the
     # reference's p1/p2/p3 live in a different score space)
     model_p1: float = 0.0        # L1 routing cosine (0 = route everywhere)

@@ -27,28 +27,6 @@ from .models import ConceptIndex, HashedEncoder, pair_score_idf
 
 _WORKER_ENCODER: HashedEncoder | None = None
 
-# driver-side ConceptIndex cache: the index depends only on the
-# ontology object and the smoothing weight, and costs ~15s to build —
-# repeated annotate() calls in one session must not pay it twice.
-# Stored ON the ontology object (like pipeline.py's _vocab_bc_cache):
-# a module-level dict keyed by id(onto) would survive the ontology's
-# garbage collection and silently serve a stale index if a new object
-# reused the address — and would never evict.
-
-
-def cached_index(
-    onto: Ontology, gcn_lambda: float, subs_min_count: int = 3
-) -> ConceptIndex:
-    cache = onto.__dict__.setdefault("_concept_index_cache", {})
-    key = (gcn_lambda, subs_min_count)
-    idx = cache.get(key)
-    if idx is None:
-        idx = ConceptIndex.build(
-            onto, gcn_lambda=gcn_lambda, subs_min_count=subs_min_count
-        )
-        cache[key] = idx
-    return idx
-
 
 def _encoder(dim: int) -> HashedEncoder:
     global _WORKER_ENCODER
@@ -62,15 +40,29 @@ def model_link(
     survivors: DataFrame,
     onto: Ontology,
     cfg: PipelineConfig,
-    index: ConceptIndex | None = None,
 ) -> DataFrame:
     """survivors: candidate rows that missed the dictionary and are not
     contained in a matched span. Returns rows with (hpo_id, score)
-    columns appended, only for accepted candidates."""
-    index = index or cached_index(
-        onto, cfg.model_gcn_lambda, cfg.model_subs_min_count
+    columns appended, only for accepted candidates.
+
+    The ConceptIndex broadcast (the index costs ~15s to build on the
+    reference ontology) is memoized on the ontology per SparkContext,
+    so repeated annotate() calls build and ship it once."""
+    bc = onto.derived(
+        (
+            "concept_index_broadcast",
+            spark.sparkContext.applicationId,
+            cfg.model_gcn_lambda,
+            cfg.model_subs_min_count,
+        ),
+        lambda: spark.sparkContext.broadcast(
+            ConceptIndex.build(
+                onto,
+                gcn_lambda=cfg.model_gcn_lambda,
+                subs_min_count=cfg.model_subs_min_count,
+            )
+        ),
     )
-    bc = spark.sparkContext.broadcast(index)
     p1, p2, p3 = cfg.model_p1, cfg.model_p2, cfg.model_p3
     topk = cfg.model_topk
     margin = cfg.model_margin

@@ -40,10 +40,15 @@ from .ontology import Ontology
 from .pipeline import annotate
 
 
-def _doc_xor(doc_id_col: str = "doc_id") -> F.Column:
-    # first 15 hex chars -> bigint, XOR-reduced (order-independent)
-    return F.expr(
-        f"bit_xor(cast(conv(substring({doc_id_col}, 1, 15), 16, 10) as bigint))"
+def _fingerprints(docs_b: DataFrame) -> DataFrame:
+    """(bucket, n_docs, doc_xor) per bucket of a frame carrying
+    ``doc_id`` and ``bucket``: ``doc_xor`` XOR-reduces the first 15 hex
+    chars of each doc_id as a bigint (order-independent)."""
+    return docs_b.groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.expr(
+            "bit_xor(cast(conv(substring(doc_id, 1, 15), 16, 10) as bigint))"
+        ).alias("doc_xor"),
     )
 
 
@@ -157,9 +162,7 @@ def run_with_checkpoint(
         try:
             stats = {
                 r.bucket: (r.n_docs, int(r.doc_xor or 0))
-                for r in part.groupBy("bucket")
-                .agg(F.count("*").alias("n_docs"), _doc_xor().alias("doc_xor"))
-                .collect()
+                for r in _fingerprints(part).collect()
             }
             # Per-bucket triple counts are observed on the write. The
             # observe must sit above the pipeline's last exchange, in the
@@ -230,14 +233,11 @@ def verify_manifest(spark: SparkSession, docs: DataFrame, out_dir: str, n_bucket
     m = read_manifest(spark, out_dir)
     if m is None:
         raise ValueError(f"no manifest under {out_dir!r}")
-    docs_b = (
-        with_doc_id(docs)
-        .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_docs_now"), _doc_xor().alias("doc_xor_now"))
-    )
+    now = _fingerprints(
+        with_doc_id(docs).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+    ).toDF("bucket", "n_docs_now", "doc_xor_now")
     return (
-        m.join(docs_b, on="bucket", how="full")
+        m.join(now, on="bucket", how="full")
         .filter(
             # an empty bucket has a manifest row (n_docs=0) but no input
             # group row — that is clean, not drift

@@ -30,9 +30,12 @@ a classic broadcast dimension. It is exposed both as Spark DataFrames
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import re
 from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -164,6 +167,22 @@ EDGES_SCHEMA = StructType(
 )
 
 
+def _memoized(method):
+    """``method`` through :meth:`Ontology.derived`, keyed by its name and
+    its bound arguments (defaults applied), so positional and keyword
+    calls share one entry."""
+    signature = inspect.signature(method)
+
+    @functools.wraps(method)
+    def memoized(self, *args, **kwargs):
+        bound = signature.bind(self, *args, **kwargs)
+        bound.apply_defaults()
+        key = (method.__name__, *list(bound.arguments.values())[1:])
+        return self.derived(key, lambda: method(self, *args, **kwargs))
+
+    return memoized
+
+
 @dataclass
 class Ontology:
     """Driver-side ontology; cheap to broadcast (few MB)."""
@@ -191,7 +210,9 @@ class Ontology:
     # mined_substitutions() — a derived variant pair of the same concept
     # must not count toward the x-N co-variation trust threshold.
     variant_surfaces: dict[str, list[str]] = field(default_factory=dict)
-    _anc: dict[str, set[str]] | None = field(default=None, init=False, repr=False)
+    # The one memo of every value derived from this ontology (see
+    # ``derived``); no other attribute caches anything.
+    _derived: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @property
     def abnormal_set(self) -> set[str]:
@@ -205,12 +226,21 @@ class Ontology:
 
     # -- derived structures -------------------------------------------------
 
+    def derived(self, key: tuple, build: Callable[[], Any]) -> Any:
+        """The one memo of values derived from this ontology: the first
+        call with ``key`` stores ``build()``, later calls return it.
+        ``key`` names the value and whatever else it depends on:
+        thresholds and tiers, the session a DataFrame belongs to, the
+        SparkContext (``applicationId``) a broadcast lives in."""
+        if key not in self._derived:
+            self._derived[key] = build()
+        return self._derived[key]
+
+    @_memoized
     def ancestors(self) -> dict[str, set[str]]:
         """Transitive ancestor closure, driver-side BFS (|V| small by
         design — SURVEY.md §4 item 3; distributed closure is in
         operators/closure.py for when the graph is NOT broadcastable)."""
-        if self._anc is not None:
-            return self._anc
         memo: dict[str, set[str]] = {}
 
         def up(node: str) -> set[str]:
@@ -226,7 +256,6 @@ class Ontology:
 
         for n in list(self.parents) + [ROOT]:
             up(n)
-        self._anc = memo
         return memo
 
     def canonical(self, hpo_id: str) -> str:
@@ -241,6 +270,7 @@ class Ontology:
             toks.update(key.split())
         return frozenset(toks)
 
+    @_memoized
     def mined_substitutions(
         self, min_count: int = 10, phrase_min_count: int | None = None
     ) -> list[tuple[frozenset[str], frozenset[str]]]:
@@ -263,10 +293,6 @@ class Ontology:
         "abnormality"~"anomaly" and "anomaly"~"malformation" never
         chain into unmined combinations.
         """
-        cached = self.__dict__.setdefault("_syn_cache", {})
-        ck = (min_count, phrase_min_count)
-        if ck in cached:
-            return cached[ck]
         from collections import Counter
 
         from .functions.normalize import is_num, lemma, simplify_tokens
@@ -319,85 +345,45 @@ class Ontology:
                 if n >= phrase_min_count:
                     out.append((a, b))
                     out.append((b, a))
-        cached[ck] = out
         return out
 
+    @_memoized
     def head_vocab(self) -> frozenset[str]:
         """Specific phenotype HEAD tokens: dictionary tokens appearing
         in at most ``HEAD_MAX_DF`` concepts. Low concept-frequency marks
         a specific head ("ataxia" df=14, "cataract" df=43) vs a generic
         modifier ("abnormality" df=1186, "increased" df=739). The
         drop-one dictionary tier elides only non-head tokens."""
-        if "_heads" not in self.__dict__:
-            tok2c: dict[str, set[str]] = {}
-            for key, hpo in list(self.phrase2hpo.items()) + list(self.simple2hpo.items()):
-                for t in key.split():
-                    tok2c.setdefault(t, set()).add(hpo)
-            self.__dict__["_heads"] = frozenset(
-                t for t, cs in tok2c.items() if len(cs) <= HEAD_MAX_DF
-            )
-        return self.__dict__["_heads"]
+        tok2c: dict[str, set[str]] = {}
+        for key, hpo in list(self.phrase2hpo.items()) + list(self.simple2hpo.items()):
+            for t in key.split():
+                tok2c.setdefault(t, set()).add(hpo)
+        return frozenset(t for t, cs in tok2c.items() if len(cs) <= HEAD_MAX_DF)
 
+    @_memoized
     def prune_vocab(
         self,
         syn_min_count: int | None = None,
         syn_phrase_min_count: int | None = None,
     ) -> "PruneVocab":
-        """(cached per threshold pair) Exact candidate-pruning predicate covering all join tiers: a
-        k-mer can match some dictionary key only if every token t has
-        t∈V, lemma(t)∈V, or stem(t) in the stem-key token set. Tokens
-        failing all three are provable misses.
-
-        V must OVERAPPROXIMATE the probe space: the derived prio-3
-        tiers introduce tokens absent from any base key — combining-
-        prefix splits ("supraauricular" -> "supra auricular") and
-        substitution B-sides — and pruning a candidate k-mer that only
-        those rows could match silently disables the tier (found via
-        'supra-auricular sinuses': prose hyphens always split, so the
-        split-variant tier never fired on its own target mentions)."""
-        cached = self.__dict__.setdefault("_prune_cache", {})
-        ck = (syn_min_count, syn_phrase_min_count)
-        if ck in cached:
-            return cached[ck]
-        stems: set[str] = set()
-        for key in self.stem2hpo:
-            stems.update(key.split())
-        base = set(self.vocab())
-        for t in list(base):
-            for p in COMBINING_PREFIXES:
-                if t.startswith(p) and len(t) - len(p) >= 4:
-                    base.add(p)
-                    base.add(t[len(p):])
-        # V must cover every configured substitution tier: union the
-        # default-threshold set (cheap, always a superset candidate)
-        # with the CONFIGURED set — a lower threshold or enabled phrase
-        # pairs add dictionary keys whose B-side tokens would otherwise
-        # be pruned away, silently disabling those rows. A wider-than-
-        # needed vocab only costs pruning efficiency, never recall.
-        subs = list(self.mined_substitutions(10))
-        if syn_min_count is not None or syn_phrase_min_count is not None:
-            subs += self.mined_substitutions(
-                10 if syn_min_count is None else syn_min_count,
-                syn_phrase_min_count,
-            )
-        for a, b in subs + SEED_SUBSTITUTIONS:
-            base.update(b)
-        # Prio-1/3 dictionary keys live in LEMMA space: their tokens
-        # are lemma folds of base-key (and B-side) tokens, and the
-        # candidate-side check probes ``lemma(t) in V`` — so V must
-        # contain the folds themselves ('was' -> 'wa', 'precipitate' ->
-        # 'cipitate' after prefix split), or a mention those rows alone
-        # match gets pruned (invariant pinned in
-        # tests/test_ontology.py::test_prune_vocab_covers_nondefault_syn_tiers).
-        from .functions.normalize import lemma as _lemma
-
-        base.update([_lemma(t) for t in list(base)])
-        pv = PruneVocab(frozenset(base), frozenset(stems))
-        cached[ck] = pv
-        return pv
+        """Exact candidate-pruning predicate, read off the rows of the
+        dictionary built with the same synonym tiers: ``base`` holds the
+        tokens of its lemma-space keys (every prio but 2), ``stems``
+        those of its stem keys (prio 2). A candidate meets a row only
+        through its key, lemma key or stem key, so a k-mer with a token
+        t where t, lemma(t) are not in ``base`` and stem(t) is not in
+        ``stems`` is a provable miss. The drop-one rows (prio 4) add no
+        token: theirs are lemma folds of base-key tokens, which the
+        folded-lemma rows already carry."""
+        rows = self._dict_rows(syn_min_count, syn_phrase_min_count, False)
+        return PruneVocab(
+            frozenset(t for key, _, prio in rows if prio != 2 for t in key.split()),
+            frozenset(t for key, _, prio in rows if prio == 2 for t in key.split()),
+        )
 
     # -- Spark views ---------------------------------------------------------
 
+    @_memoized
     def dict_df(
         self,
         spark: SparkSession,
@@ -405,7 +391,24 @@ class Ontology:
         syn_phrase_min_count: int | None = None,
         drop_one: bool = False,
     ) -> DataFrame:
-        """The broadcast dictionary dimension for the J1 equi-join.
+        """The broadcast dictionary dimension for the J1 equi-join:
+        :meth:`_dict_rows` as a local relation. Memoized per session
+        (a DataFrame is a plan, safe to reuse within its session), so
+        repeat calls skip the Arrow conversion."""
+        return local_frame(
+            spark,
+            self._dict_rows(syn_min_count, syn_phrase_min_count, drop_one),
+            DICT_SCHEMA,
+        )
+
+    @_memoized
+    def _dict_rows(
+        self,
+        syn_min_count: int | None,
+        syn_phrase_min_count: int | None,
+        drop_one: bool,
+    ) -> list[tuple[str, str, int]]:
+        """(key, hpo_id, prio) rows of the dictionary.
 
         One row per (key, prio); strict keys win over simplified keys,
         later insertions win within a priority class (dict-overwrite
@@ -418,20 +421,6 @@ class Ontology:
         existing lemma probe space are dropped; a variant several
         concepts generate goes to one of them (``unique_best``).
         """
-        # Two cache layers: the built rows (per substitution key, so
-        # repeat annotate() calls skip variant regeneration) and the
-        # session-bound DataFrame (skips the repeat Arrow conversion —
-        # a DataFrame is just a plan, safe to reuse within its session).
-        df_cache = self.__dict__.setdefault("_dict_df_cache", {})
-        cache = self.__dict__.setdefault("_dict_rows_cache", {})
-        ck = (syn_min_count, syn_phrase_min_count, drop_one)
-        sk = (id(spark._jsparkSession), ck)
-        if sk in df_cache:
-            return df_cache[sk]
-        if ck in cache:
-            df = local_frame(spark, cache[ck], DICT_SCHEMA)
-            df_cache[sk] = df
-            return df
         from .functions.normalize import lemma
 
         def lbag_key(toks: list[str]) -> str:
@@ -464,6 +453,14 @@ class Ontology:
                 base.setdefault(key, hpo)
                 base_prio.setdefault(key, 1)
 
+        def offer(
+            variants: dict[str, dict[str, int]], variant: str, hpo: str, key: str
+        ) -> None:
+            """Record that base ``key`` of ``hpo`` generates ``variant``,
+            keeping the best trust class among such keys."""
+            slot = variants.setdefault(variant, {})
+            slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
+
         def unique_best(cands: dict[str, int]) -> str:
             """Resolve a derived-variant collision: the concept whose
             SOURCE key had the best (lowest) trust class wins (strict
@@ -495,8 +492,7 @@ class Ontology:
         for key, hpo in base.items():
             lk = lbag_key(key.split())
             if lk != key and lk not in base:
-                slot = lemma_variants.setdefault(lk, {})
-                slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
+                offer(lemma_variants, lk, hpo, key)
         for lk, hpos in lemma_variants.items():
             rows.append((lk, unique_best(hpos), 1))
         lemma_space = set(base) | set(lemma_variants)
@@ -511,9 +507,12 @@ class Ontology:
             for i, t in enumerate(toks):
                 for p in COMBINING_PREFIXES:
                     if t.startswith(p) and len(t) - len(p) >= 4:
-                        v = lbag_key(toks[:i] + [p, t[len(p):]] + toks[i + 1:])
-                        slot = variants.setdefault(v, {})
-                        slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
+                        offer(
+                            variants,
+                            lbag_key(toks[:i] + [p, t[len(p):]] + toks[i + 1:]),
+                            hpo,
+                            key,
+                        )
         if syn_min_count is not None:
             subs = list(
                 self.mined_substitutions(syn_min_count, syn_phrase_min_count)
@@ -529,9 +528,7 @@ class Ontology:
                 for tok in lbag:
                     for a, b in by_trigger.get(tok, ()):
                         if a <= lbag:
-                            v = " ".join(sorted((lbag - a) | b))
-                            slot = variants.setdefault(v, {})
-                            slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
+                            offer(variants, " ".join(sorted((lbag - a) | b)), hpo, key)
         for v, hpos in variants.items():
             if v not in lemma_space:
                 rows.append((v, unique_best(hpos), 3))
@@ -556,15 +553,11 @@ class Ontology:
                         continue  # only GENERIC tokens may be elided
                     rest = ltoks[:i] + ltoks[i + 1:]
                     if any(t in heads for t in rest):
-                        slot = d1_variants.setdefault(" ".join(sorted(rest)), {})
-                        slot[hpo] = min(slot.get(hpo, 9), base_prio[key])
+                        offer(d1_variants, " ".join(sorted(rest)), hpo, key)
             for v, hpos in d1_variants.items():
                 if v not in lemma_space:
                     rows.append((v, unique_best(hpos), 4))
-        cache[ck] = rows
-        df = local_frame(spark, rows, DICT_SCHEMA)
-        df_cache[sk] = df
-        return df
+        return rows
 
     def terms_df(self, spark: SparkSession) -> DataFrame:
         alt_by_canon: dict[str, list[str]] = {}

@@ -13,7 +13,7 @@ dimension, highest priority wins via ``coalesce``:
    matches are unvalidated suffix surgery, see dictionary_link),
 5. dictionary-side drop-one variants (score 0.8; default-off).
 
-Tiers 4/5 are skipped entirely — no join in the plan — when their
+Tiers 3 and 5 are skipped entirely — no join in the plan — when their
 rows are absent (``has_syn_tier`` / ``has_drop_one``). The dictionary
 is ~50-150k rows depending on tiers (BASELINE.md) — a textbook
 broadcast dimension; every join is a BroadcastHashJoin with zero
@@ -106,59 +106,3 @@ def dictionary_link(
         .drop(*drop_cols)
     )
 
-
-def drop_one_link(
-    misses: DataFrame, dict_df: DataFrame, heads_df: DataFrame | None = None
-) -> DataFrame:
-    """Query-side drop-one probe: an unmatched candidate whose bag has
-    ONE extra token over a dictionary key ("postnatal onset
-    microcephaly" ~ "postnatal microcephaly") — the mirror direction of
-    the prio-4 dictionary variants. Input rows must be unmatched
-    candidates (hpo_id already dropped) with 3-7 tokens.
-
-    All key arithmetic is JVM-side (split/slice/transform on lemma_key,
-    whole-stage codegen); the probe explodes each miss into n drop-one
-    keys and broadcast-joins the strict+lemma dictionary tier, keeping
-    one deterministic winner per candidate span (min hpo_id). Matches
-    score 0.8 — below every exact tier, so overlap dedup prefers exact
-    spans."""
-    toks = F.split(F.col("lemma_key"), " ")
-    n = F.size(toks)
-    probes = F.transform(
-        F.sequence(F.lit(0), n - F.lit(1)),
-        lambda i: F.struct(
-            F.get(toks, i).alias("dropped"),
-            F.array_join(
-                F.concat(
-                    F.slice(toks, F.lit(1), i), F.slice(toks, i + F.lit(2), n)
-                ),
-                " ",
-            ).alias("probe"),
-        ),
-    )
-    exploded = misses.withColumn("_p", F.explode(probes)).select(
-        "*", F.col("_p.dropped").alias("_dropped"), F.col("_p.probe").alias("_probe")
-    ).drop("_p")
-    if heads_df is not None:
-        # only a DROPPABLE token may be elided: dropping a content head
-        # ("lacrimal") changes what the mention denotes. heads_df holds
-        # the allowed (droppable) tokens — semi join keeps those probes.
-        exploded = exploded.join(
-            F.broadcast(heads_df.withColumnRenamed("token", "_dropped")),
-            "_dropped",
-            "left_semi",
-        )
-    d = F.broadcast(
-        dict_df.filter(F.col("prio") <= 1).select(
-            F.col("key").alias("_kq"), F.col("hpo_id").alias("_hq")
-        )
-    )
-    hits = exploded.join(d, F.col("_probe") == F.col("_kq"), "inner")
-    # one winner per candidate span: lexicographically smallest hpo_id
-    best = hits.groupBy("doc_id", "start", "end").agg(
-        F.min("_hq").alias("hpo_id")
-    )
-    return (
-        misses.join(best, ["doc_id", "start", "end"], "inner")
-        .withColumn("score", F.lit(0.8).cast("double"))
-    )

@@ -31,15 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _prev_max_end(partition_cols: list[str]) -> "F.Column":
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(F.col("start").asc(), F.col("end").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return F.max("end").over(w)
-
-
 def drop_same_extent(
     df: DataFrame, keys: list[str], tiebreak: tuple["F.Column", ...] = ()
 ) -> DataFrame:
@@ -77,19 +68,14 @@ def keep_maximal_spans(
     so gappy spans must not act as CONTAINERS here (they can still be
     dropped when contained in a contiguous span)."""
     keys = keys or ["doc_id"]
-    if gappy_col is None:
-        prev = _prev_max_end(keys)
-    else:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("start").asc(), F.col("end").desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prev = F.max(
-            F.when(~F.col(gappy_col), F.col("end"))
-        ).over(w)
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col("start").asc(), F.col("end").desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    end = F.col("end") if gappy_col is None else F.when(~F.col(gappy_col), F.col("end"))
     return (
-        df.withColumn("_pme", prev)
+        df.withColumn("_pme", F.max(end).over(w))
         .filter(F.col("_pme").isNull() | (F.col("end") > F.col("_pme")))
         .drop("_pme")
     )

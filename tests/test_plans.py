@@ -477,7 +477,6 @@ def _driver_frames(spark, onto):
     from phenobert_spark.config import local_frame
     from phenobert_spark.materialize import MANIFEST_SCHEMA
     from phenobert_spark.ontology import _ingest_pairs
-    from phenobert_spark.pipeline import DROPPABLE_MODIFIERS, _droppable_df
 
     empty = _ingest_pairs([], {}, {})
     n_edges = sum(len(ps) for ps in onto.parents.values())
@@ -495,7 +494,6 @@ def _driver_frames(spark, onto):
         ("_abnormal_df/empty", _abnormal_df(spark, empty), 0),
         ("_ancestor_pairs_df", _ancestor_pairs_df(spark, onto), n_anc),
         ("_ancestor_pairs_df/empty", _ancestor_pairs_df(spark, empty), 0),
-        ("_droppable_df", _droppable_df(spark), len(DROPPABLE_MODIFIERS)),
         ("dict_df", onto.dict_df(spark), None),
     ]
 

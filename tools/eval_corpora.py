@@ -37,13 +37,8 @@ def main():
         overrides["drop_one_dict"] = True
     if "--no-drop-one-dict" in sys.argv:
         overrides["drop_one_dict"] = False
-    if "--drop-one-query" in sys.argv:
-        overrides["drop_one_query"] = True
     cfg = PipelineConfig(**overrides)
-    print(
-        f"config: model={use_model} d1dict={cfg.drop_one_dict} "
-        f"d1query={cfg.drop_one_query}"
-    )
+    print(f"config: model={use_model} d1dict={cfg.drop_one_dict}")
     for ds in datasets:
         t0 = time.time()
         docs = load_reference_corpus(spark, ds)
