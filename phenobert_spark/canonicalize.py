@@ -21,8 +21,8 @@ def _alt_df(spark: SparkSession, onto: Ontology) -> DataFrame:
     return local_frame(spark, sorted(onto.alt_ids.items()), "alt STRING, canon STRING")
 
 
-def _abnormal_df(spark: SparkSession, onto: Ontology, col: str = "hpo_id") -> DataFrame:
-    return local_frame(spark, [(h,) for h in sorted(onto.abnormal_set)], f"{col} STRING")
+def _abnormal_df(spark: SparkSession, onto: Ontology) -> DataFrame:
+    return local_frame(spark, [(h,) for h in sorted(onto.abnormal_set)], "hpo_id STRING")
 
 
 def _ancestor_pairs_df(spark: SparkSession, onto: Ontology) -> DataFrame:
@@ -36,24 +36,20 @@ def _ancestor_pairs_df(spark: SparkSession, onto: Ontology) -> DataFrame:
     return local_frame(spark, rows, "node STRING, anc STRING")
 
 
-def canonicalize_ids(
-    df: DataFrame, spark: SparkSession, onto: Ontology, col: str = "hpo_id"
-) -> DataFrame:
+def canonicalize_ids(df: DataFrame, spark: SparkSession, onto: Ontology) -> DataFrame:
     alt = F.broadcast(_alt_df(spark, onto))
     return (
-        df.join(alt, df[col] == alt["alt"], "left")
-        .withColumn(col, F.coalesce(F.col("canon"), F.col(col)))
+        df.join(alt, df["hpo_id"] == alt["alt"], "left")
+        .withColumn("hpo_id", F.coalesce(F.col("canon"), F.col("hpo_id")))
         .drop("alt", "canon")
     )
 
 
-def filter_abnormal(
-    df: DataFrame, spark: SparkSession, onto: Ontology, col: str = "hpo_id"
-) -> DataFrame:
+def filter_abnormal(df: DataFrame, spark: SparkSession, onto: Ontology) -> DataFrame:
     """Keep only ids under HP:0000118 (root excluded), the reference's
     phenotypic_abnormalityNT gate (util.py:1050)."""
-    members = _abnormal_df(spark, onto, col)
-    return df.join(F.broadcast(members), on=col, how="left_semi")
+    members = _abnormal_df(spark, onto)
+    return df.join(F.broadcast(members), on="hpo_id", how="left_semi")
 
 
 def drop_redundant_ancestors(

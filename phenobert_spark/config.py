@@ -24,7 +24,6 @@ REFERENCE_ROOT = os.environ.get("PHENOBERT_REFERENCE_ROOT", "/root/reference")
 class PipelineConfig:
     """Knobs of the annotation pipeline (names follow the reference CLI)."""
 
-    use_longest: bool = True     # keep maximal spans (annotate.py -al)
     use_model_stages: bool = False  # Step-2/3 analogue (deterministic path off by default)
     max_kmer_len: int = 10       # k-mer cap (util.py:1006)
     # synonym-variant dictionary tier (ontology.mined_substitutions):

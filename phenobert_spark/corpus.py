@@ -253,14 +253,12 @@ def synthesize_corpus(
     ontology,
     n_docs: int = 50,
     seed: int = 42,
-    long_doc_every: int = 10,
-    mentions_per_doc: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic synthetic (documents, gold) pair.
 
     Sentences of filler tokens with HPO surface forms embedded at known
     offsets; negation contexts ("no X"); conjunction forms; and a x20
-    long-document tail every ``long_doc_every`` docs (skew exercise).
+    long-document tail every 10th doc (skew exercise).
     Gold rows are emitted at insertion time with exact char offsets.
     """
     rng = random.Random(seed)
@@ -276,7 +274,7 @@ def synthesize_corpus(
             parts.append(s)
             pos += len(s)
 
-        n_sent = mentions_per_doc * (20 if d % long_doc_every == 0 and d > 0 else 1)
+        n_sent = 4 * (20 if d % 10 == 0 and d > 0 else 1)
         for _ in range(n_sent):
             emit(" ".join(rng.choices(_FILLER, k=rng.randint(3, 8))) + " ")
             h = rng.choice(hpos)

@@ -163,7 +163,6 @@ def evaluate_report(
     predictions: dict[str, DataFrame],
     gold: DataFrame,
     onto: Ontology,
-    doc_universe: DataFrame | None = None,
 ) -> str:
     """Multi-tool comparison report, the rebuild of eval_all.py's
     three-section output (reference eval_all.py:260-321: micro P/R/F1
@@ -174,7 +173,7 @@ def evaluate_report(
     them; the engine's own triples are just one entry)."""
     rows_micro, rows_macro, rows_sim = [], [], []
     for tool, pred in predictions.items():
-        m = evaluate_sets(spark, pred, gold, onto, doc_universe=doc_universe)
+        m = evaluate_sets(spark, pred, gold, onto)
         s = dag_set_similarity(spark, pred, gold, onto)
         rows_micro.append(
             "%s Precision: %.4f\tRecal: %.4f\tF1 score: %.4f"

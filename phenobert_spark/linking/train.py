@@ -28,6 +28,8 @@ from typing import Iterator
 
 import numpy as np
 
+L2 = 1e-4  # weight-decay coefficient of both fits
+
 
 @dataclass
 class LogisticModel:
@@ -43,11 +45,8 @@ class LogisticModel:
 def fit_logistic_df(
     sdf,
     n_features: int,
-    feature_col: str = "x",
-    label_col: str = "y",
     epochs: int = 60,
     lr: float = 2.0,
-    l2: float = 1e-4,
 ) -> LogisticModel:
     """Deterministic full-batch logistic regression over a DataFrame
     of (array<double> features, double label); the gradient of each
@@ -61,7 +60,7 @@ def fit_logistic_df(
     The feature DataFrame is persisted ONCE; each epoch broadcasts the
     (dim+1) weight vector and aggregates the partials — at 10^12-row
     supervision nothing but weights and per-partition partials crosses
-    the wire."""
+    the wire. The weights carry an L2 penalty of ``L2``."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
@@ -75,8 +74,8 @@ def fit_logistic_df(
     spark = sdf.sparkSession
     d = n_features
     sdf = sdf.select(
-        F.col(feature_col).cast("array<double>").alias("x"),
-        F.col(label_col).cast("double").alias("y"),
+        F.col("x").cast("array<double>").alias("x"),
+        F.col("y").cast("double").alias("y"),
     ).persist()
     sdf.count()  # materialize
 
@@ -129,7 +128,7 @@ def fit_logistic_df(
             n_correct += r.n_correct
             n_rows += r.n_rows
         bw.destroy()
-        grad_w = total[:d] / n_rows + l2 * w
+        grad_w = total[:d] / n_rows + L2 * w
         grad_b = total[d] / n_rows
         loss = total[d + 1] / n_rows
         counters.append(
@@ -150,8 +149,6 @@ def fit_logistic_numpy(
     X: np.ndarray,
     y: np.ndarray,
     epochs: int = 60,
-    lr: float = 2.0,
-    l2: float = 1e-4,
 ) -> LogisticModel:
     """Driver-only twin of :func:`fit_logistic_df` (same math, same
     epochs, same init) — used by tests to pin that the distributed
@@ -172,6 +169,6 @@ def fit_logistic_numpy(
         counters.append(
             {"epoch": epoch, "loss": round(loss, 6), "acc": round(acc, 6), "n": n}
         )
-        w = w - lr * (X.T @ err / n + l2 * w)
-        b = b - lr * float(err.mean())
+        w = w - 2.0 * (X.T @ err / n + L2 * w)
+        b = b - 2.0 * float(err.mean())
     return LogisticModel(w=w, b=b, counters=counters)

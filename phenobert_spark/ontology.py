@@ -414,10 +414,12 @@ class Ontology:
         later insertions win within a priority class (dict-overwrite
         semantics of util.py:324-327).
 
-        ``syn_min_count``: when set, adds prio-3 rows — single-token
-        synonym substitutions of every key in LEMMA space (probed by the
-        candidates' existing lemma_key column), using pairs mined by
-        :meth:`mined_substitutions`. Variants that collide with the
+        ``syn_min_count``: when set, adds prio-3 rows — combining-prefix
+        splits and single-token synonym substitutions of every key in
+        LEMMA space (probed by the candidates' existing lemma_key
+        column), using pairs mined by :meth:`mined_substitutions`.
+        Without it ``dictionary_link`` never probes prio 3, so no such
+        row is built. Variants that collide with the
         existing lemma probe space are dropped; a variant several
         concepts generate goes to one of them (``unique_best``).
         """
@@ -496,24 +498,25 @@ class Ontology:
         for lk, hpos in lemma_variants.items():
             rows.append((lk, unique_best(hpos), 1))
         lemma_space = set(base) | set(lemma_variants)
-        # Prio 3, two families in ONE collision dict, so a key both
-        # generate still gets one row. Combining-form split variants:
-        # single-token Latin compounds also written hyphenated/split in
-        # prose ("supraauricular sinus" ~ "supra-auricular sinuses"),
-        # split on a pinned public combining-prefix list.
+        # Prio 3, probed only with the synonym tier on: two families in
+        # ONE collision dict, so a key both generate still gets one row.
+        # Combining-form split variants: single-token Latin compounds
+        # also written hyphenated/split in prose ("supraauricular sinus"
+        # ~ "supra-auricular sinuses"), split on a pinned public
+        # combining-prefix list.
         variants: dict[str, dict[str, int]] = {}
-        for key, hpo in base.items():
-            toks = key.split()
-            for i, t in enumerate(toks):
-                for p in COMBINING_PREFIXES:
-                    if t.startswith(p) and len(t) - len(p) >= 4:
-                        offer(
-                            variants,
-                            lbag_key(toks[:i] + [p, t[len(p):]] + toks[i + 1:]),
-                            hpo,
-                            key,
-                        )
         if syn_min_count is not None:
+            for key, hpo in base.items():
+                toks = key.split()
+                for i, t in enumerate(toks):
+                    for p in COMBINING_PREFIXES:
+                        if t.startswith(p) and len(t) - len(p) >= 4:
+                            offer(
+                                variants,
+                                lbag_key(toks[:i] + [p, t[len(p):]] + toks[i + 1:]),
+                                hpo,
+                                key,
+                            )
             subs = list(
                 self.mined_substitutions(syn_min_count, syn_phrase_min_count)
             ) + SEED_SUBSTITUTIONS
@@ -712,7 +715,6 @@ def _ingest_pairs(
 def reconstruct_alt_ids(
     onto: Ontology,
     root: str = REFERENCE_ROOT,
-    datasets: tuple[str, ...] = ("GSC+", "ID-68", "GeneReviews", "val"),
 ) -> dict[str, str]:
     """Partial reconstruction of the obsolete-id -> canonical-id map.
 
@@ -746,7 +748,7 @@ def reconstruct_alt_ids(
         lemma_space.setdefault(" ".join(sorted(lemma(t) for t in k.split())), h)
 
     by_obsolete: dict[str, set[str]] = defaultdict(set)
-    for ds in datasets:
+    for ds in ("GSC+", "ID-68", "GeneReviews", "val"):
         ann_dir = os.path.join(root, "phenobert", "data", ds, "ann")
         if not os.path.isdir(ann_dir):
             continue
@@ -839,10 +841,10 @@ def fixture_ontology() -> Ontology:
     return _ingest_pairs(pairs, l1, parents, alt_ids)
 
 
-def get_ontology(prefer_reference: bool = True) -> Ontology:
-    if prefer_reference:
-        try:
-            return load_reference_ontology()
-        except (FileNotFoundError, NotADirectoryError):
-            pass
-    return fixture_ontology()
+def get_ontology() -> Ontology:
+    """The reference ontology, or the fixture one where the reference
+    checkout is absent."""
+    try:
+        return load_reference_ontology()
+    except (FileNotFoundError, NotADirectoryError):
+        return fixture_ontology()

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fanout(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
+def fanout(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition ``df`` to the session's parallelism iff it is
     under-partitioned for the cluster. Keyed (hash) repartition when
     ``keys`` given, round-robin otherwise.
@@ -32,7 +32,7 @@ def fanout(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
     no-op even when AQE later coalesces them to fewer partitions than
     the cluster has cores."""
     sc = df.sparkSession.sparkContext
-    n = target or sc.defaultParallelism
+    n = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *keys) if keys else df.repartition(n)

@@ -22,8 +22,6 @@ from pyspark.sql import functions as F
 
 def hourly_count_anomalies(
     events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
     trailing: int = 24,
     z_thresh: float = 3.0,
     min_history: int = 6,
@@ -42,9 +40,9 @@ def hourly_count_anomalies(
     identically, unlike engine-internal stddev accumulators.
     """
     hourly = (
-        events.withColumn("_ts", F.col(ts_col).cast("timestamp"))
+        events.withColumn("_ts", F.col("ts").cast("timestamp"))
         .groupBy(
-            F.col(key_col).alias("key"),
+            F.col("event_type").alias("key"),
             F.unix_timestamp(F.date_trunc("hour", F.col("_ts"))).alias(
                 "hour_start"
             ),

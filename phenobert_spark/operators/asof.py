@@ -35,7 +35,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     tiebreak: str | None = None,
     tolerance: Column | None = None,
-    prefix: str = "matched_",
 ) -> DataFrame:
     """For each left row: the latest right row (same ``key``) with
     ``right.ts <= left.ts``; unmatched left rows keep NULL matches.
@@ -47,7 +46,7 @@ def asof_join(
     as a Column interval/expression; matches older than
     ``left.ts - tolerance`` are nulled (checked AFTER the as-of
     selection, standard pandas/Flink semantics). Matched columns come
-    back as ``{prefix}{col}`` plus ``{prefix}{ts}``.
+    back as ``matched_{col}`` plus ``matched_{ts}``.
     """
     if right_cols is None:
         right_cols = [c for c in right.columns if c != key]
@@ -89,14 +88,14 @@ def asof_join(
         .select("_l", "_m")
     )
     cols = [F.col(f"_l.{c}").alias(c) for c in left.columns]
-    mcols = [F.col(f"_m.{c}").alias(f"{prefix}{c}") for c in right_cols]
+    mcols = [F.col(f"_m.{c}").alias(f"matched_{c}") for c in right_cols]
     out = out.select(*cols, *mcols)
     if tolerance is not None:
-        lag_ok = F.col(f"{prefix}{ts}") >= (F.col(ts) - tolerance)
+        lag_ok = F.col(f"matched_{ts}") >= (F.col(ts) - tolerance)
         out = out.select(
             *[F.col(c) for c in left.columns],
             *[
-                F.when(lag_ok, F.col(f"{prefix}{c}")).alias(f"{prefix}{c}")
+                F.when(lag_ok, F.col(f"matched_{c}")).alias(f"matched_{c}")
                 for c in right_cols
             ],
         )

@@ -65,8 +65,6 @@ def _offers(state: DataFrame, edges: DataFrame, on, to: str) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
     max_iters: int = 50,
 ) -> DataFrame:
     """Undirected connected components via hash-min label propagation:
@@ -93,7 +91,7 @@ def connected_components(
     ``nodes``: optional (node) DataFrame for singletons that appear in
     no edge — they come back labeled with themselves.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -173,9 +171,7 @@ def transitive_closure(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     return closure.select("node", "anc")
 
 
-def transitive_reduction(
-    edges: DataFrame, closure: DataFrame | None = None, max_iters: int = 30
-) -> DataFrame:
+def transitive_reduction(edges: DataFrame) -> DataFrame:
     """edges(child, parent) -> the minimal edge subset with the same
     transitive closure (valid for DAGs): drop every edge (a, b) for
     which some longer path a -> .. -> b exists, i.e. (a, b) is also a
@@ -194,8 +190,7 @@ def transitive_reduction(
     (child, parent). No driver collection at any size.
     """
     e = edges.select("child", "parent").distinct()
-    if closure is None:
-        closure = transitive_closure(e, max_iters=max_iters)
+    closure = transitive_closure(e)
     left = closure.select(
         F.col("node").alias("child"), F.col("anc").alias("_m")
     )
@@ -206,9 +201,7 @@ def transitive_reduction(
     return e.join(two_hop, ["child", "parent"], "left_anti")
 
 
-def cyclic_nodes(
-    edges: DataFrame, closure: DataFrame | None = None, max_iters: int = 30
-) -> DataFrame:
+def cyclic_nodes(edges: DataFrame) -> DataFrame:
     """edges(child, parent) -> (node) for every node on a directed
     cycle — the ontology-quality gate a KG build runs BEFORE trusting
     any closure-derived semantics. Every ancestor-closure consumer
@@ -224,13 +217,11 @@ def cyclic_nodes(
 
     Scale shape: inherits transitive_closure's iterated broadcast-or-
     hash joins; the final filter is a narrow predicate on the closure
-    — no extra shuffle beyond the closure itself, which the caller
-    usually needs anyway (pass it via ``closure=`` to share the plan).
+    — no extra shuffle beyond the closure itself.
     """
-    if closure is None:
-        closure = transitive_closure(edges, max_iters=max_iters)
     return (
-        closure.filter(F.col("node") == F.col("anc"))
+        transitive_closure(edges)
+        .filter(F.col("node") == F.col("anc"))
         .select("node")
         .distinct()
     )
@@ -239,9 +230,6 @@ def cyclic_nodes(
 def star_components(
     star_edges: DataFrame,
     nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 50,
     driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Two-level connected components specialized for star-contracted
@@ -267,7 +255,7 @@ def star_components(
 
     ``nodes``: optional singleton universe, as in connected_components.
     """
-    e = star_edges.select(F.col(src).alias("_r"), F.col(dst).alias("_d"))
+    e = star_edges.select(F.col("src").alias("_r"), F.col("dst").alias("_d"))
     e = e.localCheckpoint(eager=True)
     w = Window.partitionBy("_d")
     # the corpus-sized window output feeds THREE consumers (the probe
@@ -337,7 +325,7 @@ def star_components(
         )
         rep_labels = local_frame(spark, [(n, find(n)) for n in parent], schema)
     else:
-        rep_labels = connected_components(rep_edges, max_iters=max_iters)
+        rep_labels = connected_components(rep_edges)
     doc_labels = (
         dm.select(F.col("_d").alias("node"), F.col("_m").alias("_rep"))
         .distinct()
@@ -425,9 +413,6 @@ def bfs_distances(
 def sssp_distances(
     edges: DataFrame,
     sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
     max_iters: int = 60,
 ) -> DataFrame:
     """Weighted single-source-set shortest paths (non-negative edge
@@ -448,9 +433,9 @@ def sssp_distances(
     ``max_iters`` (silent truncation would mislabel reachable nodes).
     """
     e = edges.select(
-        F.col(src).alias("_s"),
-        F.col(dst).alias("_t"),
-        F.col(weight).cast("double").alias("_w"),
+        F.col("src").alias("_s"),
+        F.col("dst").alias("_t"),
+        F.col("w").cast("double").alias("_w"),
     ).repartition("_s")
 
     def step(dist, i):
@@ -474,13 +459,7 @@ def sssp_distances(
     return dist.select("node", "dist")
 
 
-def strongly_connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_trim_iters: int = 20,
-    max_iters: int = 30,
-) -> DataFrame:
+def strongly_connected_components(edges: DataFrame) -> DataFrame:
     """Directed SCCs: (node, component) with component = the smallest
     node id in the strongly connected component — the directed
     counterpart of :func:`connected_components`, used to collapse
@@ -499,7 +478,7 @@ def strongly_connected_components(
       overwhelming bulk is acyclic and trims away in a few rounds;
       each round is one node-keyed window over the edges' endpoint
       rows + one edge-keyed aggregate. Trim is only a shortcut: if it has not settled
-      within ``max_trim_iters`` it warns and the core phase takes the
+      within 20 rounds it warns and the core phase takes the
       larger residue; the result stays exact.
     * **Core**: on the surviving cyclic core, SCC(u) = min over
       {u} union {v : u ->* v and v ->* u}, computed as the semi-naive
@@ -517,8 +496,8 @@ def strongly_connected_components(
     deterministic for any input.
     """
     e = edges.select(
-        F.col(src).cast("string").alias("a"),
-        F.col(dst).cast("string").alias("b"),
+        F.col("src").cast("string").alias("a"),
+        F.col("dst").cast("string").alias("b"),
     ).distinct()
 
     def trim(core, i):
@@ -546,7 +525,7 @@ def strongly_connected_components(
     core = iterate(
         e,
         trim,
-        rounds=max_trim_iters,
+        rounds=20,
         until=lambda s: s.count(),
     )
     core_nodes = (
@@ -555,8 +534,7 @@ def strongly_connected_components(
         .distinct()
     )
     clo = transitive_closure(
-        core.select(F.col("a").alias("child"), F.col("b").alias("parent")),
-        max_iters=max_iters,
+        core.select(F.col("a").alias("child"), F.col("b").alias("parent"))
     )
     mutual = clo.join(
         clo.select(F.col("anc").alias("node"), F.col("node").alias("anc")),
@@ -579,8 +557,6 @@ def strongly_connected_components(
 
 def topo_layers(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iters: int = 50,
 ) -> DataFrame:
     """Longest-path topological layering of a DAG: (node, layer) with
@@ -609,8 +585,8 @@ def topo_layers(
     """
     e = (
         edges.select(
-            F.col(src).cast("string").alias("u"),
-            F.col(dst).cast("string").alias("v"),
+            F.col("src").cast("string").alias("u"),
+            F.col("dst").cast("string").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()

@@ -70,22 +70,18 @@ def _patterns_for(lang_col: Column, content_col: Column) -> Column:
 
 def extract_import_edges(
     df: DataFrame,
-    repo: str = "repo",
-    path: str = "path",
-    lang: str = "lang",
-    content: str = "content",
 ) -> DataFrame:
     """(repo, path, lang, module) — one row per distinct import edge
     per file. Map-only until the final distinct (keyed on the edge
     itself, map-side combinable); unsupported languages contribute
     zero rows rather than erroring, so a mixed 10^12-file corpus
     needs no pre-filter pass."""
-    mods = _patterns_for(F.col(lang), F.col(content))
+    mods = _patterns_for(F.col("lang"), F.col("content"))
     return (
         df.select(
-            F.col(repo).alias("repo"),
-            F.col(path).alias("path"),
-            F.lower(F.col(lang)).alias("lang"),
+            F.col("repo").alias("repo"),
+            F.col("path").alias("path"),
+            F.lower(F.col("lang")).alias("lang"),
             F.explode(mods).alias("module"),
         )
         .distinct()
@@ -144,25 +140,21 @@ def identifier_subtokens(content_col: Column) -> Column:
     return F.flatten(F.transform(ids, split_one))
 
 
-def identifier_vocab(
-    df: DataFrame, content: str = "content"
-) -> DataFrame:
+def identifier_vocab(df: DataFrame) -> DataFrame:
     """Corpus-wide identifier-subtoken vocabulary: (token, n) counts.
     The shuffle is keyed on the token with full map-side combine —
     the same shape as word-count, the canonical linear-scale
     aggregation."""
     return (
         df.select(
-            F.explode(identifier_subtokens(F.col(content))).alias("token")
+            F.explode(identifier_subtokens(F.col("content"))).alias("token")
         )
         .groupBy("token")
         .agg(F.count("*").alias("n"))
     )
 
 
-def path_stats(
-    df: DataFrame, repo: str = "repo", path: str = "path"
-) -> DataFrame:
+def path_stats(df: DataFrame) -> DataFrame:
     """Per-(repo, extension) file-tree profile: file count, mean
     directory depth (segments below the repo root), and max depth —
     the corpus-shape dashboard of a code ingest (vendored-tree
@@ -172,15 +164,15 @@ def path_stats(
     depth = number of '/' separators. Pure Column algebra on the
     path string; one (repo, ext)-keyed combinable aggregate —
     content is never touched, so the scan prunes to two columns."""
-    last_seg = F.element_at(F.split(F.col(path), "/"), -1)
+    last_seg = F.element_at(F.split(F.col("path"), "/"), -1)
     ext = F.when(
         last_seg.contains("."),
         F.lower(F.element_at(F.split(last_seg, r"\."), -1)),
     ).otherwise(F.lit(""))
-    depth = F.size(F.split(F.col(path), "/")) - 1
+    depth = F.size(F.split(F.col("path"), "/")) - 1
     return (
         df.select(
-            F.col(repo).alias("repo"),
+            F.col("repo").alias("repo"),
             ext.alias("ext"),
             depth.alias("_d"),
         )
@@ -195,8 +187,6 @@ def path_stats(
 
 def repo_fork_candidates(
     df: DataFrame,
-    repo: str = "repo",
-    path: str = "path",
     threshold: float = 0.5,
     max_path_df: int | None = None,
 ) -> DataFrame:
@@ -215,7 +205,7 @@ def repo_fork_candidates(
     every repo and alone would fan out |repos|² pair rows), same
     discipline as dedup.decontaminate's max_train_df."""
     sets = df.select(
-        F.col(repo).alias("_r"), F.col(path).alias("_p")
+        F.col("repo").alias("_r"), F.col("path").alias("_p")
     ).distinct()
     if max_path_df is not None:
         dfreq = sets.groupBy("_p").agg(F.count("*").alias("_df"))

@@ -19,25 +19,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    anchor: str = "2024-01-01",
-    period_days: int = 7,
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """(cohort_period, period_offset, n_users, cohort_size,
     retention) — one row per cohort × offset actually observed.
-    ``cohort_period`` = floor(days since anchor / period) of the
+    ``cohort_period`` = floor(days since 2024-01-01 / 7) of the
     user's first event; ``retention`` = n_users / cohort_size
     rounded to 6 places (offset 0 is 1.0 by construction)."""
     period = F.floor(
-        F.datediff(F.to_date(F.col(ts_col)), F.to_date(F.lit(anchor)))
-        / period_days
+        F.datediff(F.to_date(F.col("ts")), F.to_date(F.lit("2024-01-01")))
+        / 7
     )
     uw = (
         events.select(
-            F.col(user_col).alias("_u"), period.alias("_p")
+            F.col("user_id").alias("_u"), period.alias("_p")
         )
         .distinct()
     )

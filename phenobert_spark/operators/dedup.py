@@ -41,88 +41,31 @@ def _shingles(text_col, w: int = 3):
     )
 
 
-_MERSENNE_31 = (1 << 31) - 1
-
-
-def _cw_params(i: int) -> tuple[int, int]:
-    """Deterministic Carter-Wegman (a, b) for seed i: odd a in
-    [1, 2^31), b in [0, 2^31) — derived from fixed multiplicative
-    constants, no RNG state."""
-    a = ((2654435761 * (i + 1)) % _MERSENNE_31) | 1
-    b = (40503 * (i + 7) ** 2) % _MERSENNE_31
-    return a, b
-
-
 def minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 4,
     shingle_w: int = 3,
-    hash_family: str = "md5",
 ) -> DataFrame:
-    """(id, mh1..mhN): per-document MinHash signature.
+    """(id, mh1..mhN): per-document MinHash signature, the q17
+    DuckDB-oracle-portable family: ONE md5 per shingle, split into N
+    disjoint 8-hex-char windows — each window is an independent 32-bit
+    hash, so taking the per-window lexicographic min gives N
+    independent minhashes with a quarter of the digest work of N
+    seeded md5 calls. n_hashes <= 4.
 
-    Two hash families, identical output shape (8-hex-char strings, so
-    downstream banding is family-agnostic):
-
-    * ``md5`` (default; the q17 DuckDB-oracle-portable family): ONE
-      md5 per shingle, split into N disjoint 8-hex-char windows — each
-      window is an independent 32-bit hash, so taking the per-window
-      lexicographic min gives N independent minhashes with a quarter
-      of the digest work of N seeded md5 calls. n_hashes <= 4.
-    * ``xxhash`` (the wide-signature family): ONE xxhash64 per shingle
-      (JVM intrinsic, no digest), reduced mod the Mersenne prime
-      2^31-1, then N Carter-Wegman affine maps (a_i*h + b_i) mod p —
-      per EXTRA hash the cost is two multiplies, not another digest.
-      Operands stay < 2^62 so ANSI-mode arithmetic can't overflow.
-      Measured at sf0.1 x4 (20k docs): md5/4 3.45s, xxhash/4 3.28s,
-      xxhash/16 4.01s — shingle construction dominates both families,
-      so the win is WIDTH: 4x the signature (tighter Jaccard estimates,
-      finer band geometry) for +22% wall instead of 4x the digest work.
-      Supports n_hashes up to 16.
-
-    Plan shape (both): the expensive hash runs ONCE per shingle inside
-    a single transform(); the struct-accumulator aggregate then only
-    slices (md5) or multiplies (xxhash). A per-seed
-    ``array_min(transform(...))`` would re-tokenize and re-shingle the
-    text per seed (lambdas block common-subexpression elimination).
+    Plan shape: the md5 runs ONCE per shingle inside a single
+    transform(); the struct-accumulator aggregate then only slices
+    it. A per-seed ``array_min(transform(...))`` would re-tokenize and
+    re-shingle the text per seed (lambdas block common-subexpression
+    elimination).
 
     The input is fanned out to cluster parallelism first: the digest
     pass is pure per-row CPU, and a single-row-group parquet scan
     otherwise pins it to one task (measured q17 sf0.1: 3.63s -> 0.83s
     on local[32]; no-op when the scan is already parallel)."""
-    df = fanout(df, id_col)
-    sh = _shingles(F.col(text_col), shingle_w)
+    df = fanout(df, "doc_id")
+    sh = _shingles(F.col("text"), shingle_w)
     names = [f"mh{i+1}" for i in range(n_hashes)]
-    if hash_family == "xxhash":
-        if n_hashes > 16:
-            raise ValueError("n_hashes <= 16 for the xxhash family")
-        p = F.lit(_MERSENNE_31)
-        hs = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), p))
-        params = [_cw_params(i) for i in range(n_hashes)]
-        init = F.struct(
-            *[F.lit(_MERSENNE_31).cast("bigint").alias(n) for n in names]
-        )
-
-        def step(acc, h):
-            return F.struct(
-                *[
-                    F.least(
-                        acc[n], F.pmod(F.lit(a) * h + F.lit(b), p)
-                    ).alias(n)
-                    for (a, b), n in zip(params, names)
-                ]
-            )
-
-        agg = F.aggregate(hs, init, step)
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            *[
-                F.lpad(F.lower(F.hex(agg[n])), 8, "0").alias(n)
-                for n in names
-            ],
-        )
     if n_hashes > 4:
         raise ValueError("n_hashes <= 4 (one md5 split into 8-hex windows)")
     hs = F.transform(sh, F.md5)
@@ -138,29 +81,26 @@ def minhash_signatures(
 
     agg = F.aggregate(hs, init, step)
     return df.select(
-        F.col(id_col).alias("doc_id"), *[agg[n].alias(n) for n in names]
+        F.col("doc_id").alias("doc_id"), *[agg[n].alias(n) for n in names]
     )
 
 
 def _bands_and_signatures(
-    signatures: DataFrame, bands: list[list[str]] | None
+    signatures: DataFrame,
 ) -> tuple[list[list[str]], DataFrame]:
-    """``bands``, by default the mh* signature columns split in two
-    halves (one band for a single column), and the signatures,
-    checkpointed so that the per-band branches do not re-derive them."""
-    if bands is None:
-        sig_cols = [c for c in signatures.columns if c.startswith("mh")]
-        half = max(len(sig_cols) // 2, 1)
-        bands = [sig_cols[:half], sig_cols[half:] or sig_cols[:half]]
+    """The bands, the mh* signature columns split in two halves (one
+    band for a single column), and the signatures, checkpointed so
+    that the per-band branches do not re-derive them."""
+    sig_cols = [c for c in signatures.columns if c.startswith("mh")]
+    half = max(len(sig_cols) // 2, 1)
+    bands = [sig_cols[:half], sig_cols[half:] or sig_cols[:half]]
     return bands, signatures.localCheckpoint(eager=False)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: list[list[str]] | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Band the signature columns and self-join on band hash ->
     (doc_a < doc_b) near-duplicate candidate pairs."""
-    bands, sig = _bands_and_signatures(signatures, bands)
+    bands, sig = _bands_and_signatures(signatures)
     banded = None
     for cols in bands:
         b = sig.select("doc_id", F.md5(F.concat(*cols)).alias("band"))
@@ -177,9 +117,7 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_star_edges(
-    signatures: DataFrame, bands: list[list[str]] | None = None
-) -> DataFrame:
+def lsh_star_edges(signatures: DataFrame) -> DataFrame:
     """Star-contracted LSH edges for CLUSTERING: every doc is linked to
     its band-bucket REPRESENTATIVE (the min doc_id in the bucket)
     instead of to every bucket-mate.
@@ -207,7 +145,7 @@ def lsh_star_edges(
     its collision bound at ~10^10-doc scale instead of sharing one
     pool across every band.
     """
-    bands, sig = _bands_and_signatures(signatures, bands)
+    bands, sig = _bands_and_signatures(signatures)
     banded = None
     for i, cols in enumerate(bands):
         b = sig.select(
@@ -227,8 +165,6 @@ def lsh_star_edges(
 
 def simhash(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bits: int = 63,
     fan: bool = True,
 ) -> DataFrame:
@@ -248,9 +184,9 @@ def simhash(
     exchange for nothing. Pair-finding consumers (q36 banding) keep
     the default."""
     if fan:
-        df = fanout(df, id_col)  # per-row CPU pass; see minhash_signatures
-    hs = F.transform(F.split(F.lower(F.trim(text_col)), r"\s+"), F.md5)
-    out = df.select(F.col(id_col).alias("doc_id"), hs.alias("_hs"))
+        df = fanout(df, "doc_id")  # per-row CPU pass; see minhash_signatures
+    hs = F.transform(F.split(F.lower(F.trim("text")), r"\s+"), F.md5)
+    out = df.select(F.col("doc_id").alias("doc_id"), hs.alias("_hs"))
     high = F.array([F.lit(c) for c in "89abcdef"])
     positions = F.sequence(F.lit(1), F.lit(n_bits))
 
@@ -373,8 +309,6 @@ def hamming_neighbors_banded(
 
 def jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.2,
 ) -> DataFrame:
     """Token-set Jaccard pairs above ``threshold``.
@@ -382,8 +316,8 @@ def jaccard_pairs(
     SMALL-N / ORACLE ONLY: O(n^2) non-equi self-join kept as the
     brute-force twin. The scale path is ``jaccard_pairs_prefix``
     (PPJoin-style prefix filter, identical output)."""
-    toks = F.array_distinct(F.split(F.lower(F.trim(text_col)), r"\s+"))
-    t = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = F.array_distinct(F.split(F.lower(F.trim("text")), r"\s+"))
+    t = df.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
     a = t.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
     b = t.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
     inter = F.size(F.array_intersect("ta", "tb")).cast("double")
@@ -398,8 +332,6 @@ def jaccard_pairs(
 
 def jaccard_pairs_prefix(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.2,
 ) -> DataFrame:
     """Scale path for ``jaccard_pairs``: exact prefix-filtered set
@@ -425,8 +357,8 @@ def jaccard_pairs_prefix(
     floating-point rounding).
     """
     eps = 1e-9
-    toks = F.array_distinct(F.split(F.lower(F.trim(text_col)), r"\s+"))
-    t = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = F.array_distinct(F.split(F.lower(F.trim("text")), r"\s+"))
+    t = df.select(F.col("doc_id").alias("doc_id"), toks.alias("toks"))
     exploded = t.select(
         "doc_id", F.size("toks").alias("sz"), F.explode("toks").alias("tok")
     )
@@ -472,8 +404,6 @@ def jaccard_pairs_prefix(
 def cdc_chunks(
     docs: DataFrame,
     window: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Content-defined chunking (rolling-hash fingerprinting for
     SUB-document dedup): a position ends a chunk when the hash of the
@@ -493,10 +423,10 @@ def cdc_chunks(
     # documents shorter than one window have no interior boundary and
     # become a single whole-document chunk (the tail-append below)
     ends = F.expr(
-        f"""CASE WHEN length({text_col}) < {w} THEN CAST(array() AS ARRAY<INT>)
+        f"""CASE WHEN length(text) < {w} THEN CAST(array() AS ARRAY<INT>)
             ELSE filter(
-              transform(sequence(1, length({text_col}) - {w} + 1),
-                        i -> CASE WHEN substr(md5(substring({text_col}, i, {w})), 1, 1) = '0'
+              transform(sequence(1, length(text) - {w} + 1),
+                        i -> CASE WHEN substr(md5(substring(text, i, {w})), 1, 1) = '0'
                                   THEN i + {w} - 1 END),
               x -> x IS NOT NULL) END"""
     )
@@ -504,8 +434,8 @@ def cdc_chunks(
         "_ends",
         F.when(
             (F.size("_ends") == 0)
-            | (F.element_at("_ends", -1) != F.length(text_col)),
-            F.concat("_ends", F.array(F.length(text_col))),
+            | (F.element_at("_ends", -1) != F.length("text")),
+            F.concat("_ends", F.array(F.length("text"))),
         ).otherwise(F.col("_ends")),
     )
     starts = F.expr(
@@ -515,13 +445,13 @@ def cdc_chunks(
         f"""transform(_starts, (s, i) ->
               struct(i AS chunk_idx, s AS chunk_start,
                      _ends[i] - s + 1 AS chunk_len,
-                     md5(substring({text_col}, s, _ends[i] - s + 1)) AS chunk_hash))"""
+                     md5(substring(text, s, _ends[i] - s + 1)) AS chunk_hash))"""
     )
     return (
         docs.withColumn("_starts", starts)
         .withColumn("_c", F.explode(chunks))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_c.chunk_idx").cast("bigint").alias("chunk_idx"),
             F.col("_c.chunk_start").cast("bigint").alias("chunk_start"),
             F.col("_c.chunk_len").cast("bigint").alias("chunk_len"),
@@ -531,11 +461,12 @@ def cdc_chunks(
     )
 
 
-def _token_ngrams(text_col: str, w: int):
-    """Per-row array of w-token n-gram STRINGS over whitespace tokens
-    (shorter docs get an empty array — Spark's ``sequence(1, 0)`` is
-    DESCENDING, so the length guard is load-bearing)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+def _token_ngrams(w: int):
+    """Per-row array of w-token n-gram STRINGS over the whitespace
+    tokens of ``text`` (shorter docs get an empty array — Spark's
+    ``sequence(1, 0)`` is DESCENDING, so the length guard is
+    load-bearing)."""
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     return F.when(
         F.size(toks) >= w,
         F.transform(
@@ -548,14 +479,10 @@ def _token_ngrams(text_col: str, w: int):
 def dup_ngram_stats(
     docs: DataFrame,
     w: int = 8,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Exact duplicated-substring signal per document: for every doc,
-    how many of its w-token n-gram positions occur in >= ``min_docs``
-    DISTINCT documents — the corpus-level memorization/boilerplate
+    how many of its w-token n-gram positions occur in >= 2 DISTINCT
+    documents — the corpus-level memorization/boilerplate
     measure behind substring-level training-data dedup (flag/trim docs
     whose dup_ratio is high instead of whole-doc near-dup matching).
 
@@ -564,18 +491,14 @@ def dup_ngram_stats(
     Plan: one (gram, doc) pre-aggregate (map-side combiner absorbs
     within-doc repeats), one gram-keyed distinct-doc count, one join
     back, one doc-keyed sum — every shuffle is keyed, nothing is
-    O(n^2). ``hash_grams=True`` replaces the gram string with xxhash64
-    on the wire (the 100-TB path: 8 bytes/gram instead of ~50, at the
-    cost of a ~2^-64 collision rate); the contract query keeps strings
-    so DuckDB re-derives values exactly (q106)."""
-    grams = _token_ngrams(text_col, int(w))
+    O(n^2). Grams stay strings so DuckDB re-derives values exactly
+    (q106)."""
+    grams = _token_ngrams(int(w))
     g = docs.select(
-        F.col(id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         F.size(grams).alias("n_grams"),
         F.explode_outer(grams).alias("gram"),
     )
-    if hash_grams:
-        g = g.withColumn("gram", F.xxhash64("gram"))
     per_doc = g.groupBy("_doc").agg(F.max("n_grams").alias("n_grams"))
     gd = (
         g.filter(F.col("gram").isNotNull())
@@ -585,7 +508,7 @@ def dup_ngram_stats(
     dup = (
         gd.groupBy("gram")
         .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") >= int(min_docs))
+        .filter(F.col("_df") >= 2)
         .select("gram")
     )
     ndup = (
@@ -596,7 +519,7 @@ def dup_ngram_stats(
     return (
         per_doc.join(ndup, on="_doc", how="left")
         .select(
-            F.col("_doc").alias(id_col),
+            F.col("_doc").alias("doc_id"),
             F.col("n_grams").cast("bigint").alias("n_grams"),
             F.coalesce("n_dup", F.lit(0)).cast("bigint").alias("n_dup"),
             F.round(
@@ -614,8 +537,6 @@ def winnow_fingerprints(
     docs: DataFrame,
     k: int = 5,
     window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every k-token n-gram, slide a
@@ -631,7 +552,7 @@ def winnow_fingerprints(
     (whole-stage codegen, zero shuffle); the distinct is one keyed
     exchange on (doc, fingerprint). md5-hex is the hash — identical
     byte-for-byte in DuckDB, so q107 value-checks every fingerprint."""
-    grams = _token_ngrams(text_col, int(k))
+    grams = _token_ngrams(int(k))
     hashes = F.transform(grams, F.md5)
     win = int(window)
     fps = F.when(
@@ -648,7 +569,7 @@ def winnow_fingerprints(
         )
     )
     return (
-        docs.select(F.col(id_col), F.explode(fps).alias("fingerprint"))
+        docs.select(F.col("doc_id"), F.explode(fps).alias("fingerprint"))
         .distinct()
     )
 
@@ -657,10 +578,7 @@ def ngram_contamination(
     train: DataFrame,
     test: DataFrame,
     w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_train_df: int | None = None,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3/Pile recipe): for every
     test document, which train documents share at least one distinct
@@ -678,17 +596,13 @@ def ngram_contamination(
     ubiquitous boilerplate is a skewed hot key AND precisely the gram
     that signals template reuse rather than benchmark leakage —
     removing it is standard practice, and both q115 engines apply the
-    identical cut. ``hash_grams=True`` is the 8-bytes-per-gram wire
-    variant (same trade as :func:`dup_ngram_stats`)."""
-    grams = _token_ngrams(text_col, int(w))
+    identical cut."""
+    grams = _token_ngrams(int(w))
 
     def side(df, name):
-        g = df.select(
-            F.col(id_col).alias(name), F.explode(grams).alias("gram")
-        )
-        if hash_grams:
-            g = g.withColumn("gram", F.xxhash64("gram"))
-        return g.distinct()
+        return df.select(
+            F.col("doc_id").alias(name), F.explode(grams).alias("gram")
+        ).distinct()
 
     tr = side(train, "train_doc")
     te = side(test, "test_doc")
@@ -719,10 +633,6 @@ def ngram_contamination(
 def incremental_dedup_status(
     incoming: DataFrame,
     seen: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 4,
-    shingle_w: int = 3,
 ) -> DataFrame:
     """Incremental (new-vs-seen) dedup: classify every INCOMING doc
     against an already-ingested SEEN snapshot without ever re-pairing
@@ -745,8 +655,8 @@ def incremental_dedup_status(
     so any engine can re-verify membership (q124's oracle recomputes
     every status row in DuckDB).
     """
-    ck = F.md5(F.lower(F.trim(F.col(text_col))))
-    inc = incoming.select(F.col(id_col).alias("doc_id"), ck.alias("_ck"))
+    ck = F.md5(F.lower(F.trim(F.col("text"))))
+    inc = incoming.select(F.col("doc_id").alias("doc_id"), ck.alias("_ck"))
     seen_ck = (
         seen.select(ck.alias("_ck"))
         .distinct()
@@ -755,15 +665,9 @@ def incremental_dedup_status(
     batch_min = inc.groupBy("_ck").agg(F.min("doc_id").alias("_first"))
 
     def _bands(df):
-        sig = minhash_signatures(
-            df, text_col=text_col, id_col=id_col,
-            n_hashes=n_hashes, shingle_w=shingle_w,
-        )
-        names = [f"mh{i+1}" for i in range(n_hashes)]
-        half = max(n_hashes // 2, 1)
-        groups = [names[:half], names[half:] or names[:half]]
+        sig = minhash_signatures(df)
         out = None
-        for i, cols in enumerate(groups):
+        for i, cols in enumerate((["mh1", "mh2"], ["mh3", "mh4"])):
             b = sig.select(
                 "doc_id", F.md5(F.concat(F.lit(str(i)), *cols)).alias("_band")
             )

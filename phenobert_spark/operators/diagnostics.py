@@ -24,16 +24,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def key_skew_profile(
-    df: DataFrame, key_cols: list[str], top_n: int = 20, sep: str = "\x01"
-) -> DataFrame:
+def key_skew_profile(df: DataFrame, key_cols: list[str], top_n: int = 20) -> DataFrame:
     """Top-``top_n`` keys by row count with per-key and cumulative
     row share in parts-per-million (integer ppm keeps the contract
     cross-engine exact — no float division ordering to disagree on).
 
     Returns (rank, key, cnt, share_ppm, cum_share_ppm) ordered by
-    rank; ``key`` is the ``sep``-joined composite key — the default
-    \\x01 separator keeps composite keys unambiguous (plain
+    rank; ``key`` is the \\x01-joined composite key — the \\x01
+    separator keeps composite keys unambiguous (plain
     concatenation would collide ("1", "2x") with ("12", "x")). Ties
     on count break by key string so the profile is deterministic.
     """
@@ -43,7 +41,7 @@ def key_skew_profile(
     if total == 0:
         raise ValueError("cannot profile an empty frame")
     key = F.concat_ws(
-        sep, *[F.col(c).cast("string") for c in key_cols]
+        "\x01", *[F.col(c).cast("string") for c in key_cols]
     ).alias("key")
     counts = (
         df.select(key)

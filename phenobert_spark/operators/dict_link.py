@@ -2,22 +2,30 @@
 ``matchPhrase2HPO`` util.py:409-421 applied at util.py:1044-1052).
 
 Tiered broadcast hash joins against the ontology surface-form
-dimension, highest priority wins via ``coalesce``:
+dimension, highest priority first via ``coalesce``. Each tier is named
+by the ``prio`` of the dictionary rows it joins and the candidate
+column that probes them (its join alias in brackets):
 
-1. exact sorted-bag key (score 1.0),
-2. lemma/orthography-folded key for the misses (score 1.0),
-3. mined+seeded synonym-variant keys in lemma space (score 0.9;
-   present when the syn tier is enabled),
-4. stemmed-key tier (score 0.85; morphological-variant extension
-   beyond the reference — ranked below the syn tier because stem
-   matches are unvalidated suffix surgery, see dictionary_link),
-5. dictionary-side drop-one variants (score 0.8; default-off).
+* prio 0-1 by ``key`` (``_h1``): strict and simplified sorted-bag
+  keys, score 1.0;
+* prio 0-1 by ``lemma_key`` (``_h2``): the same rows for the misses,
+  through the lemma/orthography-folded key, score 1.0;
+* prio 3 by ``lemma_key`` (``_h4``): combining-prefix splits and
+  mined+seeded synonym variants in lemma space, score 0.9; only with
+  the synonym tier;
+* prio 2 by ``stem_key`` (``_h3``): stemmed keys, score 0.85
+  (morphological-variant extension beyond the reference — ranked
+  below the prio-3 tier because stem matches are unvalidated suffix
+  surgery, see dictionary_link);
+* prio 4 by ``lemma_key`` (``_h5``): dictionary-side drop-one
+  variants, score 0.8; default-off.
 
-Tiers 3 and 5 are skipped entirely — no join in the plan — when their
-rows are absent (``has_syn_tier`` / ``has_drop_one``). The dictionary
-is ~50-150k rows depending on tiers (BASELINE.md) — a textbook
-broadcast dimension; every join is a BroadcastHashJoin with zero
-shuffle. Exact/lemma matches carry score 1.0 (util.py:1052).
+The prio-3 and prio-4 tiers are skipped entirely — no join in the
+plan — when their rows are absent (``has_syn_tier`` /
+``has_drop_one``). The dictionary is ~50-150k rows depending on tiers
+(BASELINE.md) — a textbook broadcast dimension; every join is a
+BroadcastHashJoin with zero shuffle. Exact/lemma matches carry score
+1.0 (util.py:1052).
 """
 
 from __future__ import annotations

@@ -20,10 +20,8 @@ Scale shape (100 TB):
 
 * ``blocked_matches`` shuffles once on the blocking key; pair fan-out
   is bounded by block size, never corpus size. A pathological hot
-  block (empty/default key values) is the known failure mode — the
-  optional ``max_block_size`` drops oversized blocks up front (the
-  standard ER guard; dropped blocks are exactly the keys a production
-  run routes to a dedicated pass).
+  block (empty/default key values) is the known failure mode; a
+  production run routes such keys to a dedicated pass.
 * ``negative_sample_triples`` touches the corpus-sized edge table with
   two narrow equi-joins against the ENTITY index, which is vocabulary-
   sized (dim-table scale) and broadcast by AQE. The index's global
@@ -43,7 +41,6 @@ def blocked_matches(
     name_col: str,
     block_cols: list,
     max_edit: int = 2,
-    max_block_size: int | None = None,
 ) -> DataFrame:
     """Within-block candidate pairs scored by Levenshtein distance.
 
@@ -60,13 +57,6 @@ def blocked_matches(
         F.col(id_col).alias("_id"), F.col(name_col).alias("_name"), *blocks
     )
     bk = [f"_bk{i}" for i in range(len(block_cols))]
-    if max_block_size is not None:
-        sizes = keyed.groupBy(*bk).agg(F.count("*").alias("_bsz"))
-        keyed = keyed.join(
-            sizes.filter(F.col("_bsz") <= max_block_size).drop("_bsz"),
-            on=bk,
-            how="inner",
-        )
     a = keyed.select(
         *bk, F.col("_id").alias("id_a"), F.col("_name").alias("name_a")
     )
@@ -178,11 +168,6 @@ def negative_sample_triples(
 
 def fuse_triples(
     triples: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    source: str = "src",
-    confidence: str = "conf",
 ) -> DataFrame:
     """Knowledge fusion / conflict resolution: many extractors (or many
     documents) assert conflicting objects for the same (subject,
@@ -202,13 +187,13 @@ def fuse_triples(
     DISTINCT competing objects (small by construction), never the
     number of supporting mentions. No driver collection.
     """
-    support = triples.groupBy(subj, pred, obj).agg(
-        F.sum(confidence).alias("support"),
-        F.countDistinct(source).alias("n_src"),
+    support = triples.groupBy("subj", "pred", "obj").agg(
+        F.sum("conf").alias("support"),
+        F.countDistinct("src").alias("n_src"),
     )
-    grp = Window.partitionBy(subj, pred)
+    grp = Window.partitionBy("subj", "pred")
     w = grp.orderBy(
-        F.col("support").desc(), F.col("n_src").desc(), F.col(obj).asc()
+        F.col("support").desc(), F.col("n_src").desc(), F.col("obj").asc()
     )
     return (
         support.withColumn("n_alt", F.count(F.lit(1)).over(grp))
@@ -220,11 +205,6 @@ def fuse_triples(
 
 def pool_evidence(
     mentions: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    score: str = "score",
-    cap: float = 0.999999,
 ) -> DataFrame:
     """Noisy-OR evidence pooling: mention-level extraction scores →
     one KG-level triple confidence.
@@ -233,7 +213,7 @@ def pool_evidence(
     probability ``score``; the pooled confidence is
     ``1 - prod(1 - score_i)`` (the noisy-OR of Knowledge-Vault-style
     fusion — many weak mentions accumulate toward certainty, one
-    strong mention suffices). Scores are clamped to ``[0, cap]`` so a
+    strong mention suffices). Scores are clamped to ``[0, 0.999999]`` so a
     single 1.0 mention cannot zero the product and erase the
     remaining evidence count's contribution to downstream tie-breaks.
 
@@ -243,10 +223,10 @@ def pool_evidence(
     per-group collection; this is the aggregation that turns 10^12
     mention rows into the (much smaller) KG edge table.
     """
-    s = F.least(F.greatest(F.col(score), F.lit(0.0)), F.lit(cap))
+    s = F.least(F.greatest(F.col("score"), F.lit(0.0)), F.lit(0.999999))
     return (
-        mentions.select(subj, pred, obj, s.alias("_s"))
-        .groupBy(subj, pred, obj)
+        mentions.select("subj", "pred", "obj", s.alias("_s"))
+        .groupBy("subj", "pred", "obj")
         .agg(
             F.count("*").alias("n_mentions"),
             F.round(F.max("_s"), 6).alias("max_score"),
@@ -353,9 +333,6 @@ def sorted_neighborhood_matches(
 
 def bcubed_scores(
     df: DataFrame,
-    item: str = "item",
-    gold: str = "gold",
-    pred: str = "pred",
 ) -> DataFrame:
     """B-cubed precision/recall/F1 of a predicted clustering against
     gold clusters (Bagga & Baldwin 1998) — the standard extrinsic
@@ -378,9 +355,9 @@ def bcubed_scores(
     bounded by the count tables not the pair space.
     """
     items = df.select(
-        F.col(item).alias("_i"),
-        F.col(gold).cast("string").alias("_g"),
-        F.col(pred).cast("string").alias("_p"),
+        F.col("item").alias("_i"),
+        F.col("gold").cast("string").alias("_g"),
+        F.col("pred").cast("string").alias("_p"),
     )
     both = items.groupBy("_g", "_p").agg(F.count("*").alias("_n"))
     gsz = items.groupBy("_g").agg(F.count("*").alias("_gn"))
@@ -414,8 +391,6 @@ def blocking_quality(
     candidates: DataFrame,
     gold: DataFrame,
     n_items: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Blocking-scheme quality report (Christen 2012's standard
     trio): how much of the quadratic pair space a blocking key throws
@@ -441,8 +416,8 @@ def blocking_quality(
     def _canon(df: DataFrame) -> DataFrame:
         return (
             df.select(
-                F.least(F.col(id_a), F.col(id_b)).alias("_a"),
-                F.greatest(F.col(id_a), F.col(id_b)).alias("_b"),
+                F.least(F.col("id_a"), F.col("id_b")).alias("_a"),
+                F.greatest(F.col("id_a"), F.col("id_b")).alias("_b"),
             )
             # a self-pair is not a candidate match and would inflate
             # n_candidates / deflate pairs_quality

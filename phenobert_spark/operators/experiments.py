@@ -3,7 +3,7 @@
 Two shapes every event-stream consumer eventually asks for:
 
 * :func:`ab_test_report` — per-variant conversion with the classic
-  two-proportion pooled z statistic against a named control: the
+  two-proportion pooled z statistic against control variant A: the
   readout of an A/B experiment. The user's variant comes from
   wherever the caller derives it (typically the engine's
   deterministic md5 hash-split, operators/sampling.hash_split, so
@@ -27,26 +27,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ab_test_report(
-    assignments: DataFrame,
-    variant_col: str = "variant",
-    converted_col: str = "converted",
-    control: str = "A",
-) -> DataFrame:
+def ab_test_report(assignments: DataFrame) -> DataFrame:
     """Per-variant conversion readout from one row per experimental
     unit (user): ``(variant, n_users, n_conv, rate, lift_vs_control,
     z_vs_control)``, rates rounded to 6. ``z_vs_control`` is the
     pooled two-proportion z statistic (the control row itself reads
-    0); raises if ``control`` is absent from the data."""
-    g = assignments.groupBy(F.col(variant_col).alias("variant")).agg(
+    0); variant ``A`` is the control, and it raises if ``A`` is absent
+    from the data."""
+    g = assignments.groupBy(F.col("variant").alias("variant")).agg(
         F.count("*").alias("n_users"),
-        F.sum(F.col(converted_col).cast("long")).alias("n_conv"),
+        F.sum(F.col("converted").cast("long")).alias("n_conv"),
     )
-    ctrl = g.filter(F.col("variant") == control).select(
+    ctrl = g.filter(F.col("variant") == "A").select(
         F.col("n_users").alias("_cn"), F.col("n_conv").alias("_cc")
     )
     if ctrl.isEmpty():
-        raise ValueError(f"control variant {control!r} not present")
+        raise ValueError("control variant 'A' not present")
     j = g.crossJoin(F.broadcast(ctrl))
     p = F.col("n_conv") / F.col("n_users")
     pc = F.col("_cc") / F.col("_cn")
@@ -59,7 +55,7 @@ def ab_test_report(
     # se == 0 (all or none converted in both arms) makes z undefined;
     # report 0 rather than erroring under ANSI division.
     z = F.when(
-        (F.col("variant") == control) | (se == 0), F.lit(0.0)
+        (F.col("variant") == "A") | (se == 0), F.lit(0.0)
     ).otherwise((p - pc) / se)
     return j.select(
         "variant",
@@ -70,7 +66,7 @@ def ab_test_report(
             # pc == 0 (control arm with zero conversions) makes the
             # lift undefined; report NULL rather than erroring under
             # ANSI division, mirroring the se == 0 guard on z.
-            F.when(F.col("variant") == control, F.lit(0.0)).when(
+            F.when(F.col("variant") == "A", F.lit(0.0)).when(
                 pc > 0, p / pc - 1
             ),
             6,

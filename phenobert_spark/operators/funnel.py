@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 def funnel(
     events: DataFrame,
     stages: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     max_span=None,
 ) -> DataFrame:
     """Per-user funnel match times: one row per user who reached
@@ -51,13 +48,13 @@ def funnel(
     """
     if not stages:
         raise ValueError("funnel needs at least one stage")
-    stage1 = events.filter(F.col(type_col) == stages[0])
+    stage1 = events.filter(F.col("event_type") == stages[0])
     if max_span is None:
         # No window constraint: the earliest stage-1 event dominates
         # every later anchor (each chained min is monotone in the
         # previous match time), so one anchor per user is exact.
-        out = stage1.groupBy(F.col(user_col).alias("user_id")).agg(
-            F.min(ts_col).alias("t1")
+        out = stage1.groupBy(F.col("user_id").alias("user_id")).agg(
+            F.min("ts").alias("t1")
         )
         anchor_keys = ["user_id"]
     else:
@@ -67,12 +64,12 @@ def funnel(
         # stages is preserved; hot users with many anchors are the same
         # rows a per-user sort-window would have concentrated anyway.
         out = stage1.select(
-            F.col(user_col).alias("user_id"), F.col(ts_col).alias("t1")
+            F.col("user_id").alias("user_id"), F.col("ts").alias("t1")
         ).distinct()
         anchor_keys = ["user_id", "t1"]
     for k, stage in enumerate(stages[1:], start=2):
-        ev = events.filter(F.col(type_col) == stage).select(
-            F.col(user_col).alias("user_id"), F.col(ts_col).alias("_t")
+        ev = events.filter(F.col("event_type") == stage).select(
+            F.col("user_id").alias("user_id"), F.col("ts").alias("_t")
         )
         cond = F.col("_t") > F.col(f"t{k - 1}")
         if max_span is not None:

@@ -26,9 +26,6 @@ from pyspark.sql import functions as F
 
 def coalesce_intervals(
     df: DataFrame,
-    key: str = "key",
-    start: str = "start",
-    end: str = "end",
 ) -> DataFrame:
     """Merge overlapping or abutting half-open intervals per key into
     maximal islands: rows i and j merge iff some chain of intervals
@@ -48,38 +45,34 @@ def coalesce_intervals(
     row every per-key window in this engine carries (spans.py J3/J4),
     bounded by that key's fact count, not the corpus.
     """
-    w = Window.partitionBy(key).orderBy(F.col(start).asc(), F.col(end).asc())
-    prev_max = F.max(F.col(end)).over(
+    w = Window.partitionBy("key").orderBy(F.col("start").asc(), F.col("end").asc())
+    prev_max = F.max(F.col("end")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     flagged = df.select(
-        F.col(key),
-        F.col(start),
-        F.col(end),
+        F.col("key"),
+        F.col("start"),
+        F.col("end"),
         F.when(
-            prev_max.isNull() | (F.col(start) > prev_max), F.lit(1)
+            prev_max.isNull() | (F.col("start") > prev_max), F.lit(1)
         )
         .otherwise(F.lit(0))
         .alias("_new_island"),
     ).withColumn("_island", F.sum("_new_island").over(w))
     return (
-        flagged.groupBy(key, "_island")
+        flagged.groupBy("key", "_island")
         .agg(
-            F.min(start).alias(start),
-            F.max(end).alias(end),
+            F.min("start").alias("start"),
+            F.max("end").alias("end"),
             F.count("*").cast("bigint").alias("n_rows"),
         )
-        .select(key, start, end, "n_rows")
+        .select("key", "start", "end", "n_rows")
     )
 
 
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
-    key: str = "key",
-    id_col: str = "id",
-    start: str = "start",
-    end: str = "end",
     bucket: int = 3600,
     max_buckets_per_interval: int = 1000,
 ) -> DataFrame:
@@ -107,18 +100,18 @@ def interval_overlap_join(
         raise ValueError("bucket must be >= 1")
 
     def tiled(df: DataFrame, side: str) -> DataFrame:
-        lo = F.floor(F.col(start) / bucket)
-        hi = F.floor((F.col(end) - 1) / bucket)
+        lo = F.floor(F.col("start") / bucket)
+        hi = F.floor((F.col("end") - 1) / bucket)
         n_buckets = hi - lo + 1
         guarded = df.select(
-            F.col(key),
-            F.col(id_col).alias(f"{side}_id"),
-            F.col(start).alias(f"{side}_start"),
-            F.col(end).alias(f"{side}_end"),
+            F.col("key"),
+            F.col("id").alias(f"{side}_id"),
+            F.col("start").alias(f"{side}_start"),
+            F.col("end").alias(f"{side}_end"),
             lo.alias("_lo"),
             hi.alias("_hi"),
             n_buckets.alias("_n"),
-        ).filter(F.col(start) < F.col(end))
+        ).filter(F.col("start") < F.col("end"))
         # The guard must sit inside a column the plan actually consumes
         # (a free-standing asserted column gets pruned by Catalyst): fold
         # it into _lo via coalesce — assert_true yields NULL when the
@@ -134,7 +127,7 @@ def interval_overlap_join(
         )
         lo_guarded = F.coalesce(guard.cast("bigint"), F.col("_lo"))
         return guarded.select(
-            key,
+            "key",
             f"{side}_id",
             f"{side}_start",
             f"{side}_end",
@@ -146,13 +139,13 @@ def interval_overlap_join(
     l = tiled(left, "left")
     r = tiled(right, "right")
     return (
-        l.join(r, on=[key, "_cell"])
+        l.join(r, on=["key", "_cell"])
         .filter(
             (F.col("left_start") < F.col("right_end"))
             & (F.col("right_start") < F.col("left_end"))
         )
         .select(
-            key,
+            "key",
             "left_id",
             "right_id",
             F.greatest("left_start", "right_start").alias("overlap_start"),

@@ -25,27 +25,24 @@ from pyspark.sql import functions as F
 from ._fixpoint import iterate
 
 
-def closure_with_self(closure: DataFrame, node: str = "node", anc: str = "anc") -> DataFrame:
+def closure_with_self(closure: DataFrame) -> DataFrame:
     """Add identity pairs (c, c) to a proper-ancestor closure so that
     'annotated at-or-below c' includes annotations at c itself and a
     concept is its own candidate MICA."""
     nodes = (
-        closure.select(F.col(node))
-        .unionByName(closure.select(F.col(anc).alias(node)))
+        closure.select(F.col("node"))
+        .unionByName(closure.select(F.col("anc").alias("node")))
         .distinct()
     )
-    return closure.select(node, anc).unionByName(
-        nodes.select(F.col(node), F.col(node).alias(anc))
+    return closure.select("node", "anc").unionByName(
+        nodes.select(F.col("node"), F.col("node").alias("anc"))
     )
 
 
 def concept_information_content(
     annotations: DataFrame,
     closure: DataFrame,
-    doc_col: str = "doc_id",
     concept_col: str = "concept",
-    node_col: str = "node",
-    anc_col: str = "anc",
 ) -> DataFrame:
     """IC(c) = -ln(|docs annotated at c or any descendant| / |docs|)
     over a (doc, concept) annotation table and an ancestor closure
@@ -63,11 +60,11 @@ def concept_information_content(
     driver collect, the whole metric is one lazy plan.
     """
     doc_anc = (
-        annotations.select(F.col(doc_col).alias("_doc"), F.col(concept_col).alias("_c"))
+        annotations.select(F.col("doc_id").alias("_doc"), F.col(concept_col).alias("_c"))
         .join(
             F.broadcast(
                 closure.select(
-                    F.col(node_col).alias("_c"), F.col(anc_col).alias("_anc")
+                    F.col("node").alias("_c"), F.col("anc").alias("_anc")
                 )
             ),
             on="_c",
@@ -76,7 +73,7 @@ def concept_information_content(
         .distinct()
     )
     total = (
-        annotations.select(F.col(doc_col).alias("_doc"))
+        annotations.select(F.col("doc_id").alias("_doc"))
         .distinct()
         .agg(F.count("*").alias("_n_total"))
     )
@@ -96,10 +93,6 @@ def mica_similarity(
     pairs: DataFrame,
     closure: DataFrame,
     ic: DataFrame,
-    c1: str = "c1",
-    c2: str = "c2",
-    node_col: str = "node",
-    anc_col: str = "anc",
 ) -> DataFrame:
     """Resnik / Lin similarity for explicit concept pairs:
     ``resnik(c1,c2) = IC(MICA)`` where MICA is the common ancestor
@@ -115,33 +108,33 @@ def mica_similarity(
     reduced with one window argmax keyed on the pair itself, so
     the shuffle key space is exactly the request set.
     """
-    cl = F.broadcast(closure.select(node_col, anc_col))
+    cl = F.broadcast(closure.select("node", "anc"))
     icb = F.broadcast(ic.select("concept", "ic"))
     common = (
-        pairs.select(c1, c2)
-        .join(cl.withColumnRenamed(node_col, c1).withColumnRenamed(anc_col, "_a1"), on=c1)
+        pairs.select("c1", "c2")
+        .join(cl.withColumnRenamed("node", "c1").withColumnRenamed("anc", "_a1"), on="c1")
         .join(
-            cl.withColumnRenamed(node_col, c2).withColumnRenamed(anc_col, "_a2"),
-            on=c2,
+            cl.withColumnRenamed("node", "c2").withColumnRenamed("anc", "_a2"),
+            on="c2",
         )
         .filter(F.col("_a1") == F.col("_a2"))
         .join(icb.withColumnRenamed("concept", "_a1"), on="_a1")
     )
-    w = Window.partitionBy(c1, c2).orderBy(F.col("ic").desc(), F.col("_a1").asc())
+    w = Window.partitionBy("c1", "c2").orderBy(F.col("ic").desc(), F.col("_a1").asc())
     best = (
         common.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(c1, c2, F.col("_a1").alias("mica"), F.col("ic").alias("resnik"))
+        .select("c1", "c2", F.col("_a1").alias("mica"), F.col("ic").alias("resnik"))
     )
-    ic1 = icb.withColumnRenamed("concept", c1).withColumnRenamed("ic", "_ic1")
-    ic2 = icb.withColumnRenamed("concept", c2).withColumnRenamed("ic", "_ic2")
+    ic1 = icb.withColumnRenamed("concept", "c1").withColumnRenamed("ic", "_ic1")
+    ic2 = icb.withColumnRenamed("concept", "c2").withColumnRenamed("ic", "_ic2")
     denom = F.col("_ic1") + F.col("_ic2")
     return (
-        best.join(ic1, on=c1)
-        .join(ic2, on=c2)
+        best.join(ic1, on="c1")
+        .join(ic2, on="c2")
         .select(
-            c1,
-            c2,
+            "c1",
+            "c2",
             "mica",
             "resnik",
             F.when(denom != 0, 2 * F.col("resnik") / denom).alias("lin"),
@@ -154,12 +147,6 @@ def bma_doc_similarity(
     annotations: DataFrame,
     closure: DataFrame,
     ic: DataFrame,
-    d1: str = "d1",
-    d2: str = "d2",
-    doc_col: str = "doc_id",
-    concept_col: str = "concept",
-    node_col: str = "node",
-    anc_col: str = "anc",
 ) -> DataFrame:
     """Symmetric best-match-average (BMA) semantic similarity between
     annotated documents — the patient/document phenotype-similarity
@@ -193,11 +180,11 @@ def bma_doc_similarity(
     both linear in the input, no quadratic stage anywhere.
     """
     cl = F.broadcast(
-        closure.select(F.col(node_col).alias("_c"), F.col(anc_col).alias("_anc"))
+        closure.select(F.col("node").alias("_c"), F.col("anc").alias("_anc"))
     )
     ann = (
         annotations.select(
-            F.col(doc_col).alias("_doc"), F.col(concept_col).alias("_c")
+            F.col("doc_id").alias("_doc"), F.col("concept").alias("_c")
         )
         .distinct()
     )
@@ -211,7 +198,7 @@ def bma_doc_similarity(
         )
         .select("_dst", "_anc", F.col("ic").alias("_ic"))
     )
-    p = pairs.select(F.col(d1).alias("d1"), F.col(d2).alias("d2"))
+    p = pairs.select(F.col("d1").alias("d1"), F.col("d2").alias("d2"))
     dirs = p.select(
         "d1", "d2", F.col("d1").alias("_src"), F.col("d2").alias("_dst")
     ).unionByName(
@@ -235,8 +222,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 5,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge table:
     rank_{i+1}(v) = (1-d)/N + d * sum over in-neighbors u of
@@ -264,7 +249,7 @@ def pagerank(
     # (src, dst, out_deg) edge table (|E| rows) up front. Node set =
     # degree keys (distinct sources, free byproduct) + distinct
     # destinations — cheaper than distinct over the 2|E| union.
-    ep = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).repartition(
+    ep = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t")).repartition(
         "_s"
     )
     deg = ep.groupBy("_s").agg(F.count("*").cast("double").alias("_od"))
@@ -318,16 +303,14 @@ def _walk_step(
     )
 
 
-def _undirected(
-    edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _undirected(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The undirected simple graph under a directed edge table:
     self-loops dropped and every edge kept once as its canonical
     (a, b) = (least, greatest) pair. Returns ``(und, sym, deg)``: the
     canonical edges (eagerly checkpointed, because every caller reads
     them more than once), the symmetric (a, b) list with both
     orientations, and the per-node degree (node, degree)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
     und = (
@@ -340,9 +323,7 @@ def _undirected(
     return und, sym, deg
 
 
-def _triangles(
-    edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Every triangle of the undirected graph exactly once, as (w, x, y)
     with w the lowest vertex in (degree, id) order and x before y.
     Returns ``(und, deg, tris)``; ``und`` and ``deg`` are the
@@ -358,7 +339,7 @@ def _triangles(
     whole graph; with it the wedge count is bounded by sum of
     min-degree^2 over the orientation, the standard O(m^{3/2}) bound.
     Two equi-joins (wedge build + closure probe), both on node keys."""
-    und, _, deg = _undirected(edges, src, dst)
+    und, _, deg = _undirected(edges)
     # orient every edge lower-(degree, id) -> higher-(degree, id)
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
@@ -391,9 +372,7 @@ def _triangles(
     return und, deg, tris
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph (self-loops and duplicate/reversed edges are
     normalized away). Returns (node, degree, triangles, clustering).
@@ -403,7 +382,7 @@ def triangle_count(
     bound); degree is one keyed count and the per-node tally is
     map-side combinable.
     """
-    _, deg, tris = _triangles(edges, src, dst)
+    _, deg, tris = _triangles(edges)
     per_node = (
         tris.select(F.col("w").alias("node"))
         .unionByName(tris.select(F.col("x").alias("node")))
@@ -436,8 +415,6 @@ def label_propagation(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     iters: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan
     2007), made DETERMINISTIC: every node starts labeled with itself;
@@ -458,7 +435,7 @@ def label_propagation(
     combinable, hub-skew bounded by distinct neighbor LABELS (not
     neighbors).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
     # the neighbor-label join runs on "b" every round
@@ -505,18 +482,14 @@ def label_propagation(
 def neighbor_mean_features(
     edges: DataFrame,
     feats: DataFrame,
-    id_col: str = "vec_id",
     feat_col: str = "embedding",
-    src: str = "src",
-    dst: str = "dst",
-    include_self: bool = True,
 ) -> DataFrame:
     """One propagation layer of neighborhood feature averaging — the
     distributed form of the GCN-style smoothing the linking stage uses
     driver-side (linking/models.py's smoothed concept centroids, M3
     analog; Kipf-Welling mean-aggregator): every node's output is the
-    element-wise mean of its neighbors' feature vectors (plus its own,
-    with ``include_self`` — the renormalized self-loop trick).
+    element-wise mean of its neighbors' feature vectors and its own
+    (the renormalized self-loop trick).
 
     Returns LONG format (node, dim, mean, n_contrib): one row per
     vector slot, which keeps the op a pure join + keyed aggregate (no
@@ -529,20 +502,18 @@ def neighbor_mean_features(
     such passes (the iteration structure of every message-passing
     system, cf. Pregel/GraphX aggregateMessages).
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
     f = feats.select(
-        F.col(id_col).alias("_fid"), F.col(feat_col).alias("_feat")
+        F.col("vec_id").alias("_fid"), F.col(feat_col).alias("_feat")
     )
-    contrib = sym.join(f, sym.b == f._fid).select(
-        F.col("a").alias("node"), "_feat"
+    contrib = (
+        sym.join(f, sym.b == f._fid)
+        .select(F.col("a").alias("node"), "_feat")
+        .unionByName(f.select(F.col("_fid").alias("node"), "_feat"))
     )
-    if include_self:
-        contrib = contrib.unionByName(
-            f.select(F.col("_fid").alias("node"), "_feat")
-        )
     flat = contrib.select(
         "node", F.posexplode("_feat").alias("dim", "_v")
     )
@@ -560,8 +531,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     damping: float = 0.85,
     iters: int = 5,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set):
     rank_{i+1}(v) = (1-d) * reset(v) + d * sum_u rank_i(u)/out_deg(u),
@@ -589,7 +558,7 @@ def personalized_pagerank(
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs at least one seed")
-    ep = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).repartition(
+    ep = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t")).repartition(
         "_s"
     )
     deg = ep.groupBy("_s").agg(F.count("*").alias("_od"))
@@ -630,8 +599,6 @@ def personalized_pagerank(
 def hits(
     edges: DataFrame,
     iters: int = 5,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
     table, FIXED iteration count from the all-ones start, L1 (sum)
@@ -662,7 +629,7 @@ def hits(
     # sums carry along unchanged, so scores propagate unnormalized
     # (each half-step reads its input once) and both vectors are
     # normalized once at the end.
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t"))
     ep_s = e.repartition("_s")
     ep_t = e.repartition("_t")
     # per-side distincts run exchange-free on the cached partitioning;
@@ -710,8 +677,6 @@ def k_core(
     edges: DataFrame,
     k: int = 2,
     iters: int = 10,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """k-core decomposition membership: iteratively peel nodes of
     degree < k from the undirected graph (self-loops and duplicate /
@@ -729,7 +694,7 @@ def k_core(
     materialization anywhere, so hubs cost their degree, never
     degree^2.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
 
@@ -761,8 +726,6 @@ def link_prediction(
     edges: DataFrame,
     min_cn: int = 1,
     max_center_degree: int | None = None,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Neighborhood-overlap link prediction over the undirected graph:
     for every non-adjacent node pair (a < b) sharing >= ``min_cn``
@@ -783,7 +746,7 @@ def link_prediction(
     neighbors are super-hubs — an explicit, documented recall trade.
     deg(z) >= 2 for every wedge center, so ln(deg) is never 0.
     """
-    und, sym, deg = _undirected(edges, src, dst)
+    und, sym, deg = _undirected(edges)
     center = deg.withColumnRenamed("node", "z").withColumnRenamed("degree", "_dz")
     if max_center_degree is not None:
         center = center.filter(F.col("_dz") <= max_center_degree)
@@ -894,9 +857,7 @@ def cooccurrence_stats(
     )
 
 
-def graph_summary(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def graph_summary(edges: DataFrame) -> DataFrame:
     """One-row structural profile of the undirected graph: node/edge
     counts, mean and max degree, and Newman degree assortativity
     (Pearson correlation of endpoint degrees over the symmetrized
@@ -915,7 +876,7 @@ def graph_summary(
     n_nodes = n_edges = 0 with NULL avg_degree, max_degree and
     assortativity.
     """
-    _, sym, deg = _undirected(edges, src, dst)
+    _, sym, deg = _undirected(edges)
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_da"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_db"))
     joined = sym.join(da, on="a").join(db, on="b")
@@ -952,14 +913,7 @@ def graph_summary(
     )
 
 
-def ranking_metrics(
-    scored: DataFrame,
-    query_col: str = "query_id",
-    cand_col: str = "candidate",
-    score_col: str = "score",
-    label_col: str = "is_positive",
-    ks: tuple = (1, 3, 10),
-) -> DataFrame:
+def ranking_metrics(scored: DataFrame) -> DataFrame:
     """Link-prediction / KG-embedding ranking evaluation: MRR and
     Hits@k over per-query scored candidate lists.
 
@@ -971,8 +925,8 @@ def ranking_metrics(
     dropped (standard filtered-eval convention); a query with several
     positives contributes its best-ranked one.
 
-    Returns ONE row: (n_queries, mrr, hits_1, hits_3, ..., mean_rank),
-    floats rounded to 6.
+    Returns ONE row: (n_queries, mrr, hits_1, hits_3, hits_10,
+    mean_rank), floats rounded to 6.
 
     Scale shape: one row_number window keyed by query (per-partition
     size = that query's candidate count, the natural unit), then a
@@ -981,20 +935,20 @@ def ranking_metrics(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(query_col).orderBy(
-        F.col(score_col).desc(), F.col(cand_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("candidate").asc()
     )
     ranked = scored.withColumn("_rank", F.row_number().over(w))
     best_pos = (
-        ranked.filter(F.col(label_col))
-        .groupBy(query_col)
+        ranked.filter(F.col("is_positive"))
+        .groupBy("query_id")
         .agg(F.min("_rank").alias("rank"))
     )
     aggs = [
         F.count("*").alias("n_queries"),
         F.round(F.avg(1.0 / F.col("rank")), 6).alias("mrr"),
     ]
-    for k in ks:
+    for k in (1, 3, 10):
         aggs.append(
             F.round(
                 F.avg((F.col("rank") <= k).cast("double")), 6
@@ -1006,8 +960,6 @@ def ranking_metrics(
 
 def calibration_bins(
     scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "is_positive",
     n_bins: int = 10,
 ) -> DataFrame:
     """Reliability diagram for extraction confidences: bucket scores
@@ -1024,14 +976,14 @@ def calibration_bins(
     if n_bins < 1:
         raise ValueError("n_bins must be >= 1")
     b = F.least(
-        F.greatest(F.floor(F.col(score_col) * n_bins).cast("int"), F.lit(0)),
+        F.greatest(F.floor(F.col("score") * n_bins).cast("int"), F.lit(0)),
         F.lit(n_bins - 1),
     )
     return (
         scored.select(
             b.alias("bin"),
-            F.col(score_col).alias("_s"),
-            F.col(label_col).cast("double").alias("_y"),
+            F.col("score").alias("_s"),
+            F.col("is_positive").cast("double").alias("_y"),
         )
         .groupBy("bin")
         .agg(
@@ -1047,8 +999,6 @@ def hyperball(
     edges: DataFrame,
     radius: int = 3,
     p: int = 9,
-    src: str = "src",
-    dst: str = "dst",
     directed: bool = False,
 ) -> DataFrame:
     """HyperBall (Boldi & Vigna 2013): the neighborhood function of a
@@ -1082,8 +1032,8 @@ def hyperball(
     from .sketches import hll_estimate_from_registers, hll_registers
 
     e = edges.select(
-        F.col(src).cast("string").alias("u"),
-        F.col(dst).cast("string").alias("v"),
+        F.col("src").cast("string").alias("u"),
+        F.col("dst").cast("string").alias("v"),
     ).filter(F.col("u") != F.col("v"))
     if not directed:
         e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1205,17 +1155,15 @@ def harmonic_centrality(hb: DataFrame) -> DataFrame:
     )
 
 
-def _string_edges(
-    edges: DataFrame, src: str, dst: str, caller: str
-) -> tuple[DataFrame, int]:
+def _string_edges(edges: DataFrame, caller: str) -> tuple[DataFrame, int]:
     """Canonical undirected string edges (u, v) with u < v, self-loops
     dropped and duplicates removed, and their count m. Raises
     ``ValueError`` naming ``caller`` when no edge is left: modularity
     divides by m."""
     e = (
         edges.select(
-            F.least(F.col(src).cast("string"), F.col(dst).cast("string")).alias("u"),
-            F.greatest(F.col(src).cast("string"), F.col(dst).cast("string")).alias("v"),
+            F.least(F.col("src").cast("string"), F.col("dst").cast("string")).alias("u"),
+            F.greatest(F.col("src").cast("string"), F.col("dst").cast("string")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -1229,10 +1177,6 @@ def _string_edges(
 def modularity(
     edges: DataFrame,
     communities: DataFrame,
-    node_col: str = "node",
-    community_col: str = "community",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Newman modularity decomposed per community (Newman & Girvan
     2004): for an undirected graph with m edges, community c
@@ -1256,10 +1200,10 @@ def modularity(
     Returns (community, within_edges, degree_sum, contribution)
     with contribution rounded to 6 decimals.
     """
-    e, m = _string_edges(edges, src, dst, "modularity")
+    e, m = _string_edges(edges, "modularity")
     com = communities.select(
-        F.col(node_col).cast("string").alias("node"),
-        F.col(community_col).cast("string").alias("community"),
+        F.col("node").cast("string").alias("node"),
+        F.col("community").cast("string").alias("community"),
     )
     labeled = (
         e.join(com.select(F.col("node").alias("u"), F.col("community").alias("cu")), "u")
@@ -1298,10 +1242,6 @@ def modularity(
 def refine_communities(
     edges: DataFrame,
     communities: DataFrame,
-    node_col: str = "node",
-    community_col: str = "community",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """One synchronous round of Louvain phase-1 refinement (Blondel
     et al. 2008, in the parallel form every distributed Louvain uses):
@@ -1329,10 +1269,10 @@ def refine_communities(
     rounded to 9 decimals (the argmax ranks on the rounded value, so
     the choice is reproducible across engines and platforms).
     """
-    e, m = _string_edges(edges, src, dst, "refine_communities")
+    e, m = _string_edges(edges, "refine_communities")
     com = communities.select(
-        F.col(node_col).cast("string").alias("node"),
-        F.col(community_col).cast("string").alias("community"),
+        F.col("node").cast("string").alias("node"),
+        F.col("community").cast("string").alias("community"),
     )
     adj = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = adj.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("k"))
@@ -1389,9 +1329,7 @@ def refine_communities(
     )
 
 
-def edge_triangle_support(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def edge_triangle_support(edges: DataFrame) -> DataFrame:
     """Per-EDGE triangle support over an undirected graph: for every
     distinct edge (u, v) with u < v, the number of triangles that
     contain it — the quantity k-truss peeling and cohesive-subgraph
@@ -1406,7 +1344,7 @@ def edge_triangle_support(
 
     Returns (u, v, support) with u < v, sorted.
     """
-    und, deg, tris = _triangles(edges, src, dst)
+    und, deg, tris = _triangles(edges)
     tri_edges = (
         tris.select(F.col("w").alias("p"), F.col("x").alias("q"))
         .unionByName(tris.select(F.col("w").alias("p"), F.col("y").alias("q")))
@@ -1428,9 +1366,6 @@ def edge_triangle_support(
 def wl_refinement(
     edges: DataFrame,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    labels: DataFrame | None = None,
 ) -> DataFrame:
     """1-dimensional Weisfeiler-Leman color refinement (Weisfeiler &
     Leman 1968; Shervashidze et al. 2011 WL-kernel form): ``rounds``
@@ -1442,9 +1377,8 @@ def wl_refinement(
     entities (duplicate subgraphs from template-generated pages,
     interchangeable intermediate nodes) before any embedding model.
 
-    `labels` optionally seeds round 0 with (node, label) attribute
-    colors; unlabeled graphs start uniform ('0'), matching the WL
-    kernel convention.
+    Round 0 colors every node '0' (the unlabeled WL kernel
+    convention).
 
     Scale shape: each round is one node-keyed equi-join (colors onto
     edge endpoints) + one groupBy(node) with sort_array(collect_list)
@@ -1459,8 +1393,8 @@ def wl_refinement(
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     e = edges.select(
-        F.col(src).cast("string").alias("a"),
-        F.col(dst).cast("string").alias("b"),
+        F.col("src").cast("string").alias("a"),
+        F.col("dst").cast("string").alias("b"),
     ).filter(F.col("a") != F.col("b"))
     und = e.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")).distinct()
     sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1471,16 +1405,7 @@ def wl_refinement(
         .unionByName(nodes.select(F.col("node").alias("a"), F.col("node").alias("b"), F.lit(True).alias("_own")))
         .repartition("b")
     )
-    if labels is not None:
-        lab = labels.select(
-            F.col(labels.columns[0]).cast("string").alias("node"),
-            F.col(labels.columns[1]).cast("string").alias("color"),
-        )
-        color = nodes.join(lab, "node", "left").select(
-            "node", F.coalesce("color", F.lit("0")).alias("color")
-        )
-    else:
-        color = nodes.select("node", F.lit("0").alias("color"))
+    color = nodes.select("node", F.lit("0").alias("color"))
 
     def step(color, i):
         seen = adj.join(color.withColumnRenamed("node", "b"), "b")
@@ -1501,8 +1426,6 @@ def wl_refinement(
 def pathsim_topk(
     edges: DataFrame,
     k: int = 5,
-    a_col: str = "a",
-    b_col: str = "b",
     max_b_degree: int | None = None,
 ) -> DataFrame:
     """PathSim top-k (Sun et al., VLDB 2011) over the symmetric
@@ -1526,9 +1449,7 @@ def pathsim_topk(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = edges.select(
-        F.col(a_col).alias("a"), F.col(b_col).alias("b")
-    ).distinct()
+    e = edges.select(F.col("a").alias("a"), F.col("b").alias("b")).distinct()
     if max_b_degree is not None:
         keep = (
             e.groupBy("b")
@@ -1572,9 +1493,7 @@ def pathsim_topk(
     )
 
 
-def two_sweep_diameter(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def two_sweep_diameter(edges: DataFrame) -> DataFrame:
     """Exact diameter LOWER BOUND by the classic double-sweep BFS
     (Magnien/Latapy/Habib 2009): BFS from a deterministic pivot (the
     minimum node id), hop to the farthest node found (ties broken by
@@ -1595,7 +1514,7 @@ def two_sweep_diameter(
     """
     from .closure import bfs_distances
 
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_t"))
     und = e.unionByName(
         e.select(F.col("_t").alias("_s"), F.col("_s").alias("_t"))
     ).distinct()

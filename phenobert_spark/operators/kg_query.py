@@ -175,9 +175,6 @@ def kg_snapshot_diff(
 
 def neighborhood_jaccard(
     edges: DataFrame,
-    node: str = "node",
-    neighbor: str = "neighbor",
-    min_jaccard: float = 0.0,
     max_neighbor_degree: int | None = None,
 ) -> DataFrame:
     """Jaccard similarity of entity neighbor sets, via shared neighbors.
@@ -190,7 +187,7 @@ def neighborhood_jaccard(
     than that many nodes before pairing (hub guard).
     """
     adj = edges.select(
-        F.col(node).alias("n"), F.col(neighbor).alias("nb")
+        F.col("node").alias("n"), F.col("neighbor").alias("nb")
     ).distinct()
     if max_neighbor_degree is not None:
         nb_deg = adj.groupBy("nb").agg(F.count("*").alias("_nbdeg"))
@@ -208,7 +205,7 @@ def neighborhood_jaccard(
         .groupBy("node_a", "node_b")
         .agg(F.count("*").alias("n_shared"))
     )
-    out = (
+    return (
         shared.join(deg.select(F.col("n").alias("node_a"), F.col("deg").alias("deg_a")), on="node_a")
         .join(deg.select(F.col("n").alias("node_b"), F.col("deg").alias("deg_b")), on="node_b")
         .withColumn(
@@ -219,18 +216,14 @@ def neighborhood_jaccard(
                 6,
             ),
         )
+        .select("node_a", "node_b", "n_shared", "deg_a", "deg_b", "jaccard")
     )
-    if min_jaccard > 0.0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out.select("node_a", "node_b", "n_shared", "deg_a", "deg_b", "jaccard")
 
 
 def ego_sample(
     edges: DataFrame,
     seeds: DataFrame,
     fanouts: list[int],
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Deterministic GraphSAGE-style fanout-capped neighborhood sample.
 
@@ -253,7 +246,7 @@ def ego_sample(
 
     if not fanouts or any(f < 1 for f in fanouts):
         raise ValueError("fanouts must be a non-empty list of ints >= 1")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d")).distinct()
     frontier = seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
     frontier = frontier.withColumn("node", F.col("seed"))
     parts: list[DataFrame] = []
@@ -286,8 +279,6 @@ def ego_sample(
 def kg_time_travel(
     changelog: DataFrame,
     at_ts=None,
-    ts_col: str = "ts",
-    op_col: str = "op",
 ) -> DataFrame:
     """Reconstruct the KG snapshot at ``at_ts`` from an add/remove log.
 
@@ -302,16 +293,14 @@ def kg_time_travel(
     replay twin of ``kg_snapshot_diff``: diff derives the log from two
     snapshots, time-travel derives any snapshot from the log.
     """
-    log = changelog if at_ts is None else changelog.filter(F.col(ts_col) <= at_ts)
-    return kg_fold_log(log, ts_col=ts_col, op_col=op_col).filter(
+    log = changelog if at_ts is None else changelog.filter(F.col("ts") <= at_ts)
+    return kg_fold_log(log).filter(
         F.col("last_op") == "add"
     ).select("subj", "pred", "obj", "as_of_ts")
 
 
 def kg_fold_log(
     changelog: DataFrame,
-    ts_col: str = "ts",
-    op_col: str = "op",
 ) -> DataFrame:
     """Fold an add/remove log to per-triple last-event state,
     KEEPING remove tombstones: (subj, pred, obj, as_of_ts, last_op).
@@ -323,25 +312,22 @@ def kg_fold_log(
     """
     # rank 'remove' above 'add' so the max_by tiebreak at equal ts is
     # deterministic and conservative
-    op_rank = F.when(F.col(op_col) == "remove", F.lit(1)).otherwise(F.lit(0))
+    op_rank = F.when(F.col("op") == "remove", F.lit(1)).otherwise(F.lit(0))
     return changelog.groupBy("subj", "pred", "obj").agg(
         F.max_by(
-            F.col(op_col), F.struct(F.col(ts_col), op_rank.alias("_r"))
+            F.col("op"), F.struct(F.col("ts"), op_rank.alias("_r"))
         ).alias("last_op"),
-        F.max(F.col(ts_col)).alias("as_of_ts"),
+        F.max(F.col("ts")).alias("as_of_ts"),
     )
 
 
 def random_walks(
     edges: DataFrame,
     walk_len: int,
-    src: str = "src",
-    dst: str = "dst",
-    walks_per_node: int = 1,
 ) -> DataFrame:
     """Deterministic DeepWalk-style walks over a directed edge table.
 
-    Starts ``walks_per_node`` walks at every distinct source node; at
+    Starts one walk at every distinct source node; at
     step t the walk at node v moves to
     ``argmin over out-neighbors u of md5(walk_id|t|u)`` — a pure
     function of the walk and candidate, so re-runs and shards agree
@@ -351,15 +337,10 @@ def random_walks(
     """
     if walk_len < 1:
         raise ValueError("walk_len must be >= 1")
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    starts = e.select(F.col("_s").alias("start")).distinct()
-    if walks_per_node > 1:
-        reps = starts.sparkSession.range(walks_per_node).select(
-            F.col("id").alias("_rep")
-        )
-        starts = starts.crossJoin(reps)
-    else:
-        starts = starts.withColumn("_rep", F.lit(0))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d")).distinct()
+    starts = e.select(F.col("_s").alias("start")).distinct().withColumn(
+        "_rep", F.lit(0)
+    )
     state = starts.select(
         F.concat_ws("#", "start", F.col("_rep").cast("string")).alias("walk_id"),
         F.col("start"),
@@ -400,8 +381,6 @@ def random_walks(
 def skipgram_pairs(
     walks: DataFrame,
     window: int = 2,
-    path_col: str = "path",
-    walk_col: str = "walk_id",
 ) -> DataFrame:
     """(center, context, n) skip-gram training pairs from a walk
     corpus — the DeepWalk/node2vec step between :func:`random_walks`
@@ -419,8 +398,8 @@ def skipgram_pairs(
     if window < 1:
         raise ValueError("window must be >= 1")
     pos = walks.select(
-        F.col(walk_col).alias("_w"),
-        F.posexplode(F.col(path_col)).alias("_p", "_n"),
+        F.col("walk_id").alias("_w"),
+        F.posexplode(F.col("path")).alias("_p", "_n"),
     )
     a, b = pos.alias("a"), pos.alias("b")
     pairs = a.join(

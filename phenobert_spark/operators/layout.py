@@ -43,7 +43,6 @@ def morton_key(x: Column, y: Column, bits: int = 16) -> Column:
 def assign_zorder_files(
     df: DataFrame,
     id_col: str,
-    zkey_col: str = "zkey",
     n_files: int = 64,
     exact: bool = True,
 ) -> DataFrame:
@@ -58,9 +57,9 @@ def assign_zorder_files(
     differ run-to-run, which is why the contract pins the ntile
     twin)."""
     if exact:
-        w = Window.orderBy(F.col(zkey_col), F.col(id_col))
+        w = Window.orderBy(F.col("zkey"), F.col(id_col))
         return df.withColumn("file_id", F.ntile(n_files).over(w))
-    parts = df.repartitionByRange(n_files, F.col(zkey_col), F.col(id_col))
+    parts = df.repartitionByRange(n_files, F.col("zkey"), F.col(id_col))
     return parts.withColumn("file_id", F.spark_partition_id() + 1)
 
 

@@ -54,16 +54,14 @@ def license_column(text_col: str = "content") -> F.Column:
     return expr
 
 
-def license_rollup(
-    df: DataFrame, repo_col: str = "repo", text_col: str = "content"
-) -> DataFrame:
+def license_rollup(df: DataFrame) -> DataFrame:
     """Per-(repo, license) audit: (repo, license, n_files,
     is_permissive). The content column is dropped before the
     exchange — only the two grouping keys shuffle."""
     return (
         df.select(
-            F.col(repo_col).alias("repo"),
-            license_column(text_col).alias("license"),
+            F.col("repo").alias("repo"),
+            license_column("content").alias("license"),
         )
         .groupBy("repo", "license")
         .agg(F.count("*").alias("n_files"))

@@ -136,7 +136,6 @@ def sample_frames(
 
 def resize_grids(
     blobs: DataFrame,
-    width_col: str = "width",
     out_size: int = 8,
 ) -> DataFrame:
     """Image-resize analog over RAW byte grids: each payload is a
@@ -166,7 +165,7 @@ def resize_grids(
         for pdf in batches:
             out = {"doc_id": [], "grid": [], "grid_sha": []}
             for doc_id, payload, width in zip(
-                pdf["doc_id"], pdf["payload"], pdf[width_col]
+                pdf["doc_id"], pdf["payload"], pdf["width"]
             ):
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8)
                 w = int(width)

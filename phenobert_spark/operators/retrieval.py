@@ -29,19 +29,17 @@ from pyspark.sql import functions as F
 
 from .text import whitespace_tokens
 
+K1, B = 1.2, 0.75  # BM25 term-saturation and length-normalization weights
+
 
 def bm25_scores(
     docs: DataFrame,
     query_tokens: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Per-document BM25 score for a fixed token query:
 
-        score(d) = sum_t idf(t) * tf * (k1 + 1)
-                   / (tf + k1 * (1 - b + b * len_d / avg_len))
+        score(d) = sum_t idf(t) * tf * (K1 + 1)
+                   / (tf + K1 * (1 - B + B * len_d / avg_len))
         idf(t)   = ln((N - df + 0.5) / (df + 0.5) + 1)    (Lucene form)
 
     Returns (id, score, plus one tf_<i> column per query token for
@@ -52,7 +50,7 @@ def bm25_scores(
     """
     if not query_tokens:
         raise ValueError("query_tokens must be non-empty")
-    toks = whitespace_tokens(F.col(text_col))
+    toks = whitespace_tokens(F.col("text"))
 
     def _tf(token: str) -> Column:
         # NB: a 2-arg lambda here would be interpreted by Spark's
@@ -65,7 +63,7 @@ def bm25_scores(
         for i, t in enumerate(query_tokens)
     ]
     base = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).cast("double").alias("_len"),
         *tf_cols,
     )
@@ -88,10 +86,10 @@ def bm25_scores(
             + F.lit(1.0)
         )
         tf = F.col(f"tf_{i}")
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("_len") / F.col("_avg_len")
+        denom = tf + F.lit(K1) * (
+            F.lit(1.0 - B) + F.lit(B) * F.col("_len") / F.col("_avg_len")
         )
-        return idf * tf * F.lit(k1 + 1.0) / denom
+        return idf * tf * F.lit(K1 + 1.0) / denom
 
     score = term(0)
     for i in range(1, len(query_tokens)):

@@ -69,9 +69,6 @@ def stratified_split(
     df: DataFrame,
     weights: dict[str, float],
     strata_col: str,
-    id_col: str = "doc_id",
-    salt: str = "",
-    out_col: str = "split",
 ) -> DataFrame:
     """EXACT stratified split: within every stratum the split sizes
     match the weight proportions to within one row (prefix sizes are
@@ -92,7 +89,7 @@ def stratified_split(
         raise ValueError("weights must sum to a positive value")
     names = list(weights)
     w = Window.partitionBy(strata_col).orderBy(
-        _bucket(F.col(id_col), salt), F.col(id_col)
+        _bucket(F.col("doc_id"), ""), F.col("doc_id")
     )
     wc = Window.partitionBy(strata_col)
     frac = (F.row_number().over(w) - F.lit(1)) / F.count("*").over(wc)
@@ -103,16 +100,13 @@ def stratified_split(
         cond = frac < F.lit(cum)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     expr = F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def pack_sequences(
     df: DataFrame,
     capacity: int,
-    id_col: str = "doc_id",
-    size_col: str = "n_tokens",
     n_buckets: int | None = None,
-    salt: str = "",
 ) -> DataFrame:
     """Assign documents to fixed-capacity training sequences
     (first-fit-decreasing bin packing), deterministically.
@@ -138,7 +132,7 @@ def pack_sequences(
     if n_buckets is None:
         n_buckets = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     bucket = F.pmod(
-        F.conv(_bucket(F.col(id_col), salt), 16, 10).cast("bigint"),
+        F.conv(_bucket(F.col("doc_id"), ""), 16, 10).cast("bigint"),
         F.lit(n_buckets),
     )
     out_schema = StructType(
@@ -181,8 +175,8 @@ def pack_sequences(
         )
 
     rows = df.select(
-        F.col(id_col).cast("bigint").alias("_id"),
-        F.col(size_col).cast("bigint").alias("_size"),
+        F.col("doc_id").cast("bigint").alias("_id"),
+        F.col("n_tokens").cast("bigint").alias("_size"),
         bucket.alias("_bucket"),
     )
     return rows.groupBy("_bucket").applyInPandas(pack, out_schema)
@@ -191,7 +185,6 @@ def pack_sequences(
 def hash_sample(
     df: DataFrame,
     fraction: float,
-    id_col: str = "doc_id",
     salt: str = "",
 ) -> DataFrame:
     """Keep ~``fraction`` of rows, deterministically by key: the same
@@ -204,17 +197,14 @@ def hash_sample(
     if fraction == 1.0:
         return df
     return df.filter(
-        _bucket(F.col(id_col), salt) < F.lit(_hex_threshold(fraction))
+        _bucket(F.col("doc_id"), salt) < F.lit(_hex_threshold(fraction))
     )
 
 
 def mixture_sample(
     df: DataFrame,
-    group_col: str = "source",
     alpha: float = 0.5,
     sample_frac: float = 0.5,
-    id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Temperature-based mixture sampling — the LLM data-mixing
     recipe (multilingual-BERT / XLM-R exponential smoothing): draw a
@@ -229,7 +219,7 @@ def mixture_sample(
     excess mass is NOT redistributed, so the realized total can fall
     short when groups saturate), and ``keep`` — the same
     md5-hex-threshold draw as :func:`hash_split`, a pure function of
-    (id, salt), re-runnable and auditable in any engine. ``p_keep`` is
+    the id, re-runnable and auditable in any engine. ``p_keep`` is
     rounded to 6 decimals BEFORE the threshold is derived so both
     engines floor the identical number (double summation order differs
     across engines at the last ulp).
@@ -238,7 +228,7 @@ def mixture_sample(
     joined back — the corpus-sized pass stays narrow; no shuffle of
     ``df`` itself, no RNG state.
     """
-    stats = df.groupBy(group_col).agg(F.count("*").alias("_n_g"))
+    stats = df.groupBy("source").agg(F.count("*").alias("_n_g"))
     tot = stats.agg(
         F.sum(F.pow(F.col("_n_g").cast("double"), F.lit(float(alpha)))).alias("_z"),
         F.sum("_n_g").cast("double").alias("_n_total"),
@@ -252,7 +242,7 @@ def mixture_sample(
         6,
     )
     stats = stats.crossJoin(F.broadcast(tot)).select(
-        group_col, w.alias("mix_w"), p.alias("p_keep")
+        "source", w.alias("mix_w"), p.alias("p_keep")
     )
     thr = F.lower(
         F.lpad(
@@ -266,8 +256,8 @@ def mixture_sample(
             "0",
         )
     )
-    return df.join(F.broadcast(stats), on=group_col).withColumn(
-        "keep", _bucket(F.col(id_col), salt) < thr
+    return df.join(F.broadcast(stats), on="source").withColumn(
+        "keep", _bucket(F.col("doc_id"), "") < thr
     )
 
 
@@ -275,8 +265,6 @@ def weighted_order_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
-    salt: str = "",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Weighted random sample of ``k`` rows (per group, if
@@ -304,7 +292,7 @@ def weighted_order_sample(
         raise ValueError("k must be positive")
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 8
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(""))), 1, 8
         ),
         16,
         10,
@@ -320,7 +308,7 @@ def weighted_order_sample(
             F.raise_error(
                 F.concat(
                     F.lit("weighted_order_sample: non-positive weight for id "),
-                    F.col(id_col).cast("string"),
+                    F.col("doc_id").cast("string"),
                 )
             ).cast("double")
         ),
@@ -329,21 +317,19 @@ def weighted_order_sample(
         from pyspark.sql import Window
 
         w = Window.partitionBy(*group_cols).orderBy(
-            "priority", F.col(id_col)
+            "priority", F.col("doc_id")
         )
         return (
             guarded.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
             .drop("_rn")
         )
-    return guarded.orderBy("priority", F.col(id_col)).limit(k)
+    return guarded.orderBy("priority", F.col("doc_id")).limit(k)
 
 
 def rendezvous_assign(
     df: DataFrame,
     n_shards: int,
-    id_col: str = "doc_id",
-    salt: str = "",
     out_col: str = "shard",
 ) -> DataFrame:
     """Rendezvous (highest-random-weight) shard assignment (Thaler &
@@ -354,7 +340,7 @@ def rendezvous_assign(
     1/(n+1) of the corpus in expectation — while modulo hashing
     (key % n) reshuffles almost everything. That is how a 100-TB
     layout adds capacity without a full rewrite, and the assignment
-    stays a pure function of (key, salt): any engine re-derives it
+    stays a pure function of the key: any engine re-derives it
     (q136's oracle does), shards can be audited independently, and a
     backfill lands rows exactly where the original run put them.
 
@@ -364,13 +350,13 @@ def rendezvous_assign(
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    key = F.col(id_col).cast("string")
+    key = F.col("doc_id").cast("string")
     scored = F.transform(
         F.sequence(F.lit(0), F.lit(n_shards - 1)),
         lambda i: F.struct(
             F.substring(
                 F.md5(
-                    F.concat(key, F.lit(salt + "#"), i.cast("string"))
+                    F.concat(key, F.lit("#"), i.cast("string"))
                 ),
                 1,
                 8,

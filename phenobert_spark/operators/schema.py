@@ -323,7 +323,6 @@ def induce_subsumptions(
 def mine_path_rules(
     triples: DataFrame,
     min_support: int = 1,
-    min_confidence: float = 0.0,
 ) -> DataFrame:
     """AMIE-style 2-hop horn-rule mining:
     p(x, y) ∧ q(y, z) ⇒ t(x, z).
@@ -388,7 +387,7 @@ def mine_path_rules(
         )
         .filter(
             (F.col("support") >= min_support)
-            & (F.col("confidence") >= min_confidence)
+            & (F.col("confidence") >= 0.0)
         )
     )
     return out.select(

@@ -44,32 +44,23 @@ def parse_json_props(
     return df.select(*cols, parsed).select(*cols, "_j.*")
 
 
-def props_rollup(
-    df: DataFrame,
-    json_col: str = "props",
-    field: str = "k",
-    field_type: str = "INT",
-    group_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Aggregate an extracted JSON field per group: the canonical
-    "schema-on-read analytics" pass (count, sum/avg of the JSON field,
-    avg of a typed sibling column).
+def props_rollup(df: DataFrame) -> DataFrame:
+    """Aggregate the extracted JSON field ``k`` (INT) per event type:
+    the canonical "schema-on-read analytics" pass (count, sum/avg of
+    the JSON field, avg of the typed sibling column ``value``).
 
     Plan: parse-project → one hash aggregate. The combiner runs
     map-side, so the shuffle carries one row per (partition, group).
     """
-    typed = parse_json_props(
-        df, json_col, f"{field} {field_type}", keep=[group_col, value_col]
-    )
+    typed = parse_json_props(df, "props", "k INT", keep=["event_type", "value"])
     return (
-        typed.groupBy(group_col)
+        typed.groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.count(field).alias("n_with_field"),
-            F.sum(field).alias(f"sum_{field}"),
-            F.round(F.avg(field), 6).alias(f"avg_{field}"),
-            F.round(F.avg(value_col), 6).alias(f"avg_{value_col}"),
+            F.count("k").alias("n_with_field"),
+            F.sum("k").alias("sum_k"),
+            F.round(F.avg("k"), 6).alias("avg_k"),
+            F.round(F.avg("value"), 6).alias("avg_value"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )

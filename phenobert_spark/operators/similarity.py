@@ -49,7 +49,6 @@ def cosine_topk_pandas(
     embeddings: DataFrame,
     n_queries: int = 5,
     k: int = 3,
-    round_to: int = 4,
 ) -> DataFrame:
     """Brute-force cosine via numpy matmul inside mapInPandas, with a
     PARTIAL top-k inside the UDF: each partition emits at most
@@ -102,7 +101,7 @@ def cosine_topk_pandas(
             sims = np.round(
                 (mat @ cand.T)
                 / (norms[:, None] * np.linalg.norm(cand, axis=1)[None, :]),
-                round_to,
+                4,
             )
             top = _topk_per_query(ids, nids, sims)
             if top is not None:
@@ -216,8 +215,6 @@ def kmeans_fit(
     embeddings: DataFrame,
     k: int = 8,
     iters: int = 5,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic Lloyd's k-means TRAINING of the IVF coarse
     quantizer (the analog of faiss's trained quantizer; the untrained
@@ -236,9 +233,9 @@ def kmeans_fit(
     from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 
     init_rows = (
-        embeddings.orderBy(id_col)
+        embeddings.orderBy("vec_id")
         .limit(k)
-        .select(id_col, emb_col)
+        .select("vec_id", "embedding")
         .collect()
     )
     cmat = np.array([r[1] for r in init_rows], dtype=np.float64)
@@ -251,7 +248,7 @@ def kmeans_fit(
         ]
     )
     base = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("embedding")
     )
     for _ in range(iters):
         assigned = _centroid_buckets(
@@ -365,9 +362,6 @@ def cosine_neardup_lsh(
     threshold: float = 0.9,
     n_planes: int = 64,
     band_bits: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    round_to: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via random-hyperplane LSH —
     the SCALE path twin of the all-pairs q32 oracle (which is O(n²) and
@@ -390,7 +384,7 @@ def cosine_neardup_lsh(
     matrix, so results are deterministic and resumable.
     """
     n_bands = n_planes // band_bits
-    dim = len(embeddings.select(emb_col).first()[0])
+    dim = len(embeddings.select("embedding").first()[0])
     rng = np.random.RandomState(0x5EED)  # fixed: deterministic planes
     planes = rng.standard_normal((dim, n_planes))
     bp = spark.sparkContext.broadcast(planes)
@@ -399,8 +393,8 @@ def cosine_neardup_lsh(
         pl = bp.value
         weights = 1 << np.arange(band_bits, dtype=np.int64)
         for pdf in batches:
-            mat = np.array(list(pdf[emb_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             bits = (mat @ pl) >= 0.0  # (n, n_planes)
             keys = (
                 bits.reshape(len(mat), n_bands, band_bits) @ weights
@@ -415,8 +409,8 @@ def cosine_neardup_lsh(
             )
 
     bands = fanout(
-        embeddings.select(F.col(id_col).alias(id_col), F.col(emb_col)),
-        id_col,
+        embeddings.select(F.col("vec_id").alias("vec_id"), F.col("embedding")),
+        "vec_id",
     ).mapInPandas(sign_bands, BANDS_SCHEMA)
     a = bands.select(
         F.col("vec_id").alias("id_a"), "band_idx", "band_key"
@@ -439,10 +433,10 @@ def cosine_neardup_lsh(
         )
 
     ea = embeddings.select(
-        F.col(id_col).alias("id_a"), F.col(emb_col).alias("_ea")
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("_ea")
     )
     eb = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(emb_col).alias("_eb")
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("_eb")
     )
     cos = dot(F.col("_ea"), F.col("_eb")) / (
         F.sqrt(dot(F.col("_ea"), F.col("_ea")))
@@ -453,15 +447,12 @@ def cosine_neardup_lsh(
         .join(eb, on="id_b")
         .withColumn("_cos", cos)
         .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b", F.round("_cos", round_to).alias("cos"))
+        .select("id_a", "id_b", F.round("_cos", 4).alias("cos"))
     )
 
 
 def quantize_embeddings(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: (id, scale, q, max_err).
 
@@ -476,7 +467,7 @@ def quantize_embeddings(
     An all-zero vector would make ``scale`` 0 and every code NaN; the
     ``greatest(absmax, 1e-30)`` floor (mirrored in the q105 oracle)
     maps it to zero codes with zero error instead."""
-    x = F.col(emb_col)
+    x = F.col("embedding")
     absmax = F.array_max(F.transform(x, lambda v: F.abs(v)))
     scale = F.greatest(absmax, F.lit(1e-30)) / F.lit(127.0)
     q = F.transform(x, lambda v: F.round(v / scale).cast("int"))
@@ -486,10 +477,10 @@ def quantize_embeddings(
         )
     )
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(scale, round_to).alias("scale"),
+        F.col("vec_id").alias("vec_id"),
+        F.round(scale, 6).alias("scale"),
         q.alias("q"),
-        F.round(err, round_to).alias("max_err"),
+        F.round(err, 6).alias("max_err"),
     )
 
 
@@ -497,9 +488,6 @@ def quantized_cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    round_to: int = 4,
 ) -> DataFrame:
     """Serving-path ANN: cosine top-k computed ON int8-quantized codes
     (:func:`quantize_embeddings`) — (qid, nid, cos) with cos rounded.
@@ -520,10 +508,8 @@ def quantized_cosine_topk(
     float brute-force (q19), so IVF bucketing composes in front of it
     unchanged for the 100-TB path.
     """
-    base = quantize_embeddings(
-        fanout(embeddings, id_col), id_col=id_col, emb_col=emb_col
-    )
-    qs = quantize_embeddings(queries, id_col=id_col, emb_col=emb_col).select(
+    base = quantize_embeddings(fanout(embeddings, "vec_id"))
+    qs = quantize_embeddings(queries).select(
         F.col("vec_id").alias("qid"), F.col("q").alias("qq")
     )
 
@@ -550,7 +536,7 @@ def quantized_cosine_topk(
                     F.sqrt(idot(F.col("qq"), F.col("qq")).cast("double"))
                     * F.sqrt(idot(F.col("q"), F.col("q")).cast("double")),
                 ),
-                round_to,
+                4,
             ).alias("cos"),
         )
     )
@@ -567,10 +553,6 @@ def dbscan_cosine(
     embeddings: DataFrame,
     eps_cos: float = 0.4,
     min_pts: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    n_planes: int = 64,
-    band_bits: int = 2,
 ) -> DataFrame:
     """Density-based clustering (DBSCAN, Ester et al. 1996) with a
     cosine-similarity neighborhood, composed entirely from this
@@ -600,10 +582,7 @@ def dbscan_cosine(
         spark,
         embeddings,
         threshold=eps_cos,
-        n_planes=n_planes,
-        band_bits=band_bits,
-        id_col=id_col,
-        emb_col=emb_col,
+        band_bits=2,
     ).select("id_a", "id_b")
     sym = pairs.unionByName(
         pairs.select(
@@ -629,7 +608,7 @@ def dbscan_cosine(
         .groupBy(F.col("id_a").alias("v"))
         .agg(F.min("cluster").alias("cluster"))
     )
-    ids = embeddings.select(F.col(id_col).alias("v"))
+    ids = embeddings.select(F.col("vec_id").alias("v"))
     return (
         ids.join(comp.withColumn("role", F.lit("core")), on="v", how="left")
         .join(
@@ -659,9 +638,7 @@ GRAM_SCHEMA = StructType(
 )
 
 
-def gram_matrix(
-    embs: DataFrame, feat_col: str = "embedding"
-) -> DataFrame:
+def gram_matrix(embs: DataFrame) -> DataFrame:
     """Distributed Gram matrix G = X^T X over an ``array<float>``
     column — the building block of exact distributed PCA / covariance
     (the classic "tall-and-skinny" decomposition: for n rows x d dims
@@ -687,7 +664,7 @@ def gram_matrix(
         for b in batches:
             if not len(b):
                 continue
-            x = np.stack(b[feat_col].to_numpy()).astype(np.float64)
+            x = np.stack(b["embedding"].to_numpy()).astype(np.float64)
             g = x.T @ x
             acc = g if acc is None else acc + g
         if acc is not None:
@@ -696,7 +673,7 @@ def gram_matrix(
                 {"i": iu.astype(np.int64), "j": ju.astype(np.int64), "g": acc[iu, ju]}
             )
 
-    partials = embs.select(feat_col).mapInPandas(partial_gram, schema=GRAM_SCHEMA)
+    partials = embs.select("embedding").mapInPandas(partial_gram, schema=GRAM_SCHEMA)
     return (
         partials.groupBy("i", "j")
         .agg(F.round(F.sum("g"), 4).alias("g"))

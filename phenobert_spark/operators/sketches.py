@@ -48,7 +48,6 @@ def hll_registers(
     key_col: str,
     group_cols: list[str],
     p: int = 9,
-    salt: str = "",
 ) -> DataFrame:
     """HyperLogLog register table: (group..., bucket, rho) where
     ``bucket`` is the top ``p`` bits of the 32-bit key hash and
@@ -70,7 +69,7 @@ def hll_registers(
     if not 4 <= p <= 16:
         raise ValueError("p must be in [4, 16]")
     w = 32 - p
-    h = _md5_u32(F.col(key_col), salt)
+    h = _md5_u32(F.col(key_col))
     bucket = F.floor(h / F.lit(float(1 << w))).cast("int")
     rest = h % F.lit(1 << w)
     rho = (
@@ -90,7 +89,6 @@ def hll_distinct(
     key_col: str,
     group_cols: list[str],
     p: int = 9,
-    salt: str = "",
 ) -> DataFrame:
     """Per-group approximate distinct count from the deterministic HLL
     register table. Returns (group..., n_buckets, n_zero, est_raw,
@@ -109,7 +107,7 @@ def hll_distinct(
     Plan: two keyed aggregates, both combiner-friendly; nothing
     proportional to |df| crosses the wire after the first partial max.
     """
-    regs = hll_registers(df, key_col, group_cols, p=p, salt=salt)
+    regs = hll_registers(df, key_col, group_cols, p=p)
     return hll_estimate_from_registers(regs, group_cols, p=p)
 
 
@@ -258,11 +256,10 @@ def countmin_table(
     key_col: str,
     depth: int = 4,
     width_bits: int = 10,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Count-min sketch table (Cormode-Muthukrishnan 2005): ``depth``
     independent md5-salted hash rows x ``2^width_bits`` buckets, cell =
-    sum of key occurrences (or of ``weight_col``). Returns (row,
+    count of key occurrences. Returns (row,
     bucket, c) — O(depth * width) cells per corpus regardless of key
     cardinality, built by ONE combinable groupBy; shard tables merge
     by summing cells, the same re-aggregation story as
@@ -276,16 +273,11 @@ def countmin_table(
         raise ValueError("depth and width_bits must be >= 1")
     rows = []
     for r in range(depth):
-        weight = (
-            F.col(weight_col).cast("bigint")
-            if weight_col
-            else F.lit(1).cast("bigint")
-        )
         rows.append(
             df.select(
                 F.lit(r).alias("row"),
                 _countmin_bucket(key_col, r, width_bits).alias("bucket"),
-                weight.alias("_w"),
+                F.lit(1).cast("bigint").alias("_w"),
             )
         )
     out = rows[0]
@@ -331,10 +323,9 @@ def bloom_bits(
     key_col: str,
     m_bits: int = 1 << 16,
     k_hashes: int = 4,
-    salt: str = "",
 ) -> DataFrame:
     """Bloom-filter bit table: the distinct set-bit positions
-    ``md5(key || salt || i) mod m_bits`` for i in 0..k-1 (Bloom 1970)
+    ``md5(key || '#' || i) mod m_bits`` for i in 0..k-1 (Bloom 1970)
     — the runtime-filter primitive a 100-TB join plans around: build
     the bits from the SMALL side's join keys, broadcast them, and
     semi-filter the big side's scan before the shuffle, turning most
@@ -353,7 +344,7 @@ def bloom_bits(
     bits = None
     for i in range(k_hashes):
         b = keys.select(
-            (_md5_u32(F.col("_k"), salt=f"{salt}#{i}") % m_bits).alias("bit")
+            (_md5_u32(F.col("_k"), salt=f"#{i}") % m_bits).alias("bit")
         )
         bits = b if bits is None else bits.unionByName(b)
     return bits.distinct()
@@ -365,13 +356,12 @@ def bloom_probe(
     key_col: str,
     m_bits: int = 1 << 16,
     k_hashes: int = 4,
-    salt: str = "",
 ) -> DataFrame:
     """Membership test against a :func:`bloom_bits` table: returns the
     probe rows plus ``maybe_member`` — true iff ALL k bit positions of
     the probe key are set (no false negatives; false positives at the
-    standard (1 - e^{-kn/m})^k rate). ``m_bits``/``k_hashes``/``salt``
-    must match the build call.
+    standard (1 - e^{-kn/m})^k rate). ``m_bits``/``k_hashes`` must
+    match the build call.
 
     Plan shape: each probe fans out to its k positions, LEFT-joins the
     bit table (dim-sized — Catalyst broadcasts it), and a keyed
@@ -386,7 +376,7 @@ def bloom_probe(
     for i in range(k_hashes):
         p = probes.select(
             F.col(key_col).alias("_k"),
-            (_md5_u32(F.col(key_col), salt=f"{salt}#{i}") % m_bits).alias(
+            (_md5_u32(F.col(key_col), salt=f"#{i}") % m_bits).alias(
                 "bit"
             ),
         )

@@ -32,20 +32,16 @@ def salted_join(
     on: str,
     factor: int = 8,
     salt_by: list[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join ``fact ⋈ dim`` on ``on`` with the hot-key shuffle
     spread over ``factor`` salt buckets. ``salt_by``: fact columns
     that determine the salt (default: all fact columns — any
     deterministic spread works; pass a stable row id when available).
-    ``how`` ∈ {inner, left} (semantics preserved for both: every dim
-    row exists in every salt bucket, so no match is lost).
+    Every dim row exists in every salt bucket, so no match is lost.
 
     Result columns = fact columns + dim's non-key columns, exactly
     like ``fact.join(dim, on)``.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how}")
     if factor < 1:
         raise ValueError("factor must be >= 1")
     salt_cols = salt_by or fact.columns
@@ -65,5 +61,4 @@ def salted_join(
             )
         ),
     )
-    out = f.join(d, on=[on, "_salt"], how=how)
-    return out.drop("_salt")
+    return f.join(d, on=[on, "_salt"]).drop("_salt")

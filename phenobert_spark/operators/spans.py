@@ -57,7 +57,7 @@ def drop_same_extent(
 def keep_maximal_spans(
     df: DataFrame, keys: list[str] | None = None, gappy_col: str | None = None
 ) -> DataFrame:
-    """J4 (use_longest=True): drop every span strictly contained in
+    """J4 (the reference's use_longest): drop every span strictly contained in
     another span of the same document. Input must be unique on
     (doc_id, start, end) — pre-aggregate duplicates first.
 
@@ -117,23 +117,20 @@ def suppress_contained_in(
     )
 
 
-def suppress_containing(
-    probe: DataFrame, anchors: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
+def suppress_containing(probe: DataFrame, anchors: DataFrame) -> DataFrame:
     """Reverse of :func:`suppress_contained_in`: remove probe spans
     that CONTAIN any anchor span of the same document. Used to keep
     model-stage candidates from swallowing an exact dictionary match —
-    under use_longest overlap resolution a longer fuzzy guess would
+    under longest-span overlap resolution a longer fuzzy guess would
     otherwise displace the shorter exact match it contains (measured
     -0.3 F1 on ID-68 before this guard).
 
     Same union + window trick (no join): one pass ordered by start,
     a range frame over rows starting at or after the probe, and the
     MIN anchor end in that frame decides containment."""
-    keys = keys or ["doc_id"]
-    both = _probe_anchor_union(probe, anchors, keys)
+    both = _probe_anchor_union(probe, anchors, ["doc_id"])
     w = (
-        Window.partitionBy(*keys)
+        Window.partitionBy("doc_id")
         .orderBy(F.col("start").asc())
         .rangeBetween(0, Window.unboundedFollowing)
     )
@@ -146,12 +143,11 @@ def suppress_containing(
     )
 
 
-def maximal_spans_bruteforce(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def maximal_spans_bruteforce(df: DataFrame) -> DataFrame:
     """Quadratic NOT-EXISTS reference implementation (oracle for tests;
     never on the hot path)."""
-    keys = keys or ["doc_id"]
     other = df.select(
-        *[F.col(k).alias(f"_o_{k}") for k in keys],
+        F.col("doc_id").alias("_o_doc_id"),
         F.col("start").alias("_o_start"),
         F.col("end").alias("_o_end"),
     )
@@ -159,9 +155,8 @@ def maximal_spans_bruteforce(df: DataFrame, keys: list[str] | None = None) -> Da
         (F.col("_o_start") <= F.col("start"))
         & (F.col("end") <= F.col("_o_end"))
         & ((F.col("_o_start") != F.col("start")) | (F.col("_o_end") != F.col("end")))
+        & (F.col("doc_id") == F.col("_o_doc_id"))
     )
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"_o_{k}"))
     return df.join(other, on=cond, how="left_anti")
 
 

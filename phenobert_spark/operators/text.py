@@ -32,22 +32,14 @@ def whitespace_tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def stopword_ratio(
-    toks: Column, stopwords: list[str] | None = None
-) -> Column:
-    stop = F.array(*[F.lit(s) for s in stopwords or QUALITY_STOPWORDS])
+def stopword_ratio(toks: Column) -> Column:
+    stop = F.array(*[F.lit(s) for s in QUALITY_STOPWORDS])
     nstop = F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
     return nstop / F.size(toks).cast("double")
 
 
 def corpus_filter(
     df: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    max_tokens: int = 100_000,
-    min_stopword_ratio: float = 0.05,
-    max_chars_per_token: float = 20.0,
-    stopwords: list[str] | None = None,
 ) -> DataFrame:
     """Append ``keep`` (boolean) and ``drop_reasons`` (sorted array of
     failed-rule names, empty when kept) to every row.
@@ -57,15 +49,15 @@ def corpus_filter(
     corpus). Callers do ``.filter("keep")`` for the training view and
     keep the full frame for the audit view — one narrow pass either
     way, no UDFs, rules re-derivable in any SQL engine."""
-    toks = whitespace_tokens(F.col(text_col))
+    toks = whitespace_tokens(F.col("text"))
     n = F.size(toks)
-    cpt = F.length(F.col(text_col)) / n.cast("double")
-    ratio = stopword_ratio(toks, stopwords)
+    cpt = F.length(F.col("text")) / n.cast("double")
+    ratio = stopword_ratio(toks)
     rules = [
-        ("too_short", n < min_tokens),
-        ("too_long", n > max_tokens),
-        ("low_stopword_ratio", ratio < min_stopword_ratio),
-        ("long_tokens", cpt > max_chars_per_token),
+        ("too_short", n < 5),
+        ("too_long", n > 100_000),
+        ("low_stopword_ratio", ratio < 0.05),
+        ("long_tokens", cpt > 20.0),
     ]
     reasons = F.array_sort(
         F.filter(
@@ -85,10 +77,6 @@ def corpus_filter(
 
 def repetition_scores(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 2,
-    dup_n: int = 5,
 ) -> DataFrame:
     """Within-document repetition signals — the Gopher-rules family
     (Rae et al. 2021 §A1.1): machine-generated and boilerplate text is
@@ -96,9 +84,9 @@ def repetition_scores(
 
     Per doc: ``n_tokens`` · ``ttr`` (type/token ratio) ·
     ``top_word_frac`` (count of the most frequent token / n_tokens) ·
-    ``top_ngram_frac`` (fraction of ``top_n``-gram positions taken by
-    the single most frequent ``top_n``-gram) · ``dup_ngram_frac``
-    (fraction of ``dup_n``-gram positions whose gram occurs more than
+    ``top_ngram_frac`` (fraction of 2-gram positions taken by the
+    single most frequent 2-gram) · ``dup_ngram_frac`` (fraction of
+    5-gram positions whose gram occurs more than
     once in the doc). Position fractions are bounded in [0, 1] — the
     paper's character-coverage variant is not engine-portable (overlap
     handling differs); position coverage is, and ranks docs the same.
@@ -110,8 +98,8 @@ def repetition_scores(
     and the doc-keyed exchanges co-partition."""
     from .dedup import _token_ngrams
 
-    doc = F.col(id_col).alias("doc_id")
-    uni = df.select(doc, F.explode(whitespace_tokens(F.col(text_col))).alias("t"))
+    doc = F.col("doc_id").alias("doc_id")
+    uni = df.select(doc, F.explode(whitespace_tokens(F.col("text"))).alias("t"))
     ustats = (
         uni.groupBy("doc_id", "t")
         .agg(F.count("*").alias("c"))
@@ -125,7 +113,7 @@ def repetition_scores(
 
     def gram_stats(w, suffix):
         g = df.select(
-            doc, F.explode_outer(_token_ngrams(text_col, w)).alias("g")
+            doc, F.explode_outer(_token_ngrams(w)).alias("g")
         )
         live = F.col("g").isNotNull()
         return (
@@ -147,8 +135,8 @@ def repetition_scores(
             )
         )
 
-    t = gram_stats(int(top_n), "_t")
-    d = gram_stats(int(dup_n), "_d")
+    t = gram_stats(2, "_t")
+    d = gram_stats(5, "_d")
     frac = lambda num, den: (num / F.greatest(den, F.lit(1)).cast("double"))
     return (
         ustats.join(t, on="doc_id")
@@ -166,10 +154,7 @@ def repetition_scores(
 
 def vocab_topk(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 100,
-    min_df: int = 1,
 ) -> DataFrame:
     """Top-k corpus vocabulary: (token, tf, df) by descending term
     frequency, ties broken by token — deterministic.
@@ -181,8 +166,8 @@ def vocab_topk(
     the heavy-hitter token rows collapse map-side."""
     tok = (
         df.select(
-            F.col(id_col).alias("_doc"),
-            F.explode(whitespace_tokens(F.col(text_col))).alias("token"),
+            F.col("doc_id").alias("_doc"),
+            F.explode(whitespace_tokens(F.col("text"))).alias("token"),
         )
         .groupBy("token", "_doc")
         .agg(F.count("*").alias("_n"))
@@ -193,15 +178,13 @@ def vocab_topk(
             F.sum("_n").cast("bigint").alias("tf"),
             F.count("*").cast("bigint").alias("df"),
         )
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 1)
     )
     return agg.orderBy(F.col("tf").desc(), F.col("token").asc()).limit(k)
 
 
 def tfidf_vectors(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """L2-normalized tf-idf document vectors as a SPARSE (doc, token,
     weight) table: w = tf(doc,t) * ln(N/df(t)), divided by the doc's
@@ -218,14 +201,14 @@ def tfidf_vectors(
 
     tf = (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(whitespace_tokens(F.col(text_col))).alias("token"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(whitespace_tokens(F.col("text"))).alias("token"),
         )
         .groupBy("doc_id", "token")
         .agg(F.count("*").cast("double").alias("tf"))
     )
     dfreq = tf.groupBy("token").agg(F.count("*").cast("double").alias("df"))
-    total = df.select(F.col(id_col)).distinct().agg(
+    total = df.select(F.col("doc_id")).distinct().agg(
         F.count("*").cast("double").alias("_n")
     )
     w = tf.join(dfreq, on="token").crossJoin(F.broadcast(total)).select(
@@ -294,7 +277,6 @@ def sparse_cosine_pairs(
 
 def pmi_bigrams(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 5,
 ) -> DataFrame:
     """Pointwise mutual information for adjacent-token bigrams:
@@ -314,7 +296,7 @@ def pmi_bigrams(
     keyed counts; corpus totals ride along as a broadcast 1-row
     aggregate. PMI's ln takes exact-integer-derived arguments, so the
     value is engine-reproducible (q132's oracle recomputes it)."""
-    toks = whitespace_tokens(F.col(text_col))
+    toks = whitespace_tokens(F.col("text"))
     n = F.size(toks)
     big = docs.select(
         F.explode(
@@ -362,10 +344,7 @@ def pmi_bigrams(
 def dsir_importance(
     docs: DataFrame,
     target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 4096,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """Hashed n-gram importance weights for data selection (DSIR —
     Xie et al. 2023, "Data Selection for Language Models via
@@ -378,7 +357,7 @@ def dsir_importance(
     Features are word unigrams and space-joined bigrams under the
     q13/q144 whitespace convention, hashed into ``buckets`` via the
     first 8 hex chars of md5 (cross-engine exact — same idiom as
-    q119/q120). Both bag-of-bucket distributions are add-``smoothing``
+    q119/q120). Both bag-of-bucket distributions are add-one
     estimated; a doc's log-weight is::
 
         logw(d) = sum_{g in grams(d)} ln p_target[b(g)] - ln p_raw[b(g)]
@@ -396,9 +375,9 @@ def dsir_importance(
 
     def _grams(df: DataFrame) -> DataFrame:
         base = df.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
                 lambda x: x != F.lit(""),
             ).alias("_toks"),
         )
@@ -427,7 +406,7 @@ def dsir_importance(
     )
     # ratio table: <= B rows, dense over the buckets the raw corpus
     # touches (raw is the scored corpus, so every scored gram has a row)
-    s = float(smoothing)
+    s = 1.0  # add-one smoothing
     # coalesce: a gram-less target degrades to the uniform (smoothing-
     # only) distribution instead of null-ing every weight
     tt = tgt_counts.agg(F.coalesce(F.sum("_ct"), F.lit(0.0)).alias("_tt"))
@@ -455,7 +434,7 @@ def dsir_importance(
     )
     return (
         doc_buckets.join(ratio, on="_b")
-        .groupBy(F.col("_id").alias(id_col))
+        .groupBy(F.col("_id").alias("doc_id"))
         .agg(
             F.sum("_n").cast("bigint").alias("n_grams"),
             F.sum(F.col("_n") * F.col("_lr")).alias("logw"),
@@ -467,11 +446,7 @@ def dsir_select(
     docs: DataFrame,
     target: DataFrame,
     k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 4096,
-    smoothing: float = 1.0,
-    salt: str = "",
 ) -> DataFrame:
     """The full DSIR recipe in one call: score every raw doc with
     :func:`dsir_importance`, then importance-RESAMPLE ``k`` of them
@@ -481,7 +456,7 @@ def dsir_select(
     al. 2023 §3). The draw reuses
     :func:`~..sampling.weighted_order_sample`'s deterministic
     md5-priority order sampling, so the SELECTED SET is a pure
-    function of (corpus, target, salt) — any engine, any partitioning,
+    function of (corpus, target) — any engine, any partitioning,
     any day re-derives it, which is what a reproducible training-data
     release needs.
 
@@ -491,23 +466,17 @@ def dsir_select(
     """
     from .sampling import weighted_order_sample
 
-    w = dsir_importance(
-        docs, target, id_col=id_col, text_col=text_col,
-        buckets=buckets, smoothing=smoothing,
-    )
+    w = dsir_importance(docs, target, buckets=buckets)
     return (
         weighted_order_sample(
-            w.select(id_col, "logw", F.exp("logw").alias("_w")),
-            "_w", k, id_col=id_col, salt=salt,
+            w.select("doc_id", "logw", F.exp("logw").alias("_w")), "_w", k
         )
-        .select(id_col, "logw", "priority")
+        .select("doc_id", "logw", "priority")
     )
 
 
 def bigram_lm_scores(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: float = 0.5,
 ) -> DataFrame:
     """Per-document negative log-likelihood under an add-k-smoothed
@@ -532,8 +501,8 @@ def bigram_lm_scores(
     trains on 10^12 docs.
     """
     toks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_toks"),
+        F.col("doc_id").alias("_id"),
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("_toks"),
     ).localCheckpoint(eager=True)
     # adjacent-token pairs, fully JVM-side: zip the array against its
     # own 1-shifted slice — no posexplode self-join, no extra shuffle
@@ -563,7 +532,7 @@ def bigram_lm_scores(
         pairs.join(bc, on=["prev", "cur"])
         .join(hc, on="prev")
         .crossJoin(v)
-        .groupBy(F.col("_id").alias(id_col))
+        .groupBy(F.col("_id").alias("doc_id"))
         .agg(
             F.count("*").cast("bigint").alias("n_bigrams"),
             (
@@ -581,8 +550,6 @@ def bigram_lm_scores(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> "list[tuple[int, str, str, int]]":
     """Byte-pair-encoding merge-table training (Sennrich 2016 /
     GPT-2 style) over the corpus — the tokenizer-training pass of an
@@ -607,7 +574,7 @@ def bpe_train(
     wt = (
         docs.select(
             F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
             ).alias("word")
         )
         .filter(F.col("word") != "")
@@ -672,8 +639,6 @@ PII_IPV4_RE = r"\b(\d{1,3}\.){3}\d{1,3}\b"
 
 def pii_redact(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Scrub emails and IPv4 addresses from a corpus before release —
     the standard pre-training privacy pass (CCNet/Dolma-style rule
@@ -693,9 +658,9 @@ def pii_redact(
     At 10^12 docs this is a map-only pass that pipelines with the
     scan.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_replace(
             F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"),
             PII_IPV4_RE,
@@ -710,9 +675,9 @@ def normalize_unicode(
     df: DataFrame,
     text_col: str = "text",
     form: str = "NFC",
-    out_col: str = "text_norm",
 ) -> DataFrame:
-    """Unicode normalization (NFC/NFKC/NFD/NFKD) of a text column —
+    """Unicode normalization (NFC/NFKC/NFD/NFKD) of a text column into
+    ``text_norm`` —
     the hygiene pass a multilingual web corpus runs before ANY
     string-keyed operation: the same visible string in composed vs
     decomposed form (``é`` vs ``e``+U+0301) hashes, dedups, joins and
@@ -728,17 +693,17 @@ def normalize_unicode(
 
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form: {form}")
-    if out_col in df.columns:
-        raise ValueError(f"output column already exists: {out_col}")
+    if "text_norm" in df.columns:
+        raise ValueError("output column already exists: text_norm")
     out_schema = StructType(
-        df.schema.fields + [StructField(out_col, StringType())]
+        df.schema.fields + [StructField("text_norm", StringType())]
     )
 
     def _norm(batches):
         import unicodedata
 
         for pdf in batches:
-            pdf[out_col] = pdf[text_col].map(
+            pdf["text_norm"] = pdf[text_col].map(
                 lambda x: None if x is None else unicodedata.normalize(form, x)
             )
             yield pdf
@@ -795,8 +760,6 @@ def script_profile(
 
 def abbreviation_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Schwartz-Hearst (PSB 2003) abbreviation-definition extraction:
     every ``long form (SF)`` occurrence yields the (short_form,
@@ -825,7 +788,7 @@ def abbreviation_pairs(
 
     out_schema = StructType(
         [
-            df.schema[id_col],
+            df.schema["doc_id"],
             StructField("short_form", StringType()),
             StructField("long_form", StringType()),
         ]
@@ -860,7 +823,7 @@ def abbreviation_pairs(
     def gen(batches):
         for pdf in batches:
             out_ids, out_sf, out_lf = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
+            for rid, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
                 for m in paren.finditer(text):
@@ -881,10 +844,10 @@ def abbreviation_pairs(
 
             yield pd.DataFrame(
                 {
-                    id_col: out_ids,
+                    "doc_id": out_ids,
                     "short_form": out_sf,
                     "long_form": out_lf,
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return df.select("doc_id", "text").mapInPandas(gen, out_schema)

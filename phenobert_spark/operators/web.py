@@ -59,7 +59,7 @@ def _canon_query(query: Column) -> Column:
     return F.array_join(F.array_sort(kept), "&")
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonicalize_urls(df: DataFrame) -> DataFrame:
     """Append ``scheme``, ``host``, ``reg_domain`` and ``canon_url``
     to every row; non-URL-shaped values yield NULLs (kept, not
     dropped — the caller decides whether malformed rows are errors).
@@ -79,7 +79,7 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     stage, so it composes with any downstream keyed op at zero extra
     exchanges, and the regexes live inside WholeStageCodegen.
     """
-    u = F.trim(F.col(url_col))
+    u = F.trim(F.col("url"))
     scheme = F.lower(F.regexp_extract(u, _URL_RE, 1))
     host0 = F.lower(F.regexp_extract(u, _URL_RE, 2))
     host1 = F.regexp_replace(host0, r"\.$", "")

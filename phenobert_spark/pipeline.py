@@ -141,7 +141,7 @@ def annotate(
         survivors = suppress_contained_in(unmatched, anchors)
         # ... and candidates CONTAINING an exact match are equally
         # barred: a longer fuzzy span must not displace the exact
-        # dictionary match inside it under use_longest resolution.
+        # dictionary match inside it under maximal-span resolution.
         survivors = suppress_containing(survivors, anchors)
         model_matched = model_link(spark, survivors, onto, cfg)
         if model_matched is not None:
@@ -170,12 +170,8 @@ def annotate(
         ),
     )
 
-    final = (
-        keep_maximal_spans(matched, keys=keys, gappy_col="gappy")
-        if cfg.use_longest
-        else matched
-    )
-    triples = final.select(
+    # Keep maximal spans (the reference's use_longest, annotate.py -al).
+    triples = keep_maximal_spans(matched, keys=keys, gappy_col="gappy").select(
         "doc_id",
         F.lit("has_phenotype").alias("pred"),
         "hpo_id",

@@ -46,10 +46,10 @@ def annotate_stream(
     checkpoint_path: str,
     onto: Ontology,
     cfg: PipelineConfig = PipelineConfig(),
-    dedupe_replays: bool = True,
 ) -> StreamingQuery:
     """Stream documents (parquet files appearing under ``input_path``)
-    through the annotation pipeline into ``output_path``."""
+    through the annotation pipeline into ``output_path``, each batch's
+    triples deduplicated on (doc_id, start, end, hpo_id)."""
     stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", 16)  # bound micro-batch size
@@ -59,9 +59,9 @@ def annotate_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        triples = annotate(spark, batch_df, onto, cfg)
-        if dedupe_replays:
-            triples = triples.dropDuplicates(["doc_id", "start", "end", "hpo_id"])
+        triples = annotate(spark, batch_df, onto, cfg).dropDuplicates(
+            ["doc_id", "start", "end", "hpo_id"]
+        )
         # Idempotent replay: overwrite ONLY this batch's partition. The
         # per-write option (not the session conf) matters here —
         # foreachBatch hands over a DataFrame bound to a cloned session,
@@ -151,15 +151,9 @@ def kg_upsert_stream(
     )
 
 
-def latest_kg_snapshot(
-    spark: SparkSession, snapshot_dir: str, include_tombstones: bool = False
-) -> DataFrame:
-    """Read the newest snapshot version written by ``kg_upsert_stream``.
-
-    By default returns the LIVE triples (subj, pred, obj, as_of_ts);
-    ``include_tombstones=True`` returns the raw last-event state with
-    ``last_op`` (what the next micro-batch folds against).
-    """
+def latest_kg_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
+    """The LIVE triples (subj, pred, obj, as_of_ts) of the newest
+    snapshot version written by ``kg_upsert_stream``."""
     import os
 
     versions = [
@@ -170,8 +164,6 @@ def latest_kg_snapshot(
     if not versions:
         raise ValueError(f"no snapshot versions under {snapshot_dir}")
     state = spark.read.parquet(f"{snapshot_dir}/v={max(versions)}")
-    if include_tombstones:
-        return state
     return state.filter(F.col("last_op") == "add").select(
         "subj", "pred", "obj", "as_of_ts"
     )

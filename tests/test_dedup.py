@@ -248,40 +248,6 @@ def test_dedup_corpus_job_end_to_end(spark, tmp_path):
     assert len({1, 2, 3} & kept_ids) == 1
 
 
-def test_minhash_xxhash_family(spark):
-    """Carter-Wegman xxhash family: same output shape as the md5
-    family (8-hex strings), exact dups get identical signatures, LSH
-    banding still surfaces the planted near-dup pair, deterministic
-    across partitionings, and wider signatures (16) are supported."""
-    d = spark.createDataFrame(ROWS, "doc_id bigint, text string")
-    sig = minhash_signatures(d, n_hashes=16, hash_family="xxhash")
-    rows = {r.doc_id: tuple(r)[1:] for r in sig.collect()}
-    assert all(len(v) == 16 for v in rows.values())
-    assert all(len(h) == 8 for v in rows.values() for h in v)
-    assert rows[1] == rows[2]  # exact dup -> identical signature
-    assert rows[1] != rows[4]
-    rows2 = {
-        r.doc_id: tuple(r)[1:]
-        for r in minhash_signatures(
-            d.repartition(7), n_hashes=16, hash_family="xxhash"
-        ).collect()
-    }
-    assert rows == rows2
-
-    sig8 = minhash_signatures(d, n_hashes=16, hash_family="xxhash")
-    bands = [[c] for c in sig8.columns if c.startswith("mh")]
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in lsh_candidate_pairs(sig8, bands=bands).collect()
-    }
-    assert (1, 2) in pairs  # exact dup always collides
-    # planted near-dup (Jaccard ~0.5): 16 width-1 bands leave
-    # P(miss) = (1-j)^16 ~ 1.5e-5; with this fixed deterministic
-    # family the collision is a pinned fact, not a coin flip
-    assert (1, 3) in pairs
-    assert (1, 4) not in pairs  # unrelated docs stay apart
-
-
 def test_dup_ngram_stats_flags_shared_run(spark):
     """Docs sharing an 8-token run each get exactly that gram counted
     duplicated; a unique doc gets zero; n_grams = len - w + 1."""
@@ -300,19 +266,6 @@ def test_dup_ngram_stats_flags_shared_run(spark):
     assert out[1].n_grams == 14 - 8 + 1 and out[2].n_grams == 11 - 8 + 1
     assert out[1].n_dup == 1 and out[2].n_dup == 1 and out[3].n_dup == 0
     assert out[1].dup_ratio == round(1 / 7, 4)
-
-
-def test_dup_ngram_stats_hashed_matches_strings(spark):
-    """The 100-TB hash_grams path must agree with the exact string
-    path (collisions at 2^-64 are unobservable on test data)."""
-    from phenobert_spark.operators.dedup import dup_ngram_stats
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = sorted(map(tuple, dup_ngram_stats(docs, w=8).collect()))
-    b = sorted(
-        map(tuple, dup_ngram_stats(docs, w=8, hash_grams=True).collect())
-    )
-    assert a == b
 
 
 def test_dup_ngram_stats_short_doc(spark):
@@ -549,17 +502,6 @@ def test_ngram_contamination_train_df_cut_and_hash_twin(spark):
     assert (
         ngram_contamination(train, test, w=4, max_train_df=3).count() == 0
     )
-    # hashed wire variant computes identical values
-    a = sorted(
-        tuple(r) for r in ngram_contamination(train, test, w=4).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in ngram_contamination(
-            train, test, w=4, hash_grams=True
-        ).collect()
-    )
-    assert a == b
 
 
 def test_incremental_dedup_statuses_and_priority(spark):
@@ -613,9 +555,7 @@ def test_incremental_dedup_near_via_bands(spark):
     )
     # the status must agree with a direct band comparison (no false
     # assumption that the variant always collides)
-    sigs = minhash_signatures(
-        seen.unionByName(inc), text_col="text", id_col="doc_id"
-    ).collect()
+    sigs = minhash_signatures(seen.unionByName(inc)).collect()
     by_id = {r.doc_id: r for r in sigs}
     b_seen = {
         ("0", by_id[1].mh1, by_id[1].mh2),

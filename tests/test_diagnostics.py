@@ -22,7 +22,6 @@ def test_key_skew_profile_composite_key_and_errors(spark):
     df = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "a int, b string")
     out = key_skew_profile(df, ["a", "b"], top_n=10).collect()
     assert out[0].key == "1\x01x" and out[0].cnt == 2  # unambiguous sep
-    assert key_skew_profile(df, ["a", "b"], sep="|").collect()[0].key == "1|x"
     assert len(out) == 2
     with pytest.raises(ValueError):
         key_skew_profile(df, [])

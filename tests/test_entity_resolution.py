@@ -49,19 +49,6 @@ def test_blocked_matches_hand_computed(spark, parts):
     assert got[(1, 2)][1] == pytest.approx(1 - 1 / 11, abs=1e-6)
 
 
-def test_blocked_matches_max_block_size_drops_hot_block(spark, parts):
-    out = blocked_matches(
-        parts,
-        id_col="id",
-        name_col="name",
-        block_cols=[F.col("brand"), F.substring_index(F.col("name"), " ", 1)],
-        max_edit=2,
-        max_block_size=3,
-    )
-    # the 4-row (B1, "small") block is dropped entirely
-    assert out.count() == 0
-
-
 TRIPLES = [(h, "r", t) for h, t in [(1, 10), (1, 20), (2, 20), (3, 30)]]
 
 

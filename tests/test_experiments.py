@@ -25,7 +25,7 @@ def test_ab_test_hand_computed(spark):
 def test_ab_test_missing_control_raises(spark):
     df = spark.createDataFrame([("B", 1)], "variant string, converted int")
     with pytest.raises(ValueError):
-        ab_test_report(df, control="A")
+        ab_test_report(df)
 
 
 def test_decayed_counts_hand_computed(spark):

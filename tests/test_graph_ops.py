@@ -163,20 +163,6 @@ def test_cyclic_nodes_empty_on_dag_and_self_loop(spark):
     assert {r.node for r in cyclic_nodes(loop).collect()} == {"x"}
 
 
-def test_cyclic_nodes_accepts_precomputed_closure(spark):
-    from phenobert_spark.operators.closure import (
-        cyclic_nodes,
-        transitive_closure,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a")], "child string, parent string"
-    )
-    cl = transitive_closure(edges)
-    got = {r.node for r in cyclic_nodes(edges, closure=cl).collect()}
-    assert got == {"a", "b"}
-
-
 def _scc_ref(edges):
     """Driver-side Tarjan reference: node -> min-id of its SCC."""
     import sys
@@ -335,7 +321,7 @@ def test_edge_support_random_brute(spark):
     assert got == _support_ref(edges)
 
 
-def _wl_ref(edges, rounds, labels=None):
+def _wl_ref(edges, rounds):
     """Driver-side 1-WL twin (md5 colors, sorted neighbor multiset)."""
     import hashlib
 
@@ -344,7 +330,7 @@ def _wl_ref(edges, rounds, labels=None):
     for a, b in und:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-    color = {n: (labels or {}).get(n, "0") for n in adj}
+    color = {n: "0" for n in adj}
     for _ in range(rounds):
         color = {
             n: hashlib.md5(
@@ -386,16 +372,9 @@ def test_wl_label_seed_and_random_graph(spark):
         for b in range(20)
         if a < b and rng.random() < 0.15
     ]
-    labels = {f"v{i}": str(i % 3) for i in range(20)}
     e = spark.createDataFrame(edges, "src string, dst string")
-    lab = spark.createDataFrame(
-        list(labels.items()), "node string, label string"
-    )
-    got = {
-        r.node: r.color
-        for r in wl_refinement(e, rounds=2, labels=lab).collect()
-    }
-    assert got == _wl_ref(edges, 2, labels)
+    got = {r.node: r.color for r in wl_refinement(e, rounds=2).collect()}
+    assert got == _wl_ref(edges, 2)
     with pytest.raises(ValueError):
         wl_refinement(e, rounds=0)
 

@@ -258,20 +258,6 @@ def test_random_walks_follow_md5_argmin(spark):
     assert list(out["s1#0"].path) == ["s1", "n"] and out["s1#0"].steps == 1
 
 
-def test_random_walks_multiple_per_node_diverge_deterministically(spark):
-    edges = spark.createDataFrame(
-        [("p", "a"), ("p", "b"), ("p", "c"), ("p", "d")],
-        "src string, dst string",
-    )
-    out = {r.walk_id: list(r.path) for r in random_walks(edges, walk_len=1, walks_per_node=3).collect()}
-    assert set(out) == {"p#0", "p#1", "p#2"}
-    for wid, path in out.items():
-        assert path == ["p", _expected_hop(wid, 1, ["a", "b", "c", "d"])]
-    # re-run is bit-identical
-    again = {r.walk_id: list(r.path) for r in random_walks(edges, walk_len=1, walks_per_node=3).collect()}
-    assert again == out
-
-
 def test_random_walks_rejects_bad_len(spark):
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(ValueError):

@@ -80,14 +80,6 @@ def test_retention_cohorts_hand_computed(spark):
     assert len(got) == 5
 
 
-def test_retention_custom_period(spark):
-    rows = [("u1", _ts(1)), ("u1", _ts(2)), ("u2", _ts(1))]
-    df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    got = retention_cohorts(df, period_days=1).collect()
-    by = {(r.cohort_period, r.period_offset): r.n_users for r in got}
-    assert by[(0, 0)] == 2 and by[(0, 1)] == 1
-
-
 def test_zone_map_pruning_zorder_beats_naive(spark):
     from phenobert_spark.operators.layout import (
         assign_zorder_files,

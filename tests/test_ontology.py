@@ -314,6 +314,33 @@ def test_prune_vocab_covers_dict_keys(spark, onto, tiers):
     _assert_prune_vocab_covers_keys(spark, onto, tiers)
 
 
+@pytest.mark.parametrize("tiers", TIERS)
+def test_dict_prios_are_the_probed_prios(spark, onto, tiers):
+    """The dictionary of a tier set carries rows of exactly the prios
+    ``link_dictionary`` joins for it, read off the filters of its plan:
+    rows of a prio no join probes are dead weight in the broadcast and
+    in the prune vocabulary."""
+    import re
+
+    from phenobert_spark.config import PipelineConfig, local_frame
+    from phenobert_spark.operators.candidates import CANDIDATES_SCHEMA
+    from phenobert_spark.pipeline import link_dictionary
+
+    mc, pmc, d1 = tiers
+    cfg = PipelineConfig(
+        syn_tier_min_count=mc, syn_phrase_min_count=pmc, drop_one_dict=d1
+    )
+    cands = local_frame(spark, [], CANDIDATES_SCHEMA)
+    matched, _ = link_dictionary(spark, cands, onto, cfg)
+    plan = matched._jdf.queryExecution().analyzed().toString()
+    probed = set()
+    for op, k in re.findall(r"prio#\d+ (<=|=) (\d+)", plan):
+        probed |= set(range(int(k) + 1)) if op == "<=" else {int(k)}
+    dict_df = onto.dict_df(spark, mc, pmc, d1)
+    present = {r.prio for r in dict_df.select("prio").distinct().collect()}
+    assert present == probed
+
+
 @pytest.mark.skipif(
     not os.path.isdir(os.path.join(REFERENCE_ROOT, "phenobert")),
     reason="reference checkout not present",

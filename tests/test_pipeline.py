@@ -76,7 +76,7 @@ def test_triples_schema(fixture_run):
 def test_skew_chunking_equivalence(spark, onto):
     """A long document chunked at 512B produces the same triples as the
     same document processed whole (chunking is loss-free)."""
-    docs, gold = synthesize_corpus(spark, onto, n_docs=6, long_doc_every=2)
+    docs, gold = synthesize_corpus(spark, onto, n_docs=11)
     t_small = annotate(
         spark, docs, onto, PipelineConfig(chunk_target_bytes=512)
     )

@@ -166,14 +166,6 @@ def test_mixture_sample_flattening_and_determinism(spark):
     prop = mixture_sample(df, alpha=1.0, sample_frac=0.25).collect()
     assert all(abs(r.p_keep - 0.25) < 1e-6 for r in prop)
 
-    # a salt derives an independent draw over the same keys
-    salted = {
-        r.doc_id: r.keep
-        for r in mixture_sample(df, alpha=0.5, sample_frac=0.5, salt="s1").collect()
-    }
-    base = {r.doc_id: r.keep for r in out}
-    assert salted != base
-
 
 def test_weighted_order_sample_python_replica(spark):
     import hashlib
@@ -183,23 +175,20 @@ def test_weighted_order_sample_python_replica(spark):
     rows = [(i, "g1" if i % 2 else "g2", float(1 + (i * 37) % 90)) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id bigint, g string, w double")
 
-    def prio(i, w, salt=""):
-        h = int(hashlib.md5((str(i) + salt).encode()).hexdigest()[:8], 16)
+    def prio(i, w):
+        h = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
         return ((h + 1) / 2**32) / w
 
     # exact-set parity with a driver-side replica of the formula
-    for salt in ["", "s1"]:
-        got = {
-            (r.g, r.doc_id)
-            for r in weighted_order_sample(
-                df, "w", 10, salt=salt, group_cols=["g"]
-            ).collect()
-        }
-        want = set()
-        for g in ["g1", "g2"]:
-            members = [(prio(i, w, salt), i) for i, gg, w in rows if gg == g]
-            want |= {(g, i) for _, i in sorted(members)[:10]}
-        assert got == want, salt
+    got = {
+        (r.g, r.doc_id)
+        for r in weighted_order_sample(df, "w", 10, group_cols=["g"]).collect()
+    }
+    want = set()
+    for g in ["g1", "g2"]:
+        members = [(prio(i, w), i) for i, gg, w in rows if gg == g]
+        want |= {(g, i) for _, i in sorted(members)[:10]}
+    assert got == want
 
     # global top-k path (TakeOrdered, no window)
     topk = weighted_order_sample(df, "w", 15).collect()
@@ -258,10 +247,3 @@ def test_rendezvous_minimal_movement_and_determinism(spark):
     counts = Counter(a10.values())
     assert set(counts) == set(range(10))
     assert min(counts.values()) > 130 and max(counts.values()) < 280
-
-    # salt derives an independent layout
-    salted = {
-        r.doc_id: r.shard
-        for r in rendezvous_assign(df, 10, salt="s1").collect()
-    }
-    assert salted != a10

@@ -187,10 +187,6 @@ def test_mine_path_rules_hand_computed(spark):
     assert (r.body_p, r.body_q, r.head_t) == ("located_in", "part_of", "in_region")
     assert (r.n_body, r.support) == (3, 2)
     assert r.confidence == pytest.approx(2 / 3, abs=1e-6)
-    # thresholds prune
-    assert (
-        mine_path_rules(t, min_confidence=0.7).count() == 0
-    )
 
 
 def test_mine_path_rules_excludes_self_heads(spark):

@@ -63,12 +63,6 @@ def test_hll_registers_merge_by_max(spark, keyed):
     )
 
 
-def test_hll_salt_derives_independent_registers(spark, keyed):
-    base = hll_registers(keyed, "k", ["g"], p=8).collect()
-    salted = hll_registers(keyed, "k", ["g"], p=8, salt="s1").collect()
-    assert sorted(map(tuple, base)) != sorted(map(tuple, salted))
-
-
 def test_histogram_quantiles_bucket_accuracy(spark):
     rows = [("g", float(v)) for v in range(1, 1001)]
     df = spark.createDataFrame(rows, "g string, v double")
@@ -155,29 +149,6 @@ def test_countmin_upper_bound_and_merge(spark):
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, table.collect())
     )
-
-
-def test_countmin_weighted(spark):
-    from phenobert_spark.operators.sketches import (
-        countmin_estimate,
-        countmin_table,
-    )
-
-    df = spark.createDataFrame(
-        [("a", 10), ("a", 5), ("b", 2)], "k string, w int"
-    )
-    table = countmin_table(df, "k", depth=3, width_bits=6, weight_col="w")
-    got = {
-        r.key: r.est
-        for r in countmin_estimate(
-            table,
-            spark.createDataFrame([("a",), ("b",)], "k string"),
-            "k",
-            depth=3,
-            width_bits=6,
-        ).collect()
-    }
-    assert got["a"] >= 15 and got["b"] >= 2
 
 
 def test_corpus_stats_job_end_to_end(spark, tmp_path):
