@@ -7,8 +7,8 @@
   README.md:144-151).
 * ``link_phrases``   — reference api.get_most_related_HPO_term
   (api.py:69-124): phrases -> best HPO id or "None" (the entity-linking
-  core without span logic: one candidate row per phrase, linked by the
-  same ``pipeline.link_dictionary`` tiers ``annotate`` uses).
+  core without span logic: each phrase's keys are linked on the driver
+  by the same ``Ontology.linker`` tiers ``annotate`` probes).
 * ``export_reference_tsv`` — reference's one-file-per-document output
   sink (S7, util.py:1039-1042) for side-by-side parity diffing.
 * ``SearchIndex``    — reference gene_reviews_search_engine.py:8-46:
@@ -31,7 +31,7 @@ from .config import PipelineConfig, local_frame
 from .corpus import DOCUMENTS_SCHEMA
 from .ontology import Ontology, get_ontology
 from .operators.candidates import CANDIDATES_SCHEMA
-from .pipeline import annotate, link_dictionary
+from .pipeline import annotate
 
 
 def _tsv_line(r) -> str:
@@ -69,9 +69,10 @@ def link_phrases(
 ) -> list[tuple[str, str]]:
     """Entity-linking core (E3): each phrase -> (phrase, hpo_id|'None').
 
-    Dictionary tiers first (``pipeline.link_dictionary``, as in
-    ``annotate``); misses go through the model-analog stages (the
-    reference's CNN->BERT path, api.py:69-124)."""
+    Dictionary tiers first (``Ontology.linker``, the tiers ``annotate``
+    links through, resolved on the driver); misses go through the
+    model-analog stages (the reference's CNN->BERT path,
+    api.py:69-124)."""
     from .functions.normalize import (
         lemma_key_of,
         process_str,
@@ -81,21 +82,24 @@ def link_phrases(
     )
 
     onto = onto or get_ontology()
-    rows = []
+    link = onto.linker(
+        cfg.syn_tier_min_count, cfg.syn_phrase_min_count, cfg.drop_one_dict
+    )
+    hits, misses = {}, []
     for i, p in enumerate(phrases):
         toks = simplify_tokens(process_str(p)) or process_str(p)
         key = sorted_bag_key(toks)
-        rows.append(
-            (str(i), 0, len(p), p, key, lemma_key_of(key), stem_key_of(toks),
-             len(toks), False, False)
-        )
-    cand = local_frame(spark, rows, CANDIDATES_SCHEMA)
-    matched, misses = link_dictionary(spark, cand, onto, cfg)
-    hits = {int(r.doc_id): r.hpo_id for r in matched.collect()}
-    if cfg.use_model_stages and misses.take(1):
+        keys = (key, lemma_key_of(key), stem_key_of(toks))
+        hit = link(*keys)
+        if hit is not None:
+            hits[i] = hit[0]
+        else:
+            misses.append((str(i), 0, len(p), p, *keys, len(toks), False, False))
+    if cfg.use_model_stages and misses:
         from .linking.infer import model_link
 
-        for r in model_link(spark, misses, onto, cfg).collect():
+        cand = local_frame(spark, misses, CANDIDATES_SCHEMA)
+        for r in model_link(spark, cand, onto, cfg).collect():
             hits[int(r.doc_id)] = r.hpo_id
     return [(p, hits.get(i, "None")) for i, p in enumerate(phrases)]
 

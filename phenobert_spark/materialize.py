@@ -170,14 +170,16 @@ def run_with_checkpoint(
             # applied exactly once per partition. That is why the doc
             # fingerprint above stays an aggregate over the persisted
             # input: a re-applied map-stage update would cancel an XOR.
+            # One array expression holds every batch bucket's count:
+            # built in one call, where a Column per bucket costs dozens
+            # of driver round trips each.
             counts = Observation()
-            triples = (
-                annotate(spark, part.drop("bucket"), onto, cfg, n_buckets=n_buckets)
-                .observe(
-                    counts,
-                    *[F.count_if(F.col("bucket") == b).alias(f"b{b}") for b in batch],
-                )
+            per_bucket = ", ".join(
+                f"count(CASE WHEN bucket = {b} THEN 1 END)" for b in batch
             )
+            triples = annotate(
+                spark, part.drop("bucket"), onto, cfg, n_buckets=n_buckets
+            ).observe(counts, F.expr(f"array({per_bucket}) AS n"))
             # Clear any partial output from a crashed prior attempt for
             # buckets that would otherwise emit zero rows this run
             # (dynamic overwrite only touches partitions present in the
@@ -191,14 +193,14 @@ def run_with_checkpoint(
                 .partitionBy("bucket")
                 .parquet(triples_dir)
             )
-            n_triples = counts.get
+            n_triples = dict(zip(batch, counts.get["n"]))
         finally:
             part.unpersist()
         wall = round(time.time() - t0, 3) or 0.001
         manifest_rows = local_frame(
             spark,
             [
-                (b, stats.get(b, (0, 0))[0], n_triples[f"b{b}"], stats.get(b, (0, 0))[1], wall)
+                (b, stats.get(b, (0, 0))[0], n_triples[b], stats.get(b, (0, 0))[1], wall)
                 for b in batch
             ],
             MANIFEST_SCHEMA,

@@ -53,6 +53,7 @@ from .functions.normalize import (
     sorted_bag_key,
     stem_key_of,
 )
+from .operators.dict_link import DictLinker
 
 ROOT = "HP:0000118"
 
@@ -402,6 +403,23 @@ class Ontology:
         )
 
     @_memoized
+    def linker(
+        self,
+        syn_min_count: int | None,
+        syn_phrase_min_count: int | None,
+        drop_one: bool,
+    ) -> DictLinker:
+        """The dictionary tiers of :meth:`_dict_rows` as the hash tables
+        the candidate kernel (and ``api.link_phrases``) probes: the
+        prio-3 tier with the synonym tier, the prio-4 tier with
+        ``drop_one``."""
+        return DictLinker(
+            self._dict_rows(syn_min_count, syn_phrase_min_count, drop_one),
+            has_syn_tier=syn_min_count is not None,
+            has_drop_one=drop_one,
+        )
+
+    @_memoized
     def _dict_rows(
         self,
         syn_min_count: int | None,
@@ -418,8 +436,8 @@ class Ontology:
         splits and single-token synonym substitutions of every key in
         LEMMA space (probed by the candidates' existing lemma_key
         column), using pairs mined by :meth:`mined_substitutions`.
-        Without it ``dictionary_link`` never probes prio 3, so no such
-        row is built. Variants that collide with the
+        Without it no tier probes prio 3 (``dict_link.active_tiers``),
+        so no such row is built. Variants that collide with the
         existing lemma probe space are dropped; a variant several
         concepts generate goes to one of them (``unique_best``).
         """

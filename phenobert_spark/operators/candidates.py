@@ -21,7 +21,10 @@ Pipeline per chunk (all offsets index the raw ``content``):
 6. simplification (num->word, drop stopwords/numbers, util.py:239-252),
 7. k-mer enumeration, k<=10, singleton stopword/number k-mers dropped
    (util.py:999-1014),
-8. dictionary keys: sorted-bag key + lemma fallback key (util.py:409-421).
+8. dictionary keys: sorted-bag key + lemma fallback key (util.py:409-421),
+9. optionally, dictionary linking in place: the k-mer's keys probe the
+   broadcast tier tables (operators/dict_link.DictLinker), so the
+   pipeline's Step 1 adds no join to the plan.
 
 Scale: this is the dominant narrow stage. It runs after the skew
 chunker (corpus.chunked), so per-task work is bounded by
@@ -38,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
+    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -81,6 +85,14 @@ CANDIDATES_SCHEMA = StructType(
         StructField("n_tokens", IntegerType(), False),
         StructField("negated", BooleanType(), False),
         StructField("gappy", BooleanType(), False),
+    ]
+)
+# candidates linked in the kernel (generate_candidates(linker_bc=))
+LINKED_SCHEMA = StructType(
+    CANDIDATES_SCHEMA.fields
+    + [
+        StructField("hpo_id", StringType(), True),
+        StructField("score", DoubleType(), True),
     ]
 )
 
@@ -260,18 +272,30 @@ def candidates_of_text(
 
 
 def generate_candidates(
-    chunks: DataFrame, max_kmer_len: int = 10, vocab_bc=None
+    chunks: DataFrame,
+    max_kmer_len: int = 10,
+    vocab_bc=None,
+    linker_bc=None,
+    keep_misses: bool = False,
 ) -> DataFrame:
     """chunks(doc_id, chunk_id, chunk_start, chunk_text) -> candidates DF.
 
     ``vocab_bc``: optional ``sc.broadcast(frozenset)`` of dictionary
     vocabulary tokens for exact candidate pruning (see
-    candidates_of_text)."""
+    candidates_of_text).
+
+    ``linker_bc``: optional broadcast ``dict_link.DictLinker``. With it
+    each candidate is linked in place and the rows carry ``hpo_id`` and
+    ``score`` (LINKED_SCHEMA): only the linked ones, plus, with
+    ``keep_misses``, the unlinked ones with both null (the model
+    stages' input)."""
+    schema = CANDIDATES_SCHEMA if linker_bc is None else LINKED_SCHEMA
+    cols = schema.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vocab = vocab_bc.value if vocab_bc is not None else None
-        cols = ["doc_id", "start", "end", "mention", "key", "lemma_key",
-                "stem_key", "n_tokens", "negated", "gappy"]
+        link = linker_bc.value if linker_bc is not None else None
+        miss = (None, None) if keep_misses else None
         for pdf in batches:
             rows: list[tuple] = []
             for doc_id, cstart, ctext in zip(
@@ -283,9 +307,14 @@ def generate_candidates(
                     max_kmer_len=max_kmer_len,
                     vocab=vocab,
                 ):
-                    rows.append((doc_id, *cand))
+                    if link is None:
+                        rows.append((doc_id, *cand))
+                        continue
+                    hit = link(*cand[3:6]) or miss  # key, lemma_key, stem_key
+                    if hit is not None:
+                        rows.append((doc_id, *cand, *hit))
             yield pd.DataFrame(rows, columns=cols)
 
     return chunks.select(
         "doc_id", "chunk_start", "chunk_text"
-    ).mapInPandas(gen, CANDIDATES_SCHEMA)
+    ).mapInPandas(gen, schema)

@@ -385,10 +385,7 @@ def mine_path_rules(
         .withColumn(
             "confidence", F.round(F.col("support") / F.col("n_body"), 6)
         )
-        .filter(
-            (F.col("support") >= min_support)
-            & (F.col("confidence") >= 0.0)
-        )
+        .filter(F.col("support") >= min_support)
     )
     return out.select(
         "body_p", "body_q", "head_t", "n_body", "support", "confidence"

@@ -172,13 +172,9 @@ def vocab_topk(
         .groupBy("token", "_doc")
         .agg(F.count("*").alias("_n"))
     )
-    agg = (
-        tok.groupBy("token")
-        .agg(
-            F.sum("_n").cast("bigint").alias("tf"),
-            F.count("*").cast("bigint").alias("df"),
-        )
-        .filter(F.col("df") >= 1)
+    agg = tok.groupBy("token").agg(
+        F.sum("_n").cast("bigint").alias("tf"),
+        F.count("*").cast("bigint").alias("df"),
     )
     return agg.orderBy(F.col("tf").desc(), F.col("token").asc()).limit(k)
 

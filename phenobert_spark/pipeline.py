@@ -7,8 +7,8 @@ Physical plan (two shuffles total on the hot path, SURVEY.md §4):
       -> doc_id = sha2(content)                       [narrow]
       -> skew chunker                                 [narrow]
       -> repartition(doc_id, chunk_id)                [shuffle 1: salt]
-      -> candidate mapInPandas (Arrow)                [narrow]
-      -> broadcast dict joins (J1)                    [no shuffle]
+      -> candidate mapInPandas (Arrow), linking each
+         k-mer through the broadcast dict tiers (J1)  [narrow, no join]
       -> (optional model stages, pandas UDFs)         [narrow]
       -> window dedup + maximal spans (J4)            [shuffle 2: doc_id]
       -> triples
@@ -29,41 +29,12 @@ from .config import PipelineConfig
 from .corpus import bucket_of, chunked, with_doc_id
 from .ontology import Ontology
 from .operators.candidates import generate_candidates
-from .operators.dict_link import dictionary_link
 from .operators.spans import (
     drop_same_extent,
     keep_maximal_spans,
     suppress_contained_in,
     suppress_containing,
 )
-
-
-def link_dictionary(
-    spark: SparkSession, cands: DataFrame, onto: Ontology, cfg: PipelineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """candidates -> (matched, misses) through the dictionary tiers
-    ``cfg`` selects: the one place ``cfg`` maps onto ``Ontology.dict_df``
-    and ``dictionary_link`` (``annotate`` and ``api.link_phrases`` both
-    link through it). ``matched`` carries hpo_id/score; ``misses`` are
-    the candidates no tier linked, without those two columns. Every tier
-    probes a key of the candidate itself, so candidates pruned by
-    ``Ontology.prune_vocab`` for the same tiers link exactly like
-    unpruned ones."""
-    dict_df = onto.dict_df(
-        spark,
-        syn_min_count=cfg.syn_tier_min_count,
-        syn_phrase_min_count=cfg.syn_phrase_min_count,
-        drop_one=cfg.drop_one_dict,
-    )
-    linked = dictionary_link(
-        cands,
-        dict_df,
-        has_syn_tier=cfg.syn_tier_min_count is not None,
-        has_drop_one=cfg.drop_one_dict,
-    )
-    matched = linked.filter(F.col("hpo_id").isNotNull())
-    misses = linked.filter(F.col("hpo_id").isNull()).drop("hpo_id", "score")
-    return matched, misses
 
 
 def annotate(
@@ -95,37 +66,44 @@ def annotate(
     # Exact candidate pruning: k-mers with out-of-vocabulary tokens are
     # provable dictionary misses (~20-50x fewer candidate rows). The
     # model stages get a relaxed predicate that keeps morphological
-    # variants. The broadcast is memoized on the ontology per
-    # SparkContext: sc.broadcast() re-serializes and re-ships the
-    # vocabulary, and repeated invocations (bench loops, notebook
-    # sessions) reuse it while the same SparkContext is alive.
+    # variants. The surviving k-mers are linked in the same kernel,
+    # through the dictionary tiers ``cfg`` selects. Both broadcasts are
+    # memoized on the ontology per SparkContext: sc.broadcast()
+    # re-serializes and re-ships its value, and repeated invocations
+    # (bench loops, notebook sessions) reuse it while the same
+    # SparkContext is alive.
+    sc = spark.sparkContext
+    syn = (cfg.syn_tier_min_count, cfg.syn_phrase_min_count)
+
+    def shipped(key: tuple, build):
+        return onto.derived((*key, sc.applicationId), lambda: sc.broadcast(build()))
+
     def vocab():
         if cfg.use_model_stages:
             # fuzzy model stage: prefix-5 / lemma adjacency
             from .linking.models import RelaxedVocab
 
             return RelaxedVocab(onto.vocab())
-        return onto.prune_vocab(
-            syn_min_count=cfg.syn_tier_min_count,
-            syn_phrase_min_count=cfg.syn_phrase_min_count,
-        )
+        return onto.prune_vocab(*syn)
 
-    vocab_bc = onto.derived(
-        (
-            "vocab_broadcast",
-            spark.sparkContext.applicationId,
-            cfg.use_model_stages,
-            cfg.syn_tier_min_count,
-            cfg.syn_phrase_min_count,
-        ),
-        lambda: spark.sparkContext.broadcast(vocab()),
+    vocab_bc = shipped(("vocab_broadcast", cfg.use_model_stages, *syn), vocab)
+    linker_bc = shipped(
+        ("linker_broadcast", *syn, cfg.drop_one_dict),
+        lambda: onto.linker(*syn, cfg.drop_one_dict),
     )
-    cands = generate_candidates(chunks, cfg.max_kmer_len, vocab_bc=vocab_bc)
-    matched, misses = link_dictionary(spark, cands, onto, cfg)
+    matched = generate_candidates(
+        chunks,
+        cfg.max_kmer_len,
+        vocab_bc=vocab_bc,
+        linker_bc=linker_bc,
+        keep_misses=cfg.use_model_stages,
+    )
 
     if cfg.use_model_stages:
         from .linking.infer import model_link
 
+        misses = matched.filter(F.col("hpo_id").isNull()).drop("hpo_id", "score")
+        matched = matched.filter(F.col("hpo_id").isNotNull())
         unmatched = (
             misses.filter(F.col("n_tokens") <= cfg.model_max_tokens)
             # fuzzy acceptance of a NEGATED candidate is pure FP risk:

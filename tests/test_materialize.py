@@ -109,6 +109,18 @@ def test_manifest_bucket_triples_after_resume_and_delta(spark, onto, corpus, tmp
     _assert_bucket_triples(spark, out)
 
 
+def test_manifest_bucket_triples_of_partial_batches(spark, onto, corpus, tmp_path):
+    """Each crashed run's batch (the first three pending buckets, then
+    the next two) gets, bucket by bucket, the triple count on disk."""
+    out = str(tmp_path / "graph")
+    for k, done in [(3, {0, 1, 2}), (2, {0, 1, 2, 3, 4})]:
+        run_with_checkpoint(spark, corpus, onto, out, n_buckets=8, fail_after_buckets=k)
+        assert completed_buckets(spark, out) == done
+        _assert_bucket_triples(spark, out)
+    m = read_manifest(spark, out).filter("bucket IN (3, 4)").collect()
+    assert any(r.n_triples for r in m)
+
+
 def test_empty_input_checkpoints_zero_buckets(spark, onto, tmp_path):
     """An empty corpus still completes: every bucket gets a zero row
     (the observed counts arrive even though the write emits nothing)."""

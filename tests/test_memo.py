@@ -39,3 +39,6 @@ def test_derived_values_are_memoized(onto):
     assert onto.ancestors() is onto.ancestors()
     assert onto.prune_vocab(10) is onto.prune_vocab(syn_min_count=10)
     assert onto.mined_substitutions() is onto.mined_substitutions(10, None)
+    assert onto.linker(10, None, False) is onto.linker(
+        syn_min_count=10, syn_phrase_min_count=None, drop_one=False
+    )

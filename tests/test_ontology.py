@@ -317,25 +317,12 @@ def test_prune_vocab_covers_dict_keys(spark, onto, tiers):
 @pytest.mark.parametrize("tiers", TIERS)
 def test_dict_prios_are_the_probed_prios(spark, onto, tiers):
     """The dictionary of a tier set carries rows of exactly the prios
-    ``link_dictionary`` joins for it, read off the filters of its plan:
-    rows of a prio no join probes are dead weight in the broadcast and
-    in the prune vocabulary."""
-    import re
-
-    from phenobert_spark.config import PipelineConfig, local_frame
-    from phenobert_spark.operators.candidates import CANDIDATES_SCHEMA
-    from phenobert_spark.pipeline import link_dictionary
+    the linker's tiers probe for it: rows of a prio no tier probes are
+    dead weight in the broadcast and in the prune vocabulary."""
+    from phenobert_spark.operators.dict_link import active_tiers
 
     mc, pmc, d1 = tiers
-    cfg = PipelineConfig(
-        syn_tier_min_count=mc, syn_phrase_min_count=pmc, drop_one_dict=d1
-    )
-    cands = local_frame(spark, [], CANDIDATES_SCHEMA)
-    matched, _ = link_dictionary(spark, cands, onto, cfg)
-    plan = matched._jdf.queryExecution().analyzed().toString()
-    probed = set()
-    for op, k in re.findall(r"prio#\d+ (<=|=) (\d+)", plan):
-        probed |= set(range(int(k) + 1)) if op == "<=" else {int(k)}
+    probed = {p for _, prios, _ in active_tiers(mc is not None, d1) for p in prios}
     dict_df = onto.dict_df(spark, mc, pmc, d1)
     present = {r.prio for r in dict_df.select("prio").distinct().collect()}
     assert present == probed
@@ -353,27 +340,22 @@ def test_prune_vocab_covers_nondefault_syn_tiers(spark):
         _assert_prune_vocab_covers_keys(spark, onto, tiers)
 
 
-@pytest.mark.parametrize("tiers", TIERS)
-def test_candidate_pruning_is_exact(spark, onto, tiers):
-    """Pruned candidates link exactly like unpruned ones, for every
-    dictionary tier set. The notes are the synthetic corpus, one note
-    per dictionary key (so every key token is exercised) and a mention
-    with a modifier no key contains ("severe cerebellar ataxia")."""
-    from phenobert_spark.config import PipelineConfig
+def _tier_chunks(spark, onto, tiers):
+    """Chunks of the synthetic corpus plus two notes per dictionary key
+    of the tier set, the key as is (so every key token is exercised)
+    and with its last token pluralized (so the lemma and stem tiers
+    see keys the strict tier misses), and a mention with a modifier no
+    key contains ("severe cerebellar ataxia"); and the number of added
+    notes."""
     from phenobert_spark.corpus import chunked, synthesize_corpus, with_doc_id
-    from phenobert_spark.operators.candidates import generate_candidates
-    from phenobert_spark.pipeline import link_dictionary
 
     mc, pmc, d1 = tiers
-    cfg = PipelineConfig(
-        syn_tier_min_count=mc, syn_phrase_min_count=pmc, drop_one_dict=d1
-    )
     docs, _ = synthesize_corpus(spark, onto, n_docs=20)
     keys = onto.dict_df(
         spark, syn_min_count=mc, syn_phrase_min_count=pmc, drop_one=d1
     ).collect()
     extra = ["patient has severe cerebellar ataxia."] + [
-        f"the child shows {r.key}." for r in keys
+        f"the child shows {r.key}{plural}." for r in keys for plural in ("", "s")
     ]
     docs = docs.unionByName(
         spark.createDataFrame(
@@ -381,20 +363,69 @@ def test_candidate_pruning_is_exact(spark, onto, tiers):
             docs.schema,
         )
     )
-    chunks = chunked(with_doc_id(docs).select("doc_id", "content"), 4096)
-    vocab_bc = spark.sparkContext.broadcast(
-        onto.prune_vocab(syn_min_count=mc, syn_phrase_min_count=pmc)
-    )
+    return chunked(with_doc_id(docs).select("doc_id", "content"), 4096), len(extra)
+
+
+LINK_COLUMNS = ["doc_id", "start", "end", "hpo_id", "score"]
+
+
+@pytest.mark.parametrize("tiers", TIERS)
+def test_candidate_pruning_is_exact(spark, onto, tiers):
+    """Pruned candidates link exactly like unpruned ones through the
+    linker of the same tier set, for every dictionary tier set."""
+    from phenobert_spark.operators.candidates import generate_candidates
+
+    mc, pmc, d1 = tiers
+    chunks, n_extra = _tier_chunks(spark, onto, tiers)
+    sc = spark.sparkContext
+    vocab_bc = sc.broadcast(onto.prune_vocab(syn_min_count=mc, syn_phrase_min_count=pmc))
+    linker_bc = sc.broadcast(onto.linker(mc, pmc, d1))
 
     def links(vocab_bc):
-        cands = generate_candidates(chunks, cfg.max_kmer_len, vocab_bc=vocab_bc)
-        matched, _ = link_dictionary(spark, cands, onto, cfg)
-        return sorted(
-            tuple(r)
-            for r in matched.select("doc_id", "start", "end", "hpo_id", "score")
-            .collect()
-        )
+        linked = generate_candidates(chunks, vocab_bc=vocab_bc, linker_bc=linker_bc)
+        return sorted(tuple(r) for r in linked.select(*LINK_COLUMNS).collect())
 
     pruned = links(vocab_bc)
     assert pruned == links(None)
-    assert len(pruned) > len(extra)
+    assert len(pruned) > n_extra
+
+
+@pytest.mark.parametrize(
+    "tiers,model_stages", [(t, False) for t in TIERS] + [(TIERS[0], True)]
+)
+def test_linked_kernel_equals_dictionary_link(spark, onto, tiers, model_stages):
+    """The kernel's in-place linking gives the rows the broadcast joins
+    of ``dictionary_link`` give over its unlinked candidates: the hits
+    for every tier set, and, for the model stages (relaxed vocabulary,
+    ``keep_misses``), the misses too, with a null hpo_id."""
+    from collections import Counter
+
+    from phenobert_spark.linking.models import RelaxedVocab
+    from phenobert_spark.operators.candidates import generate_candidates
+    from phenobert_spark.operators.dict_link import dictionary_link
+
+    mc, pmc, d1 = tiers
+    chunks, _ = _tier_chunks(spark, onto, tiers)
+    sc = spark.sparkContext
+    vocab_bc = sc.broadcast(
+        RelaxedVocab(onto.vocab()) if model_stages else onto.prune_vocab(mc, pmc)
+    )
+    fused = generate_candidates(
+        chunks,
+        vocab_bc=vocab_bc,
+        linker_bc=sc.broadcast(onto.linker(mc, pmc, d1)),
+        keep_misses=model_stages,
+    )
+    joined = dictionary_link(
+        generate_candidates(chunks, vocab_bc=vocab_bc),
+        onto.dict_df(spark, mc, pmc, d1),
+        has_syn_tier=mc is not None,
+        has_drop_one=d1,
+    )
+    if not model_stages:
+        joined = joined.filter("hpo_id IS NOT NULL")
+    got = Counter(tuple(r) for r in fused.select(*LINK_COLUMNS).collect())
+    want = Counter(tuple(r) for r in joined.select(*LINK_COLUMNS).collect())
+    assert got == want
+    misses = sum(n for r, n in got.items() if r[3] is None)
+    assert (misses > 0) == model_stages

@@ -17,13 +17,17 @@ def _formatted_plan(spark, df) -> str:
 
 
 def test_annotate_plan_shape(spark, onto):
-    """All dictionary joins broadcast; no sort-merge join; exactly two
-    data shuffles (salt repartition + the shared doc_id window) and one
-    sort serving both span windows."""
+    """The dictionary tiers are probed inside the candidate kernel: the
+    one join is the alt-id broadcast join, and no dictionary relation
+    enters the plan; at most two data shuffles (salt repartition + the
+    shared doc_id window) and one sort serving both span windows."""
     docs, _ = synthesize_corpus(spark, onto, n_docs=5)
     plan = _formatted_plan(spark, annotate(spark, docs, onto, PipelineConfig()))
     assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 4  # 3 dict tiers + alt-id
+    joins = re.findall(r"^\(\d+\) BroadcastHashJoin$", plan, re.MULTILINE)
+    assert len(joins) == 1, plan
+    assert re.search(r"^Right keys \[1\]: \[alt#\d+\]$", plan, re.MULTILINE), plan
+    assert "prio" not in plan, plan  # no tier join
     # data exchanges (detail headers "(N) Exchange"), excluding broadcasts
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange$", plan, re.MULTILINE))
     assert n_exchanges <= 2, plan

@@ -15,11 +15,16 @@ per-round plans of an iterative operator, which its final plan no
 longer shows. A parquet write is recorded after it runs, as the final
 adaptive plan Spark's SQL status store holds for it: the plan before
 execution shows neither the writer's own sort nor AQE's coalescing.
+The record ends with the number of Spark jobs the actions ran,
+broadcasts included.
 
 Run-specific tokens are masked so two dumps of unchanged code are
-byte-identical: expression ids print as ``#n``, exchange plan ids as
-``[plan_id=n]``, the workload's temporary directory as ``<work>`` and
-an ``Observation``'s random name as ``<observation>``.
+byte-identical, also when one dump starts in a fresh session and the
+other after other queries ran: expression ids print as ``#n``, exchange
+plan ids as ``[plan_id=n]``, the workload's temporary directory as
+``<work>``, an ``Observation``'s random name as ``<observation>``, and
+an RDD's id and call site as ``MapPartitionsRDD[<id>] at
+localCheckpoint at <call site>``.
 """
 
 import contextlib
@@ -49,6 +54,7 @@ def _mask(text: str) -> str:
         (r"#\d+", "#n"),
         (r"\[plan_id=\d+\]", "[plan_id=n]"),
         (re.escape(tempfile.gettempdir()) + r"/tmp\w+", "<work>"),
+        (r"(\w+RDD)\[\d+\] at (\w+) at [^\s,]+:\d+", r"\1[<id>] at \2 at <call site>"),
     ]:
         text = re.sub(pattern, repl, text)
     return text
@@ -131,14 +137,22 @@ def _recording_actions(spark, out: list):
 
 
 def _actions(spark, run) -> str:
-    """Every action ``run()`` executes, numbered, with its plan."""
+    """Every action ``run()`` executes, numbered, with its plan, then
+    the number of Spark jobs they ran (broadcasts included)."""
     steps = []
-    with _recording_actions(spark, steps):
-        run()
+    sc = spark.sparkContext
+    group = f"dump_plans-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        with _recording_actions(spark, steps):
+            run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     return "".join(
         f"==== action {i}: {meth} ====\n{plan}\n"
         for i, (meth, plan) in enumerate(steps, 1)
-    )
+    ) + f"==== jobs: {n_jobs} ====\n"
 
 
 def _perfbench_actions(spark, name: str) -> str:
